@@ -41,6 +41,14 @@ replace Collections.max.
 
 State: ``(vertex_id string, scores array<struct<update_time timestamp,
 value double, origin_id string>>, delta double)``.
+
+Execution shape (``_risk_step``): every directed contact edge ``(u, v,
+cutoff_ts)`` joins u's score ARRAY once, co-partitioned with the carried
+state, and F5 + F3 + A1 are one per-row ``array_max(filter(scores, ...))``
+— the scores are never exploded, so a superstep's relay join and its
+per-receiver aggregation see E rows, not Σ_u |S_u|·deg(u). The receiver
+agg is the superstep's one shuffle. ``final_scores`` is likewise one
+``array_max`` per vertex row.
 """
 
 from __future__ import annotations
@@ -87,46 +95,41 @@ def init_state(scores: DataFrame) -> DataFrame:
     )
 
 
-def risk_propagation(
-    spark: SparkSession,
-    contacts: DataFrame,
-    scores: DataFrame,
-    checkpoint_dir: str,
-    run_id: str = "rp",
-    transmission_rate: float = 1.0,
-    max_supersteps: int = DEFAULT_MAX_SUPERSTEPS,
-    tolerance: float = DEFAULT_TOLERANCE,
-    num_partitions: int | None = None,
-    resume: bool = True,
-    checkpoint_every: int = 1,
-) -> SuperstepResult:
-    edges, num_partitions = prepare_edges(
-        spark, _directed_contact_edges(contacts), "u", num_partitions
+def _risk_step(edges: DataFrame, transmission_rate: float):
+    """One fused BP iteration over the co-partitioned directed contact
+    edges ``(u, v, cutoff_ts)`` (execution shape: module docstring);
+    returns ``step(state, k) -> state``."""
+    # J1 scatter with F5 no-echo + F3 recency, then A1 max-relay to the
+    # other endpoint (J2): max(struct) = natural order
+    relay = F.array_max(
+        F.filter(
+            "scores",
+            lambda s: (s["origin_id"] != F.col("v")) & (s["update_time"] < F.col("cutoff_ts")),
+        )
     )
 
     def step(state: DataFrame, k: int) -> DataFrame:
-        ex = state.select("vertex_id", F.explode("scores").alias("s"))
-        # variable→factor scatter (J1) with F5 no-echo + F3 recency, then
-        # A1 max-relay to the other endpoint (J2). max(struct) = natural order.
         relayed = (
-            # shuffle_hash on BOTH sides: the exploded score-set side is
-            # O(V·scores) and edges O(E) — neither is broadcast-safe and
-            # either may be the larger one, so hint both and let the
-            # planner build the hash map on the smaller relation
-            ex.hint("shuffle_hash")
-            .join(edges.hint("shuffle_hash"), ex.vertex_id == edges.u)
-            .where(
-                (F.col("s.origin_id") != F.col("v"))
-                & (F.col("s.update_time") < F.col("cutoff_ts"))
-            )
-            .groupBy("u", "v")
-            .agg(F.max("s").alias("m"))
+            # shuffle_hash on BOTH sides: edges are O(E) and the state
+            # O(V·scores) in bytes — neither is broadcast-safe and either
+            # may be the larger one; both are hash-clustered on the join
+            # key, so the join plans no exchange
+            edges.hint("shuffle_hash")
+            .join(state.hint("shuffle_hash"), edges.u == state.vertex_id)
+            .select(F.col("v").alias("vertex_id"), relay.alias("m"))
+            # F4: an edge with no admissible score relays a NULL msg, which
+            # collect_set/max skip. NOT a where(m IS NOT NULL): the optimizer
+            # would push it into the join condition, evaluating the HOF twice
+            # and losing the join's whole-stage codegen
             .select(
-                F.col("v").alias("vertex_id"),
-                F.struct(
-                    F.col("m.update_time").alias("update_time"),
-                    (F.col("m.value") * transmission_rate).alias("value"),
-                    F.col("m.origin_id").alias("origin_id"),
+                "vertex_id",
+                F.when(
+                    F.col("m").isNotNull(),
+                    F.struct(
+                        F.col("m.update_time").alias("update_time"),
+                        (F.col("m.value") * transmission_rate).alias("value"),
+                        F.col("m.origin_id").alias("origin_id"),
+                    ),
                 ).alias("msg"),
             )
         )
@@ -155,9 +158,28 @@ def risk_propagation(
             )
         )
 
+    return step
+
+
+def risk_propagation(
+    spark: SparkSession,
+    contacts: DataFrame,
+    scores: DataFrame,
+    checkpoint_dir: str,
+    run_id: str = "rp",
+    transmission_rate: float = 1.0,
+    max_supersteps: int = DEFAULT_MAX_SUPERSTEPS,
+    tolerance: float = DEFAULT_TOLERANCE,
+    num_partitions: int | None = None,
+    resume: bool = True,
+    checkpoint_every: int = 1,
+) -> SuperstepResult:
+    edges, num_partitions = prepare_edges(
+        spark, _directed_contact_edges(contacts), "u", num_partitions
+    )
     driver = SuperstepDriver(spark, checkpoint_dir, run_id, "risk_propagation", num_partitions)
     res = driver.run(
-        init_state(scores), step,
+        init_state(scores), _risk_step(edges, transmission_rate),
         max_supersteps=max_supersteps, tolerance=tolerance, resume=resume,
         checkpoint_every=checkpoint_every,
     )
@@ -171,12 +193,16 @@ def final_scores(state: DataFrame) -> DataFrame:
     ``format/output/FactorGraphVertexOutputFormat.java:29-32,51-56`` (note
     it differs from the natural order used in-flight).
     Returns (vertex_id, value, update_time)."""
-    ex = state.select("vertex_id", F.explode("scores").alias("s"))
-    top = ex.groupBy("vertex_id").agg(
-        F.max_by(
-            "s", F.struct(F.col("s.value"), F.col("s.update_time"), F.col("s.origin_id"))
-        ).alias("top")
+    top = F.array_max(
+        F.transform(
+            "scores",
+            lambda s: F.struct(
+                s["value"].alias("value"),
+                s["update_time"].alias("update_time"),
+                s["origin_id"].alias("origin_id"),
+            ),
+        )
     )
-    return top.select(
+    return state.select("vertex_id", top.alias("top")).select(
         "vertex_id", F.col("top.value").alias("value"), F.col("top.update_time").alias("update_time")
     )

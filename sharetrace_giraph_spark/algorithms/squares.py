@@ -44,6 +44,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..plans.superstep import shuffle_partitions
+
 
 def square_pair_counts(edges: DataFrame) -> DataFrame:
     """Per-diagonal-pair 4-cycle charges ``(u, w, n_squares)``.
@@ -77,9 +79,7 @@ def square_pair_counts(edges: DataFrame) -> DataFrame:
     from .triangle_count import _CACHED, release_cached
 
     release_cached()
-    num_partitions = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    num_partitions = shuffle_partitions(edges.sparkSession)
     e = edges.select("src", "dst").distinct().persist()
     _CACHED.append(e)
     deg = (

@@ -18,6 +18,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..plans.superstep import shuffle_partitions
+
 
 #: persisted intermediates of the most recent triangle_list() calls —
 #: released by release_cached() (callers that fire many per-session
@@ -53,9 +55,7 @@ def triangle_list(edges: DataFrame, num_partitions: int | None = None) -> DataFr
     just recomputes if used after a later call)."""
     release_cached()
     if num_partitions is None:
-        num_partitions = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
+        num_partitions = shuffle_partitions(edges.sparkSession)
     # e is consumed by the degree agg, the orientation join, AND every
     # broadcast build below — uncached, each of those jobs re-executes
     # the caller's whole edge lineage (measured: a single tri.count()
@@ -126,7 +126,7 @@ def triangles(
 
     Returns (global_triangle_count, per_vertex DataFrame(vertex_id, n_triangles)).
     """
-    tri = triangle_list(edges)
+    tri = triangle_list(edges, num_partitions)
 
     total = tri.count()
 
@@ -144,7 +144,10 @@ def triangles(
 
 
 def clustering_coefficient(
-    spark: SparkSession, edges: DataFrame, vertices: DataFrame
+    spark: SparkSession,
+    edges: DataFrame,
+    vertices: DataFrame,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """Local clustering coefficient per vertex:
     ``lcc = 2·T(v) / (deg(v)·(deg(v)−1))``, 0 when deg < 2.
@@ -154,7 +157,7 @@ def clustering_coefficient(
     on hubs). Returns ``(vertex_id, deg, n_triangles, lcc)``.
     """
     e = edges.select("src", "dst").distinct()
-    _, per_vertex = triangles(spark, e, vertices)
+    _, per_vertex = triangles(spark, e, vertices, num_partitions)
     deg = undirected_degree(e).select(F.col("v").alias("vertex_id"), "deg")
     return (
         per_vertex.join(deg, "vertex_id", "left")

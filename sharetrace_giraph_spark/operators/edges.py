@@ -39,6 +39,8 @@ import datetime as dt
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..plans.superstep import shuffle_partitions
+
 #: reference contact-duration threshold: 15 minutes
 #: (``ContactMatchingComputation.java:46``)
 DEFAULT_DURATION_THRESHOLD_S = 15 * 60
@@ -290,7 +292,7 @@ def dense_ids(
         # ways is pure per-task overhead across the count pass, the
         # window pass, and every downstream join. Costs one count();
         # at-scale callers pin num_partitions.
-        conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        conf = shuffle_partitions(spark)
         n_rows = rows.count()
         num_partitions = max(1, min(conf, -(-n_rows // 100_000)))
     # persisted so downstream consumers (encode join, init state, the

@@ -62,6 +62,16 @@ DEFAULT_MAX_SUPERSTEPS = 5
 _STEP_RE = re.compile(r"superstep=(-?\d+)$")
 
 
+def shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as an int, falling back to the
+    default parallelism when the conf is not an integer (``"auto"`` on
+    some managed platforms)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 def auto_num_partitions(
     spark: SparkSession,
     edges: DataFrame,
@@ -85,7 +95,7 @@ def auto_num_partitions(
     kernel's aggregates are partition-order-free."""
     if explicit is not None:
         return explicit
-    conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    conf = shuffle_partitions(spark)
     n = edges.count()
     return max(1, min(conf, max(floor, -(-n // rows_per_partition))))
 
@@ -172,9 +182,7 @@ class SuperstepDriver:
         self.checkpoint_dir = checkpoint_dir
         self.run_id = run_id
         self.algorithm = algorithm
-        self.num_partitions = num_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
+        self.num_partitions = num_partitions or shuffle_partitions(spark)
         self._tolerance = DEFAULT_TOLERANCE
         #: in-flight async durable snapshot write: (thread, superstep)
         self._pending_write: tuple | None = None

@@ -1,8 +1,17 @@
-"""S1/S2 JSON-lines I/O parity: the engine consumes the reference's OWN
-fixture file (/root/reference/java/input.txt, used as data only) and
-reproduces the BP pipeline from it, then round-trips the S2 output."""
+"""S1/S2 JSON-lines I/O parity: the engine reads a reference-format
+factor-graph file and reproduces the BP pipeline from it, then round-trips
+the S2 output.
+
+``tests/fixtures/input.txt`` is a RECONSTRUCTION, not the reference's own
+bytes: the 4-user topology and score histories the reference's
+``java/input.txt`` carries (``datagen.FIXTURE_EDGES``/``FIXTURE_SCORES``),
+written in the wire shape ``sources/jsonlines.py`` and SURVEY §1 document —
+one FACTOR/VARIABLE vertex per line, times and durations as decimal epoch
+seconds (``"time":18412.000000000``)."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -11,7 +20,7 @@ from sharetrace_giraph_spark.sources import jsonlines
 
 from .reference_impl import risk_prop_py
 
-REF_INPUT = "/root/reference/java/input.txt"
+REF_INPUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "input.txt")
 
 
 @pytest.fixture(scope="module")
@@ -25,7 +34,7 @@ def test_reads_reference_fixture_shape(parsed):
         (r.src, r.dst): [(int(o.time.timestamp()), o.duration_ms) for o in r.occurrences]
         for r in contacts.collect()
     }
-    # input.txt:1-4 — epoch-day-valued decimal seconds, durations 1200..3600 s
+    # FACTOR lines 1-4 — epoch-day-valued decimal seconds, durations 1200..4800 s
     assert pairs == {
         ("1", "2"): [(18412, 1_200_000)],
         ("1", "4"): [(18413, 1_800_000)],
@@ -33,7 +42,7 @@ def test_reads_reference_fixture_shape(parsed):
         ("3", "4"): [(18415, 3_600_000)],
     }
     rows = scores.collect()
-    assert len(rows) == 16  # 4 actors x 4 scores (input.txt:5-8)
+    assert len(rows) == 16  # 4 actors x 4 scores (VARIABLE lines 5-8)
     assert {r.id for r in rows} == {"1", "2", "3", "4"}
     vals = {(r.id, int(r.update_time.timestamp()), r.value) for r in rows}
     assert ("2", 18412, 1.0) in vals and ("1", 18415, 0.2) in vals

@@ -689,3 +689,58 @@ def test_walks_step_plans_two_exchanges(spark):
     finally:
         for key, val in saved.items():
             spark.conf.set(key, val)
+
+
+def test_risk_step_plans_single_exchange(spark):
+    """Risk propagation's real superstep (``_risk_step``): each directed
+    edge joins its sender's score ARRAY once (co-partitioned SHJ, no
+    exchange), the relay max is a per-row HOF, and the per-receiver
+    collect/max agg is THE one exchange; the state-update join is
+    co-partitioned. No score is exploded into its own row, and the relay
+    join's condition must stay a bare key equality: an F4
+    ``where(m IS NOT NULL)`` would be pushed into it, evaluating the
+    filter/array_max HOF twice per edge."""
+    from sharetrace_giraph_spark import datagen
+    from sharetrace_giraph_spark.algorithms.risk_propagation import (
+        _directed_contact_edges,
+        _risk_step,
+        init_state,
+    )
+    from sharetrace_giraph_spark.plans.superstep import prepare_edges
+
+    P = 8
+    saved = _pinned_planning(spark, P)
+    try:
+        canon = datagen.generate_edges(spark, 2000, 200, num_partitions=4)
+        contacts = canon.select(
+            F.col("src").cast("string").alias("src"),
+            F.col("dst").cast("string").alias("dst"),
+            F.array(
+                F.struct(
+                    F.timestamp_seconds(F.lit(86_400) * (F.col("src") % 5 + 2)).alias("time"),
+                    F.lit(900_000).cast("long").alias("duration_ms"),
+                )
+            ).alias("occurrences"),
+        )
+        scores = canon.select(F.col("src").cast("string").alias("id")).distinct().select(
+            "id",
+            F.timestamp_seconds(F.lit(86_400) * (F.col("id").cast("long") % 4 + 1)).alias(
+                "update_time"
+            ),
+            (F.col("id").cast("long") % 10 / 10.0).alias("value"),
+        )
+        edges, _ = prepare_edges(spark, _directed_contact_edges(contacts), "u", P)
+        step = _risk_step(edges, 0.8)
+        carried = step(init_state(scores), 0).localCheckpoint(eager=True)
+        mid_loop = step(carried, 1)
+        plan = _plan(mid_loop)
+        assert _count_shuffle_exchanges(mid_loop) == 1, plan
+        assert "Generate" not in plan, plan  # scores are never exploded
+        conds = [ln for ln in plan.splitlines() if ln.startswith("Join condition")]
+        assert len(conds) == 2, plan  # relay join + state-update join
+        for ln in conds:
+            assert "filter(" not in ln and "array_max(" not in ln, ln
+        edges.unpersist()
+    finally:
+        for key, val in saved.items():
+            spark.conf.set(key, val)

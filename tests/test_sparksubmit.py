@@ -13,6 +13,7 @@ import os
 import shutil
 import subprocess
 import sys
+import zipfile
 
 import pytest
 
@@ -23,18 +24,22 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     shutil.which("spark-submit") is None, reason="spark-submit not on PATH"
 )
 def test_spark_submit_pyfiles_smoke(tmp_path):
-    # rebuild the zip from current sources into dist/ (same artifact the
-    # deploy uses; the builder is deterministic and idempotent)
+    # build the zip from current sources with the deploy's own builder,
+    # into tmp_path so the run never rewrites the tracked dist/ artifact
+    pyfiles = str(tmp_path / "sharetrace_giraph_spark.zip")
     subprocess.run(
-        [sys.executable, os.path.join(REPO, "scripts", "make_pyfiles_zip.py")],
+        [sys.executable, os.path.join(REPO, "scripts", "make_pyfiles_zip.py"), pyfiles],
         check=True, capture_output=True,
     )
+    # reproducible: no source-file mtime leaks into the archive
+    with zipfile.ZipFile(pyfiles) as zf:
+        assert {i.date_time for i in zf.infolist()} == {(1980, 1, 1, 0, 0, 0)}
     out_dir = str(tmp_path / "out")
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     proc = subprocess.run(
         [
             "spark-submit", "--master", "local[4]",
-            "--py-files", os.path.join(REPO, "dist", "sharetrace_giraph_spark.zip"),
+            "--py-files", pyfiles,
             os.path.join(REPO, "jobs", "run_graph.py"),
             "--synthetic-convs", "40",
             "--algorithm", "sssp",
