@@ -67,7 +67,12 @@ from ..plans.superstep import (
 
 def _directed_contact_edges(contacts: DataFrame) -> DataFrame:
     """contacts(src,dst,occurrences) → both directions with the F3 cutoff:
-    (u, v, cutoff_ts = max occurrence time of the contact)."""
+    (u, v, cutoff_ts = max occurrence time of the contact).
+
+    Precondition: one row per unordered pair, ``src < dst`` (the
+    reference's factor ids guarantee this). Each row becomes one relay
+    edge per direction, so a pair given twice would relay two messages
+    where the reference relays one."""
     base = contacts.select(
         "src", "dst", F.array_max("occurrences.time").alias("cutoff_ts")
     )
@@ -174,6 +179,13 @@ def risk_propagation(
     resume: bool = True,
     checkpoint_every: int = 1,
 ) -> SuperstepResult:
+    """Run the BP supersteps over ``contacts(src, dst, occurrences)`` from
+    ``scores(id, update_time, value)``; returns the driver's result with
+    the final per-vertex state.
+
+    ``contacts`` must hold one row per unordered pair with ``src < dst``
+    (as ``derive_contacts`` and ``jsonlines.read_factor_graph`` produce):
+    see :func:`_directed_contact_edges`."""
     edges, num_partitions = prepare_edges(
         spark, _directed_contact_edges(contacts), "u", num_partitions
     )

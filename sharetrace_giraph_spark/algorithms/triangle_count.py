@@ -117,16 +117,13 @@ def triangle_list(edges: DataFrame, num_partitions: int | None = None) -> DataFr
 
 
 def triangles(
-    spark: SparkSession,
-    edges: DataFrame,
-    vertices: DataFrame,
-    num_partitions: int | None = None,
+    spark: SparkSession, edges: DataFrame, vertices: DataFrame
 ) -> tuple[int, DataFrame]:
     """``edges``: canonical undirected (src < dst, one row per pair).
 
     Returns (global_triangle_count, per_vertex DataFrame(vertex_id, n_triangles)).
     """
-    tri = triangle_list(edges, num_partitions)
+    tri = triangle_list(edges)
 
     total = tri.count()
 
@@ -144,10 +141,7 @@ def triangles(
 
 
 def clustering_coefficient(
-    spark: SparkSession,
-    edges: DataFrame,
-    vertices: DataFrame,
-    num_partitions: int | None = None,
+    spark: SparkSession, edges: DataFrame, vertices: DataFrame
 ) -> DataFrame:
     """Local clustering coefficient per vertex:
     ``lcc = 2·T(v) / (deg(v)·(deg(v)−1))``, 0 when deg < 2.
@@ -157,7 +151,7 @@ def clustering_coefficient(
     on hubs). Returns ``(vertex_id, deg, n_triangles, lcc)``.
     """
     e = edges.select("src", "dst").distinct()
-    _, per_vertex = triangles(spark, e, vertices, num_partitions)
+    _, per_vertex = triangles(spark, e, vertices)
     deg = undirected_degree(e).select(F.col("v").alias("vertex_id"), "deg")
     return (
         per_vertex.join(deg, "vertex_id", "left")

@@ -63,13 +63,8 @@ _STEP_RE = re.compile(r"superstep=(-?\d+)$")
 
 
 def shuffle_partitions(spark: SparkSession) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, falling back to the
-    default parallelism when the conf is not an integer (``"auto"`` on
-    some managed platforms)."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except ValueError:
-        return spark.sparkContext.defaultParallelism
+    """``spark.sql.shuffle.partitions`` as an int."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def auto_num_partitions(

@@ -140,12 +140,8 @@ def test_triangles_tiny(spark, tiny_graph):
 
 
 def test_triangles_medium(spark, medium_graph):
-    from sharetrace_giraph_spark.algorithms import triangle_count
-
     _, verts, enc, edge_list = medium_graph
-    total, per_vertex = triangles(spark, enc, verts, num_partitions=3)
-    # num_partitions reaches the oriented (wedge-apex) table
-    assert {d.rdd.getNumPartitions() for d in triangle_count._CACHED if "lo" in d.columns} == {3}
+    total, per_vertex = triangles(spark, enc, verts)
     exp_total, exp_per = triangles_py(edge_list)
     assert total == exp_total
     got = {r.vertex_id: r.n_triangles for r in per_vertex.collect()}
@@ -290,7 +286,7 @@ def test_bfs_disconnected_and_salted(spark, ckpt):
 
 def test_clustering_coefficient_exact(spark, medium_graph, ckpt):
     """lcc = 2T/(d(d-1)) against a plain adjacency-set computation."""
-    from sharetrace_giraph_spark.algorithms import clustering_coefficient, triangle_count
+    from sharetrace_giraph_spark.algorithms import clustering_coefficient
 
     _, verts, enc, edge_list = medium_graph
     adj = {}
@@ -304,9 +300,8 @@ def test_clustering_coefficient_exact(spark, medium_graph, ckpt):
         exp[v] = (d, t, (2.0 * t / (d * (d - 1))) if d >= 2 else 0.0)
     got = {
         r.vertex_id: (r.deg, r.n_triangles, r.lcc)
-        for r in clustering_coefficient(spark, enc, verts, num_partitions=3).collect()
+        for r in clustering_coefficient(spark, enc, verts).collect()
     }
-    assert {d.rdd.getNumPartitions() for d in triangle_count._CACHED if "lo" in d.columns} == {3}
     assert set(got) == set(exp)
     for v in exp:
         assert got[v][0] == exp[v][0], v

@@ -31,9 +31,15 @@ def test_spark_submit_pyfiles_smoke(tmp_path):
         [sys.executable, os.path.join(REPO, "scripts", "make_pyfiles_zip.py"), pyfiles],
         check=True, capture_output=True,
     )
-    # reproducible: no source-file mtime leaks into the archive
-    with zipfile.ZipFile(pyfiles) as zf:
-        assert {i.date_time for i in zf.infolist()} == {(1980, 1, 1, 0, 0, 0)}
+    # the builder is reproducible, so the tracked deploy artifact must
+    # match a fresh build member for member: a stale dist/ zip fails here
+    with zipfile.ZipFile(pyfiles) as fresh, zipfile.ZipFile(
+        os.path.join(REPO, "dist", "sharetrace_giraph_spark.zip")
+    ) as tracked:
+        stale = "dist/ zip is stale: rerun scripts/make_pyfiles_zip.py"
+        assert tracked.namelist() == fresh.namelist(), stale
+        for name in fresh.namelist():
+            assert tracked.read(name) == fresh.read(name), f"{stale} ({name})"
     out_dir = str(tmp_path / "out")
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     proc = subprocess.run(
