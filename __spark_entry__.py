@@ -1208,8 +1208,8 @@ def q_contacts_summary(spark, sf_dir):
 
 
 def q_degree_census(spark, sf_dir):
-    """Per-actor undirected contact degree (the skew census that decides
-    hub salting, operators/skew.py)."""
+    """Per-actor undirected contact degree (the hub-skew census,
+    operators/skew.py)."""
     from sharetrace_giraph_spark.operators import edges as E
     from sharetrace_giraph_spark.operators.skew import degree_census
 
@@ -1707,8 +1707,7 @@ def q_contamination_ngram(spark, sf_dir):
 
 def q_graph_assortativity(spark, sf_dir):
     """Newman degree assortativity of the undirected contact graph — the
-    hub-mixing statistic behind the salting-threshold choice
-    (operators/skew.py)."""
+    hub-mixing skew diagnostic (operators/skew.py)."""
     from sharetrace_giraph_spark.operators import edges as E
     from sharetrace_giraph_spark.operators.skew import degree_assortativity
 

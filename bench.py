@@ -295,7 +295,8 @@ def run_docs_bench(spark, cores: int, n_docs: int,
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))))
     ap.add_argument("--graph-only", action="store_true")
     ap.add_argument("--edges-bench", action="store_true",
                     help="superstep throughput on a synthetic edge table (scaling workload)")

@@ -77,7 +77,6 @@ def main() -> None:
     ap.add_argument("--max-supersteps", type=int, default=20)
     ap.add_argument("--tolerance", type=float, default=1e-6)
     ap.add_argument("--kernel", default="relational", choices=["relational", "csr"])
-    ap.add_argument("--salt-threshold", type=int)
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
@@ -140,7 +139,7 @@ def main() -> None:
         res = pagerank(
             spark, und, verts, args.checkpoint_dir, run_id=args.run_id,
             max_supersteps=args.max_supersteps, tolerance=args.tolerance,
-            kernel=args.kernel, salt_threshold=args.salt_threshold, resume=resume,
+            kernel=args.kernel, resume=resume,
             weight_col=weight_col, teleport=teleport,
         )
         out = res.state.join(verts, "vertex_id").select("role", "rank")
@@ -175,7 +174,6 @@ def main() -> None:
         res = bfs(
             spark, E.undirect(enc), verts, seed, args.checkpoint_dir,
             run_id=args.run_id, max_supersteps=args.max_supersteps, resume=resume,
-            salt_threshold=args.salt_threshold,
         )
         out = (
             res.state.where(F.col("dist") < UNREACHED)
@@ -217,7 +215,6 @@ def main() -> None:
         res = shortest_paths(
             spark, wund, verts, seed, args.checkpoint_dir,
             run_id=args.run_id, max_supersteps=args.max_supersteps, resume=resume,
-            salt_threshold=args.salt_threshold,
         )
         out = (
             res.state.where(F.col("dist") < UNREACHED)
@@ -231,7 +228,6 @@ def main() -> None:
         res = k_core(
             spark, E.undirect(enc), verts, args.k, args.checkpoint_dir,
             run_id=args.run_id, max_supersteps=args.max_supersteps, resume=resume,
-            salt_threshold=args.salt_threshold,
         )
         out = res.state.join(verts, "vertex_id").select("role", "alive")
     elif args.algorithm == "ktruss":

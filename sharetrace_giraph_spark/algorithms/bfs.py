@@ -17,9 +17,9 @@ values along contact edges the same way) to hop-distance analytics —
 "how many hops from the seed set is each actor" is the link-graph
 question its risk scores approximate with decaying weights.
 
-Determinism: min over longs — order- and tie-safe. Skew: ``salt_threshold``
-mirrors ``connected_components``; the per-dst min is split via two-level
-salted min (``operators/skew.salted_min``).
+Determinism: min over longs — order- and tie-safe. Skew: the per-dst
+min plans a partial ``min`` below the message exchange, as in
+``connected_components`` (``operators/skew``).
 
 Edges must be directed (pass ``operators.edges.undirect`` output for the
 undirected contact graph).
@@ -30,12 +30,35 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.skew import hub_vertices, salted_min
 from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
 
 #: "not reached yet" — far above any real hop count, far below long
 #: overflow even after repeated +1
 UNREACHED = 1 << 62
+
+
+def _bfs_step(e: DataFrame, cost_col: str | None = None):
+    """One frontier relaxation superstep over the co-partitioned directed
+    edges ``e(src, dst[, cost_col])``: each hop costs 1, or the edge's
+    ``cost_col`` (SSSP). Returns ``step(state, k) -> state``."""
+    cost = F.col(cost_col) if cost_col else F.lit(1)
+
+    def step(state: DataFrame, k: int) -> DataFrame:
+        frontier = state.where(F.col("delta") > 0.5)
+        # shuffle_hash: the frontier is O(V) early on — never broadcast a
+        # side that grows with the graph (see connected_components.py)
+        msgs = e.join(frontier.hint("shuffle_hash"), e.src == frontier.vertex_id).select(
+            e.dst.alias("mdst"), (F.col("dist") + cost).alias("nd")
+        )
+        inc = msgs.groupBy("mdst").agg(F.min("nd").alias("min_nd"))
+        new_dist = F.least("dist", F.coalesce("min_nd", "dist"))
+        return state.join(inc.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
+            "vertex_id",
+            new_dist.alias("dist"),
+            F.when(new_dist != F.col("dist"), 1.0).otherwise(0.0).alias("delta"),
+        )
+
+    return step
 
 
 def bfs(
@@ -49,8 +72,6 @@ def bfs(
     num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
-    salt_threshold: int | None = None,
-    salts: int = 16,
 ) -> SuperstepResult:
     """Returns state (vertex_id, dist, delta); ``dist`` is the minimum hop
     count from any source, or :data:`UNREACHED`. Filter
@@ -66,11 +87,6 @@ def bfs(
         .persist()
     )
     verts.count()
-
-    hubs = None
-    if salt_threshold is not None:
-        hubs = hub_vertices(e, salt_threshold, "in").persist()
-        hubs.count()
 
     src_set = sources.select("vertex_id").distinct()
     # guard the same failure pagerank's personalized path guards: a seed
@@ -96,33 +112,9 @@ def bfs(
         F.when(F.col("_is_src"), F.lit(1.0)).otherwise(F.lit(0.0)).alias("delta"),
     )
 
-    def step(state: DataFrame, k: int) -> DataFrame:
-        frontier = state.where(F.col("delta") > 0.5)
-        # shuffle_hash: the frontier is O(V) early on — never broadcast a
-        # side that grows with the graph (see connected_components.py)
-        msgs = e.join(frontier.hint("shuffle_hash"), e.src == frontier.vertex_id).select(
-            e.dst.alias("mdst"), (F.col("dist") + 1).alias("nd")
-        )
-        if hubs is not None:
-            inc = salted_min(
-                msgs.select(F.col("mdst").alias("dst"), F.col("nd").alias("min_nd")),
-                key="dst", value="min_nd", hubs=hubs, salts=salts,
-                salt_source=None,
-            ).select(F.col("dst").alias("mdst"), "min_nd")
-        else:
-            inc = msgs.groupBy("mdst").agg(F.min("nd").alias("min_nd"))
-        new_dist = F.least("dist", F.coalesce("min_nd", "dist"))
-        return state.join(inc.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
-            "vertex_id",
-            new_dist.alias("dist"),
-            F.when(new_dist != F.col("dist"), 1.0).otherwise(0.0).alias("delta"),
-        )
-
     driver = SuperstepDriver(spark, checkpoint_dir, run_id, "bfs", num_partitions)
-    res = driver.run(init, step, max_supersteps=max_supersteps, tolerance=0.5,
+    res = driver.run(init, _bfs_step(e), max_supersteps=max_supersteps, tolerance=0.5,
                      resume=resume, checkpoint_every=checkpoint_every)
     e.unpersist()
     verts.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return res

@@ -24,10 +24,9 @@ superstep. Same labels, same determinism; pick per graph shape. The
 frontier optimization is unsound here (a settled vertex's comp can still
 shortcut), so every vertex participates each superstep.
 
-``salt_threshold`` mirrors ``pagerank(salt_threshold=...)``: per-dst
-neighbor-min aggregation over hub fan-in is split via two-level salted
-min (``operators/skew.salted_min`` — min is decomposable, results
-identical).
+Skew: the per-dst neighbor min plans a partial ``min`` below the
+message exchange (``operators/skew``), so a hub receives one row per map
+task.
 
 Edges must be directed both ways (``operators.edges.undirect``).
 """
@@ -37,50 +36,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.skew import hub_vertices, salted_min
 from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
 
 
-def connected_components(
-    spark: SparkSession,
-    edges: DataFrame,
-    vertices: DataFrame,
-    checkpoint_dir: str,
-    run_id: str = "cc",
-    max_supersteps: int = 50,
-    num_partitions: int | None = None,
-    resume: bool = True,
-    checkpoint_every: int = 1,
-    method: str = "frontier",
-    salt_threshold: int | None = None,
-    salts: int = 16,
-) -> SuperstepResult:
-    """Returns state (vertex_id, comp, delta); comp = min vertex id in the
-    component (exact, deterministic, identical across both methods)."""
-    if method not in ("frontier", "doubling"):
-        raise ValueError(f"unknown method {method!r}")
-    e, num_partitions = prepare_edges(
-        spark, edges.select("src", "dst"), "src", num_partitions
-    )
-    # materialize the vertex universe BEFORE the loop, hash-partitioned
-    # at the iteration width (parity with pagerank._prepare): the init
-    # state enters superstep 0 already co-partitioned on vertex_id, and
-    # a possibly-expensive vertex derivation (e.g. a distinct over the
-    # edge table) is paid once here instead of riding superstep 0's
-    # critical path twice (both state references)
-    verts = (
-        vertices.select("vertex_id")
-        .repartition(num_partitions, "vertex_id")
-        .persist()
-    )
-    verts.count()
-
-    hubs = None
-    if salt_threshold is not None:
-        hubs = hub_vertices(e, salt_threshold, "in").persist()
-        hubs.count()
-
-    init = verts.select("vertex_id", F.col("vertex_id").alias("comp"), F.lit(1.0).alias("delta"))
+def _cc_step(e: DataFrame, method: str):
+    """One min-label superstep over the co-partitioned directed edges
+    ``e(src, dst)`` for ``method`` (module docstring); returns
+    ``step(state, k) -> state``."""
 
     def neighbor_min(senders: DataFrame) -> DataFrame:
         # shuffle_hash hint: the senders side is the (filtered) frontier —
@@ -94,12 +56,6 @@ def connected_components(
         msgs = e.join(senders.hint("shuffle_hash"), e.src == senders.vertex_id).select(
             e.dst.alias("mdst"), F.col("comp")
         )
-        if hubs is not None:
-            return salted_min(
-                msgs.select(F.col("mdst").alias("dst"), F.col("comp").alias("min_nbr")),
-                key="dst", value="min_nbr", hubs=hubs, salts=salts,
-                salt_source=None,
-            ).select(F.col("dst").alias("mdst"), "min_nbr")
         return msgs.groupBy("mdst").agg(F.min("comp").alias("min_nbr"))
 
     def step_frontier(state: DataFrame, k: int) -> DataFrame:
@@ -134,11 +90,45 @@ def connected_components(
             F.when(new_comp != F.col("comp"), 1.0).otherwise(0.0).alias("delta"),
         )
 
-    step = step_frontier if method == "frontier" else step_doubling
+    return step_frontier if method == "frontier" else step_doubling
+
+
+def connected_components(
+    spark: SparkSession,
+    edges: DataFrame,
+    vertices: DataFrame,
+    checkpoint_dir: str,
+    run_id: str = "cc",
+    max_supersteps: int = 50,
+    num_partitions: int | None = None,
+    resume: bool = True,
+    checkpoint_every: int = 1,
+    method: str = "frontier",
+) -> SuperstepResult:
+    """Returns state (vertex_id, comp, delta); comp = min vertex id in the
+    component (exact, deterministic, identical across both methods)."""
+    if method not in ("frontier", "doubling"):
+        raise ValueError(f"unknown method {method!r}")
+    e, num_partitions = prepare_edges(
+        spark, edges.select("src", "dst"), "src", num_partitions
+    )
+    # materialize the vertex universe BEFORE the loop, hash-partitioned
+    # at the iteration width (parity with pagerank._prepare): the init
+    # state enters superstep 0 already co-partitioned on vertex_id, and
+    # a possibly-expensive vertex derivation (e.g. a distinct over the
+    # edge table) is paid once here instead of riding superstep 0's
+    # critical path twice (both state references)
+    verts = (
+        vertices.select("vertex_id")
+        .repartition(num_partitions, "vertex_id")
+        .persist()
+    )
+    verts.count()
+
+    init = verts.select("vertex_id", F.col("vertex_id").alias("comp"), F.lit(1.0).alias("delta"))
+
     driver = SuperstepDriver(spark, checkpoint_dir, run_id, "connected_components", num_partitions)
-    res = driver.run(init, step, max_supersteps=max_supersteps, tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
+    res = driver.run(init, _cc_step(e, method), max_supersteps=max_supersteps, tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
     e.unpersist()
     verts.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return res

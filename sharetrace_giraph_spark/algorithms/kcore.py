@@ -15,7 +15,8 @@ driver):
 
 Halts when no vertex flips (L1 of the 0/1 change indicator < 0.5) —
 at most V supersteps, in practice O(peeling depth). Deterministic: the
-synchronous update is order-free.
+synchronous update is order-free. Skew: the alive-degree count plans a
+partial ``sum`` below the message exchange (``operators/skew``).
 
 Edges must be directed both ways (``operators.edges.undirect``).
 """
@@ -25,8 +26,32 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.skew import hub_vertices, salted_sum
 from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
+
+
+def _kcore_step(e: DataFrame, k: int):
+    """One peeling superstep of the ``k``-core over the co-partitioned
+    directed edges ``e(src, dst)``; returns ``step(state, superstep) ->
+    state``."""
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
+        alive = state.where(F.col("alive") == 1).select("vertex_id")
+        # messages: each alive vertex counts for its neighbors' degree
+        # shuffle_hash: alive set is O(V) — never broadcast a side that
+        # grows with the graph (see connected_components.py)
+        msgs = e.join(alive.hint("shuffle_hash"), e.src == alive.vertex_id).select(
+            e.dst.alias("mdst"), F.lit(1).cast("long").alias("one")
+        )
+        deg = msgs.groupBy("mdst").agg(F.sum("one").alias("alive_deg"))
+        survives = (F.col("alive") == 1) & (F.coalesce("alive_deg", F.lit(0)) >= k)
+        new_alive = F.when(survives, 1).otherwise(0).cast("int")
+        return state.join(deg.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
+            "vertex_id",
+            new_alive.alias("alive"),
+            F.when(new_alive != F.col("alive"), 1.0).otherwise(0.0).alias("delta"),
+        )
+
+    return step
 
 
 def k_core(
@@ -40,13 +65,9 @@ def k_core(
     num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
-    salt_threshold: int | None = None,
-    salts: int = 16,
 ) -> SuperstepResult:
     """Returns state (vertex_id, alive, delta); ``alive`` = 1 iff the
-    vertex survives in the k-core. ``salt_threshold`` mirrors the other
-    algorithms: the per-dst alive-neighbor COUNT (a decomposable sum of
-    ones) over hub fan-in is split via two-level salted sum."""
+    vertex survives in the k-core."""
     e, num_partitions = prepare_edges(
         spark, edges.select("src", "dst"), "src", num_partitions
     )
@@ -59,44 +80,13 @@ def k_core(
     )
     verts.count()
 
-    hubs = None
-    if salt_threshold is not None:
-        hubs = hub_vertices(e, salt_threshold, "in").persist()
-        hubs.count()
-
     init = verts.select(
         "vertex_id", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
     )
 
-    def step(state: DataFrame, _k: int) -> DataFrame:
-        alive = state.where(F.col("alive") == 1).select("vertex_id")
-        # messages: each alive vertex counts for its neighbors' degree
-        # shuffle_hash: alive set is O(V) — never broadcast a side that
-        # grows with the graph (see connected_components.py)
-        msgs = e.join(alive.hint("shuffle_hash"), e.src == alive.vertex_id).select(
-            e.dst.alias("mdst"), F.lit(1).cast("long").alias("one")
-        )
-        if hubs is not None:
-            deg = salted_sum(
-                msgs.select(F.col("mdst").alias("dst"), F.col("one").alias("alive_deg")),
-                key="dst", value="alive_deg", hubs=hubs, salts=salts,
-                salt_source=None,
-            ).select(F.col("dst").alias("mdst"), "alive_deg")
-        else:
-            deg = msgs.groupBy("mdst").agg(F.sum("one").alias("alive_deg"))
-        survives = (F.col("alive") == 1) & (F.coalesce("alive_deg", F.lit(0)) >= k)
-        new_alive = F.when(survives, 1).otherwise(0).cast("int")
-        return state.join(deg.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
-            "vertex_id",
-            new_alive.alias("alive"),
-            F.when(new_alive != F.col("alive"), 1.0).otherwise(0.0).alias("delta"),
-        )
-
     driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"kcore{k}", num_partitions)
-    res = driver.run(init, step, max_supersteps=max_supersteps, tolerance=0.5,
+    res = driver.run(init, _kcore_step(e, k), max_supersteps=max_supersteps, tolerance=0.5,
                      resume=resume, checkpoint_every=checkpoint_every)
     e.unpersist()
     verts.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return res

@@ -36,7 +36,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.skew import hub_vertices
 from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
 from .triangle_count import release_cached, triangle_list
 
@@ -51,32 +50,16 @@ def k_truss(
     num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
-    salt_threshold: int | None = None,
-    salts: int = 16,
 ) -> SuperstepResult:
     """Returns state (src, dst, alive, delta); ``alive`` = 1 iff the edge
     survives in the k-truss. Triangle support is recomputed per superstep
     over the survivor set only, so each round's wedge join shrinks with
-    the peeling front.
-
-    ``salt_threshold`` extends the engine-wide skew hook (operators/skew)
-    to the per-EDGE support count: an edge between two hubs can collect
-    up to min(deg) triangle-support rows on one reducer. Edges whose BOTH
-    endpoints exceed the degree threshold (computed once, on the initial
-    edge set — degrees only shrink while peeling, so initial hubs ⊇
-    later hubs and over-salting is merely harmless) count support in two
-    levels: per (edge, salt-of-third-corner) partials, then a sum of at
-    most ``salts`` rows per edge. COUNT decomposes as SUM of partials, so
-    the result is bit-identical (test: salted ≡ unsalted)."""
+    the peeling front. The per-edge support count plans a partial
+    ``count`` below its exchange (``operators/skew``), so an edge between
+    two hubs reaches its reducer as one row per map task."""
     e, num_partitions = prepare_edges(
         spark, edges.select("src", "dst"), "src", num_partitions
     )
-
-    hubs = None
-    if salt_threshold is not None:
-        und = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        hubs = hub_vertices(und, salt_threshold, "in").persist()
-        hubs.count()
 
     init = e.select(
         "src", "dst", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
@@ -87,33 +70,17 @@ def k_truss(
         alive = state.where(F.col("alive") == 1).select("src", "dst")
         tri = triangle_list(alive)
         # each triangle supports its three edges; canonicalize the oriented
-        # (degree-ordered) corners back to id order before counting. The
-        # struct carries the third corner as the salt source.
+        # (degree-ordered) corners back to id order before counting
         corners = tri.select(
             F.explode(
                 F.array(
-                    F.struct(F.least("a", "b").alias("s"), F.greatest("a", "b").alias("d"), F.col("c").alias("o")),
-                    F.struct(F.least("a", "c").alias("s"), F.greatest("a", "c").alias("d"), F.col("b").alias("o")),
-                    F.struct(F.least("b", "c").alias("s"), F.greatest("b", "c").alias("d"), F.col("a").alias("o")),
+                    F.struct(F.least("a", "b").alias("s"), F.greatest("a", "b").alias("d")),
+                    F.struct(F.least("a", "c").alias("s"), F.greatest("a", "c").alias("d")),
+                    F.struct(F.least("b", "c").alias("s"), F.greatest("b", "c").alias("d")),
                 )
             ).alias("e")
-        ).select(F.col("e.s").alias("s"), F.col("e.d").alias("d"), F.col("e.o").alias("o"))
-        if hubs is not None:
-            hs = F.broadcast(hubs.select(F.col("vertex_id").alias("s")).withColumn("_hs", F.lit(True)))
-            hd = F.broadcast(hubs.select(F.col("vertex_id").alias("d")).withColumn("_hd", F.lit(True)))
-            tagged = corners.join(hs, "s", "left").join(hd, "d", "left").withColumn(
-                "_salt",
-                F.when(
-                    F.col("_hs") & F.col("_hd"),
-                    F.pmod(F.xxhash64(F.col("o")), F.lit(salts)),
-                ).otherwise(F.lit(0)),
-            )
-            partial = tagged.groupBy("s", "d", "_salt").agg(
-                F.count(F.lit(1)).alias("sup")
-            )
-            sup = partial.groupBy("s", "d").agg(F.sum("sup").alias("sup"))
-        else:
-            sup = corners.groupBy("s", "d").agg(F.count(F.lit(1)).alias("sup"))
+        ).select(F.col("e.s").alias("s"), F.col("e.d").alias("d"))
+        sup = corners.groupBy("s", "d").agg(F.count(F.lit(1)).alias("sup"))
         survives = (F.col("alive") == 1) & (F.coalesce("sup", F.lit(0)) >= min_support)
         new_alive = F.when(survives, 1).otherwise(0).cast("int")
         # shuffle_hash: per-edge support is O(E) — never broadcast a
@@ -132,6 +99,4 @@ def k_truss(
                      resume=resume, checkpoint_every=checkpoint_every)
     release_cached()
     e.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return res

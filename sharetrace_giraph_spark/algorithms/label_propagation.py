@@ -6,7 +6,9 @@ requirement for exact-match reproducibility (the classic async/randomized
 LPA is not reproducible and is therefore not what we build). The neighbor
 mode is a two-stage aggregate: ``groupBy(dst, label).count`` then
 ``max_by(label, (count, -label))`` — both Catalyst hash aggs with map-side
-partial combine, no window needed.
+partial combine, no window needed. That map-side combine is the skew
+mechanism (``operators/skew``): a hub receives at most one pre-counted
+row per (map task, label).
 
 Synchronous LPA can two-cycle on bipartite structures; the driver's
 superstep cap bounds that, and the change-count delta reports
@@ -21,6 +23,35 @@ from pyspark.sql import DataFrame, SparkSession
 from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
 
 
+def _lpa_step(e: DataFrame, weight_col: str | None):
+    """One mode-adoption superstep over the co-partitioned directed edges
+    ``e(src, dst[, weight_col])``; returns ``step(state, k) -> state``."""
+    vote = F.col(weight_col) if weight_col else F.lit(1)
+
+    def step(state: DataFrame, k: int) -> DataFrame:
+        # shuffle_hash: the state is O(V) — never broadcast a side that
+        # grows with the graph (see connected_components.py)
+        msgs = e.join(state.hint("shuffle_hash"), e.src == state.vertex_id).select(
+            e.dst.alias("mdst"), F.col("label").alias("nbr_label"),
+            vote.alias("_vote"),
+        )
+        label_counts = msgs.groupBy("mdst", "nbr_label").agg(
+            F.sum("_vote").alias("cnt")
+        )
+        # mode with (count desc, label asc) tie-break: max_by over (cnt, -label)
+        mode = label_counts.groupBy("mdst").agg(
+            F.max_by("nbr_label", F.struct(F.col("cnt"), (-F.col("nbr_label")).alias("neg"))).alias("mode_label")
+        )
+        new_label = F.coalesce("mode_label", "label")
+        return state.join(mode.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
+            "vertex_id",
+            new_label.alias("label"),
+            F.when(new_label != F.col("label"), 1.0).otherwise(0.0).alias("delta"),
+        )
+
+    return step
+
+
 def label_propagation(
     spark: SparkSession,
     edges: DataFrame,
@@ -31,16 +62,9 @@ def label_propagation(
     num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
-    salt_threshold: int | None = None,
-    salts: int = 16,
     weight_col: str | None = None,
 ) -> SuperstepResult:
     """Returns state (vertex_id, label, delta). Labels init to vertex_id.
-
-    ``salt_threshold`` mirrors ``pagerank(salt_threshold=...)``: a hub
-    dst whose neighbors share one label makes the (dst, label) count key
-    hot; two-level salting counts per (dst, label, salt) first, then sums
-    the partials — count is decomposable, results identical.
 
     ``weight_col``: optional edge-weight column — each neighbor's vote
     counts its weight instead of 1 (weighted-mode adoption). Prefer
@@ -60,61 +84,10 @@ def label_propagation(
     )
     verts.count()
 
-    hubs = None
-    if salt_threshold is not None:
-        from ..operators.skew import hub_vertices
-
-        hubs = hub_vertices(e, salt_threshold, "in").persist()
-        hubs.count()
-
     init = verts.select("vertex_id", F.col("vertex_id").alias("label"), F.lit(1.0).alias("delta"))
 
-    vote = F.col(weight_col) if weight_col else F.lit(1)
-
-    def step(state: DataFrame, k: int) -> DataFrame:
-        # shuffle_hash: the state is O(V) — never broadcast a side that
-        # grows with the graph (see connected_components.py)
-        msgs = e.join(state.hint("shuffle_hash"), e.src == state.vertex_id).select(
-            e.dst.alias("mdst"), F.col("label").alias("nbr_label"),
-            vote.alias("_vote"),
-        )
-        if hubs is not None:
-            salted = msgs.join(
-                F.broadcast(hubs.withColumn("_is_hub", F.lit(True))),
-                msgs.mdst == hubs.vertex_id,
-                "left",
-            ).withColumn(
-                "_salt",
-                F.when(
-                    F.col("_is_hub"),
-                    F.pmod(F.monotonically_increasing_id(), F.lit(salts)),
-                ).otherwise(F.lit(0)),
-            )
-            partial = salted.groupBy("mdst", "nbr_label", "_salt").agg(
-                F.sum("_vote").alias("cnt")
-            )
-            label_counts = partial.groupBy("mdst", "nbr_label").agg(
-                F.sum("cnt").alias("cnt")
-            )
-        else:
-            label_counts = msgs.groupBy("mdst", "nbr_label").agg(
-                F.sum("_vote").alias("cnt")
-            )
-        # mode with (count desc, label asc) tie-break: max_by over (cnt, -label)
-        mode = label_counts.groupBy("mdst").agg(
-            F.max_by("nbr_label", F.struct(F.col("cnt"), (-F.col("nbr_label")).alias("neg"))).alias("mode_label")
-        )
-        new_label = F.coalesce("mode_label", "label")
-        return state.join(mode.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
-            "vertex_id",
-            new_label.alias("label"),
-            F.when(new_label != F.col("label"), 1.0).otherwise(0.0).alias("delta"),
-        )
-
     driver = SuperstepDriver(spark, checkpoint_dir, run_id, "label_propagation", num_partitions)
-    res = driver.run(init, step, max_supersteps=max_supersteps, tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
+    res = driver.run(init, _lpa_step(e, weight_col), max_supersteps=max_supersteps, tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
     e.unpersist()
     verts.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return res

@@ -27,6 +27,11 @@ Both carry ``hist`` — the per-radius reached-count series — so one run
 yields NF(v, r) for every r ≤ max_radius (posexplode for long format).
 Halts early when no ball grows (L1 of per-vertex growth < tolerance).
 
+Skew: both merges plan a partial aggregate below the exchange
+(``operators/skew``), but only the sketch union's partial is bounded —
+exact's ``collect_list`` partial concatenates, so a hub still receives
+deg(hub) reached-sets' worth of elements.
+
 Reference anchor: the reference has no reachability analytics; this
 extends its contact graph (``contactmatching/ContactMatchingComputation
 .java`` candidate pairs) with the standard scale-first connectivity
@@ -41,8 +46,66 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.skew import hub_vertices
 from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
+
+
+def _anf_init(vertices: DataFrame, method: str, lg_k: int) -> DataFrame:
+    """Radius-0 state: every ball is the vertex itself."""
+    verts = vertices.select("vertex_id")
+    if method == "exact":
+        return verts.select(
+            "vertex_id",
+            F.array(F.col("vertex_id")).alias("reached"),
+            F.array(F.lit(1).cast("long")).alias("hist"),
+            F.lit(1.0).alias("delta"),
+        )
+    return verts.groupBy("vertex_id").agg(
+        F.hll_sketch_agg("vertex_id", lg_k).alias("sk")
+    ).select(
+        "vertex_id",
+        "sk",
+        F.array(F.hll_sketch_estimate("sk")).alias("hist"),
+        F.lit(1.0).alias("delta"),
+    )
+
+
+def _anf_step(e: DataFrame, method: str):
+    """One ball-union superstep over the co-partitioned directed edges
+    ``e(src, dst)``; returns ``step(state, k) -> state``. The reached-set
+    column is ``reached`` (exact) or ``sk`` (hll)."""
+    ball = "reached" if method == "exact" else "sk"
+    if method == "exact":
+        merged = F.array_sort(
+            F.array_distinct(F.flatten(F.collect_list("reached")))
+        ).alias("reached")
+        size = F.size("reached").cast("long")
+    else:
+        merged = F.hll_union_agg("sk").alias("sk")
+        size = F.hll_sketch_estimate("sk")
+
+    def step(state: DataFrame, k: int) -> DataFrame:
+        st, ed = state.alias("st"), e.alias("ed")
+        # shuffle_hash: the state side is O(V) — never broadcast a side
+        # that grows with the graph (see connected_components.py)
+        msgs = ed.join(st.hint("shuffle_hash"), F.col("ed.src") == F.col("st.vertex_id")).select(
+            F.col("ed.dst").alias("vertex_id"),
+            F.col(f"st.{ball}").alias(ball),
+            F.lit(None).cast(state.schema["hist"].dataType).alias("hist"),
+        )
+        allm = state.select("vertex_id", ball, "hist").unionByName(msgs)
+        agg = allm.groupBy("vertex_id").agg(
+            merged,
+            # exactly one non-null hist per group (the self row)
+            F.any_value("hist", True).alias("hist"),
+        )
+        return agg.select(
+            "vertex_id",
+            ball,
+            F.concat("hist", F.array(size)).alias("hist"),
+            (size - F.element_at("hist", -1)).cast("double").alias("delta"),
+        )
+
+    return step
 
 
 def neighborhood_function(
@@ -57,137 +120,26 @@ def neighborhood_function(
     num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
-    salt_threshold: int | None = None,
-    salts: int = 16,
 ) -> SuperstepResult:
     """Returns state ``(vertex_id, hist, delta)`` (+ ``reached`` array for
     exact, ``sk`` sketch for hll); ``hist[r]`` = NF(vertex, r) — exact
     count or HLL estimate — for r = 0..radius reached. Supersteps run =
-    radii computed (early-halt when every ball stops growing).
-
-    ``salt_threshold`` extends the engine-wide skew hook (operators/skew)
-    to the ball-union gather: a hub vertex receives deg(hub) reached-sets
-    /sketches on one reducer each superstep. Hub keys merge in two levels
-    (per-salt partials, then a merge of ≤ ``salts`` partials); both merge
-    operators are decomposable set unions — HLL union-of-unions and
-    array-distinct-of-concats — so results are identical (test: salted ≡
-    unsalted)."""
+    radii computed (early-halt when every ball stops growing)."""
     if method not in ("exact", "hll"):
         raise ValueError(f"method must be 'exact' or 'hll', got {method!r}")
     e, num_partitions = prepare_edges(
         spark, edges.select("src", "dst"), "src", num_partitions
     )
-    verts = vertices.select("vertex_id")
-
-    hubs = None
-    if salt_threshold is not None:
-        hubs = hub_vertices(e, salt_threshold, "in").persist()
-        hubs.count()
-
-    def _salted(allm: DataFrame, lvl1_aggs, lvl2_aggs) -> DataFrame:
-        """Two-level grouped merge with hub keys spread over ``salts``
-        sub-keys. ``hist`` rides along via any_value(ignoreNulls): exactly
-        one non-null per vertex (the self row), preserved through both
-        levels. Salt source = a well-distributed row hash (any split of a
-        set union yields the same union)."""
-        tagged = allm.join(
-            F.broadcast(hubs.withColumn("_is_hub", F.lit(True))),
-            "vertex_id",
-            "left",
-        ).withColumn(
-            "_salt",
-            F.when(
-                F.col("_is_hub"), F.pmod(F.monotonically_increasing_id(), F.lit(salts))
-            ).otherwise(F.lit(0)),
-        )
-        partial = tagged.groupBy("vertex_id", "_salt").agg(*lvl1_aggs)
-        return partial.groupBy("vertex_id").agg(*lvl2_aggs)
-
-    if method == "exact":
-        init = verts.select(
-            "vertex_id",
-            F.array(F.col("vertex_id")).alias("reached"),
-            F.array(F.lit(1).cast("long")).alias("hist"),
-            F.lit(1.0).alias("delta"),
-        )
-
-        def step(state: DataFrame, k: int) -> DataFrame:
-            st, ed = state.alias("st"), e.alias("ed")
-            # shuffle_hash: the state side is O(V) — never broadcast a side
-            # that grows with the graph (see connected_components.py)
-            msgs = ed.join(st.hint("shuffle_hash"), F.col("ed.src") == F.col("st.vertex_id")).select(
-                F.col("ed.dst").alias("vertex_id"),
-                F.col("st.reached").alias("reached"),
-                F.lit(None).cast(state.schema["hist"].dataType).alias("hist"),
-            )
-            allm = state.select("vertex_id", "reached", "hist").unionByName(msgs)
-            merge = lambda: [  # noqa: E731 — same merge at both levels
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("reached")))
-                ).alias("reached"),
-                # exactly one non-null hist per group (the self row)
-                F.any_value("hist", True).alias("hist"),
-            ]
-            if hubs is not None:
-                agg = _salted(allm, merge(), merge())
-            else:
-                agg = allm.groupBy("vertex_id").agg(*merge())
-            n = F.size("reached").cast("long")
-            return agg.select(
-                "vertex_id",
-                "reached",
-                F.concat("hist", F.array(n)).alias("hist"),
-                (n - F.element_at("hist", -1)).cast("double").alias("delta"),
-            )
-
-    else:
-        init = verts.groupBy("vertex_id").agg(
-            F.hll_sketch_agg("vertex_id", lg_k).alias("sk")
-        ).select(
-            "vertex_id",
-            "sk",
-            F.array(F.hll_sketch_estimate("sk")).alias("hist"),
-            F.lit(1.0).alias("delta"),
-        )
-
-        def step(state: DataFrame, k: int) -> DataFrame:
-            st, ed = state.alias("st"), e.alias("ed")
-            # shuffle_hash: the state side is O(V) — never broadcast a side
-            # that grows with the graph (see connected_components.py)
-            msgs = ed.join(st.hint("shuffle_hash"), F.col("ed.src") == F.col("st.vertex_id")).select(
-                F.col("ed.dst").alias("vertex_id"),
-                F.col("st.sk").alias("sk"),
-                F.lit(None).cast(state.schema["hist"].dataType).alias("hist"),
-            )
-            allm = state.select("vertex_id", "sk", "hist").unionByName(msgs)
-            merge = lambda: [  # noqa: E731 — same merge at both levels
-                F.hll_union_agg("sk").alias("sk"),
-                F.any_value("hist", True).alias("hist"),
-            ]
-            if hubs is not None:
-                agg = _salted(allm, merge(), merge())
-            else:
-                agg = allm.groupBy("vertex_id").agg(*merge())
-            est = F.hll_sketch_estimate("sk")
-            return agg.select(
-                "vertex_id",
-                "sk",
-                F.concat("hist", F.array(est)).alias("hist"),
-                (est - F.element_at("hist", -1)).cast("double").alias("delta"),
-            )
-
     driver = SuperstepDriver(
         spark, checkpoint_dir, run_id, f"neighborhood_{method}", num_partitions
     )
     res = driver.run(
-        init,
-        step,
+        _anf_init(vertices, method, lg_k),
+        _anf_step(e, method),
         max_supersteps=max_radius,
         resume=resume,
         checkpoint_every=checkpoint_every,
     )
-    if hubs is not None:
-        hubs.unpersist()
     # structural contract: hist ALWAYS has max_radius+1 entries. On early
     # halt (every ball saturated) the remaining radii repeat the saturated
     # count — NF is constant past saturation by definition — so consumers

@@ -35,7 +35,6 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.skew import hub_vertices, salted_sum
 from ..plans.superstep import SuperstepDriver, SuperstepResult, auto_num_partitions
 
 
@@ -81,8 +80,6 @@ def pagerank(
     tolerance: float = 1e-6,
     kernel: str = "relational",
     num_partitions: int | None = None,
-    salt_threshold: int | None = None,
-    salts: int = 16,
     handle_dangling: bool = True,
     resume: bool = True,
     checkpoint_every: int = 1,
@@ -113,11 +110,6 @@ def pagerank(
     num_partitions = auto_num_partitions(spark, edges_c, num_partitions)
     edges_w, verts, n = _prepare(edges_c, vertices, num_partitions, weight_col)
     edges_c.unpersist()  # edges_w is materialized; the raw frame is done
-
-    hubs = None
-    if salt_threshold is not None:
-        hubs = hub_vertices(edges_w, salt_threshold, "in").persist()
-        hubs.count()
 
     # vertices with no outgoing edge leak rank mass unless redistributed
     dangling = None
@@ -189,14 +181,7 @@ def pagerank(
                 edges_w.join(state.hint("shuffle_hash"), edges_w.src == state.vertex_id)
                 .select(edges_w.dst.alias("mdst"), (F.col("rank") * F.col("inv_deg")).alias("contrib"))
             )
-        if hubs is not None:
-            inc = salted_sum(
-                msgs.select(F.col("mdst").alias("dst"), "contrib"),
-                key="dst", value="contrib",
-                hubs=hubs, salts=salts, salt_source=None,
-            ).select(F.col("dst").alias("mdst"), F.col("contrib").alias("contrib"))
-        else:
-            inc = msgs.groupBy("mdst").agg(F.sum("contrib").alias("contrib"))
+        inc = msgs.groupBy("mdst").agg(F.sum("contrib").alias("contrib"))
 
         # personalization: the restart (and dangling) distribution is the
         # static pref column riding in the state — no extra join
@@ -241,8 +226,6 @@ def pagerank(
     # release the loop's static caches — a long-lived session (the driver
     # contract / bench loop) calls pagerank repeatedly, and each leaked
     # frame pins executor storage memory for the session's lifetime
-    if hubs is not None:
-        hubs.unpersist()
     if dangling is not None:
         dangling.unpersist()
     if kernel == "csr":

@@ -32,8 +32,10 @@ has ≥1 neighbor (its predecessor), so no walk ever strands; delta drops to
 
 Scale notes: the static undirected edge table is hash-partitioned by src
 and cached once (``prepare_edges``); per-step join output is
-Σ_w deg(cur(w)) rows — hub-heavy graphs skew exactly like PageRank's
-gather and would take the same salting treatment if needed. ``path``
+Σ_w deg(cur(w)) rows — a walk sitting on a hub brings deg(hub)
+candidates under one (start, widx) key, and the per-walk ``min`` plans a
+partial aggregate below the exchange (``operators/skew``), so that key
+reaches its reducer as one row per map task. ``path``
 carries O(walk_length) small strings per walk; for very long walks emit
 long-format (walk, step, vertex) rows per superstep instead of an array.
 """
@@ -43,7 +45,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.skew import hub_vertices
 from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
 
 
@@ -63,56 +64,9 @@ def walk_rank(seed: str, step: int) -> F.Column:
     )
 
 
-def random_walks(
-    spark: SparkSession,
-    edges: DataFrame,
-    checkpoint_dir: str,
-    num_walks: int = 2,
-    walk_length: int = 4,
-    seed: str = "rw",
-    run_id: str = "walks",
-    num_partitions: int | None = None,
-    resume: bool = True,
-    checkpoint_every: int = 1,
-    salt_threshold: int | None = None,
-    salts: int = 16,
-) -> SuperstepResult:
-    """``edges``: canonical undirected (src < dst, one row per pair; string
-    or numeric vertex ids). Starts one walk batch at every vertex that has
-    at least one edge. Returns state ``(start, widx, cur, path, delta)``
-    where ``path`` is the walk (length ``walk_length + 1``, starting at
-    ``start``); explode with ``posexplode(path)`` for the long-format
-    corpus.
-
-    ``salt_threshold`` extends the engine-wide skew hook (operators/skew)
-    to the frontier argmin: a walk sitting on a hub generates deg(hub)
-    candidate rows under ONE (start, widx) key. Walks whose current vertex
-    is a hub take the min in two levels (per-salt-of-candidate partials,
-    then ≤ ``salts`` rows per walk); min-of-mins is the min and the keyed
-    hash breaks ties collision-free, so the corpus is bit-identical
-    (test: salted ≡ unsalted)."""
-    canon = edges.select("src", "dst")
-    und = canon.unionByName(
-        canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    e, num_partitions = prepare_edges(spark, und, "src", num_partitions)
-
-    hubs = None
-    if salt_threshold is not None:
-        hubs = hub_vertices(e, salt_threshold, "in").persist()
-        hubs.count()
-
-    starts = e.select(F.col("src").alias("start")).distinct()
-    init = starts.select(
-        "start",
-        F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias("widx"),
-    ).select(
-        "start",
-        F.col("widx").cast("int").alias("widx"),
-        F.col("start").alias("cur"),
-        F.array(F.col("start")).alias("path"),
-        F.lit(1.0).alias("delta"),
-    )
+def _walks_step(e: DataFrame, seed: str, walk_length: int):
+    """One keyed-hash hop of every walk over the co-partitioned directed
+    edges ``e(src, dst)``; returns ``step(state, k) -> state``."""
 
     def step(state: DataFrame, k: int) -> DataFrame:
         # superstep 0's state lineage includes e (starts are derived from
@@ -135,33 +89,12 @@ def random_walks(
         cand = F.min(
             F.struct(walk_rank(seed, k).alias("r"), F.col("dst").alias("nbr"))
         ).alias("m")
-        if hubs is not None:
-            tagged = frontier.join(
-                F.broadcast(
-                    hubs.select(F.col("vertex_id").alias("cur"))
-                    .withColumn("_is_hub", F.lit(True))
-                ),
-                "cur",
-                "left",
-            ).withColumn(
-                "_salt",
-                F.when(
-                    F.col("_is_hub"), F.pmod(F.xxhash64(F.col("dst")), F.lit(salts))
-                ).otherwise(F.lit(0)),
-            )
-            partial = tagged.groupBy("start", "widx", "_salt").agg(
-                cand, F.any_value("path").alias("path")
-            )
-            nxt = partial.groupBy("start", "widx").agg(
-                F.min("m").alias("m"), F.any_value("path").alias("path")
-            )
-        else:
-            nxt = frontier.groupBy("start", "widx").agg(
-                cand,
-                # constant within the group (one path per walk) — any_value
-                # is deterministic here and avoids a join back to state
-                F.any_value("path").alias("path"),
-            )
+        nxt = frontier.groupBy("start", "widx").agg(
+            cand,
+            # constant within the group (one path per walk) — any_value
+            # is deterministic here and avoids a join back to state
+            F.any_value("path").alias("path"),
+        )
         done = k >= walk_length - 1
         return nxt.select(
             "start",
@@ -171,19 +104,55 @@ def random_walks(
             F.lit(0.0 if done else 1.0).alias("delta"),
         )
 
+    return step
+
+
+def random_walks(
+    spark: SparkSession,
+    edges: DataFrame,
+    checkpoint_dir: str,
+    num_walks: int = 2,
+    walk_length: int = 4,
+    seed: str = "rw",
+    run_id: str = "walks",
+    num_partitions: int | None = None,
+    resume: bool = True,
+    checkpoint_every: int = 1,
+) -> SuperstepResult:
+    """``edges``: canonical undirected (src < dst, one row per pair; string
+    or numeric vertex ids). Starts one walk batch at every vertex that has
+    at least one edge. Returns state ``(start, widx, cur, path, delta)``
+    where ``path`` is the walk (length ``walk_length + 1``, starting at
+    ``start``); explode with ``posexplode(path)`` for the long-format
+    corpus."""
+    canon = edges.select("src", "dst")
+    und = canon.unionByName(
+        canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    e, num_partitions = prepare_edges(spark, und, "src", num_partitions)
+
+    starts = e.select(F.col("src").alias("start")).distinct()
+    init = starts.select(
+        "start",
+        F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias("widx"),
+    ).select(
+        "start",
+        F.col("widx").cast("int").alias("widx"),
+        F.col("start").alias("cur"),
+        F.array(F.col("start")).alias("path"),
+        F.lit(1.0).alias("delta"),
+    )
+
     driver = SuperstepDriver(
         spark, checkpoint_dir, run_id, "random_walks", num_partitions
     )
-    res = driver.run(
+    return driver.run(
         init,
-        step,
+        _walks_step(e, seed, walk_length),
         max_supersteps=walk_length,
         resume=resume,
         checkpoint_every=checkpoint_every,
     )
-    if hubs is not None:
-        hubs.unpersist()
-    return res
 
 
 def walks_to_corpus(state: DataFrame) -> DataFrame:

@@ -20,8 +20,8 @@ SQL oracle replay the loop as k unrolled relaxation CTEs.
 
 Determinism: weights are LONGS (the driver queries use total co-presence
 duration_ms + 1), so min-plus arithmetic is exact — no float summation
-order issues. Skew: ``salt_threshold`` mirrors :mod:`.bfs` (two-level
-salted min via ``operators/skew.salted_min``).
+order issues. Skew: the per-dst min plans a partial ``min`` below the
+message exchange, as in :mod:`.bfs` (``operators/skew``).
 
 Edges must be directed (pass ``operators.edges.undirect`` output for the
 undirected contact graph) with a positive long ``weight_col``.
@@ -32,9 +32,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.skew import hub_vertices, salted_min
 from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
-from .bfs import UNREACHED
+from .bfs import UNREACHED, _bfs_step
+
+
+def _sssp_step(e: DataFrame):
+    """BFS's frontier relaxation with the per-edge long cost ``w`` of the
+    co-partitioned edges ``e(src, dst, w)``; returns
+    ``step(state, k) -> state``."""
+    return _bfs_step(e, "w")
 
 
 def shortest_paths(
@@ -49,8 +55,6 @@ def shortest_paths(
     num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
-    salt_threshold: int | None = None,
-    salts: int = 16,
 ) -> SuperstepResult:
     """Returns state (vertex_id, dist, delta); ``dist`` is the minimum
     path cost (sum of long weights) from any source, or
@@ -68,11 +72,6 @@ def shortest_paths(
         .persist()
     )
     verts.count()
-
-    hubs = None
-    if salt_threshold is not None:
-        hubs = hub_vertices(e, salt_threshold, "in").persist()
-        hubs.count()
 
     src_set = sources.select("vertex_id").distinct()
     # guard the same failure pagerank's personalized path guards: a seed
@@ -92,33 +91,9 @@ def shortest_paths(
         F.when(F.col("_is_src"), F.lit(1.0)).otherwise(F.lit(0.0)).alias("delta"),
     )
 
-    def step(state: DataFrame, k: int) -> DataFrame:
-        frontier = state.where(F.col("delta") > 0.5)
-        # shuffle_hash: the frontier is O(V) early on — never broadcast a
-        # side that grows with the graph (see connected_components.py)
-        msgs = e.join(frontier.hint("shuffle_hash"), e.src == frontier.vertex_id).select(
-            e.dst.alias("mdst"), (F.col("dist") + F.col("w")).alias("nd")
-        )
-        if hubs is not None:
-            inc = salted_min(
-                msgs.select(F.col("mdst").alias("dst"), F.col("nd").alias("min_nd")),
-                key="dst", value="min_nd", hubs=hubs, salts=salts,
-                salt_source=None,
-            ).select(F.col("dst").alias("mdst"), "min_nd")
-        else:
-            inc = msgs.groupBy("mdst").agg(F.min("nd").alias("min_nd"))
-        new_dist = F.least("dist", F.coalesce("min_nd", "dist"))
-        return state.join(inc.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
-            "vertex_id",
-            new_dist.alias("dist"),
-            F.when(new_dist != F.col("dist"), 1.0).otherwise(0.0).alias("delta"),
-        )
-
     driver = SuperstepDriver(spark, checkpoint_dir, run_id, "sssp", num_partitions)
-    res = driver.run(init, step, max_supersteps=max_supersteps, tolerance=0.5,
+    res = driver.run(init, _sssp_step(e), max_supersteps=max_supersteps, tolerance=0.5,
                      resume=resume, checkpoint_every=checkpoint_every)
     e.unpersist()
     verts.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
     return res

@@ -11,7 +11,7 @@ Two generators:
   ``xxhash64``-seeded column expressions; no driver-side materialization),
   so the same code scales from 10^3 turns in tests to 10^12 on a cluster.
   Embeds a planted community structure and 1-2 hub actors (degree >> mean)
-  to exercise skew salting.
+  to exercise hub skew.
 - :func:`tiny_fixture_transcripts` — transplants the reference's canonical
   4-user fixture (``/root/reference/java/input.txt:1-8``): 4 actors
   ``"1".."4"``, contact edges {(1,2),(1,4),(2,4),(3,4)} with one occurrence
@@ -148,7 +148,8 @@ def generate_edges(
     engine benchmarks at scales where transcript derivation isn't the thing
     being measured. Deterministic (hash-of-index), self-loop-free, with
     ``hub_ppm`` parts-per-million of edges redirected into ``n_hubs`` hub
-    destinations (power-law-ish in-degree skew for the salting path)."""
+    destinations (power-law-ish in-degree skew for the message
+    aggregates' map-side combine)."""
     df = spark.range(0, n_edges, 1, num_partitions or spark.sparkContext.defaultParallelism)
     src = F.pmod(_h(seed + 11, F.col("id")), F.lit(n_vertices))
     dst_raw = F.pmod(_h(seed + 12, F.col("id")), F.lit(n_vertices))

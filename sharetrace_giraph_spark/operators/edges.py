@@ -237,13 +237,52 @@ def _tool_cooccurrence(
 # Vertex encoding: string actor ids → dense longs for the iteration kernels.
 # ---------------------------------------------------------------------------
 
-#: the TWO persisted frames backing a dense_ids materialization (the
-#: range-partitioned rows and the P-row partition offsets derived from
-#: them). On the default truncate_lineage path they live only for the
-#: call's own eager checkpoint; on the raw-plan path (truncate_lineage=
-#: False) downstream consumers re-scan both, so they stay live until the
-#: NEXT call evicts them.
-_IDS_CACHE: list = []
+def _assign_ids(
+    rows: DataFrame, key: str, out: str, num_partitions: int
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
+    """The raw two-pass assignment plan behind :func:`dense_ids`, plus the
+    two frames it persists (the range-partitioned rows and their P-row
+    partition offsets) for the caller to release once the plan has been
+    materialized."""
+    # persisted so the offset agg and the assembly below read rows'
+    # lineage once
+    parts = (
+        rows.repartitionByRange(num_partitions, key)
+        .withColumn("_pid", F.spark_partition_id())
+        .persist()
+    )
+    # partition offsets as a PLAN, not driver-collected constants:
+    # offset(p) = Σ counts of lower partitions, spelled as a broadcast
+    # theta-join + re-agg over the P-ROW per-partition counts (P² pairs
+    # of partition COUNTS, trivial at any loop width — and unlike a
+    # global running-sum window it plans no SinglePartition exchange,
+    # which the plan-discipline suite bans anywhere in this function).
+    # Keeping the offsets inside the same lazy plan keeps the ids right
+    # under re-execution: if the persisted blocks are evicted mid-run,
+    # the range exchange re-runs with a fresh sample seed —
+    # RangePartitioner seeds from the newly compiled plan's RDD id — and
+    # the boundaries MAY move; counts and offsets then recompute from
+    # those same new boundaries, so id = |{rows with smaller key}| either
+    # way. Within one execution the two reads of `parts` are consistent
+    # too: the cache hit — or, uncached, ReuseExchange on the identical
+    # range shuffle — serves both from a single materialization.
+    counts = parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
+    lower = counts.select(F.col("_pid").alias("_lp"), F.col("_n").alias("_ln"))
+    # the P-row offsets are persisted alongside parts and released with
+    # it, keeping the consistency above: either both caches serve the
+    # assembly or both recompute within one execution
+    off = (
+        counts.join(F.broadcast(lower), F.col("_lp") < F.col("_pid"), "left")
+        .groupBy("_pid")
+        .agg(F.coalesce(F.sum("_ln"), F.lit(0)).cast("long").alias("_off"))
+        .persist()
+    )
+    w = Window.partitionBy("_pid").orderBy(key)
+    assembled = parts.join(F.broadcast(off), "_pid").select(
+        (F.col("_off") + F.row_number().over(w) - 1).cast("long").alias(out),
+        key,
+    )
+    return assembled, (parts, off)
 
 
 def dense_ids(
@@ -251,112 +290,54 @@ def dense_ids(
     key: str,
     out: str = "vertex_id",
     num_partitions: int | None = None,
-    truncate_lineage: bool = True,
 ) -> DataFrame:
     """Dense deterministic ids 0..N-1 by global ``key`` order, WITHOUT a
     single-partition global window (which funnels all N rows through one
     task — the classic ``row_number() OVER (ORDER BY ...)`` scale trap).
 
-    Two-pass range-partitioned assignment, both passes in ONE lazy plan:
-    (1) range-partition by key and compute per-partition row counts →
-    partition offsets (a P-row broadcast self-join, never N rows
-    through one task); (2) id = partition offset + (row_number within
-    partition, ordered by key) - 1. Global order is preserved because range
-    partitions are ordered and rows are sorted within each, so the ids
-    are a pure function of the input key set — reproducible regardless
-    of where the sampled range boundaries land, including across cache
-    eviction and full re-execution (see the offset-plan note below).
+    Two-pass range-partitioned assignment, both passes in ONE lazy plan
+    (:func:`_assign_ids`): (1) range-partition by key and compute
+    per-partition row counts → partition offsets (a P-row broadcast
+    self-join, never N rows through one task); (2) id = partition offset
+    + (row_number within partition, ordered by key) - 1. Global order is
+    preserved because range partitions are ordered and rows are sorted
+    within each, so the ids are a pure function of the input key set,
+    wherever the sampled range boundaries land.
 
-    ``truncate_lineage`` (default on): the assembled id table is
-    materialized ONCE by an eager ``localCheckpoint`` and consumers see a
-    bare ``LogicalRDD`` scan. This is load-bearing for the driver's
-    serial floor, not a cache nicety: the in-plan offsets embed the
-    ``parts`` lineage (and, through it, the caller's whole edge
-    derivation) THREE times inside the id table's logical plan, a vertex
-    map is referenced at least twice by every encode join, and AQE
-    re-optimizes the surrounding query once per query stage — measured
-    on the sf0.1 bench graph, leaving the lineage in place made the
-    triangle pipeline's per-action driver overhead ~2.5× the task time
-    of the whole job. Determinism strengthens: the ids are frozen at
+    The assembled id table is materialized ONCE by an eager
+    ``localCheckpoint`` and consumers see a bare ``LogicalRDD`` scan.
+    This is load-bearing for the driver's serial floor, not a cache
+    nicety: the in-plan offsets embed the ``parts`` lineage (and, through
+    it, the caller's whole edge derivation) THREE times inside the id
+    table's logical plan, a vertex map is referenced at least twice by
+    every encode join, and AQE re-optimizes the surrounding query once
+    per query stage — measured on the sf0.1 bench graph, leaving the
+    lineage in place made the triangle pipeline's per-action driver
+    overhead ~2.5× the task time of the whole job. The ids are frozen at
     materialization, so no re-execution — hence no boundary re-sample —
-    can ever be observed by a consumer. The materialization caches are
-    released before returning (nothing reads them afterwards); the
-    checkpoint blocks themselves are freed by the ContextCleaner when
-    the returned frame is dropped. Pass ``False`` to inspect or compose
-    the raw assignment plan (the plan-discipline suite does).
+    can ever be observed by a consumer. The two materialization caches
+    are released before returning; the checkpoint blocks are freed by
+    the ContextCleaner when the returned frame is dropped.
+
+    The frozen table has no lineage: losing an executor that holds its
+    checkpoint blocks fails every later consumer instead of recomputing
+    the ids (the same failure mode as the superstep driver's carry,
+    ``plans/superstep``).
     """
-    spark = rows.sparkSession
     if num_partitions is None:
         # stats-based width, same rationale as plans/superstep
         # .auto_num_partitions: range-partitioning a 300-row key set 32
         # ways is pure per-task overhead across the count pass, the
         # window pass, and every downstream join. Costs one count();
         # at-scale callers pin num_partitions.
-        conf = shuffle_partitions(spark)
-        n_rows = rows.count()
-        num_partitions = max(1, min(conf, -(-n_rows // 100_000)))
-    # persisted so downstream consumers (encode join, init state, the
-    # in-plan offset agg below) don't replay rows' lineage. One live
-    # cache per call site (same discipline as _SPANS_CACHE): a long
-    # session assigning ids repeatedly must not accumulate pinned frames.
-    while _IDS_CACHE:
-        _IDS_CACHE.pop().unpersist()
-    parts = (
-        rows.repartitionByRange(num_partitions, key)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    _IDS_CACHE.append(parts)
-    # partition offsets as a PLAN, not driver-collected constants:
-    # offset(p) = Σ counts of lower partitions, spelled as a broadcast
-    # theta-join + re-agg over the P-ROW per-partition counts (P² pairs
-    # of partition COUNTS, trivial at any loop width — and unlike a
-    # global running-sum window it plans no SinglePartition exchange,
-    # which the plan-discipline suite bans anywhere in this function).
-    # Keeping the offsets inside the same lazy plan is what makes the
-    # ids safe under re-execution: if the persisted blocks above are
-    # evicted (or a LATER dense_ids call releases them), the range
-    # exchange re-runs with a fresh sample seed — RangePartitioner
-    # seeds from the newly compiled plan's RDD id — and the boundaries
-    # MAY move; counts and offsets then recompute from those same new
-    # boundaries, so id = |{rows with smaller key}| either way.
-    # Driver-collected offsets (the previous design) would go stale
-    # against re-sampled boundaries and silently corrupt the ids of any
-    # frame evaluated after an eviction. Within one execution the two
-    # reads of `parts` are consistent too: the cache hit — or,
-    # uncached, ReuseExchange on the identical range shuffle — serves
-    # both from a single materialization.
-    counts = parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-    lower = counts.select(F.col("_pid").alias("_lp"), F.col("_n").alias("_ln"))
-    # the P-row offsets frame is persisted alongside parts (and evicted
-    # with it, keeping the consistency story above: either both caches
-    # serve a downstream action or both recompute within one execution)
-    # so repeated actions over the returned frame — the docstring's
-    # encode join, init state, ... — pay the O(N) counts scan once, not
-    # once per action
-    off = (
-        counts.join(F.broadcast(lower), F.col("_lp") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.coalesce(F.sum("_ln"), F.lit(0)).cast("long").alias("_off"))
-        .persist()
-    )
-    _IDS_CACHE.append(off)
-    w = Window.partitionBy("_pid").orderBy(key)
-    assembled = (
-        parts.join(F.broadcast(off), "_pid")
-        .select(
-            (F.col("_off") + F.row_number().over(w) - 1).cast("long").alias(out),
-            key,
-        )
-    )
-    if not truncate_lineage:
-        return assembled
-    ids = assembled.localCheckpoint(eager=True)
-    # the checkpointed blocks are now the single source downstream reads;
-    # the two materialization caches have served their one execution
-    while _IDS_CACHE:
-        _IDS_CACHE.pop().unpersist()
-    return ids
+        conf = shuffle_partitions(rows.sparkSession)
+        num_partitions = max(1, min(conf, -(-rows.count() // 100_000)))
+    assembled, cached = _assign_ids(rows, key, out, num_partitions)
+    try:
+        return assembled.localCheckpoint(eager=True)
+    finally:
+        for frame in cached:
+            frame.unpersist()
 
 
 def vertex_ids(contacts: DataFrame) -> DataFrame:

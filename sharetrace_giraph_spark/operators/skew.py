@@ -1,24 +1,30 @@
-"""Explicit hub-vertex skew handling (north-rule requirement).
+"""Hub-vertex skew: one mechanism (the map-side combine) plus a diagnostic.
 
 The reference's only balance mechanism is round-robin payload chopping at
 PARTITION_SIZE=50 (``pda-common/.../ContractedPdaVentilator.java:101-117``)
-— irrelevant to shuffle skew. In a power-law contact graph the hub
-vertices' in-edges all hash to one reducer; Spark's map-side partial
-aggregation absorbs most of it, and AQE skew-join splits oversized join
-partitions, but the canonical belt-and-braces is **salted two-level
-aggregation**: spread each hub key over ``salts`` sub-keys, partially
-aggregate per (key, salt), then finish per key. rows-per-reducer drops from
-deg(hub) to deg(hub)/salts at the cost of one extra (tiny) shuffle over
-the pre-aggregated rows.
+— irrelevant to shuffle skew — and it cuts pre-shuffle volume with
+Giraph's message combiner. In a power-law contact graph a hub's in-edges
+all hash to one reducer. The engine's one skew mechanism is the Catalyst
+analog of that combiner: every superstep's message aggregate is a
+decomposable ``groupBy(dst).agg(...)`` that plans as a partial hash
+aggregate below the message exchange and a final one above it, so a
+hub's reducer receives at most one pre-combined row per map task, not
+deg(hub) rows. ``tests/test_plan_discipline.py`` pins the ``partial_``
+aggregate below the exchange on each algorithm's real superstep.
 
-When to turn it on (measured tradeoff, see BENCH.md): partial aggregation
-already caps a hub reducer's input at (#map partitions) rows, so on
-local[32] salting only adds a join and a shuffle (~3x slower per
-superstep at 4M edges). It pays on real clusters where #map partitions is
-in the thousands AND partial aggregation is ineffective (very wide
-partial-agg key space forcing hash-map fallback), or for aggregates that
-don't combine map-side. The engine exposes it per-run
-(``pagerank(salt_threshold=...)``) rather than defaulting it on.
+The combine only shrinks what its partial state shrinks. Exact ANF
+(``neighborhood_function(method="exact")``) merges with ``collect_list``,
+whose partial concatenates arrays, so a hub's reducer still receives
+deg(hub) reached-sets' worth of elements; ``method="hll"`` is the path
+whose partial (an HLL sketch union) stays bounded.
+
+A salted two-level aggregate (hub keys spread over sub-keys, combined
+twice) measured about 3x slower per superstep than the plain combine at
+4M edges on local[32]; add one only together with a benchmark workload
+on which it wins.
+
+:func:`degree_census` and :func:`degree_assortativity` are the
+diagnostics: they say whether an edge table is hub-skewed at all.
 """
 
 from __future__ import annotations
@@ -35,84 +41,12 @@ def degree_census(edges: DataFrame, direction: str = "in") -> DataFrame:
     )
 
 
-def hub_vertices(edges: DataFrame, threshold: int, direction: str = "in") -> DataFrame:
-    """Vertices with degree > threshold — the salting candidates. Small by
-    construction (power-law tail), safe to broadcast."""
-    return degree_census(edges, direction).where(F.col("degree") > threshold).select("vertex_id")
-
-
-#: decomposable aggregates safe for two-level salting (level-2 re-applies
-#: the same function over the level-1 partials)
-_SALTABLE = {"sum": F.sum, "min": F.min, "max": F.max}
-
-
-def salted_agg(
-    messages: DataFrame,
-    key: str,
-    value: str,
-    hubs: DataFrame,
-    agg: str = "sum",
-    salts: int = 16,
-    salt_source: str | None = None,
-) -> DataFrame:
-    """Two-level decomposable aggregate (sum/min/max) of ``value`` by
-    ``key`` with hub keys salted.
-
-    ``messages`` rows whose ``key`` appears in ``hubs`` (broadcast) get a
-    salt derived from ``salt_source`` (any well-distributed column, e.g.
-    the message's src vertex); non-hub rows keep salt 0. Level 1 aggregates
-    by (key, salt) — hub fan-in split across ``salts`` reducers; level 2
-    finishes by key over at most ``salts`` rows per hub.
-
-    Returns ``(key, value)`` with the same column names.
-    """
-    fn = _SALTABLE[agg]
-    salt_col = (
-        F.pmod(F.xxhash64(F.col(salt_source)), F.lit(salts))
-        if salt_source
-        else F.pmod(F.monotonically_increasing_id(), F.lit(salts))
-    )
-    tagged = messages.join(
-        F.broadcast(hubs.withColumn("_is_hub", F.lit(True))),
-        messages[key] == hubs["vertex_id"],
-        "left",
-    ).withColumn("_salt", F.when(F.col("_is_hub"), salt_col).otherwise(F.lit(0)))
-    partial = tagged.groupBy(F.col(key), F.col("_salt")).agg(fn(value).alias(value))
-    return partial.groupBy(key).agg(fn(value).alias(value))
-
-
-def salted_sum(
-    messages: DataFrame,
-    key: str,
-    value: str,
-    hubs: DataFrame,
-    salts: int = 16,
-    salt_source: str | None = None,
-) -> DataFrame:
-    """Two-level SUM — see :func:`salted_agg`."""
-    return salted_agg(messages, key, value, hubs, "sum", salts, salt_source)
-
-
-def salted_min(
-    messages: DataFrame,
-    key: str,
-    value: str,
-    hubs: DataFrame,
-    salts: int = 16,
-    salt_source: str | None = None,
-) -> DataFrame:
-    """Two-level MIN — see :func:`salted_agg` (min is decomposable:
-    min(min(parts)) == min(all), so salting never changes the result)."""
-    return salted_agg(messages, key, value, hubs, "min", salts, salt_source)
-
-
 def degree_assortativity(edges: DataFrame) -> DataFrame:
     """One-row degree-mixing statistic over an UNDIRECTED edge list given
     as its both-ways union (every {u,v} present as BOTH (u,v) and (v,u) —
     ``operators.edges.undirect`` output): Pearson correlation of
     (deg(src), deg(dst)) across directed rows — Newman's assortativity
-    coefficient, the standard "do hubs link to hubs?" skew diagnostic
-    that informs the salting threshold.
+    coefficient, the standard "do hubs link to hubs?" skew diagnostic.
 
     CONTRACT: both-ways input only. The census counts out-degree, which
     equals the undirected degree exactly when every edge appears in both

@@ -512,8 +512,9 @@ class SuperstepDriver:
         proof for every subsequent superstep join — it optimizes the one
         query while defeating the cross-superstep layout reuse, which is
         the dominant cost at 10^12-turn scale. Skew inside the loop is
-        handled explicitly (salting hooks), not by AQE. The session confs
-        are restored on exit.
+        absorbed by each step's map-side partial aggregate below its
+        message exchange (``operators/skew``), not by AQE. The session
+        confs are restored on exit.
 
         ``durable_continuation`` (default off): when on, every DURABLE
         superstep — including the initial ``superstep=-1`` snapshot — is

@@ -18,6 +18,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 24g."""
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return f"{max(1024, min(24 * 1024, ram_mb // 2))}m"
+
+
 def get_spark(
     app_name: str = "sharetrace-giraph-spark",
     master: str | None = None,
@@ -26,17 +32,21 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the local core count so each
-    superstep's exchange matches the executor slots.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    usable CPU count). ``shuffle_partitions`` defaults to the local core
+    count so each superstep's exchange matches the executor slots. Driver
+    memory is ``$SPARK_GRAFT_DRIVER_MEM`` (default: half of physical RAM,
+    capped at 24g).
     """
+    # CPUs this process may run on: its affinity mask, not the host's cores
+    usable_cpus = len(os.sched_getaffinity(0))
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", str(usable_cpus))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        # local[N] → N; local[*] → cpu count
+        # local[N] → N; local[*] → usable cpu count
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
-        shuffle_partitions = os.cpu_count() if inner == "*" else int(inner)
+        shuffle_partitions = usable_cpus if inner == "*" else int(inner)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -47,7 +57,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

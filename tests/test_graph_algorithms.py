@@ -87,17 +87,6 @@ def test_pagerank_step_for_step(spark, medium_graph, ckpt, kernel):
     assert max(errs) < 1e-9, (kernel, max(errs))
 
 
-def test_pagerank_salted_matches_unsalted(spark, medium_graph, ckpt):
-    _, verts, enc, edge_list = medium_graph
-    exp = pagerank_py(edge_list, _vertices_of(edge_list), tol=0.0, max_iters=10)
-    res = pagerank(
-        spark, E.undirect(enc), verts, ckpt, run_id="m-salt",
-        tolerance=0.0, max_supersteps=10, salt_threshold=5, salts=4,
-    )
-    got = {r.vertex_id: r.rank for r in res.state.collect()}
-    assert max(abs(got[v] - exp[v]) for v in exp) < 1e-9
-
-
 def test_connected_components_exact(spark, tiny_graph, medium_graph, ckpt):
     for name, (verts, enc, edge_list) in {
         "tiny": (tiny_graph[1], tiny_graph[2], tiny_graph[4]),
@@ -196,28 +185,6 @@ def test_cc_doubling_logarithmic_on_path(spark, ckpt):
     assert {r.comp for r in frontier.state.collect()} == {0}
 
 
-def test_cc_salted_matches_unsalted(spark, medium_graph, ckpt):
-    """salted_min is decomposable — hub salting must not change labels."""
-    _, verts, enc, edge_list = medium_graph
-    res = connected_components(
-        spark, E.undirect(enc), verts, ckpt, run_id="cc-salt",
-        max_supersteps=100, salt_threshold=5, salts=4,
-    )
-    got = {r.vertex_id: r.comp for r in res.state.collect()}
-    assert got == cc_py(edge_list, _vertices_of(edge_list))
-
-
-def test_lpa_salted_matches_unsalted(spark, medium_graph, ckpt):
-    """Salted two-level (dst, label) counting must not change the mode."""
-    _, verts, enc, edge_list = medium_graph
-    res = label_propagation(
-        spark, E.undirect(enc), verts, ckpt, run_id="lpa-salt",
-        max_supersteps=5, salt_threshold=5, salts=4,
-    )
-    got = {r.vertex_id: r.label for r in res.state.collect()}
-    assert got == lpa_py(edge_list, _vertices_of(edge_list), max_iters=5)
-
-
 def test_bfs_exact(spark, tiny_graph, medium_graph, ckpt):
     """Hop distances from the min vertex match plain-Python BFS exactly;
     unreached vertices stay at the sentinel."""
@@ -260,9 +227,8 @@ def test_bfs_multi_source_and_wavefront(spark, ckpt):
     assert res.supersteps_run == ecc + 1, res.supersteps_run
 
 
-def test_bfs_disconnected_and_salted(spark, ckpt):
-    """Two components: the unreached one keeps the sentinel; hub salting
-    must not change any distance (min is decomposable)."""
+def test_bfs_disconnected(spark, ckpt):
+    """Two components: the unreached one keeps the sentinel."""
     from sharetrace_giraph_spark.algorithms import UNREACHED, bfs
     from .reference_impl import bfs_py
 
@@ -271,17 +237,15 @@ def test_bfs_disconnected_and_salted(spark, ckpt):
     verts = spark.createDataFrame([(i,) for i in range(8)], "vertex_id long")
     seed = spark.createDataFrame([(0,)], "vertex_id long")
     exp = bfs_py(edges, list(range(8)), [0])
-    for run_id, salt in (("bfs-disc", None), ("bfs-salt", 2)):
-        res = bfs(spark, E.undirect(canon), verts, seed, ckpt,
-                  run_id=run_id, max_supersteps=20,
-                  salt_threshold=salt, salts=4)
-        assert res.converged
-        reached = {r.vertex_id: r.dist for r in res.state.collect()
-                   if r.dist < UNREACHED}
-        unreached = {r.vertex_id for r in res.state.collect()
-                     if r.dist >= UNREACHED}
-        assert reached == exp, run_id
-        assert unreached == {4, 5, 6, 7}, run_id
+    res = bfs(spark, E.undirect(canon), verts, seed, ckpt,
+              run_id="bfs-disc", max_supersteps=20)
+    assert res.converged
+    reached = {r.vertex_id: r.dist for r in res.state.collect()
+               if r.dist < UNREACHED}
+    unreached = {r.vertex_id for r in res.state.collect()
+                 if r.dist >= UNREACHED}
+    assert reached == exp
+    assert unreached == {4, 5, 6, 7}
 
 
 def test_clustering_coefficient_exact(spark, medium_graph, ckpt):
@@ -411,19 +375,6 @@ def test_k_core_exact(spark, medium_graph, ckpt):
     got = {r.vertex_id for r in res.state.collect() if r.alive == 1}
     assert got == {0, 1, 2}
     assert res.supersteps_run >= 4  # 5, then 4, then 3 peel in turn
-
-
-def test_k_core_salted_matches_unsalted(spark, medium_graph, ckpt):
-    """Salted alive-neighbor counting must not change membership."""
-    from sharetrace_giraph_spark.algorithms import k_core
-    from .reference_impl import k_core_py
-
-    _, verts, enc, edge_list = medium_graph
-    vs = _vertices_of(edge_list)
-    res = k_core(spark, E.undirect(enc), verts, 4, ckpt, run_id="kc-salt",
-                 max_supersteps=30, salt_threshold=5, salts=4)
-    got = {r.vertex_id for r in res.state.collect() if r.alive == 1}
-    assert got == k_core_py(edge_list, vs, 4)
 
 
 def test_edge_adamic_adar_exact(spark, medium_graph, ckpt):
@@ -812,61 +763,6 @@ def test_hll_estimates_partitioning_band(spark, ckpt):
         for r in nf_long(exact.state).collect()
     }
     assert any(round(narrow[k]) != ex[k] for k in ex if k[1] >= 1)
-
-
-def test_k_truss_salted_matches_unsalted(spark, medium_graph, ckpt):
-    """Salted per-edge support counting (two-level COUNT with hub-edge
-    corners spread over salts) must not change the surviving edge set —
-    mirrors test_k_core_salted_matches_unsalted for the edge-keyed agg."""
-    from sharetrace_giraph_spark.algorithms import k_truss
-
-    _, verts, enc, edge_list = medium_graph
-    base = k_truss(spark, enc.select("src", "dst"), k=4, checkpoint_dir=ckpt,
-                   run_id="kts-b", resume=False)
-    salted = k_truss(spark, enc.select("src", "dst"), k=4, checkpoint_dir=ckpt,
-                     run_id="kts-s", resume=False, salt_threshold=5, salts=4)
-    b = {(r.src, r.dst, r.alive) for r in base.state.collect()}
-    s = {(r.src, r.dst, r.alive) for r in salted.state.collect()}
-    assert b == s
-    assert base.supersteps_run == salted.supersteps_run
-
-
-def test_neighborhood_salted_matches_unsalted(spark, medium_graph, ckpt):
-    """Salted ball-union gather (two-level array-distinct merge / HLL
-    union-of-unions) must be bit-identical for both representations."""
-    from sharetrace_giraph_spark.algorithms import neighborhood_function
-    from sharetrace_giraph_spark.operators.edges import undirect
-
-    _, verts, enc, edge_list = medium_graph
-    und = undirect(enc.select("src", "dst"))
-    for method in ("exact", "hll"):
-        base = neighborhood_function(spark, und, verts, max_radius=3,
-                                     checkpoint_dir=ckpt, method=method,
-                                     run_id=f"nfs-b-{method}", resume=False)
-        salted = neighborhood_function(spark, und, verts, max_radius=3,
-                                       checkpoint_dir=ckpt, method=method,
-                                       run_id=f"nfs-s-{method}", resume=False,
-                                       salt_threshold=5, salts=4)
-        b = {r.vertex_id: list(r.hist) for r in base.state.collect()}
-        s = {r.vertex_id: list(r.hist) for r in salted.state.collect()}
-        assert b == s, method
-
-
-def test_random_walks_salted_matches_unsalted(spark, ckpt):
-    """Salted frontier argmin (two-level keyed-hash min) must emit the
-    bit-identical corpus — a planted hub makes the salt branch real."""
-    from sharetrace_giraph_spark.algorithms import random_walks
-
-    hub = [("h", f"v{i}") for i in range(12)]
-    ring = [(f"v{i}", f"v{(i + 1) % 12}") for i in range(12)]
-    edges = spark.createDataFrame(sorted(set(hub + ring)), "src string, dst string")
-    base = random_walks(spark, edges, ckpt, num_walks=2, walk_length=4,
-                        run_id="rws-b", resume=False)
-    salted = random_walks(spark, edges, ckpt, num_walks=2, walk_length=4,
-                          run_id="rws-s", resume=False, salt_threshold=5, salts=4)
-    b = {(r.start, r.widx): list(r.path) for r in base.state.collect()}
-    s = {(r.start, r.widx): list(r.path) for r in salted.state.collect()}
-    assert b == s
 
 
 def test_csr_kernel_drops_missing_src_like_relational(spark, medium_graph, ckpt):

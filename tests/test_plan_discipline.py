@@ -8,9 +8,11 @@ exchange, a dropped broadcast) fails CI rather than a future bench run.
 
 from __future__ import annotations
 
+import contextlib
 import io
 
 import pyspark.sql.functions as F
+import pytest
 
 import __spark_entry__ as em
 
@@ -55,15 +57,18 @@ def test_vertex_ids_no_single_partition_exchange(spark):
     and may legitimately collapse a tiny key set to one partition — that
     is the overhead fix, not the trap — so the structural assertion runs
     against the pinned at-scale spelling."""
-    from sharetrace_giraph_spark.operators.edges import dense_ids
+    from sharetrace_giraph_spark.operators.edges import _assign_ids, dense_ids
 
     df = spark.range(0, 1000).select(
         F.format_string("r%05d", F.col("id")).alias("role")
     )
-    # truncate_lineage=False exposes the raw assignment plan (the default
-    # path eagerly checkpoints, leaving only a LogicalRDD scan to inspect
-    # — which would make this assertion vacuous)
-    plan = _plan(dense_ids(df, "role", num_partitions=8, truncate_lineage=False))
+    # the raw assignment plan (dense_ids itself eagerly checkpoints,
+    # leaving only a LogicalRDD scan to inspect — which would make this
+    # assertion vacuous)
+    ids, cached = _assign_ids(df, "role", "vertex_id", 8)
+    plan = _plan(ids)
+    for frame in cached:
+        frame.unpersist()
     assert "SinglePartition" not in plan
     # auto path: tiny input → narrow plan, ids still dense 0..N-1 in order
     auto = dense_ids(df, "role")
@@ -196,34 +201,6 @@ def test_edge_jaccard_no_single_partition(spark):
     assert "row_number" not in plan.lower()
 
 
-def test_bfs_message_agg_partial_final(spark, tmp_path):
-    """One BFS superstep: the frontier message plan keeps the min-combine
-    as partial+final HashAggregate (map-side combine before the shuffle)
-    and nothing plans a SinglePartition exchange."""
-    import pyspark.sql.functions as FF
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(50)], "src long, dst long"
-    )
-    from sharetrace_giraph_spark.operators.edges import undirect
-
-    e = undirect(edges).repartition(8, "src").persist()
-    state = spark.createDataFrame(
-        [(i, 0 if i == 0 else (1 << 62), 1.0 if i == 0 else 0.0) for i in range(51)],
-        "vertex_id long, dist long, delta double",
-    )
-    frontier = state.where(FF.col("delta") > 0.5)
-    msgs = e.join(frontier, e.src == frontier.vertex_id).select(
-        e.dst.alias("mdst"), (FF.col("dist") + 1).alias("nd")
-    )
-    inc = msgs.groupBy("mdst").agg(FF.min("nd").alias("min_nd"))
-    plan = _plan(inc)
-    assert plan.count("HashAggregate") >= 2
-    assert "partial_min" in plan
-    assert "SinglePartition" not in plan
-    e.unpersist()
-
-
 def test_asof_join_plans_one_keyed_window_no_cartesian(spark):
     """The as-of join must compile to a single keyed window over the
     unioned stream — never a cartesian / nested-loop range join, never a
@@ -343,15 +320,17 @@ def test_tokenization_evaluated_once_per_row(spark):
     assert plan.count("split(") == 2, plan.count("split(")
 
 
-def _count_shuffle_exchanges(df) -> int:
-    """Runtime shuffle Exchange nodes in the physical plan (simple mode),
-    excluding BroadcastExchange/ReusedExchange and the exchanges embedded
-    inside an InMemoryRelation's stored plan (those materialized when the
-    cache was built and are never re-run)."""
+def _exchange_children(df) -> list[str]:
+    """The node planned directly below each runtime shuffle Exchange in
+    the physical plan (simple mode), excluding BroadcastExchange/
+    ReusedExchange and the exchanges embedded inside an InMemoryRelation's
+    stored plan (those materialized when the cache was built and are
+    never re-run)."""
     plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
-    n = 0
+    children = []
+    below_exchange = False
     in_cache_subtree_indent = None
     for line in plan.splitlines():
         node = line.lstrip(" :+-")
@@ -360,12 +339,15 @@ def _count_shuffle_exchanges(df) -> int:
             if indent > in_cache_subtree_indent:
                 continue  # still inside the cached relation's stored plan
             in_cache_subtree_indent = None
+        if below_exchange:
+            children.append(node)
+            below_exchange = False
         if node.startswith("InMemoryRelation"):
             in_cache_subtree_indent = indent
             continue
         if node.startswith("Exchange "):
-            n += 1
-    return n
+            below_exchange = True
+    return children
 
 
 def test_superstep_carry_plans_single_exchange(spark, tmp_path):
@@ -383,13 +365,7 @@ def test_superstep_carry_plans_single_exchange(spark, tmp_path):
     from sharetrace_giraph_spark.algorithms.pagerank import _prepare
 
     P = 8
-    saved = {
-        k: spark.conf.get(k)
-        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    try:
+    with _pinned_planning(spark, P):
         canon = datagen.generate_edges(spark, 2000, 200, num_partitions=4)
         edges = canon.union(canon.selectExpr("dst AS src", "src AS dst"))
         verts = canon.selectExpr("src AS vertex_id").union(
@@ -418,7 +394,7 @@ def test_superstep_carry_plans_single_exchange(spark, tmp_path):
         )
         carried = step(init).localCheckpoint(eager=True)
         mid_loop = step(carried)
-        assert _count_shuffle_exchanges(mid_loop) == 1, _plan(mid_loop)
+        assert len(_exchange_children(mid_loop)) == 1, _plan(mid_loop)
 
         # contrast: a parquet round-trip forgets the partitioning, so the
         # same step must re-exchange the state for each of its two
@@ -426,25 +402,15 @@ def test_superstep_carry_plans_single_exchange(spark, tmp_path):
         pq = str(tmp_path / "state")
         carried.write.mode("overwrite").parquet(pq)
         forgotten = step(spark.read.schema(carried.schema).parquet(pq))
-        assert _count_shuffle_exchanges(forgotten) >= 3, _plan(forgotten)
+        assert len(_exchange_children(forgotten)) >= 3, _plan(forgotten)
         edges_w.unpersist()
         v.unpersist()
-    finally:
-        for key, val in saved.items():
-            spark.conf.set(key, val)
 
 
-def test_cc_frontier_step_plans_single_exchange(spark, tmp_path):
-    """Same minimal-shuffle invariant for the CC frontier step — the
-    marginal north-rule algorithm in the 40M scaling runs, so a second
-    exchange creeping into ITS superstep is the regression that would
-    hurt most. Shape mirrors algorithms/connected_components.py
-    step_frontier: frontier filter -> edge gather (co-partitioned SHJ)
-    -> min agg (THE one exchange) -> state update join (co-partitioned)."""
-    from sharetrace_giraph_spark import datagen
-    from sharetrace_giraph_spark.plans.superstep import prepare_edges
-
-    P = 8
+@contextlib.contextmanager
+def _pinned_planning(spark, P):
+    """Pin the loop-planning confs the superstep driver pins (AQE off,
+    shuffle width = iteration width P); restored on exit."""
     saved = {
         k: spark.conf.get(k)
         for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
@@ -452,250 +418,176 @@ def test_cc_frontier_step_plans_single_exchange(spark, tmp_path):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", str(P))
     try:
+        yield
+    finally:
+        for key, val in saved.items():
+            spark.conf.set(key, val)
+
+
+@pytest.fixture()
+def small_graph(spark):
+    """A hub-skewed graph directed both ways, prepared as every step's
+    edges are (cached, hash(src, P)), under pinned planning at P = 8.
+    Yields ``(e, verts)``."""
+    from sharetrace_giraph_spark import datagen
+    from sharetrace_giraph_spark.plans.superstep import prepare_edges
+
+    with _pinned_planning(spark, 8):
         canon = datagen.generate_edges(spark, 2000, 200, num_partitions=4)
         edges = canon.union(canon.selectExpr("dst AS src", "src AS dst")).select(
             "src", "dst"
         )
-        e, _ = prepare_edges(spark, edges, "src", P)
-        verts = edges.selectExpr("src AS vertex_id").distinct()
-
-        def step(state):
-            senders = state.where(F.col("delta") > 0.5)
-            msgs = e.join(
-                senders.hint("shuffle_hash"), e.src == senders.vertex_id
-            ).select(e.dst.alias("mdst"), F.col("comp"))
-            inc = msgs.groupBy("mdst").agg(F.min("comp").alias("min_nbr"))
-            new_comp = F.least("comp", F.coalesce("min_nbr", "comp"))
-            return state.join(
-                inc.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left"
-            ).select(
-                "vertex_id",
-                new_comp.alias("comp"),
-                F.when(new_comp != F.col("comp"), 1.0).otherwise(0.0).alias("delta"),
-            )
-
-        init = verts.select(
-            "vertex_id", F.col("vertex_id").alias("comp"), F.lit(1.0).alias("delta")
-        )
-        carried = step(init).localCheckpoint(eager=True)
-        mid_loop = step(carried)
-        assert _count_shuffle_exchanges(mid_loop) == 1, _plan(mid_loop)
+        e, _ = prepare_edges(spark, edges, "src", 8)
+        yield e, edges.selectExpr("src AS vertex_id").distinct()
         e.unpersist()
-    finally:
-        for key, val in saved.items():
-            spark.conf.set(key, val)
 
 
-def _pinned_planning(spark, P):
-    """Save + pin the loop-planning confs; returns the saved dict."""
-    saved = {
-        k: spark.conf.get(k)
-        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    return saved
+def _pin_step(step, init, exchanges: int, combined: int) -> str:
+    """Plan a mid-loop superstep as the driver runs it (``step`` over the
+    carried output of ``step(init, 0)``) and pin its shape: exactly
+    ``exchanges`` runtime shuffle exchanges, of which ``combined`` sit
+    directly above a ``partial_`` aggregate. That map-side combine is the
+    engine's one skew mechanism (operators/skew): a hub's reducer gets
+    one pre-combined row per map task, not one per in-edge. Returns the
+    formatted plan."""
+    carried = step(init, 0).localCheckpoint(eager=True)
+    mid_loop = step(carried, 1)
+    below = _exchange_children(mid_loop)
+    plan = _plan(mid_loop)
+    assert len(below) == exchanges, plan
+    assert sum("partial_" in node for node in below) == combined, plan
+    return plan
 
 
-def _small_graph(spark, P):
-    from sharetrace_giraph_spark import datagen
-    from sharetrace_giraph_spark.plans.superstep import prepare_edges
+def test_cc_frontier_step_plans_single_exchange(small_graph):
+    """The CC frontier step (``_cc_step``) — the marginal north-rule
+    algorithm in the 40M scaling runs, so a second exchange creeping into
+    ITS superstep is the regression that would hurt most: frontier filter
+    -> edge gather (co-partitioned SHJ) -> min agg (THE one exchange, over
+    a partial min) -> state update join (co-partitioned)."""
+    from sharetrace_giraph_spark.algorithms.connected_components import _cc_step
 
-    canon = datagen.generate_edges(spark, 2000, 200, num_partitions=4)
-    edges = canon.union(canon.selectExpr("dst AS src", "src AS dst")).select(
-        "src", "dst"
+    e, verts = small_graph
+    init = verts.select(
+        "vertex_id", F.col("vertex_id").alias("comp"), F.lit(1.0).alias("delta")
     )
-    e, _ = prepare_edges(spark, edges, "src", P)
-    verts = edges.selectExpr("src AS vertex_id").distinct()
-    return e, verts
+    _pin_step(_cc_step(e, "frontier"), init, exchanges=1, combined=1)
 
 
-def test_sssp_step_plans_single_exchange(spark):
-    """SSSP shares CC's frontier shape (gather join co-partitioned, ONE
-    min-agg exchange, state-update join co-partitioned) — pin it so a
-    second exchange can't creep into its superstep unnoticed (round-4
-    verdict item: the carry's one-exchange invariant was pinned only
-    for PageRank and CC)."""
-    P = 8
-    saved = _pinned_planning(spark, P)
-    try:
-        e, verts = _small_graph(spark, P)
-        ew = e.withColumn("w", F.lit(1).cast("long"))
+def test_cc_doubling_step_plans_two_exchanges(small_graph):
+    """The CC pointer-jumping step (``_cc_step(method="doubling")``) plans
+    TWO exchanges: the neighbor-min message agg (over a partial min), and
+    a re-key of the joined state by its label for the ``comp == p_id``
+    lookup — the one join per superstep that doubling adds, whose key is
+    not the vertex id the state is clustered on. Pin at 2."""
+    from sharetrace_giraph_spark.algorithms.connected_components import _cc_step
 
-        def step(state):
-            frontier = state.where(F.col("delta") > 0.5)
-            msgs = ew.join(
-                frontier.hint("shuffle_hash"), ew.src == frontier.vertex_id
-            ).select(ew.dst.alias("mdst"), (F.col("dist") + F.col("w")).alias("nd"))
-            inc = msgs.groupBy("mdst").agg(F.min("nd").alias("min_nd"))
-            new_dist = F.least("dist", F.coalesce("min_nd", "dist"))
-            return state.join(
-                inc.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left"
-            ).select(
-                "vertex_id",
-                new_dist.alias("dist"),
-                F.when(new_dist != F.col("dist"), 1.0).otherwise(0.0).alias("delta"),
-            )
-
-        init = verts.select(
-            "vertex_id", F.lit(0).cast("long").alias("dist"), F.lit(1.0).alias("delta")
-        )
-        carried = step(init).localCheckpoint(eager=True)
-        mid_loop = step(carried)
-        assert _count_shuffle_exchanges(mid_loop) == 1, _plan(mid_loop)
-        e.unpersist()
-    finally:
-        for key, val in saved.items():
-            spark.conf.set(key, val)
+    e, verts = small_graph
+    init = verts.select(
+        "vertex_id", F.col("vertex_id").alias("comp"), F.lit(1.0).alias("delta")
+    )
+    _pin_step(_cc_step(e, "doubling"), init, exchanges=2, combined=1)
 
 
-def test_kcore_step_plans_single_exchange(spark):
-    """k-core peeling: alive-degree count is the ONE exchange; gather and
-    state-update joins are co-partitioned under the carry."""
-    P = 8
-    saved = _pinned_planning(spark, P)
-    try:
-        e, verts = _small_graph(spark, P)
+def test_bfs_message_agg_partial_final(small_graph):
+    """One BFS superstep (``_bfs_step``): the frontier message plan keeps
+    the min-combine as partial+final aggregate around its one exchange,
+    and nothing plans a SinglePartition exchange."""
+    from sharetrace_giraph_spark.algorithms.bfs import UNREACHED, _bfs_step
 
-        def step(state):
-            alive = state.where(F.col("alive") == 1).select("vertex_id")
-            msgs = e.join(
-                alive.hint("shuffle_hash"), e.src == alive.vertex_id
-            ).select(e.dst.alias("mdst"), F.lit(1).cast("long").alias("one"))
-            deg = msgs.groupBy("mdst").agg(F.sum("one").alias("alive_deg"))
-            survives = (F.col("alive") == 1) & (
-                F.coalesce("alive_deg", F.lit(0)) >= 3
-            )
-            new_alive = F.when(survives, 1).otherwise(0).cast("int")
-            return state.join(
-                deg.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left"
-            ).select(
-                "vertex_id",
-                new_alive.alias("alive"),
-                F.when(new_alive != F.col("alive"), 1.0).otherwise(0.0).alias("delta"),
-            )
-
-        init = verts.select(
-            "vertex_id", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
-        )
-        carried = step(init).localCheckpoint(eager=True)
-        mid_loop = step(carried)
-        assert _count_shuffle_exchanges(mid_loop) == 1, _plan(mid_loop)
-        e.unpersist()
-    finally:
-        for key, val in saved.items():
-            spark.conf.set(key, val)
+    e, verts = small_graph
+    init = verts.select(
+        "vertex_id",
+        F.when(F.col("vertex_id") == 0, 0).otherwise(UNREACHED).cast("long").alias("dist"),
+        F.when(F.col("vertex_id") == 0, 1.0).otherwise(0.0).alias("delta"),
+    )
+    plan = _pin_step(_bfs_step(e), init, exchanges=1, combined=1)
+    assert "partial_min" in plan
+    assert "SinglePartition" not in plan
 
 
-def test_lpa_step_plans_two_exchanges(spark):
-    """LPA's mode adoption is a TWO-level aggregate — count per
-    (dst, label), then argmax per dst — so its intended minimal shape is
-    exactly TWO exchanges per superstep (one per agg level; the gather
-    and state-update joins stay co-partitioned under the carry). Pin at
-    2 so a third exchange (e.g. a state-side re-exchange from a broken
-    carry) is caught."""
-    P = 8
-    saved = _pinned_planning(spark, P)
-    try:
-        e, verts = _small_graph(spark, P)
+def test_sssp_step_plans_single_exchange(small_graph):
+    """SSSP (``_sssp_step``) shares CC's frontier shape: gather join
+    co-partitioned, ONE min-agg exchange over a partial min, state-update
+    join co-partitioned."""
+    from sharetrace_giraph_spark.algorithms.sssp import _sssp_step
 
-        def step(state):
-            msgs = e.join(
-                state.hint("shuffle_hash"), e.src == state.vertex_id
-            ).select(
-                e.dst.alias("mdst"),
-                F.col("label").alias("nbr_label"),
-                F.lit(1).alias("_vote"),
-            )
-            label_counts = msgs.groupBy("mdst", "nbr_label").agg(
-                F.sum("_vote").alias("cnt")
-            )
-            mode = label_counts.groupBy("mdst").agg(
-                F.max_by(
-                    "nbr_label",
-                    F.struct(F.col("cnt"), (-F.col("nbr_label")).alias("neg")),
-                ).alias("mode_label")
-            )
-            new_label = F.coalesce("mode_label", "label")
-            return state.join(
-                mode.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left"
-            ).select(
-                "vertex_id",
-                new_label.alias("label"),
-                F.when(new_label != F.col("label"), 1.0).otherwise(0.0).alias("delta"),
-            )
-
-        init = verts.select(
-            "vertex_id", F.col("vertex_id").alias("label"), F.lit(1.0).alias("delta")
-        )
-        carried = step(init).localCheckpoint(eager=True)
-        mid_loop = step(carried)
-        assert _count_shuffle_exchanges(mid_loop) == 2, _plan(mid_loop)
-        e.unpersist()
-    finally:
-        for key, val in saved.items():
-            spark.conf.set(key, val)
+    e, verts = small_graph
+    init = verts.select(
+        "vertex_id", F.lit(0).cast("long").alias("dist"), F.lit(1.0).alias("delta")
+    )
+    ew = e.withColumn("w", F.lit(1).cast("long"))
+    _pin_step(_sssp_step(ew), init, exchanges=1, combined=1)
 
 
-def test_walks_step_plans_two_exchanges(spark):
-    """Random-walk steps re-key the state by its CURRENT position (cur),
-    which the carry cannot co-partition with the (start, widx)-keyed
-    output of the previous step — so the intended minimal shape is TWO
-    exchanges: the state re-key for the edge join plus the per-walk
-    min-agg. Pin at 2."""
-    P = 8
-    saved = _pinned_planning(spark, P)
-    try:
-        from sharetrace_giraph_spark.algorithms.random_walks import walk_rank
+def test_kcore_step_plans_single_exchange(small_graph):
+    """k-core peeling (``_kcore_step``): the alive-degree count is the ONE
+    exchange, over a partial sum; gather and state-update joins are
+    co-partitioned under the carry."""
+    from sharetrace_giraph_spark.algorithms.kcore import _kcore_step
 
-        e, verts = _small_graph(spark, P)
+    e, verts = small_graph
+    init = verts.select(
+        "vertex_id", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
+    )
+    _pin_step(_kcore_step(e, 3), init, exchanges=1, combined=1)
 
-        def step(state, k):
-            st, ed = state.alias("st"), e.alias("ed")
-            frontier = st.hint("shuffle_hash").join(
-                ed.hint("shuffle_hash"), F.col("st.cur") == F.col("ed.src")
-            ).select(
-                F.col("st.start").alias("start"),
-                F.col("st.widx").alias("widx"),
-                F.col("st.cur").alias("cur"),
-                F.col("st.path").alias("path"),
-                F.col("ed.dst").alias("dst"),
-            )
-            cand = F.min(
-                F.struct(walk_rank("s", k).alias("r"), F.col("dst").alias("nbr"))
-            ).alias("m")
-            nxt = frontier.groupBy("start", "widx").agg(
-                cand, F.any_value("path").alias("path")
-            )
-            return nxt.select(
-                "start",
-                "widx",
-                F.col("m.nbr").alias("cur"),
-                F.concat("path", F.array(F.col("m.nbr"))).alias("path"),
-                F.lit(1.0).alias("delta"),
-            )
 
-        init = verts.select(
-            F.col("vertex_id").alias("start"),
-            F.lit(0).alias("widx"),
-            F.col("vertex_id").alias("cur"),
-            F.array(F.col("vertex_id")).alias("path"),
-            F.lit(1.0).alias("delta"),
-        )
-        carried = step(init, 0).localCheckpoint(eager=True)
-        mid_loop = step(carried, 1)
-        assert _count_shuffle_exchanges(mid_loop) == 2, _plan(mid_loop)
-        e.unpersist()
-    finally:
-        for key, val in saved.items():
-            spark.conf.set(key, val)
+def test_lpa_step_plans_two_exchanges(small_graph):
+    """LPA's mode adoption (``_lpa_step``) is a TWO-level aggregate —
+    count per (dst, label), then argmax per dst — so its intended minimal
+    shape is exactly TWO exchanges per superstep, each over its level's
+    partial aggregate (the gather and state-update joins stay
+    co-partitioned under the carry). Pin at 2 so a third exchange (e.g. a
+    state-side re-exchange from a broken carry) is caught."""
+    from sharetrace_giraph_spark.algorithms.label_propagation import _lpa_step
+
+    e, verts = small_graph
+    init = verts.select(
+        "vertex_id", F.col("vertex_id").alias("label"), F.lit(1.0).alias("delta")
+    )
+    _pin_step(_lpa_step(e, None), init, exchanges=2, combined=2)
+
+
+def test_walks_step_plans_two_exchanges(small_graph):
+    """Random-walk steps (``_walks_step``) re-key the state by its CURRENT
+    position (cur), which the carry cannot co-partition with the
+    (start, widx)-keyed output of the previous step — so the intended
+    minimal shape is TWO exchanges: the state re-key for the edge join
+    plus the per-walk min-agg over its partial min. Pin at 2."""
+    from sharetrace_giraph_spark.algorithms.random_walks import _walks_step
+
+    e, verts = small_graph
+    init = verts.select(
+        F.col("vertex_id").alias("start"),
+        F.lit(0).alias("widx"),
+        F.col("vertex_id").alias("cur"),
+        F.array(F.col("vertex_id")).alias("path"),
+        F.lit(1.0).alias("delta"),
+    )
+    _pin_step(_walks_step(e, "s", 4), init, exchanges=2, combined=1)
+
+
+def test_neighborhood_hll_step_plans_single_exchange(small_graph):
+    """HyperANF (``_anf_step(method="hll")``): the sketch gather join is
+    co-partitioned, and the per-vertex sketch union over state ∪ messages
+    is THE one exchange, over a partial union — the one ball merge whose
+    partial state is bounded (an HLL sketch), so a hub's reducer input
+    shrinks with the combine."""
+    from sharetrace_giraph_spark.algorithms.neighborhood import _anf_init, _anf_step
+
+    e, verts = small_graph
+    init = _anf_init(verts, "hll", 10)
+    _pin_step(_anf_step(e, "hll"), init, exchanges=1, combined=1)
 
 
 def test_risk_step_plans_single_exchange(spark):
     """Risk propagation's real superstep (``_risk_step``): each directed
     edge joins its sender's score ARRAY once (co-partitioned SHJ, no
     exchange), the relay max is a per-row HOF, and the per-receiver
-    collect/max agg is THE one exchange; the state-update join is
+    collect/max agg is THE one exchange, over its partial aggregate (a
+    receiver gets one de-duplicated message set per map task); the
+    state-update join is
     co-partitioned. No score is exploded into its own row, and the relay
     join's condition must stay a bare key equality: an F4
     ``where(m IS NOT NULL)`` would be pushed into it, evaluating the
@@ -709,8 +601,7 @@ def test_risk_step_plans_single_exchange(spark):
     from sharetrace_giraph_spark.plans.superstep import prepare_edges
 
     P = 8
-    saved = _pinned_planning(spark, P)
-    try:
+    with _pinned_planning(spark, P):
         canon = datagen.generate_edges(spark, 2000, 200, num_partitions=4)
         contacts = canon.select(
             F.col("src").cast("string").alias("src"),
@@ -730,17 +621,12 @@ def test_risk_step_plans_single_exchange(spark):
             (F.col("id").cast("long") % 10 / 10.0).alias("value"),
         )
         edges, _ = prepare_edges(spark, _directed_contact_edges(contacts), "u", P)
-        step = _risk_step(edges, 0.8)
-        carried = step(init_state(scores), 0).localCheckpoint(eager=True)
-        mid_loop = step(carried, 1)
-        plan = _plan(mid_loop)
-        assert _count_shuffle_exchanges(mid_loop) == 1, plan
+        plan = _pin_step(
+            _risk_step(edges, 0.8), init_state(scores), exchanges=1, combined=1
+        )
         assert "Generate" not in plan, plan  # scores are never exploded
         conds = [ln for ln in plan.splitlines() if ln.startswith("Join condition")]
         assert len(conds) == 2, plan  # relay join + state-update join
         for ln in conds:
             assert "filter(" not in ln and "array_max(" not in ln, ln
         edges.unpersist()
-    finally:
-        for key, val in saved.items():
-            spark.conf.set(key, val)
