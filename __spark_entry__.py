@@ -23,6 +23,8 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from sharetrace_giraph_spark.plans.cache import hold, release
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
@@ -59,29 +61,24 @@ def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LAST_CONTACTS: list = []  # last persisted contacts frame, released on next _graph()
+#: cache owner of the persisted contacts frame behind the graph queries
+_GRAPH = "entry.graph"
 
 
 def _graph(spark: SparkSession, sf_dir: str):
     from sharetrace_giraph_spark.operators import edges as E
 
     t = transcripts_from_events(spark, sf_dir)
-    # persisted: vertex_ids / encode_edges / the algorithm each re-evaluate it.
-    # Only one graph query's cache lives at a time: release the previous one
-    # (five graph queries in a session would otherwise pin five tables).
-    # pair_strategy="join": event-derived transcripts are FEW, HUGE
+    # persisted: vertex_ids / encode_edges / the algorithm each re-evaluate
+    # it; held (plans/cache), so only one graph query's contacts live at a
+    # time. pair_strategy="join": event-derived transcripts are FEW, HUGE
     # conversations (near-complete 150-actor sessions at sf0.01) — the
     # documented pathological case for the grouped expansion (measured
     # 1.6-1.8x faster with the distributed self-join on this shape).
-    while _LAST_CONTACTS:
-        _LAST_CONTACTS.pop().unpersist()
-    # release any triangle intermediates the previous graph query cached
-    from sharetrace_giraph_spark.algorithms import triangle_count as _tc
-
-    _tc.release_cached()
-    contacts = E.derive_contacts(t, duration_threshold_s=0, session_gap_s=6 * 3600,
-                                 pair_strategy="join").persist()
-    _LAST_CONTACTS.append(contacts)
+    release(_GRAPH)
+    contacts = hold(_GRAPH, E.derive_contacts(
+        t, duration_threshold_s=0, session_gap_s=6 * 3600, pair_strategy="join"
+    ).persist())
     verts = E.vertex_ids(contacts)
     enc = E.encode_edges(contacts, verts)
     return contacts, verts, enc
@@ -119,9 +116,19 @@ def _weighted_und(contacts, verts, cast: str):
 # the queries
 # ---------------------------------------------------------------------------
 
+def _fresh(query: Callable[[SparkSession, str], DataFrame]):
+    """``query``, first freeing every frame earlier queries held
+    (``plans/cache``), and with it every broadcast their plans pin."""
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release()
+        return query(spark, sf_dir)
+    return run
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full pipeline (events → transcripts → contact edges →
     PageRank under the checkpointed superstep driver) on sf0.001."""
+    release()
     return q_graph_pagerank(spark, "/root/testdata/sf0.001")
 
 
@@ -1856,8 +1863,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     the round-4 verdict's explicit request (item 7: assert the HLL
     estimation-mode tolerance band under the driver, not only in pytest).
     The pytest oracle twin (tests/test_entry_oracle.py) still runs all
-    86 against DuckDB every round regardless of order."""
-    return {
+    86 against DuckDB every round regardless of order. Each entry begins
+    by freeing every held frame (:func:`_fresh`)."""
+    return {name: _fresh(q) for name, q in {
         # --- window A (r05 rotation): the 35 entries NOT in CORRECTNESS_r04
         # (their latest driver row is r02/r03) run first, so at final
         # judgment every entry's green row is <= 1 round old ---
@@ -1956,7 +1964,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "contamination_ngram": q_contamination_ngram,
         "text_lang_id": q_text_lang_id,
         "text_repetition": q_text_repetition,
-    }
+    }.items()}
 
 
 # Shared DuckDB CTE chain replaying the transcript→contact edge derivation

@@ -262,10 +262,8 @@ def run_docs_bench(spark, cores: int, n_docs: int,
     protocol rationale as run_edges_bench). Two timed passes, MIN kept
     (contamination only adds wall); pass 1 doubles as JIT warmup."""
     from sharetrace_giraph_spark import datagen
-    from sharetrace_giraph_spark.operators.dedup import (
-        minhash_near_duplicates,
-        release_cached,
-    )
+    from sharetrace_giraph_spark.operators.dedup import BUCKETS, minhash_near_duplicates
+    from sharetrace_giraph_spark.plans.cache import release
 
     partitions = partitions or 32
     n_giant = min(1000, max(0, n_docs // 100))
@@ -280,7 +278,7 @@ def run_docs_bench(spark, cores: int, n_docs: int,
             docs, threshold=0.7, max_bucket_size=64, log_dropped=True
         ).count()
         walls.append(round(time.monotonic() - t0, 3))
-        release_cached()
+        release(BUCKETS)
     best = min(walls)
     return {
         "dedup_pipeline": best,

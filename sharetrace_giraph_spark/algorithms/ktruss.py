@@ -36,8 +36,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.cache import release
 from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
-from .triangle_count import release_cached, triangle_list
+from .triangle_count import WEDGES, triangle_list
 
 
 def k_truss(
@@ -97,6 +98,6 @@ def k_truss(
     driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"ktruss{k}", num_partitions)
     res = driver.run(init, step, max_supersteps=max_supersteps, tolerance=0.5,
                      resume=resume, checkpoint_every=checkpoint_every)
-    release_cached()
+    release(WEDGES)
     e.unpersist()
     return res

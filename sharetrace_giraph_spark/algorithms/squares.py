@@ -44,7 +44,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..plans.cache import hold, release
 from ..plans.superstep import shuffle_partitions
+from .triangle_count import WEDGES, undirected_degree
 
 
 def square_pair_counts(edges: DataFrame) -> DataFrame:
@@ -61,33 +63,22 @@ def square_pair_counts(edges: DataFrame) -> DataFrame:
     in-out wedge enumeration), one union, ONE grouped aggregate (partial +
     final — the shuffle carries (u, w, type) wedge rows, never H-wedges),
     then a scalar per-row polynomial. No windows, no collect.
+
+    The distinct edge set and the oriented table are held under
+    ``triangle_count.WEDGES`` (``plans/cache``), shared with
+    ``triangle_list``: each call of either frees the previous set.
     """
-    # same caching/width discipline as triangle_count.triangle_list, same
-    # registry — including its documented eviction contract: each call
-    # first releases the PREVIOUS call's registrations, so no caller
-    # sequence pins more than one set of intermediates; a prior call's
-    # still-lazy result stays CORRECT if evaluated later (its lineage
-    # recomputes, merely uncached), and __spark_entry__'s per-query
-    # release covers both modules. e is
-    # re-read by the degree agg, the orientation join, and every join
-    # build below — uncached, each re-executes the caller's edge lineage;
-    # and the oriented table's width is pinned explicitly so the two
-    # O(E^1.5) wedge self-joins can never inherit a 1-partition layout
-    # from a broadcast-streamed upstream (see BENCH.md, 'Round-5 late
+    # same discipline as triangle_list: e is re-read by the degree agg,
+    # the orientation join and every join build below; the oriented
+    # table's width is pinned explicitly so the two O(E^1.5) wedge
+    # self-joins can never inherit a 1-partition layout from a
+    # broadcast-streamed upstream (see BENCH.md, 'Round-5 late
     # regression'). Hash on `lo` co-partitions both aliases of the L
     # join and the build side of the M join.
-    from .triangle_count import _CACHED, release_cached
-
-    release_cached()
+    release(WEDGES)
     num_partitions = shuffle_partitions(edges.sparkSession)
-    e = edges.select("src", "dst").distinct().persist()
-    _CACHED.append(e)
-    deg = (
-        e.select(F.col("src").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    e = hold(WEDGES, edges.select("src", "dst").distinct().persist())
+    deg = undirected_degree(e)
     er = (
         e.join(deg.select(F.col("v").alias("src"), F.col("deg").alias("src_deg")), "src")
         .join(deg.select(F.col("v").alias("dst"), F.col("deg").alias("dst_deg")), "dst")
@@ -95,7 +86,8 @@ def square_pair_counts(edges: DataFrame) -> DataFrame:
     src_lt = F.struct(F.col("src_deg"), F.col("src")) < F.struct(F.col("dst_deg"), F.col("dst"))
     # lo ≺ hi; keep both endpoint degrees: rank comparisons between wedge
     # endpoints need (deg, id) structs on each side
-    oriented = (
+    oriented = hold(
+        WEDGES,
         er.select(
             F.when(src_lt, F.col("src")).otherwise(F.col("dst")).alias("lo"),
             F.when(src_lt, F.col("dst")).otherwise(F.col("src")).alias("hi"),
@@ -103,9 +95,8 @@ def square_pair_counts(edges: DataFrame) -> DataFrame:
             F.when(src_lt, F.col("dst_deg")).otherwise(F.col("src_deg")).alias("hi_deg"),
         )
         .repartition(num_partitions, "lo")
-        .persist()
+        .persist(),
     )
-    _CACHED.append(oriented)
 
     # L: out-out wedges v→u, v→w — pair key rank-ordered via the hi_deg structs
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")

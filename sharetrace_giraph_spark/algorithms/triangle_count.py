@@ -16,23 +16,14 @@ no triangle get 0), matching FIXTURES.md §2's expected values.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.cache import hold, release
 from ..plans.superstep import shuffle_partitions
 
-
-#: persisted intermediates of the most recent triangle_list() calls —
-#: released by release_cached() (callers that fire many per-session
-#: queries, like the driver contract, call it between queries so cached
-#: triangle tables don't accumulate in executor memory)
-_CACHED: list = []
-
-
-def release_cached() -> None:
-    """Unpersist every triangle intermediate still cached. Results built
-    on them stay valid (lineage recomputes), just uncached."""
-    while _CACHED:
-        _CACHED.pop().unpersist()
+#: cache owner (``plans/cache``) of the wedge pipelines' intermediates,
+#: shared by triangle_list and squares: one live wedge set across both
+WEDGES = "algorithms.wedges"
 
 
 def undirected_degree(edges: DataFrame) -> DataFrame:
@@ -48,12 +39,12 @@ def undirected_degree(edges: DataFrame) -> DataFrame:
 def triangle_list(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Triangle enumeration ``(a, b, c)`` (each triangle exactly once) via
     the degree-oriented wedge join; ``edges`` canonical (src < dst). The
-    returned frame (and the oriented edge table under it) is persisted and
-    registered for :func:`release_cached`; each call first releases the
-    PREVIOUS call's registrations, so no caller sequence pins more than
-    one triangle table (a prior call's returned frame stays valid — it
-    just recomputes if used after a later call)."""
-    release_cached()
+    returned frame, the oriented edge table under it and the distinct
+    edge set are persisted and held under :data:`WEDGES`
+    (``plans/cache``); each call first releases that owner, so no caller
+    sequence pins more than one wedge set (a prior call's returned frame
+    stays valid — it just recomputes if used after a later call)."""
+    release(WEDGES)
     if num_partitions is None:
         num_partitions = shuffle_partitions(edges.sparkSession)
     # e is consumed by the degree agg, the orientation join, AND every
@@ -61,10 +52,8 @@ def triangle_list(edges: DataFrame, num_partitions: int | None = None) -> DataFr
     # the caller's whole edge lineage (measured: a single tri.count()
     # launched ~29 jobs of ~100 tasks each when the upstream was a chain
     # of broadcast joins with no exchange to reuse). One O(E) cache
-    # materializes the lineage exactly once; released with the other
-    # intermediates by release_cached().
-    e = edges.select("src", "dst").distinct().persist()
-    _CACHED.append(e)
+    # materializes the lineage exactly once.
+    e = hold(WEDGES, edges.select("src", "dst").distinct().persist())
     deg = undirected_degree(e)
 
     # orientation order = lexicographic (deg, id) compared directly as a
@@ -87,16 +76,16 @@ def triangle_list(edges: DataFrame, num_partitions: int | None = None) -> DataFr
     # self-join (equi key = lo), so this is the wedge join's only
     # exchange; orientation bounds rows per `lo` at O(sqrt E), so the
     # hash cannot be skewed by hubs.
-    oriented = (
+    oriented = hold(
+        WEDGES,
         er.select(
             F.when(src_lt, F.col("src")).otherwise(F.col("dst")).alias("lo"),
             F.when(src_lt, F.col("dst")).otherwise(F.col("src")).alias("hi"),
             F.when(src_lt, F.col("dst_deg")).otherwise(F.col("src_deg")).alias("hi_deg"),
         )
         .repartition(num_partitions, "lo")
-        .persist()
+        .persist(),
     )
-    _CACHED.append(oriented)
 
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     wedges = e1.join(
@@ -111,9 +100,7 @@ def triangle_list(edges: DataFrame, num_partitions: int | None = None) -> DataFr
     )
 
     closing = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
-    tri = wedges.join(closing, ["b", "c"], "inner").persist()
-    _CACHED.append(tri)
-    return tri
+    return hold(WEDGES, wedges.join(closing, ["b", "c"], "inner").persist())
 
 
 def triangles(

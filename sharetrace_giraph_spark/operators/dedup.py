@@ -37,21 +37,14 @@ from functools import reduce
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..plans.cache import hold, release
 from .text import tokens
 
 logger = logging.getLogger(__name__)
 
 
-#: persisted bucket-key frame backing the loud-census path; one lives at a
-#: time, released on the next census (same discipline as triangle_count)
-_LAST_KEYED: list = []
-
-
-def release_cached() -> None:
-    """Release the census cache (call between many dedup queries in one
-    long session; otherwise the next capped call releases it)."""
-    while _LAST_KEYED:
-        _LAST_KEYED.pop().unpersist()
+#: cache owner (``plans/cache``) of the bucket-key frame a capped call persists
+BUCKETS = "operators.dedup.buckets"
 
 
 def _cap_buckets(
@@ -74,9 +67,8 @@ def _cap_buckets(
     # query). The bucket-key frame is narrow (id, bucket cols) and
     # O(docs × bands), so persist it for every capped call — quiet or
     # loud — and leave it live for the caller's action.
-    release_cached()
-    keyed = keyed.persist()
-    _LAST_KEYED.append(keyed)
+    release(BUCKETS)
+    keyed = hold(BUCKETS, keyed.persist())
     sizes = keyed.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("bucket_n"))
     if log_dropped:
         dropped = sizes.where(F.col("bucket_n") > max_bucket_size).agg(

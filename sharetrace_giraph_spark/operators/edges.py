@@ -39,6 +39,7 @@ import datetime as dt
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..plans.cache import hold, release
 from ..plans.superstep import shuffle_partitions
 
 #: reference contact-duration threshold: 15 minutes
@@ -101,10 +102,8 @@ def _pairs_grouped(spans: DataFrame) -> DataFrame:
     )
 
 
-#: the span frame persisted by the most recent join-strategy
-#: derive_contacts call — released on the next call (same one-live-cache
-#: pattern as algorithms/triangle_count._CACHED)
-_SPANS_CACHE: list = []
+#: cache owner of the span frame the join-strategy pair expansion persists
+_SPANS = "operators.edges.spans"
 
 
 def _pairs_join(spans: DataFrame) -> DataFrame:
@@ -118,11 +117,10 @@ def _pairs_join(spans: DataFrame) -> DataFrame:
     (near-complete 150-actor sessions, 1.06M pairs): join 6.8-8.7s vs
     grouped 11-15s at local[32]; on 15k small conversations the ranking
     flips (grouped evaluates the transcript scan once and adds zero
-    shuffles)."""
-    while _SPANS_CACHE:
-        _SPANS_CACHE.pop().unpersist()
-    spans = spans.persist()
-    _SPANS_CACHE.append(spans)
+    shuffles). The persisted spans are held under their own owner
+    (``plans/cache``), released on the next call."""
+    release(_SPANS)
+    spans = hold(_SPANS, spans.persist())
     a, b = spans.alias("a"), spans.alias("b")
     return a.join(
         b,
@@ -316,8 +314,10 @@ def dense_ids(
     overhead ~2.5× the task time of the whole job. The ids are frozen at
     materialization, so no re-execution — hence no boundary re-sample —
     can ever be observed by a consumer. The two materialization caches
-    are released before returning; the checkpoint blocks are freed by
-    the ContextCleaner when the returned frame is dropped.
+    are released before returning. The returned frame is not held in
+    ``plans/cache``: it has no lineage, so freeing it would break an
+    earlier result evaluated again; the ContextCleaner frees its blocks
+    (about 1 KB at sf0.001, no broadcast) when it is dropped.
 
     The frozen table has no lineage: losing an executor that holds its
     checkpoint blocks fails every later consumer instead of recomputing

@@ -44,6 +44,8 @@ from dataclasses import dataclass, field
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
+from .cache import free
+
 #: bounded wait for the piggybacked convergence metrics (the listener
 #: event rides Spark's shared async listener bus, which may drop events
 #: under extreme pressure — never hang the loop on it)
@@ -61,19 +63,16 @@ DEFAULT_MAX_SUPERSTEPS = 5
 #: lineages (sampled seeds, current-time cutoffs)
 _STEP_RE = re.compile(r"superstep=(-?\d+)$")
 
+#: auto_num_partitions sizing: edges per partition, and the least width
+_ROWS_PER_PARTITION, _MIN_PARTITIONS = 100_000, 4
+
 
 def shuffle_partitions(spark: SparkSession) -> int:
     """``spark.sql.shuffle.partitions`` as an int."""
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
-def auto_num_partitions(
-    spark: SparkSession,
-    edges: DataFrame,
-    explicit: int | None = None,
-    rows_per_partition: int = 100_000,
-    floor: int = 4,
-) -> int:
+def auto_num_partitions(spark: SparkSession, edges: DataFrame, explicit: int | None = None) -> int:
     """Iteration partition count: explicit wins, else stats-based.
 
     Every superstep pays per-partition fixed costs (task scheduling, one
@@ -81,18 +80,18 @@ def auto_num_partitions(
     SEVERAL stages, so over-partitioning a small graph multiplies pure
     overhead — measured 19.3 s → 11.2 s for 10 PageRank supersteps on a
     94k-edge graph going from 32 to 4 partitions at local[32]. Sizing:
-    ``clamp(ceil(E / rows_per_partition), floor, spark.sql.shuffle
-    .partitions)`` — large graphs keep the configured width (the 40M-edge
-    scaling table stays at 32), small graphs stop paying 32 tasks to move
-    90k rows. Costs one count() of the edge frame; at-scale callers (the
-    scaling bench, cluster jobs with tuned shuffle widths) pass
-    ``explicit`` and skip it. The choice never changes results — every
-    kernel's aggregates are partition-order-free."""
+    ``clamp(ceil(E / _ROWS_PER_PARTITION), _MIN_PARTITIONS,
+    spark.sql.shuffle.partitions)`` — large graphs keep the configured
+    width (the 40M-edge scaling table stays at 32), small graphs stop
+    paying 32 tasks to move 90k rows. Costs one count() of the edge
+    frame; at-scale callers (the scaling bench, cluster jobs with tuned
+    shuffle widths) pass ``explicit`` and skip it. The choice never
+    changes results — every kernel's aggregates are partition-order-free."""
     if explicit is not None:
         return explicit
     conf = shuffle_partitions(spark)
     n = edges.count()
-    return max(1, min(conf, max(floor, -(-n // rows_per_partition))))
+    return max(1, min(conf, max(_MIN_PARTITIONS, -(-n // _ROWS_PER_PARTITION))))
 
 
 def prepare_edges(
@@ -332,26 +331,6 @@ class SuperstepDriver:
         row = cached.agg(*self._convergence_cols()).collect()[0]
         return {"l1": row["l1"], "n": row["n"], "active": row["active"]}
 
-    @staticmethod
-    def _free_carry(df: DataFrame) -> None:
-        """Release a carried superstep's checkpoint blocks NOW.
-
-        ``Dataset.unpersist()`` only evicts CacheManager
-        (InMemoryRelation) entries; ``localCheckpoint`` persists the
-        underlying RDD directly, so without this the MEMORY_AND_DISK
-        blocks of superseded supersteps linger until driver GC +
-        ContextCleaner get around to them — nondeterministic
-        accumulation on long runs. The checkpointed RDD handle is
-        reachable through the rebased ``LogicalRDD`` plan node;
-        ``unpersist(blocking=false)`` frees the blocks eagerly.
-        Best-effort: any reflection failure falls back to the
-        ContextCleaner path (correctness is unaffected — only block
-        retention timing)."""
-        try:
-            df._jdf.logicalPlan().rdd().unpersist(False)
-        except Exception:
-            pass
-
     def _join_pending_write(self, except_step: int | None = None) -> None:
         """Wait for the in-flight durable snapshot write (if any) and
         re-raise its failure — a checkpoint that silently failed must not
@@ -489,9 +468,7 @@ class SuperstepDriver:
         max_supersteps: int = DEFAULT_MAX_SUPERSTEPS,
         tolerance: float = DEFAULT_TOLERANCE,
         resume: bool = True,
-        min_supersteps: int = 1,
         checkpoint_every: int = 1,
-        pin_planning: bool = True,
         durable_continuation: bool = False,
     ) -> SuperstepResult:
         """``checkpoint_every`` is Giraph's checkpointFrequency analog:
@@ -500,10 +477,10 @@ class SuperstepDriver:
         (cheaper, not kill-proof). Resume granularity becomes k
         supersteps; the final state is always written durably.
 
-        ``pin_planning`` (default on): for the duration of the loop, AQE
-        is disabled and ``spark.sql.shuffle.partitions`` is pinned to the
-        iteration width P. Rationale: the loop's static inputs (edges,
-        vertex universe) are cached hash-partitioned at P and every
+        Planning is pinned for the duration of the loop: AQE is disabled
+        and ``spark.sql.shuffle.partitions`` is pinned to the iteration
+        width P. Rationale: the loop's static inputs (edges, vertex
+        universe) are cached hash-partitioned at P and every
         superstep's carried state comes out hash-partitioned at P
         (``_checkpoint_carry``), so with static planning EnsureRequirements
         proves co-partitioning and each superstep needs exactly ONE
@@ -539,14 +516,12 @@ class SuperstepDriver:
         resumed_from = latest_committed(self.checkpoint_dir, self.run_id, self.algorithm) if resume else None
 
         conf = self.spark.conf
-        saved: dict[str, str] | None = None
-        if pin_planning:
-            saved = {
-                k: conf.get(k)
-                for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-            }
-            conf.set("spark.sql.adaptive.enabled", "false")
-            conf.set("spark.sql.shuffle.partitions", str(self.num_partitions))
+        saved = {
+            k: conf.get(k)
+            for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+        }
+        conf.set("spark.sql.adaptive.enabled", "false")
+        conf.set("spark.sql.shuffle.partitions", str(self.num_partitions))
         try:
             cur_cached: DataFrame | None = None
             last_durable = resumed_from if resumed_from is not None else -1
@@ -602,7 +577,7 @@ class SuperstepDriver:
                     # clusters durable_continuation targets)
                     agg = self._carry_metrics(new_cached, obs)
                     if cur_cached is not None:
-                        self._free_carry(cur_cached)
+                        free(cur_cached)
                     state = new_cached
                     cur_cached = None
                 else:
@@ -612,7 +587,7 @@ class SuperstepDriver:
                         # the blocks we are about to free; step k's own
                         # write (the one just launched) keeps overlapping
                         self._join_pending_write(except_step=k)
-                        self._free_carry(cur_cached)
+                        free(cur_cached)
                     state = cur_cached = new_cached
                 if durable:
                     last_durable = k
@@ -629,7 +604,7 @@ class SuperstepDriver:
                 self._append_metrics(row)
                 all_metrics.append(row)
                 steps_run += 1
-                if steps_run >= min_supersteps and l1 < tolerance:
+                if l1 < tolerance:
                     converged = True
                     break
 
@@ -651,7 +626,7 @@ class SuperstepDriver:
                             f"superstep={last_durable}",
                         )
                     )
-                self._free_carry(cur_cached)
+                free(cur_cached)
         finally:
             # never leave a write racing the conf restore (or a later
             # unpersist by the caller) — but if another exception is
@@ -671,9 +646,8 @@ class SuperstepDriver:
                     stacklevel=2,
                 )
             finally:
-                if saved is not None:
-                    for key, val in saved.items():
-                        conf.set(key, val)
+                for key, val in saved.items():
+                    conf.set(key, val)
 
         return SuperstepResult(
             state=state,

@@ -94,11 +94,9 @@ def test_dense_ids_truncate_lineage_and_wedge_width(spark):
        possibly-1-partition layout from whatever tiny cached relation
        the encode joins happened to stream.
     """
-    from sharetrace_giraph_spark.algorithms.triangle_count import (
-        _CACHED,
-        triangle_list,
-    )
+    from sharetrace_giraph_spark.algorithms.triangle_count import WEDGES, triangle_list
     from sharetrace_giraph_spark.operators.edges import dense_ids
+    from sharetrace_giraph_spark.plans import cache
 
     df = spark.range(0, 500).select(
         F.format_string("r%05d", F.col("id")).alias("role")
@@ -117,7 +115,7 @@ def test_dense_ids_truncate_lineage_and_wedge_width(spark):
     )  # K8: 56 triangles
     tri = triangle_list(edges.repartition(1))  # worst-case upstream layout
     assert tri.count() == 56
-    oriented = _CACHED[-2]  # [e, oriented, tri]
+    _, oriented, _ = cache.held[WEDGES]  # [e, oriented, tri]
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert oriented.rdd.getNumPartitions() == width
 
@@ -579,6 +577,23 @@ def test_neighborhood_hll_step_plans_single_exchange(small_graph):
     e, verts = small_graph
     init = _anf_init(verts, "hll", 10)
     _pin_step(_anf_step(e, "hll"), init, exchanges=1, combined=1)
+
+
+def test_neighborhood_exact_step_plans_single_exchange(small_graph):
+    """Exact ANF (``_anf_step(method="exact")``) plans the same shape as
+    hll: co-partitioned gather join, ONE exchange over a partial
+    ``collect_list``. Unlike the sketch union, that partial does not
+    shrink a hub's reducer input: a partial ``collect_list`` is the
+    concatenation of its map task's reached-sets, so the exchange still
+    carries every element of deg(hub) balls (only the final
+    ``array_distinct(flatten(...))`` de-duplicates). Use
+    ``method="hll"`` on hub-heavy graphs."""
+    from sharetrace_giraph_spark.algorithms.neighborhood import _anf_init, _anf_step
+
+    e, verts = small_graph
+    init = _anf_init(verts, "exact", 10)
+    plan = _pin_step(_anf_step(e, "exact"), init, exchanges=1, combined=1)
+    assert "partial_collect_list" in plan, plan
 
 
 def test_risk_step_plans_single_exchange(spark):
