@@ -620,19 +620,20 @@ includes raw per-superstep walls for inspection.
 
 ## Kernel choice (measured, same protocol, 80M directed edges)
 
-PageRank steady-state, relational join+agg kernel vs per-partition CSR
-Arrow kernel (`pagerank(kernel="csr")`):
+PageRank steady-state, relational join+agg kernel vs a per-partition
+CSR Arrow kernel (an `applyInPandas` cogroup):
 
 | kernel | edges/sec @ local[8] | edges/sec @ local[32] |
 |---|---|---|
-| relational (default) | 9,798,218 | 20,473,448 |
-| csr (`applyInPandas` cogroup) | 1,283,702 | 6,981,564 |
+| relational | 9,798,218 | 20,473,448 |
+| csr (removed) | 1,283,702 | 6,981,564 |
 
-The CSR kernel pays an Arrow JVM->Python exchange of the full edge
+The CSR kernel paid an Arrow JVM->Python exchange of the full edge
 table every superstep; the relational kernel keeps the loop inside
-whole-stage codegen and ships only vertex-state rows. The relational
-kernel is therefore the default; the CSR path stays as the extension
-point for kernels the relational form cannot express.
+whole-stage codegen and ships only vertex-state rows. On these numbers
+(7.6x slower at local[8], 2.9x at local[32]) the CSR kernel was
+removed, and PageRank has one kernel. It comes back only with a
+workload on which it wins.
 
 Full per-cores JSON:
 

@@ -76,7 +76,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--max-supersteps", type=int, default=20)
     ap.add_argument("--tolerance", type=float, default=1e-6)
-    ap.add_argument("--kernel", default="relational", choices=["relational", "csr"])
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
@@ -139,7 +138,7 @@ def main() -> None:
         res = pagerank(
             spark, und, verts, args.checkpoint_dir, run_id=args.run_id,
             max_supersteps=args.max_supersteps, tolerance=args.tolerance,
-            kernel=args.kernel, resume=resume,
+            resume=resume,
             weight_col=weight_col, teleport=teleport,
         )
         out = res.state.join(verts, "vertex_id").select("role", "rank")

@@ -30,7 +30,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
 
 #: "not reached yet" — far above any real hop count, far below long
 #: overflow even after repeated +1
@@ -61,6 +61,30 @@ def _bfs_step(e: DataFrame, cost_col: str | None = None):
     return step
 
 
+def _bfs_init(verts: DataFrame, sources: DataFrame) -> DataFrame:
+    """Seeded state over the cached vertex universe: every source at
+    distance 0 and in the first frontier, everyone else UNREACHED and
+    silent until a wavefront reaches them.
+
+    A seed set disjoint from the vertex universe (typo, id-encoding
+    mismatch) raises ``ValueError``: it would otherwise give an empty
+    first frontier and an instantly "converged" run with every vertex
+    UNREACHED, plausible-looking and silently wrong. ``verts`` is the
+    semi-join's LEFT side, which puts the source set on the build side:
+    AQE broadcasts the typical handful of seeds (a probe over the cached
+    verts with isEmpty's early exit), and an unbounded source cohort
+    degrades to a shuffle join instead of a forced broadcast."""
+    src_set = sources.select("vertex_id").distinct()
+    if verts.join(src_set, "vertex_id", "left_semi").isEmpty():
+        raise ValueError("source set has no vertex in the graph")
+    return verts.join(src_set.withColumn("_is_src", F.lit(True)), "vertex_id", "left").select(
+        "vertex_id",
+        F.when(F.col("_is_src"), F.lit(0)).otherwise(F.lit(UNREACHED))
+        .cast("long").alias("dist"),
+        F.when(F.col("_is_src"), F.lit(1.0)).otherwise(F.lit(0.0)).alias("delta"),
+    )
+
+
 def bfs(
     spark: SparkSession,
     edges: DataFrame,
@@ -76,45 +100,8 @@ def bfs(
     """Returns state (vertex_id, dist, delta); ``dist`` is the minimum hop
     count from any source, or :data:`UNREACHED`. Filter
     ``dist < UNREACHED`` for the reachable set."""
-    e, num_partitions = prepare_edges(
-        spark, edges.select("src", "dst"), "src", num_partitions
-    )
-    # hash-partition + materialize the vertex universe before the loop
-    # (parity with pagerank._prepare — see connected_components.py)
-    verts = (
-        vertices.select("vertex_id")
-        .repartition(num_partitions, "vertex_id")
-        .persist()
-    )
-    verts.count()
-
-    src_set = sources.select("vertex_id").distinct()
-    # guard the same failure pagerank's personalized path guards: a seed
-    # set disjoint from the vertex universe (typo / id-encoding mismatch)
-    # would otherwise produce an empty first frontier and an instantly
-    # "converged" run with every vertex UNREACHED — plausible-looking,
-    # silently wrong output. Probe direction matters at scale: verts as
-    # the LEFT side puts the SOURCE set on the semi-join's build side,
-    # so for the typical handful of seeds AQE broadcasts it and the
-    # check is a probe over the already-cached verts with isEmpty's
-    # early exit — while an unbounded source cohort (nothing in the API
-    # caps `sources`) degrades to a shuffle join instead of a forced
-    # driver-OOM broadcast. The flipped orientation could never
-    # broadcast its O(V) build side at all.
-    if verts.join(src_set, "vertex_id", "left_semi").isEmpty():
-        raise ValueError("source set has no vertex in the graph")
-    init = verts.join(src_set.withColumn("_is_src", F.lit(True)), "vertex_id", "left").select(
-        "vertex_id",
-        F.when(F.col("_is_src"), F.lit(0)).otherwise(F.lit(UNREACHED))
-        .cast("long").alias("dist"),
-        # only sources are in the first frontier — everyone else has
-        # nothing to say until a wavefront reaches them
-        F.when(F.col("_is_src"), F.lit(1.0)).otherwise(F.lit(0.0)).alias("delta"),
-    )
-
-    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "bfs", num_partitions)
-    res = driver.run(init, _bfs_step(e), max_supersteps=max_supersteps, tolerance=0.5,
-                     resume=resume, checkpoint_every=checkpoint_every)
-    e.unpersist()
-    verts.unpersist()
-    return res
+    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", vertices, num_partitions)
+    with inputs as (e, verts, P):
+        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "bfs", P)
+        return driver.run(_bfs_init(verts, sources), _bfs_step(e), max_supersteps=max_supersteps,
+                          tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)

@@ -36,7 +36,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
 
 
 def _cc_step(e: DataFrame, method: str):
@@ -109,26 +109,9 @@ def connected_components(
     component (exact, deterministic, identical across both methods)."""
     if method not in ("frontier", "doubling"):
         raise ValueError(f"unknown method {method!r}")
-    e, num_partitions = prepare_edges(
-        spark, edges.select("src", "dst"), "src", num_partitions
-    )
-    # materialize the vertex universe BEFORE the loop, hash-partitioned
-    # at the iteration width (parity with pagerank._prepare): the init
-    # state enters superstep 0 already co-partitioned on vertex_id, and
-    # a possibly-expensive vertex derivation (e.g. a distinct over the
-    # edge table) is paid once here instead of riding superstep 0's
-    # critical path twice (both state references)
-    verts = (
-        vertices.select("vertex_id")
-        .repartition(num_partitions, "vertex_id")
-        .persist()
-    )
-    verts.count()
-
-    init = verts.select("vertex_id", F.col("vertex_id").alias("comp"), F.lit(1.0).alias("delta"))
-
-    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "connected_components", num_partitions)
-    res = driver.run(init, _cc_step(e, method), max_supersteps=max_supersteps, tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
-    e.unpersist()
-    verts.unpersist()
-    return res
+    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", vertices, num_partitions)
+    with inputs as (e, verts, P):
+        init = verts.select("vertex_id", F.col("vertex_id").alias("comp"), F.lit(1.0).alias("delta"))
+        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "connected_components", P)
+        return driver.run(init, _cc_step(e, method), max_supersteps=max_supersteps, tolerance=0.5,
+                          resume=resume, checkpoint_every=checkpoint_every)

@@ -26,7 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
 
 
 def _kcore_step(e: DataFrame, k: int):
@@ -68,25 +68,11 @@ def k_core(
 ) -> SuperstepResult:
     """Returns state (vertex_id, alive, delta); ``alive`` = 1 iff the
     vertex survives in the k-core."""
-    e, num_partitions = prepare_edges(
-        spark, edges.select("src", "dst"), "src", num_partitions
-    )
-    # hash-partition + materialize the vertex universe before the loop
-    # (parity with pagerank._prepare — see connected_components.py)
-    verts = (
-        vertices.select("vertex_id")
-        .repartition(num_partitions, "vertex_id")
-        .persist()
-    )
-    verts.count()
-
-    init = verts.select(
-        "vertex_id", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
-    )
-
-    driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"kcore{k}", num_partitions)
-    res = driver.run(init, _kcore_step(e, k), max_supersteps=max_supersteps, tolerance=0.5,
-                     resume=resume, checkpoint_every=checkpoint_every)
-    e.unpersist()
-    verts.unpersist()
-    return res
+    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", vertices, num_partitions)
+    with inputs as (e, verts, P):
+        init = verts.select(
+            "vertex_id", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
+        )
+        driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"kcore{k}", P)
+        return driver.run(init, _kcore_step(e, k), max_supersteps=max_supersteps, tolerance=0.5,
+                          resume=resume, checkpoint_every=checkpoint_every)

@@ -37,34 +37,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.cache import release
-from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
 from .triangle_count import WEDGES, triangle_list
 
 
-def k_truss(
-    spark: SparkSession,
-    edges: DataFrame,
-    k: int,
-    checkpoint_dir: str,
-    run_id: str = "ktruss",
-    max_supersteps: int = 30,
-    num_partitions: int | None = None,
-    resume: bool = True,
-    checkpoint_every: int = 1,
-) -> SuperstepResult:
-    """Returns state (src, dst, alive, delta); ``alive`` = 1 iff the edge
-    survives in the k-truss. Triangle support is recomputed per superstep
-    over the survivor set only, so each round's wedge join shrinks with
-    the peeling front. The per-edge support count plans a partial
-    ``count`` below its exchange (``operators/skew``), so an edge between
-    two hubs reaches its reducer as one row per map task."""
-    e, num_partitions = prepare_edges(
-        spark, edges.select("src", "dst"), "src", num_partitions
-    )
-
-    init = e.select(
-        "src", "dst", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
-    )
+def _ktruss_step(k: int):
+    """One edge-peeling superstep of the ``k``-truss over the carried
+    edge state ``(src, dst, alive, delta)``; returns ``step(state,
+    superstep) -> state``."""
     min_support = k - 2
 
     def step(state: DataFrame, _k: int) -> DataFrame:
@@ -95,9 +75,34 @@ def k_truss(
             F.abs(new_alive - F.col("alive")).cast("double").alias("delta"),
         )
 
-    driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"ktruss{k}", num_partitions)
-    res = driver.run(init, step, max_supersteps=max_supersteps, tolerance=0.5,
-                     resume=resume, checkpoint_every=checkpoint_every)
-    release(WEDGES)
-    e.unpersist()
-    return res
+    return step
+
+
+def k_truss(
+    spark: SparkSession,
+    edges: DataFrame,
+    k: int,
+    checkpoint_dir: str,
+    run_id: str = "ktruss",
+    max_supersteps: int = 30,
+    num_partitions: int | None = None,
+    resume: bool = True,
+    checkpoint_every: int = 1,
+) -> SuperstepResult:
+    """Returns state (src, dst, alive, delta); ``alive`` = 1 iff the edge
+    survives in the k-truss. Triangle support is recomputed per superstep
+    over the survivor set only, so each round's wedge join shrinks with
+    the peeling front. The per-edge support count plans a partial
+    ``count`` below its exchange (``operators/skew``), so an edge between
+    two hubs reaches its reducer as one row per map task."""
+    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", num_partitions=num_partitions)
+    with inputs as (e, _, P):
+        init = e.select(
+            "src", "dst", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
+        )
+        driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"ktruss{k}", P)
+        try:
+            return driver.run(init, _ktruss_step(k), max_supersteps=max_supersteps,
+                              tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
+        finally:
+            release(WEDGES)

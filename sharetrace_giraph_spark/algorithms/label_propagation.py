@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
 
 
 def _lpa_step(e: DataFrame, weight_col: str | None):
@@ -72,22 +72,8 @@ def label_propagation(
     are summation-order-sensitive, which would make near-ties
     nondeterministic; integer sums are exact."""
     cols = ["src", "dst"] + ([weight_col] if weight_col else [])
-    e, num_partitions = prepare_edges(
-        spark, edges.select(*cols), "src", num_partitions
-    )
-    # hash-partition + materialize the vertex universe before the loop
-    # (parity with pagerank._prepare — see connected_components.py)
-    verts = (
-        vertices.select("vertex_id")
-        .repartition(num_partitions, "vertex_id")
-        .persist()
-    )
-    verts.count()
-
-    init = verts.select("vertex_id", F.col("vertex_id").alias("label"), F.lit(1.0).alias("delta"))
-
-    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "label_propagation", num_partitions)
-    res = driver.run(init, _lpa_step(e, weight_col), max_supersteps=max_supersteps, tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
-    e.unpersist()
-    verts.unpersist()
-    return res
+    with loop_inputs(spark, edges.select(*cols), "src", vertices, num_partitions) as (e, verts, P):
+        init = verts.select("vertex_id", F.col("vertex_id").alias("label"), F.lit(1.0).alias("delta"))
+        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "label_propagation", P)
+        return driver.run(init, _lpa_step(e, weight_col), max_supersteps=max_supersteps,
+                          tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)

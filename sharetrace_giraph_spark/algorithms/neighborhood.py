@@ -46,7 +46,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
 
 
 def _anf_init(vertices: DataFrame, method: str, lg_k: int) -> DataFrame:
@@ -127,19 +127,16 @@ def neighborhood_function(
     radii computed (early-halt when every ball stops growing)."""
     if method not in ("exact", "hll"):
         raise ValueError(f"method must be 'exact' or 'hll', got {method!r}")
-    e, num_partitions = prepare_edges(
-        spark, edges.select("src", "dst"), "src", num_partitions
-    )
-    driver = SuperstepDriver(
-        spark, checkpoint_dir, run_id, f"neighborhood_{method}", num_partitions
-    )
-    res = driver.run(
-        _anf_init(vertices, method, lg_k),
-        _anf_step(e, method),
-        max_supersteps=max_radius,
-        resume=resume,
-        checkpoint_every=checkpoint_every,
-    )
+    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", num_partitions=num_partitions)
+    with inputs as (e, _, P):
+        driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"neighborhood_{method}", P)
+        res = driver.run(
+            _anf_init(vertices, method, lg_k),
+            _anf_step(e, method),
+            max_supersteps=max_radius,
+            resume=resume,
+            checkpoint_every=checkpoint_every,
+        )
     # structural contract: hist ALWAYS has max_radius+1 entries. On early
     # halt (every ball saturated) the remaining radii repeat the saturated
     # count — NF is constant past saturation by definition — so consumers

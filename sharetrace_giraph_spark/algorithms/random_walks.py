@@ -31,7 +31,7 @@ has ≥1 neighbor (its predecessor), so no walk ever strands; delta drops to
 0 on the final step so the driver halts converged.
 
 Scale notes: the static undirected edge table is hash-partitioned by src
-and cached once (``prepare_edges``); per-step join output is
+and cached once (``loop_inputs``); per-step join output is
 Σ_w deg(cur(w)) rows — a walk sitting on a hub brings deg(hub)
 candidates under one (start, widx) key, and the per-walk ``min`` plans a
 partial aggregate below the exchange (``operators/skew``), so that key
@@ -45,7 +45,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
 
 
 def walk_rank(seed: str, step: int) -> F.Column:
@@ -129,30 +129,26 @@ def random_walks(
     und = canon.unionByName(
         canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    e, num_partitions = prepare_edges(spark, und, "src", num_partitions)
-
-    starts = e.select(F.col("src").alias("start")).distinct()
-    init = starts.select(
-        "start",
-        F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias("widx"),
-    ).select(
-        "start",
-        F.col("widx").cast("int").alias("widx"),
-        F.col("start").alias("cur"),
-        F.array(F.col("start")).alias("path"),
-        F.lit(1.0).alias("delta"),
-    )
-
-    driver = SuperstepDriver(
-        spark, checkpoint_dir, run_id, "random_walks", num_partitions
-    )
-    return driver.run(
-        init,
-        _walks_step(e, seed, walk_length),
-        max_supersteps=walk_length,
-        resume=resume,
-        checkpoint_every=checkpoint_every,
-    )
+    with loop_inputs(spark, und, "src", num_partitions=num_partitions) as (e, _, P):
+        starts = e.select(F.col("src").alias("start")).distinct()
+        init = starts.select(
+            "start",
+            F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias("widx"),
+        ).select(
+            "start",
+            F.col("widx").cast("int").alias("widx"),
+            F.col("start").alias("cur"),
+            F.array(F.col("start")).alias("path"),
+            F.lit(1.0).alias("delta"),
+        )
+        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "random_walks", P)
+        return driver.run(
+            init,
+            _walks_step(e, seed, walk_length),
+            max_supersteps=walk_length,
+            resume=resume,
+            checkpoint_every=checkpoint_every,
+        )
 
 
 def walks_to_corpus(state: DataFrame) -> DataFrame:

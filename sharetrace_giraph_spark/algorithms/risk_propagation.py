@@ -61,7 +61,7 @@ from ..plans.superstep import (
     DEFAULT_TOLERANCE,
     SuperstepDriver,
     SuperstepResult,
-    prepare_edges,
+    loop_inputs,
 )
 
 
@@ -186,17 +186,14 @@ def risk_propagation(
     ``contacts`` must hold one row per unordered pair with ``src < dst``
     (as ``derive_contacts`` and ``jsonlines.read_factor_graph`` produce):
     see :func:`_directed_contact_edges`."""
-    edges, num_partitions = prepare_edges(
-        spark, _directed_contact_edges(contacts), "u", num_partitions
-    )
-    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "risk_propagation", num_partitions)
-    res = driver.run(
-        init_state(scores), _risk_step(edges, transmission_rate),
-        max_supersteps=max_supersteps, tolerance=tolerance, resume=resume,
-        checkpoint_every=checkpoint_every,
-    )
-    edges.unpersist()
-    return res
+    directed = _directed_contact_edges(contacts)
+    with loop_inputs(spark, directed, "u", num_partitions=num_partitions) as (edges, _, P):
+        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "risk_propagation", P)
+        return driver.run(
+            init_state(scores), _risk_step(edges, transmission_rate),
+            max_supersteps=max_supersteps, tolerance=tolerance, resume=resume,
+            checkpoint_every=checkpoint_every,
+        )
 
 
 def final_scores(state: DataFrame) -> DataFrame:

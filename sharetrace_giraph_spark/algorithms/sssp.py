@@ -32,8 +32,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, prepare_edges
-from .bfs import UNREACHED, _bfs_step
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
+from .bfs import _bfs_init, _bfs_step
 
 
 def _sssp_step(e: DataFrame):
@@ -60,40 +60,8 @@ def shortest_paths(
     path cost (sum of long weights) from any source, or
     :data:`~sharetrace_giraph_spark.algorithms.bfs.UNREACHED`. Filter
     ``dist < UNREACHED`` for the reachable set."""
-    e, num_partitions = prepare_edges(
-        spark, edges.select("src", "dst", F.col(weight_col).cast("long").alias("w")),
-        "src", num_partitions
-    )
-    # hash-partition + materialize the vertex universe before the loop
-    # (parity with pagerank._prepare — see connected_components.py)
-    verts = (
-        vertices.select("vertex_id")
-        .repartition(num_partitions, "vertex_id")
-        .persist()
-    )
-    verts.count()
-
-    src_set = sources.select("vertex_id").distinct()
-    # guard the same failure pagerank's personalized path guards: a seed
-    # set disjoint from the vertex universe (typo / id-encoding mismatch)
-    # would otherwise produce an empty first frontier and an instantly
-    # "converged" run with every vertex UNREACHED — plausible-looking,
-    # silently wrong output. verts LEFT puts the source set on the
-    # build side: AQE broadcasts the typical tiny seed set (probe over
-    # cached verts, early exit) and shuffle-degrades an unbounded
-    # cohort instead of force-broadcasting it (see bfs.py)
-    if verts.join(src_set, "vertex_id", "left_semi").isEmpty():
-        raise ValueError("source set has no vertex in the graph")
-    init = verts.join(src_set.withColumn("_is_src", F.lit(True)), "vertex_id", "left").select(
-        "vertex_id",
-        F.when(F.col("_is_src"), F.lit(0)).otherwise(F.lit(UNREACHED))
-        .cast("long").alias("dist"),
-        F.when(F.col("_is_src"), F.lit(1.0)).otherwise(F.lit(0.0)).alias("delta"),
-    )
-
-    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "sssp", num_partitions)
-    res = driver.run(init, _sssp_step(e), max_supersteps=max_supersteps, tolerance=0.5,
-                     resume=resume, checkpoint_every=checkpoint_every)
-    e.unpersist()
-    verts.unpersist()
-    return res
+    weighted = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
+    with loop_inputs(spark, weighted, "src", vertices, num_partitions) as (e, verts, P):
+        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "sssp", P)
+        return driver.run(_bfs_init(verts, sources), _sssp_step(e), max_supersteps=max_supersteps,
+                          tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)

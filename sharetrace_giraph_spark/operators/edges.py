@@ -343,10 +343,10 @@ def dense_ids(
 def vertex_ids(contacts: DataFrame) -> DataFrame:
     """Dense deterministic vertex ids: ``(vertex_id: long, role: string)``.
 
-    Dense (0..V-1) so CSR kernels can index arrays directly; deterministic
-    (ordered by role) so runs are reproducible. Assignment is the
-    range-partitioned two-pass of :func:`dense_ids` — no global
-    single-partition sort even at 10^9-vertex scale.
+    Dense (0..V-1) so ids are compact long join keys for the superstep
+    loop; deterministic (ordered by role) so runs are reproducible.
+    Assignment is the range-partitioned two-pass of :func:`dense_ids` —
+    no global single-partition sort even at 10^9-vertex scale.
     """
     actors = contacts.select(F.col("src").alias("role")).unionByName(
         contacts.select(F.col("dst").alias("role"))

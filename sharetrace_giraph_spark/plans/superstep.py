@@ -31,6 +31,7 @@ algorithm-private.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import sys
@@ -38,7 +39,7 @@ import threading
 import time
 import uuid
 import warnings
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
@@ -94,29 +95,59 @@ def auto_num_partitions(spark: SparkSession, edges: DataFrame, explicit: int | N
     return max(1, min(conf, max(_MIN_PARTITIONS, -(-n // _ROWS_PER_PARTITION))))
 
 
-def prepare_edges(
+@contextlib.contextmanager
+def loop_inputs(
     spark: SparkSession,
     edges: DataFrame,
-    key: str,
-    num_partitions: int | None,
-) -> tuple[DataFrame, int]:
-    """Size, hash-partition, and cache the static edge side of an
-    iteration. Returns ``(cached_edges, num_partitions)``.
+    key: str | None,
+    vertices: DataFrame | None = None,
+    num_partitions: int | None = None,
+) -> Iterator[tuple[DataFrame, DataFrame | None, int]]:
+    """The static inputs of one iterative run, cached for the length of
+    the ``with`` block and freed when it ends, also on error: the
+    reference's ``STATIC_GRAPH=true`` (``BeliefPropagationRunner.java:59``).
+    Yields ``(e, verts, P)`` with P the iteration width (auto-sized from
+    the edge count unless given).
 
-    The input lineage is evaluated exactly ONCE even when auto-sizing
-    needs a count: the projected frame is cached before the count and
-    released once the repartitioned cache has materialized — without
-    this, auto-sizing would add a full extra pass over the (possibly
-    expensive, uncached) edge-derivation lineage."""
-    tmp = None
-    if num_partitions is None:
-        tmp = edges.persist()
-        num_partitions = auto_num_partitions(spark, tmp, None)
-    e = (tmp if tmp is not None else edges).repartition(num_partitions, key).persist()
-    e.count()
-    if tmp is not None:
-        tmp.unpersist()
-    return e, num_partitions
+    ``e`` is ``edges`` hash-partitioned on ``key`` at P, so each
+    superstep's gather join against the carried state plans no edge-side
+    exchange; with ``key=None`` it is ``edges`` cached as they are (an
+    input other loop inputs are derived from, or one the caller has
+    already partitioned). ``verts`` is ``vertices``' ``vertex_id``
+    column hash-partitioned at P, or None: the init state built from it
+    enters superstep 0 already co-partitioned, and a possibly expensive
+    vertex derivation (a distinct over the edge table) is paid once
+    here, not on superstep 0's critical path. Both are materialized
+    before the body runs.
+
+    The input lineage is evaluated exactly once even when auto-sizing
+    needs a count: the input is cached before the count and freed once
+    the partitioned copy has materialized."""
+    frames: list[DataFrame] = []
+
+    def cached(df: DataFrame) -> DataFrame:
+        frames.append(df.persist())
+        return df
+
+    try:
+        if num_partitions is None:
+            num_partitions = auto_num_partitions(spark, cached(edges))
+        elif key is None:
+            cached(edges).count()
+        e = edges
+        if key is not None:
+            e = cached(edges.repartition(num_partitions, key))
+            e.count()
+            if len(frames) == 2:  # the auto-sizing copy has done its job
+                free(frames.pop(0))
+        verts = None
+        if vertices is not None:
+            verts = cached(vertices.select("vertex_id").repartition(num_partitions, "vertex_id"))
+            verts.count()
+        yield e, verts, num_partitions
+    finally:
+        for df in reversed(frames):
+            free(df)
 
 
 @dataclass
@@ -522,8 +553,9 @@ class SuperstepDriver:
         }
         conf.set("spark.sql.adaptive.enabled", "false")
         conf.set("spark.sql.shuffle.partitions", str(self.num_partitions))
+        # the carried frame the loop continues from, freed on every exit
+        cur_cached: DataFrame | None = None
         try:
-            cur_cached: DataFrame | None = None
             last_durable = resumed_from if resumed_from is not None else -1
             if resumed_from is not None:
                 state = self.read_state(resumed_from)
@@ -626,7 +658,6 @@ class SuperstepDriver:
                             f"superstep={last_durable}",
                         )
                     )
-                free(cur_cached)
         finally:
             # never leave a write racing the conf restore (or a later
             # unpersist by the caller) — but if another exception is
@@ -646,6 +677,8 @@ class SuperstepDriver:
                     stacklevel=2,
                 )
             finally:
+                if cur_cached is not None:
+                    free(cur_cached)
                 for key, val in saved.items():
                     conf.set(key, val)
 

@@ -5,7 +5,8 @@ count, thread counts, message encoding); our analog is a small set of Spark
 confs chosen for the iterative gather-scatter workload:
 
 - AQE on (runtime re-plan, skew-join splitting),
-- Arrow on (vectorized pandas-UDF exchange for the CSR kernel),
+- Arrow on (``toPandas`` collects through Arrow, and the Arrow batch size
+  bounds each ``mapInPandas`` batch of the multimodal operators),
 - UTC session timezone (determinism + DuckDB-oracle comparability),
 - shuffle partitions sized to cores (iterative jobs re-shuffle every
   superstep; 200 default partitions would dominate wall time at test scale).

@@ -1,12 +1,15 @@
 """The held-frame cache lifetime (``plans/cache``): ``free`` releases both
-kinds of cached frame, ``release`` frees one owner or all, and the driver
-contract leaves no storage memory behind between queries."""
+kinds of cached frame, ``release`` frees one owner or all, the driver
+contract leaves no storage memory behind between queries, and an
+iterative run frees its loop inputs when it ends, also on error."""
 
 from __future__ import annotations
 
 import gc
 import os
 import time
+
+import pytest
 
 import __spark_entry__ as entry_mod
 from tests.test_entry_oracle import SF_DIR as ORACLE_SF_DIR
@@ -102,4 +105,69 @@ def test_driver_queries_leave_no_storage_behind(spark):
     assert _until(settled, timeout_s=15.0), (
         f"{_rdds(spark)} RDDs (baseline {base_rdds}), "
         f"{storage_mb():.1f} MB storage (baseline {base_mb:.1f} MB)"
+    )
+
+
+class _Killed(Exception):
+    pass
+
+
+def _walks(spark, canon, und, verts, ckpt):
+    from sharetrace_giraph_spark.algorithms import random_walks
+
+    random_walks(spark, canon, ckpt, run_id="walks")
+
+
+def _neighborhood(spark, canon, und, verts, ckpt):
+    from sharetrace_giraph_spark.algorithms import neighborhood_function
+
+    neighborhood_function(spark, und, verts, 2, ckpt, run_id="anf")
+
+
+def _killed_pagerank(spark, canon, und, verts, ckpt):
+    """A PageRank run killed in superstep 2 (the ``killing_run`` pattern
+    of ``test_checkpoint_resume``)."""
+    from sharetrace_giraph_spark.algorithms import pagerank
+    from sharetrace_giraph_spark.plans.superstep import SuperstepDriver
+
+    orig_run = SuperstepDriver.run
+
+    def killing_run(self, init_state, step, **kw):
+        def killing_step(state, k):
+            if k == 2:
+                raise _Killed()
+            return step(state, k)
+
+        return orig_run(self, init_state, killing_step, **kw)
+
+    SuperstepDriver.run = killing_run
+    try:
+        with pytest.raises(_Killed):
+            pagerank(spark, und, verts, ckpt, run_id="killed", max_supersteps=10)
+    finally:
+        SuperstepDriver.run = orig_run
+
+
+@pytest.mark.parametrize(
+    "seed, run",
+    [(7001, _walks), (7002, _neighborhood), (7003, _killed_pagerank)],
+    ids=["random_walks", "neighborhood_function", "pagerank_killed"],
+)
+def test_iterative_run_leaves_no_persisted_rdd(spark, tmp_path, seed, run):
+    """An iterative run frees its cached loop inputs and its carried state
+    when it ends, also when it is killed mid-loop: the persisted-RDD count
+    returns to its baseline. Each case runs on a graph of its own seed:
+    ``persist()`` of a plan that an earlier test already cached is a
+    no-op, which would hide a leaked frame."""
+    from sharetrace_giraph_spark import datagen
+
+    canon = datagen.generate_edges(spark, 500, 80, seed=seed, num_partitions=2)
+    und = canon.union(canon.selectExpr("dst AS src", "src AS dst"))
+    verts = canon.selectExpr("src AS vertex_id").union(
+        canon.selectExpr("dst AS vertex_id")
+    ).distinct()
+    base = _rdds(spark)
+    run(spark, canon, und, verts, str(tmp_path))
+    assert _until(lambda: _rdds(spark) <= base), (
+        f"{_rdds(spark) - base} persisted RDDs left behind"
     )

@@ -74,17 +74,16 @@ def test_pagerank_converges_and_matches_fixed_point(spark, tiny_graph, ckpt):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-@pytest.mark.parametrize("kernel", ["relational", "csr"])
-def test_pagerank_step_for_step(spark, medium_graph, ckpt, kernel):
+def test_pagerank_step_for_step(spark, medium_graph, ckpt):
     _, verts, enc, edge_list = medium_graph
     exp = pagerank_py(edge_list, _vertices_of(edge_list), tol=0.0, max_iters=15)
     res = pagerank(
-        spark, E.undirect(enc), verts, ckpt, run_id=f"m-{kernel}",
-        tolerance=0.0, max_supersteps=15, kernel=kernel,
+        spark, E.undirect(enc), verts, ckpt, run_id="m",
+        tolerance=0.0, max_supersteps=15,
     )
     got = {r.vertex_id: r.rank for r in res.state.collect()}
     errs = [abs(got[v] - exp[v]) for v in exp]
-    assert max(errs) < 1e-9, (kernel, max(errs))
+    assert max(errs) < 1e-9, max(errs)
 
 
 def test_connected_components_exact(spark, tiny_graph, medium_graph, ckpt):
@@ -763,33 +762,6 @@ def test_hll_estimates_partitioning_band(spark, ckpt):
         for r in nf_long(exact.state).collect()
     }
     assert any(round(narrow[k]) != ex[k] for k in ex if k[1] >= 1)
-
-
-def test_csr_kernel_drops_missing_src_like_relational(spark, medium_graph, ckpt):
-    """An edge whose src is absent from the vertex universe must be
-    DROPPED by the CSR kernel (matching the relational kernel's inner
-    join) — unchecked searchsorted would read a neighboring vertex's
-    rank (silent corruption) or index past the block (crash)."""
-    _, verts, enc, edge_list = medium_graph
-    und = E.undirect(enc)
-    # remove one mid-range vertex id from the universe; its out-edges'
-    # srcs now have no state row
-    victim = sorted({u for u, _ in edge_list})[len(edge_list) // 7 % 30]
-    verts_missing = verts.where(F.col("vertex_id") != victim)
-    results = {}
-    for kernel in ("relational", "csr"):
-        res = pagerank(
-            spark, und, verts_missing, ckpt, run_id=f"miss-{kernel}",
-            tolerance=0.0, max_supersteps=5, kernel=kernel,
-            handle_dangling=False, resume=False,
-        )
-        results[kernel] = {r.vertex_id: r.rank for r in res.state.collect()}
-    assert results["relational"].keys() == results["csr"].keys()
-    errs = [
-        abs(results["relational"][v] - results["csr"][v])
-        for v in results["relational"]
-    ]
-    assert max(errs) < 1e-12, max(errs)
 
 
 def test_bfs_and_sssp_reject_disjoint_sources(spark, medium_graph, ckpt):

@@ -134,33 +134,16 @@ def test_triangle_orientation_no_single_partition(spark):
     assert "row_number" not in plan.lower()
 
 
-def test_pagerank_superstep_plan_shape(spark, tmp_path):
-    """One superstep's message plan: the edge side is an equi hash join
-    against the cached edge relation, message agg is partial+final, and
+def test_pagerank_superstep_plan_shape(pr_graph):
+    """PageRank's real superstep (``_pr_step``) over its real cached
+    inputs: the gather is an equi hash join against the cached transition
+    edges, the message sum is THE one exchange, over its partial sum, and
     nothing funnels through a single partition."""
-    from sharetrace_giraph_spark import datagen
-    from sharetrace_giraph_spark.algorithms.pagerank import _prepare
-
-    canon = datagen.generate_edges(spark, 2000, 200, num_partitions=4)
-    edges = canon.union(canon.selectExpr("dst AS src", "src AS dst"))
-    verts = canon.selectExpr("src AS vertex_id").union(
-        canon.selectExpr("dst AS vertex_id")
-    ).distinct()
-    edges_w, v, n = _prepare(edges, verts, 8)
-    state = v.select(
-        "vertex_id", F.lit(1.0 / n).alias("rank"), F.lit(1.0).alias("delta")
-    )
-    msgs = (
-        edges_w.join(state, edges_w.src == state.vertex_id)
-        .groupBy(edges_w.dst.alias("mdst"))
-        .agg(F.sum(F.col("rank") * F.col("inv_deg")).alias("contrib"))
-    )
-    plan = _plan(msgs)
+    step, init = pr_graph
+    plan = _pin_step(step, init, exchanges=1, combined=1)
     assert "SinglePartition" not in plan
     assert plan.count("HashAggregate") >= 2  # partial + final message combine
     assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan  # cached edges
-    edges_w.unpersist()
-    v.unpersist()
 
 
 def test_derive_contacts_single_scan_two_shuffles(spark):
@@ -348,61 +331,29 @@ def _exchange_children(df) -> list[str]:
     return children
 
 
-def test_superstep_carry_plans_single_exchange(spark, tmp_path):
+def test_superstep_carry_plans_single_exchange(spark, tmp_path, pr_graph):
     """The BSP loop's minimal-shuffle invariant (round 4): with planning
     pinned (AQE off, shuffle width = iteration width P) and the state
     carried through an eager localCheckpoint — which preserves the step
     output's hash(vertex_id, P) partitioning in the rebased LogicalRDD —
-    a mid-loop PageRank superstep must plan exactly ONE shuffle exchange
-    (the message aggregation). Both state-side joins and the edge side
-    (cached hash(src, P)) are provably co-partitioned. A regression here
-    (a second exchange creeping in) re-inflates the serial per-superstep
-    cost that caps N->4N scaling efficiency (BENCH.md round 4: Amdahl
-    c ~3.9 s -> ~0.6 s per superstep from this property)."""
-    from sharetrace_giraph_spark import datagen
-    from sharetrace_giraph_spark.algorithms.pagerank import _prepare
+    a mid-loop PageRank superstep (``_pr_step``) must plan exactly ONE
+    shuffle exchange (the message aggregation). Both state-side joins and
+    the edge side (cached hash(src, P)) are provably co-partitioned. A
+    regression here (a second exchange creeping in) re-inflates the
+    serial per-superstep cost that caps N->4N scaling efficiency
+    (BENCH.md round 4: Amdahl c ~3.9 s -> ~0.6 s per superstep from this
+    property)."""
+    step, init = pr_graph
+    _pin_step(step, init, exchanges=1, combined=1)
 
-    P = 8
-    with _pinned_planning(spark, P):
-        canon = datagen.generate_edges(spark, 2000, 200, num_partitions=4)
-        edges = canon.union(canon.selectExpr("dst AS src", "src AS dst"))
-        verts = canon.selectExpr("src AS vertex_id").union(
-            canon.selectExpr("dst AS vertex_id")
-        ).distinct()
-        edges_w, v, n = _prepare(edges, verts, P)
-
-        def step(state):
-            msgs = (
-                edges_w.join(state.hint("shuffle_hash"), edges_w.src == state.vertex_id)
-                .select(edges_w.dst.alias("mdst"),
-                        (F.col("rank") * F.col("inv_deg")).alias("contrib"))
-            )
-            inc = msgs.groupBy("mdst").agg(F.sum("contrib").alias("contrib"))
-            joined = state.select("vertex_id", F.col("rank").alias("old_rank")).join(
-                inc.hint("shuffle_hash"), F.col("vertex_id") == F.col("mdst"), "left"
-            )
-            new_rank = F.lit(0.15 / n) + 0.85 * F.coalesce("contrib", F.lit(0.0))
-            return joined.select(
-                "vertex_id", new_rank.alias("rank"),
-                F.abs(new_rank - F.col("old_rank")).alias("delta"),
-            )
-
-        init = v.select(
-            "vertex_id", F.lit(1.0 / n).alias("rank"), F.lit(1.0).alias("delta")
-        )
-        carried = step(init).localCheckpoint(eager=True)
-        mid_loop = step(carried)
-        assert len(_exchange_children(mid_loop)) == 1, _plan(mid_loop)
-
-        # contrast: a parquet round-trip forgets the partitioning, so the
-        # same step must re-exchange the state for each of its two
-        # references — the cost the carry removes
-        pq = str(tmp_path / "state")
-        carried.write.mode("overwrite").parquet(pq)
-        forgotten = step(spark.read.schema(carried.schema).parquet(pq))
-        assert len(_exchange_children(forgotten)) >= 3, _plan(forgotten)
-        edges_w.unpersist()
-        v.unpersist()
+    # contrast: a parquet round-trip forgets the partitioning, so the
+    # same step must re-exchange the state for each of its two
+    # references — the cost the carry removes
+    carried = step(init, 0).localCheckpoint(eager=True)
+    pq = str(tmp_path / "state")
+    carried.write.mode("overwrite").parquet(pq)
+    forgotten = step(spark.read.schema(carried.schema).parquet(pq), 1)
+    assert len(_exchange_children(forgotten)) >= 3, _plan(forgotten)
 
 
 @contextlib.contextmanager
@@ -427,17 +378,37 @@ def small_graph(spark):
     """A hub-skewed graph directed both ways, prepared as every step's
     edges are (cached, hash(src, P)), under pinned planning at P = 8.
     Yields ``(e, verts)``."""
-    from sharetrace_giraph_spark import datagen
-    from sharetrace_giraph_spark.plans.superstep import prepare_edges
+    from sharetrace_giraph_spark.plans.superstep import loop_inputs
 
-    with _pinned_planning(spark, 8):
-        canon = datagen.generate_edges(spark, 2000, 200, num_partitions=4)
-        edges = canon.union(canon.selectExpr("dst AS src", "src AS dst")).select(
-            "src", "dst"
-        )
-        e, _ = prepare_edges(spark, edges, "src", 8)
+    edges = _both_ways(spark)
+    with _pinned_planning(spark, 8), loop_inputs(spark, edges, "src", num_partitions=8) as inputs:
+        e, _, _ = inputs
         yield e, edges.selectExpr("src AS vertex_id").distinct()
-        e.unpersist()
+
+
+@pytest.fixture()
+def pr_graph(spark):
+    """PageRank's real step over its real inputs (``_pr_inputs``) on the
+    ``small_graph`` edges, under pinned planning at P = 8. Every vertex
+    has an out-edge, so there is no dangling set. Yields ``(step,
+    init)``."""
+    from sharetrace_giraph_spark.algorithms.pagerank import _pr_init, _pr_inputs, _pr_step
+
+    edges = _both_ways(spark)
+    verts = edges.selectExpr("src AS vertex_id").distinct()
+    with _pinned_planning(spark, 8), _pr_inputs(spark, edges, verts, None, True, 8) as inputs:
+        e, v, dangling, _ = inputs
+        assert dangling is None
+        n = v.count()
+        yield _pr_step(e, dangling, n, 0.85, False), _pr_init(v, n, None)
+
+
+def _both_ways(spark):
+    """A hub-skewed generated graph, directed both ways: ``(src, dst)``."""
+    from sharetrace_giraph_spark import datagen
+
+    canon = datagen.generate_edges(spark, 2000, 200, num_partitions=4)
+    return canon.union(canon.selectExpr("dst AS src", "src AS dst")).select("src", "dst")
 
 
 def _pin_step(step, init, exchanges: int, combined: int) -> str:
@@ -613,7 +584,7 @@ def test_risk_step_plans_single_exchange(spark):
         _risk_step,
         init_state,
     )
-    from sharetrace_giraph_spark.plans.superstep import prepare_edges
+    from sharetrace_giraph_spark.plans.superstep import loop_inputs
 
     P = 8
     with _pinned_planning(spark, P):
@@ -635,13 +606,13 @@ def test_risk_step_plans_single_exchange(spark):
             ),
             (F.col("id").cast("long") % 10 / 10.0).alias("value"),
         )
-        edges, _ = prepare_edges(spark, _directed_contact_edges(contacts), "u", P)
-        plan = _pin_step(
-            _risk_step(edges, 0.8), init_state(scores), exchanges=1, combined=1
-        )
+        inputs = loop_inputs(spark, _directed_contact_edges(contacts), "u", num_partitions=P)
+        with inputs as (edges, _, _):
+            plan = _pin_step(
+                _risk_step(edges, 0.8), init_state(scores), exchanges=1, combined=1
+            )
         assert "Generate" not in plan, plan  # scores are never exploded
         conds = [ln for ln in plan.splitlines() if ln.startswith("Join condition")]
         assert len(conds) == 2, plan  # relay join + state-update join
         for ln in conds:
             assert "filter(" not in ln and "array_max(" not in ln, ln
-        edges.unpersist()
