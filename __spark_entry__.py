@@ -71,13 +71,10 @@ def _graph(spark: SparkSession, sf_dir: str):
     t = transcripts_from_events(spark, sf_dir)
     # persisted: vertex_ids / encode_edges / the algorithm each re-evaluate
     # it; held (plans/cache), so only one graph query's contacts live at a
-    # time. pair_strategy="join": event-derived transcripts are FEW, HUGE
-    # conversations (near-complete 150-actor sessions at sf0.01) — the
-    # documented pathological case for the grouped expansion (measured
-    # 1.6-1.8x faster with the distributed self-join on this shape).
+    # time
     release(_GRAPH)
     contacts = hold(_GRAPH, E.derive_contacts(
-        t, duration_threshold_s=0, session_gap_s=6 * 3600, pair_strategy="join"
+        t, duration_threshold_s=0, session_gap_s=6 * 3600
     ).persist())
     verts = E.vertex_ids(contacts)
     enc = E.encode_edges(contacts, verts)
@@ -1196,14 +1193,13 @@ def q_rollup_agg(spark, sf_dir):
 
 def q_contacts_summary(spark, sf_dir):
     """The full transcript→contact derivation (sessionize → span agg →
-    blocked self-join → occurrence dedup/merge), flattened to
+    pair expansion → occurrence dedup/merge), flattened to
     (src, dst, n_occurrences, total_duration_ms) so DuckDB can replay it
     relationally as the oracle."""
     from sharetrace_giraph_spark.operators import edges as E
 
     t = transcripts_from_events(spark, sf_dir)
-    contacts = E.derive_contacts(t, duration_threshold_s=0, session_gap_s=6 * 3600,
-                                 pair_strategy="join")  # see _graph()
+    contacts = E.derive_contacts(t, duration_threshold_s=0, session_gap_s=6 * 3600)
     return contacts.select(
         "src",
         "dst",
@@ -1221,8 +1217,7 @@ def q_degree_census(spark, sf_dir):
     from sharetrace_giraph_spark.operators.skew import degree_census
 
     t = transcripts_from_events(spark, sf_dir)
-    contacts = E.derive_contacts(t, duration_threshold_s=0, session_gap_s=6 * 3600,
-                                 pair_strategy="join")  # see _graph()
+    contacts = E.derive_contacts(t, duration_threshold_s=0, session_gap_s=6 * 3600)
     und = E.undirect(contacts.select("src", "dst"))
     return (
         degree_census(und, "in")
@@ -1719,8 +1714,7 @@ def q_graph_assortativity(spark, sf_dir):
     from sharetrace_giraph_spark.operators.skew import degree_assortativity
 
     t = transcripts_from_events(spark, sf_dir)
-    contacts = E.derive_contacts(t, duration_threshold_s=0, session_gap_s=6 * 3600,
-                                 pair_strategy="join")  # see _graph()
+    contacts = E.derive_contacts(t, duration_threshold_s=0, session_gap_s=6 * 3600)
     und = E.undirect(contacts.select("src", "dst"))
     return degree_assortativity(und)
 
@@ -1968,7 +1962,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # Shared DuckDB CTE chain replaying the transcript→contact edge derivation
-# (sessionize → span agg → blocked self-join → dedup) exactly as
+# (sessionize → span agg → pair expansion → dedup) exactly as
 # transcripts_from_events + operators/edges.derive_contacts(threshold=0,
 # gap=6h) compute it; graph oracles build on edges_c/edges_u/verts.
 # NOTE: no leading WITH — callers prepend "WITH " or "WITH RECURSIVE ".

@@ -4,9 +4,12 @@ Reference semantics re-expressed (citations into /root/reference):
 
 - J3  all-pairs candidate generation (``contactmatching/ContactMatchingComputation.java:63-81``)
       was an O(N^2) cross join over users. Our graft blocks on the shared
-      ``conv_id`` (and session window), turning it into an equi self-join —
-      the move that makes 10^12 turns tractable: candidate pairs are
-      bounded by (participants-per-session choose 2) * #sessions, never N^2.
+      ``conv_id`` (and session window): each session's spans are collected
+      into one role-sorted array and expanded into pairs by a higher-order
+      expression — the move that makes 10^12 turns tractable: candidate
+      pairs are bounded by (participants-per-session choose 2) * #sessions,
+      never N^2, and the J4 overlap test runs inside the expansion, so only
+      overlapping pairs become rows.
 - J4  sorted-merge interval intersection (``ContactMatchingComputation.java:91-145``):
       same-location runs >= 15 min become Occurrences, start = later entry,
       end = earlier diverging entry. Our analog: per (conv, session) the
@@ -39,7 +42,6 @@ import datetime as dt
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from ..plans.cache import hold, release
 from ..plans.superstep import shuffle_partitions
 
 #: reference contact-duration threshold: 15 minutes
@@ -70,71 +72,29 @@ def sessionize(transcripts: DataFrame, session_gap_s: int = DEFAULT_SESSION_GAP_
     return transcripts.withColumn("session_id", F.sum(new_session).over(w))
 
 
-#: pair expansion over the per-session participant array: element i pairs
-#: with every later element (the array is sorted by role, so a.role <
-#: b.role holds by construction)
-_PAIR_EXPAND = (
-    "flatten(transform(ps, (x, i) -> "
-    "transform(slice(ps, i + 2, size(ps) - i - 1), "
-    "y -> named_struct('a', x, 'b', y))))"
-)
+def _overlap_s(x, y) -> F.Column:
+    """Co-presence seconds of two spans, ``min(last) - max(first)``
+    (negative when they never co-present), over the spans' epoch seconds
+    (monotone in the timestamps, so this equals the epoch difference of
+    the interval's ends)."""
+    return F.least(x["last_s"], y["last_s"]) - F.greatest(x["first_s"], y["first_s"])
 
 
-def _pairs_grouped(spans: DataFrame) -> DataFrame:
-    """All role pairs per (conv, session) in ONE pass: collect the (small
-    by schema) participant list per session, expand ordered pairs with a
-    higher-order expression. No self-join — the span pipeline (and the
-    transcript scan under it) is evaluated once, and the groupBy reuses
-    the sessionization window's conv_id hash partitioning (grouping keys
-    are a superset), so this adds ZERO shuffles."""
-    g = spans.groupBy("conv_id", "session_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("role", "first_ts", "last_ts"))
-        ).alias("ps")
-    )
-    return g.select(F.explode(F.expr(_PAIR_EXPAND)).alias("p")).select(
-        F.col("p.a.role").alias("a_role"),
-        F.col("p.b.role").alias("b_role"),
-        F.col("p.a.first_ts").alias("a_first_ts"),
-        F.col("p.a.last_ts").alias("a_last_ts"),
-        F.col("p.b.first_ts").alias("b_first_ts"),
-        F.col("p.b.last_ts").alias("b_last_ts"),
-    )
+def _overlapping_pairs(ps, duration_threshold_s: int) -> F.Column:
+    """The span pairs ``(a, b)`` of one session that co-present for at
+    least the threshold, from its role-sorted span array ``ps``: element
+    ``x`` pairs with every later element ``y`` (so ``a.role < b.role`` by
+    construction), and the overlap test filters each ``x``'s pairs before
+    the arrays are flattened, so pairs that fail it never become rows."""
 
+    def pairs_of(x, i):
+        later = F.slice(ps, i + 2, F.size(ps) - i - 1)
+        return F.transform(
+            F.filter(later, lambda y: _overlap_s(x, y) >= duration_threshold_s),
+            lambda y: F.struct(x.alias("a"), y.alias("b")),
+        )
 
-#: cache owner of the span frame the join-strategy pair expansion persists
-_SPANS = "operators.edges.spans"
-
-
-def _pairs_join(spans: DataFrame) -> DataFrame:
-    """The equi self-join formulation of the same pair generation. The
-    span pipeline is PERSISTED so both self-join branches read one cached
-    evaluation (Catalyst plans the branches independently — uncached,
-    the whole sessionize+agg lineage would run twice). Distributes a
-    single giant session's quadratic pair fan-out across tasks instead
-    of one executor row — choose it for corpora with pathologically
-    large sessions. Measured on 150 conversations × ~700 turns each
-    (near-complete 150-actor sessions, 1.06M pairs): join 6.8-8.7s vs
-    grouped 11-15s at local[32]; on 15k small conversations the ranking
-    flips (grouped evaluates the transcript scan once and adds zero
-    shuffles). The persisted spans are held under their own owner
-    (``plans/cache``), released on the next call."""
-    release(_SPANS)
-    spans = hold(_SPANS, spans.persist())
-    a, b = spans.alias("a"), spans.alias("b")
-    return a.join(
-        b,
-        (F.col("a.conv_id") == F.col("b.conv_id"))
-        & (F.col("a.session_id") == F.col("b.session_id"))
-        & (F.col("a.role") < F.col("b.role")),
-    ).select(
-        F.col("a.role").alias("a_role"),
-        F.col("b.role").alias("b_role"),
-        F.col("a.first_ts").alias("a_first_ts"),
-        F.col("a.last_ts").alias("a_last_ts"),
-        F.col("b.first_ts").alias("b_first_ts"),
-        F.col("b.last_ts").alias("b_last_ts"),
-    )
+    return F.flatten(F.transform(ps, pairs_of))
 
 
 def derive_contacts(
@@ -142,50 +102,62 @@ def derive_contacts(
     duration_threshold_s: int = DEFAULT_DURATION_THRESHOLD_S,
     session_gap_s: int = DEFAULT_SESSION_GAP_S,
     expiry_cutoff: dt.datetime | None = None,
-    include_tool_edges: bool = False,
-    pair_strategy: str = "grouped",
 ) -> DataFrame:
     """transcripts → contacts(src, dst, occurrences).
 
-    Plan shape (scale notes), ``pair_strategy="grouped"`` (default):
-      1. window sessionization per conv_id          — 1 shuffle on conv_id
+    Plan shape (scale notes):
+      1. window sessionization per conv_id          — 1 shuffle on conv_id,
+         ``spark.sql.shuffle.partitions`` wide
       2. per (conv, session, role) span agg         — reuses the same
          hash partitioning (conv_id prefix), partial agg map-side
       3. per (conv, session) participant collect +
-         higher-order pair expansion                — zero extra shuffles,
-         single evaluation of 1-2 (the self-join formulation evaluated
-         the whole span pipeline TWICE, one per join side)
+         higher-order pair expansion with the
+         overlap test inside it (:func:`_overlapping_pairs`) — zero
+         extra shuffles, one evaluation of 1-2, no post-explode filter
       4. groupBy(src, dst) occurrence merge (A5)    — 1 shuffle on the pair
 
-    ``pair_strategy="join"`` keeps the blocked equi self-join for corpora
-    whose sessions are pathologically large (see :func:`_pairs_join`).
+    One session's surviving pairs sit in one row, built by one task: the
+    row is quadratic in the session's participant count. The largest
+    session measured (sf0.1 events, 150 sessions) has 587 actors, 172k
+    pairs before the overlap test; a corpus with far larger sessions
+    would need them split first.
     """
-    if pair_strategy not in ("grouped", "join"):
-        raise ValueError(f"unknown pair_strategy {pair_strategy!r}")
+    # the conv_id exchange the window needs anyway, at an explicit width:
+    # AQE sizes an exchange by its bytes and coalesced this one to 2 of 4
+    # partitions at sf0.1, but the pair expansion it feeds is quadratic
+    # per session (uncoalesced: 4.8 -> 3.5 s there). An input already
+    # hash-partitioned this way keeps its partitioning (no extra shuffle).
+    by_conv = transcripts.repartition(shuffle_partitions(transcripts.sparkSession), "conv_id")
     spans = (
-        sessionize(transcripts, session_gap_s)
+        sessionize(by_conv, session_gap_s)
         .groupBy("conv_id", "session_id", "role")
         .agg(F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts"))
     )
-
-    pairs = (_pairs_grouped if pair_strategy == "grouped" else _pairs_join)(spans)
-
-    start = F.greatest(F.col("a_first_ts"), F.col("b_first_ts"))
-    end = F.least(F.col("a_last_ts"), F.col("b_last_ts"))
-    duration_s = _epoch_s(end) - _epoch_s(start)
-
-    occ = pairs.select(
-        F.col("a_role").alias("src"),
-        F.col("b_role").alias("dst"),
+    # epoch seconds once per span, not once per pair: the cast runs in
+    # generated code here, interpreted inside the expansion's lambdas
+    ps = spans.groupBy("conv_id", "session_id").agg(
+        F.array_sort(
+            F.collect_list(F.struct(
+                "role", "first_ts", "last_ts",
+                _epoch_s("first_ts").alias("first_s"),
+                _epoch_s("last_ts").alias("last_s"),
+            ))
+        ).alias("ps")
+    )
+    # the survivors' occurrence is built after the explode, in generated
+    # code: built inside the interpreted lambdas it measured 5.4 s against
+    # 4.7 s at sf0.1
+    a, b = F.col("p.a"), F.col("p.b")
+    occ = ps.select(
+        F.explode(_overlapping_pairs(F.col("ps"), duration_threshold_s)).alias("p")
+    ).select(
+        a["role"].alias("src"),
+        b["role"].alias("dst"),
         F.struct(
-            start.alias("time"), (duration_s * 1000).cast("long").alias("duration_ms")
+            F.greatest(a["first_ts"], b["first_ts"]).alias("time"),
+            (_overlap_s(a, b) * 1000).alias("duration_ms"),
         ).alias("occurrence"),
-    ).where(duration_s >= duration_threshold_s)
-
-    if include_tool_edges:
-        occ = occ.unionByName(
-            _tool_cooccurrence(transcripts, session_gap_s, duration_threshold_s)
-        )
+    )
 
     contacts = occ.groupBy("src", "dst").agg(
         F.array_sort(F.collect_set("occurrence")).alias("occurrences")
@@ -198,37 +170,6 @@ def derive_contacts(
         ).where(F.size("occurrences") > 0)
 
     return contacts
-
-
-def _tool_cooccurrence(
-    transcripts: DataFrame, session_gap_s: int, duration_threshold_s: int
-) -> DataFrame:
-    """Secondary edge signal: two actors using the same tool in the same
-    (conv, session). A strict subset refinement of the conv blocking key —
-    kept separate so same-tool affinity can carry its own occurrence rows.
-    """
-    spans = (
-        sessionize(transcripts, session_gap_s)
-        .where(F.col("tool").isNotNull())
-        .groupBy("conv_id", "session_id", "tool", "role")
-        .agg(F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts"))
-    )
-    g = spans.groupBy("conv_id", "session_id", "tool").agg(
-        F.array_sort(
-            F.collect_list(F.struct("role", "first_ts", "last_ts"))
-        ).alias("ps")
-    )
-    pairs = g.select(F.explode(F.expr(_PAIR_EXPAND)).alias("p"))
-    start = F.greatest(F.col("p.a.first_ts"), F.col("p.b.first_ts"))
-    end = F.least(F.col("p.a.last_ts"), F.col("p.b.last_ts"))
-    duration_s = _epoch_s(end) - _epoch_s(start)
-    return pairs.select(
-        F.col("p.a.role").alias("src"),
-        F.col("p.b.role").alias("dst"),
-        F.struct(
-            start.alias("time"), (duration_s * 1000).cast("long").alias("duration_ms")
-        ).alias("occurrence"),
-    ).where(duration_s >= duration_threshold_s)
 
 
 # ---------------------------------------------------------------------------

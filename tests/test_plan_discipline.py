@@ -147,10 +147,12 @@ def test_pagerank_superstep_plan_shape(pr_graph):
 
 
 def test_derive_contacts_single_scan_two_shuffles(spark):
-    """The grouped pair strategy must evaluate the span pipeline ONCE
-    (the old self-join formulation planned it per join side — a double
-    transcript scan at 100 TB) and shuffle exactly twice: once into
-    conv_id windows, once into the (src, dst) merge."""
+    """The pair expansion must evaluate the span pipeline ONCE (a
+    self-join formulation plans it per join side — a double transcript
+    scan at 100 TB) and shuffle exactly twice: once into conv_id windows,
+    once into the (src, dst) merge. The overlap test runs inside the
+    expansion, so pairs that fail it never become rows: the plan has no
+    Filter operator (a post-explode test plans one above the Generate)."""
     from sharetrace_giraph_spark import datagen
     from sharetrace_giraph_spark.operators.edges import derive_contacts
 
@@ -167,6 +169,7 @@ def test_derive_contacts_single_scan_two_shuffles(spark):
     # the span subtree got planned twice again
     assert n_window <= 2, plan
     assert "Join" not in plan  # pair generation is a higher-order expansion
+    assert not any("Filter" in ln for ln in ops), plan
 
 
 def test_edge_jaccard_no_single_partition(spark):
