@@ -24,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from sharetrace_giraph_spark.plans.cache import hold, release
+from sharetrace_giraph_spark.plans.superstep import shuffle_partitions
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -48,11 +49,17 @@ LSH_MAX_BUCKET = 64
 # ---------------------------------------------------------------------------
 
 def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
     conv = F.concat(F.col("event_type"), F.lit("-"), (F.unix_timestamp("ts") / 86400).cast("long").cast("string"))
-    w = Window.partitionBy(conv).orderBy("ts", "event_id")
+    # clustered on conv_id once, at an explicit width: the turn_idx window
+    # and every per-conversation consumer (derive_contacts, reply_edges)
+    # reuse this exchange. A window over the expression itself plans its
+    # own exchange on it, which derive_contacts' conv_id exchange repeats.
+    ev = _t(spark, sf_dir, "events").withColumn("conv_id", conv).repartition(
+        shuffle_partitions(spark), "conv_id"
+    )
+    w = Window.partitionBy("conv_id").orderBy("ts", "event_id")
     return ev.select(
-        conv.alias("conv_id"),
+        "conv_id",
         (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
         F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("role"),
         F.col("props").alias("text"),

@@ -36,7 +36,7 @@ def undirected_degree(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_list(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def triangle_list(edges: DataFrame) -> DataFrame:
     """Triangle enumeration ``(a, b, c)`` (each triangle exactly once) via
     the degree-oriented wedge join; ``edges`` canonical (src < dst). The
     returned frame, the oriented edge table under it and the distinct
@@ -45,8 +45,6 @@ def triangle_list(edges: DataFrame, num_partitions: int | None = None) -> DataFr
     sequence pins more than one wedge set (a prior call's returned frame
     stays valid — it just recomputes if used after a later call)."""
     release(WEDGES)
-    if num_partitions is None:
-        num_partitions = shuffle_partitions(edges.sparkSession)
     # e is consumed by the degree agg, the orientation join, AND every
     # broadcast build below — uncached, each of those jobs re-executes
     # the caller's whole edge lineage (measured: a single tri.count()
@@ -83,7 +81,7 @@ def triangle_list(edges: DataFrame, num_partitions: int | None = None) -> DataFr
             F.when(src_lt, F.col("dst")).otherwise(F.col("src")).alias("hi"),
             F.when(src_lt, F.col("dst_deg")).otherwise(F.col("src_deg")).alias("hi_deg"),
         )
-        .repartition(num_partitions, "lo")
+        .repartition(shuffle_partitions(edges.sparkSession), "lo")
         .persist(),
     )
 

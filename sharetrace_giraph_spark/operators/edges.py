@@ -42,6 +42,7 @@ import datetime as dt
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..plans.cache import free
 from ..plans.superstep import shuffle_partitions
 
 #: reference contact-duration threshold: 15 minutes
@@ -176,54 +177,6 @@ def derive_contacts(
 # Vertex encoding: string actor ids → dense longs for the iteration kernels.
 # ---------------------------------------------------------------------------
 
-def _assign_ids(
-    rows: DataFrame, key: str, out: str, num_partitions: int
-) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
-    """The raw two-pass assignment plan behind :func:`dense_ids`, plus the
-    two frames it persists (the range-partitioned rows and their P-row
-    partition offsets) for the caller to release once the plan has been
-    materialized."""
-    # persisted so the offset agg and the assembly below read rows'
-    # lineage once
-    parts = (
-        rows.repartitionByRange(num_partitions, key)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    # partition offsets as a PLAN, not driver-collected constants:
-    # offset(p) = Σ counts of lower partitions, spelled as a broadcast
-    # theta-join + re-agg over the P-ROW per-partition counts (P² pairs
-    # of partition COUNTS, trivial at any loop width — and unlike a
-    # global running-sum window it plans no SinglePartition exchange,
-    # which the plan-discipline suite bans anywhere in this function).
-    # Keeping the offsets inside the same lazy plan keeps the ids right
-    # under re-execution: if the persisted blocks are evicted mid-run,
-    # the range exchange re-runs with a fresh sample seed —
-    # RangePartitioner seeds from the newly compiled plan's RDD id — and
-    # the boundaries MAY move; counts and offsets then recompute from
-    # those same new boundaries, so id = |{rows with smaller key}| either
-    # way. Within one execution the two reads of `parts` are consistent
-    # too: the cache hit — or, uncached, ReuseExchange on the identical
-    # range shuffle — serves both from a single materialization.
-    counts = parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-    lower = counts.select(F.col("_pid").alias("_lp"), F.col("_n").alias("_ln"))
-    # the P-row offsets are persisted alongside parts and released with
-    # it, keeping the consistency above: either both caches serve the
-    # assembly or both recompute within one execution
-    off = (
-        counts.join(F.broadcast(lower), F.col("_lp") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.coalesce(F.sum("_ln"), F.lit(0)).cast("long").alias("_off"))
-        .persist()
-    )
-    w = Window.partitionBy("_pid").orderBy(key)
-    assembled = parts.join(F.broadcast(off), "_pid").select(
-        (F.col("_off") + F.row_number().over(w) - 1).cast("long").alias(out),
-        key,
-    )
-    return assembled, (parts, off)
-
-
 def dense_ids(
     rows: DataFrame,
     key: str,
@@ -234,28 +187,28 @@ def dense_ids(
     single-partition global window (which funnels all N rows through one
     task — the classic ``row_number() OVER (ORDER BY ...)`` scale trap).
 
-    Two-pass range-partitioned assignment, both passes in ONE lazy plan
-    (:func:`_assign_ids`): (1) range-partition by key and compute
-    per-partition row counts → partition offsets (a P-row broadcast
-    self-join, never N rows through one task); (2) id = partition offset
-    + (row_number within partition, ordered by key) - 1. Global order is
-    preserved because range partitions are ordered and rows are sorted
-    within each, so the ids are a pure function of the input key set,
-    wherever the sampled range boundaries land.
+    One frozen range partitioning: the keys are range-partitioned,
+    sorted within each partition and frozen by an eager
+    ``localCheckpoint``. Its per-partition row counts (at most P rows)
+    are collected, and their running sum gives each partition's offset;
+    the range partitioner may make fewer than P partitions, and some may
+    be empty, so the sum runs over the frozen frame's actual partitions.
+    An id is its partition's offset plus its record number within the
+    partition, the low 33 bits of ``monotonically_increasing_id`` (Spark's
+    documented layout). Range partitions are ordered and rows are sorted
+    within each, so the ids are a pure function of the key set. The
+    counts and the ids read the same frozen partitions, so the range
+    boundaries are sampled once and never re-sampled.
 
-    The assembled id table is materialized ONCE by an eager
-    ``localCheckpoint`` and consumers see a bare ``LogicalRDD`` scan.
-    This is load-bearing for the driver's serial floor, not a cache
-    nicety: the in-plan offsets embed the ``parts`` lineage (and, through
-    it, the caller's whole edge derivation) THREE times inside the id
-    table's logical plan, a vertex map is referenced at least twice by
+    The id table is one projection over those partitions, frozen by an
+    eager ``localCheckpoint``: consumers see a bare ``LogicalRDD`` scan,
+    not the caller's edge derivation. This is load-bearing for the
+    driver's serial floor: a vertex map is referenced at least twice by
     every encode join, and AQE re-optimizes the surrounding query once
     per query stage — measured on the sf0.1 bench graph, leaving the
     lineage in place made the triangle pipeline's per-action driver
-    overhead ~2.5× the task time of the whole job. The ids are frozen at
-    materialization, so no re-execution — hence no boundary re-sample —
-    can ever be observed by a consumer. The two materialization caches
-    are released before returning. The returned frame is not held in
+    overhead ~2.5× the task time of the whole job. The frozen partitions
+    are freed before returning. The returned frame is not held in
     ``plans/cache``: it has no lineage, so freeing it would break an
     earlier result evaluated again; the ContextCleaner frees its blocks
     (about 1 KB at sf0.001, no broadcast) when it is dropped.
@@ -268,17 +221,29 @@ def dense_ids(
     if num_partitions is None:
         # stats-based width, same rationale as plans/superstep
         # .auto_num_partitions: range-partitioning a 300-row key set 32
-        # ways is pure per-task overhead across the count pass, the
-        # window pass, and every downstream join. Costs one count();
+        # ways is pure per-task overhead across the count pass, the id
+        # pass, and every downstream join. Costs one count();
         # at-scale callers pin num_partitions.
         conf = shuffle_partitions(rows.sparkSession)
         num_partitions = max(1, min(conf, -(-rows.count() // 100_000)))
-    assembled, cached = _assign_ids(rows, key, out, num_partitions)
+    parts = (
+        rows.select(key)
+        .repartitionByRange(num_partitions, key)
+        .sortWithinPartitions(key)
+        .localCheckpoint(eager=True)
+    )
     try:
-        return assembled.localCheckpoint(eager=True)
+        pid = F.spark_partition_id()
+        counts = dict(parts.groupBy(pid.alias("p")).count().collect())
+        offsets, total = [], 0
+        for p in range(parts.rdd.getNumPartitions()):
+            offsets.append(total)
+            total += counts.get(p, 0)
+        record = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+        offset = F.array(*[F.lit(o) for o in offsets])[pid]
+        return parts.select((offset + record).alias(out), key).localCheckpoint(eager=True)
     finally:
-        for frame in cached:
-            frame.unpersist()
+        free(parts)
 
 
 def vertex_ids(contacts: DataFrame) -> DataFrame:
@@ -286,7 +251,7 @@ def vertex_ids(contacts: DataFrame) -> DataFrame:
 
     Dense (0..V-1) so ids are compact long join keys for the superstep
     loop; deterministic (ordered by role) so runs are reproducible.
-    Assignment is the range-partitioned two-pass of :func:`dense_ids` —
+    Assignment is the frozen range partitioning of :func:`dense_ids` —
     no global single-partition sort even at 10^9-vertex scale.
     """
     actors = contacts.select(F.col("src").alias("role")).unionByName(

@@ -73,8 +73,8 @@ def shuffle_partitions(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
-def auto_num_partitions(spark: SparkSession, edges: DataFrame, explicit: int | None = None) -> int:
-    """Iteration partition count: explicit wins, else stats-based.
+def auto_num_partitions(spark: SparkSession, edges: DataFrame) -> int:
+    """Iteration partition count, stats-based.
 
     Every superstep pays per-partition fixed costs (task scheduling, one
     checkpoint file per partition, per-partition agg finalization) across
@@ -86,10 +86,9 @@ def auto_num_partitions(spark: SparkSession, edges: DataFrame, explicit: int | N
     width (the 40M-edge scaling table stays at 32), small graphs stop
     paying 32 tasks to move 90k rows. Costs one count() of the edge
     frame; at-scale callers (the scaling bench, cluster jobs with tuned
-    shuffle widths) pass ``explicit`` and skip it. The choice never
-    changes results — every kernel's aggregates are partition-order-free."""
-    if explicit is not None:
-        return explicit
+    shuffle widths) pin ``loop_inputs(num_partitions=)`` and skip it. The
+    choice never changes results — every kernel's aggregates are
+    partition-order-free."""
     conf = shuffle_partitions(spark)
     n = edges.count()
     return max(1, min(conf, max(_MIN_PARTITIONS, -(-n // _ROWS_PER_PARTITION))))

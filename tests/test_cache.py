@@ -52,6 +52,9 @@ def test_free_releases_persisted_and_checkpointed_blocks(spark):
 def test_release_frees_one_owner_or_all(spark):
     from sharetrace_giraph_spark.plans import cache
 
+    # frames an earlier test left held would be freed by the release()
+    # below and miscount against this baseline
+    cache.release()
     base = _rdds(spark)
     a = cache.hold("test.a", spark.range(10).persist())
     b = cache.hold("test.b", spark.range(20).localCheckpoint(eager=True))

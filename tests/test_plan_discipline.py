@@ -51,30 +51,26 @@ def test_aggregation_has_partial_and_final(spark):
 
 
 def test_vertex_ids_no_single_partition_exchange(spark):
-    """Dense-id assignment at a PINNED multi-partition width must never
-    plan a SinglePartition exchange (the global row_number() trap this
-    engine explicitly avoids). The un-pinned path auto-sizes by row count
-    and may legitimately collapse a tiny key set to one partition — that
-    is the overhead fix, not the trap — so the structural assertion runs
-    against the pinned at-scale spelling."""
-    from sharetrace_giraph_spark.operators.edges import _assign_ids, dense_ids
+    """Dense-id assignment at a PINNED multi-partition width keeps that
+    width in the frozen id table: the range partitions are frozen once
+    and every id is a projection over them, so no later exchange can
+    coalesce the table to one partition (the assignment never plans a
+    global ``row_number()``, the single-partition trap this engine
+    avoids). The un-pinned path auto-sizes by row count and may
+    legitimately collapse a tiny key set to one partition — that is the
+    overhead fix, not the trap."""
+    from sharetrace_giraph_spark.operators.edges import dense_ids
 
     df = spark.range(0, 1000).select(
         F.format_string("r%05d", F.col("id")).alias("role")
     )
-    # the raw assignment plan (dense_ids itself eagerly checkpoints,
-    # leaving only a LogicalRDD scan to inspect — which would make this
-    # assertion vacuous)
-    ids, cached = _assign_ids(df, "role", "vertex_id", 8)
-    plan = _plan(ids)
-    for frame in cached:
-        frame.unpersist()
-    assert "SinglePartition" not in plan
-    # auto path: tiny input → narrow plan, ids still dense 0..N-1 in order
-    auto = dense_ids(df, "role")
-    rows = auto.orderBy("vertex_id").collect()
-    assert [r.vertex_id for r in rows] == list(range(1000))
-    assert rows[0].role == "r00000" and rows[-1].role == "r00999"
+    pinned = dense_ids(df, "role", num_partitions=8)
+    assert pinned.rdd.getNumPartitions() == 8
+    for ids in (pinned, dense_ids(df, "role")):
+        # ids dense 0..N-1 in key order
+        rows = ids.orderBy("vertex_id").collect()
+        assert [r.vertex_id for r in rows] == list(range(1000))
+        assert [r.role for r in rows] == [f"r{i:05d}" for i in range(1000)]
 
 
 def test_dense_ids_truncate_lineage_and_wedge_width(spark):
@@ -82,10 +78,9 @@ def test_dense_ids_truncate_lineage_and_wedge_width(spark):
     'Round-5 late regression'):
 
     1. The default dense_ids path must hand consumers a bare scan of the
-       materialized id table — NOT the assignment lineage. The in-plan
-       offsets embed the range-partitioned subtree three times, every
-       encode join references the id table twice, and AQE re-optimizes
-       per query stage, so a leaked lineage multiplies driver-serial
+       materialized id table — NOT the assignment lineage. Every encode
+       join references the id table twice, and AQE re-optimizes per
+       query stage, so a leaked lineage multiplies driver-serial
        planning cost into every downstream action (measured ~2.5x the
        task time of a triangle count).
     2. The triangle wedge join's parallelism must be pinned by
@@ -113,11 +108,14 @@ def test_dense_ids_truncate_lineage_and_wedge_width(spark):
         [(a, b) for a in range(8) for b in range(a + 1, 8)],
         "src long, dst long",
     )  # K8: 56 triangles
-    tri = triangle_list(edges.repartition(1))  # worst-case upstream layout
-    assert tri.count() == 56
-    _, oriented, _ = cache.held[WEDGES]  # [e, oriented, tri]
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert oriented.rdd.getNumPartitions() == width
+    try:
+        tri = triangle_list(edges.repartition(1))  # worst-case upstream layout
+        assert tri.count() == 56
+        _, oriented, _ = cache.held[WEDGES]  # [e, oriented, tri]
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert oriented.rdd.getNumPartitions() == width
+    finally:
+        cache.release(WEDGES)
 
 
 def test_triangle_orientation_no_single_partition(spark):
@@ -152,7 +150,13 @@ def test_derive_contacts_single_scan_two_shuffles(spark):
     scan at 100 TB) and shuffle exactly twice: once into conv_id windows,
     once into the (src, dst) merge. The overlap test runs inside the
     expansion, so pairs that fail it never become rows: the plan has no
-    Filter operator (a post-explode test plans one above the Generate)."""
+    Filter operator (a post-explode test plans one above the Generate).
+
+    The driver's events view is one more input: it clusters on conv_id
+    once, at an explicit width, so its own turn_idx window (the third
+    window there) and the sessionization share that one exchange, which
+    AQE may not coalesce (REPARTITION_BY_NUM). A window over the
+    conv_id expression plans a third exchange on it (``_w0``)."""
     from sharetrace_giraph_spark import datagen
     from sharetrace_giraph_spark.operators.edges import derive_contacts
 
@@ -160,16 +164,21 @@ def test_derive_contacts_single_scan_two_shuffles(spark):
         spark, n_convs=50, turns_per_conv=8, n_actors=20,
         n_communities=4, n_hubs=1, seed=3,
     )
-    plan = _plan(derive_contacts(t))
-    ops = [ln for ln in plan.splitlines() if ln.strip().startswith("(")]
-    n_shuffle = sum(1 for ln in ops if "Exchange" in ln and "Broadcast" not in ln)
-    n_window = sum(1 for ln in ops if "Window" in ln)
-    assert n_shuffle <= 2, plan
     # sessionize = 2 fused-window ops (lag + running sum); doubled means
     # the span subtree got planned twice again
-    assert n_window <= 2, plan
-    assert "Join" not in plan  # pair generation is a higher-order expansion
-    assert not any("Filter" in ln for ln in ops), plan
+    for transcripts, max_windows in ((t, 2), (em.transcripts_from_events(spark, SF_DIR), 3)):
+        plan = _plan(derive_contacts(transcripts))
+        ops = [ln for ln in plan.splitlines() if ln.strip().startswith("(")]
+        n_shuffle = sum(1 for ln in ops if "Exchange" in ln and "Broadcast" not in ln)
+        n_window = sum(1 for ln in ops if "Window" in ln)
+        assert n_shuffle <= 2, plan
+        assert n_window <= max_windows, plan
+        assert "Join" not in plan  # pair generation is a higher-order expansion
+        assert not any("Filter" in ln for ln in ops), plan
+        exchanges = [ln for ln in plan.splitlines() if "Arguments: hashpartitioning(" in ln]
+        assert not any("_w0" in ln for ln in exchanges), plan
+        by_conv = [ln for ln in exchanges if "hashpartitioning(conv_id#" in ln]
+        assert len(by_conv) == 1 and "REPARTITION_BY_NUM" in by_conv[0], plan
 
 
 def test_edge_jaccard_no_single_partition(spark):

@@ -6,7 +6,7 @@ disconnected shapes the fixtures don't."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from sharetrace_giraph_spark.operators import edges as E
@@ -59,11 +59,18 @@ def test_derive_contacts_matches_python_oracle(spark, raw, threshold):
     assert got == exp
 
 
-@given(st.sets(st.text(alphabet="abcdefg0123", min_size=1, max_size=6), min_size=1, max_size=40))
+@given(
+    st.sets(st.text(alphabet="abcdefg0123", min_size=1, max_size=6), max_size=40),
+    st.sampled_from([None, 64]),
+)
+# the empty key set, and more range partitions than keys (some empty)
+@example(keys=set(), num_partitions=None)
+@example(keys={"a", "b0", "c12"}, num_partitions=64)
 @settings(**_SETTINGS)
-def test_dense_ids_are_rank_order(spark, keys):
+def test_dense_ids_are_rank_order(spark, keys, num_partitions):
     df = spark.createDataFrame([(k,) for k in keys], "role string")
-    got = sorted((r.vertex_id, r.role) for r in E.dense_ids(df, "role").collect())
+    ids = E.dense_ids(df, "role", num_partitions=num_partitions)
+    got = sorted((r.vertex_id, r.role) for r in ids.collect())
     assert got == [(i, k) for i, k in enumerate(sorted(keys))]
 
 
