@@ -191,7 +191,7 @@ class SuperstepDriver:
     ``localCheckpoint``, which also carries the state's partitioning into
     the next superstep) plus a cheap in-memory delta/active aggregation;
     durable parquet snapshots are written by a background thread that
-    overlaps the next superstep's compute (``_checkpoint_carry``).
+    overlaps the next superstep's compute (``_write_snapshot``).
     """
 
     def __init__(
@@ -215,11 +215,10 @@ class SuperstepDriver:
     # -- checkpoint I/O ------------------------------------------------------
 
     def _convergence_cols(self):
-        """THE convergence definition — the single source for every path
-        that computes it (observe piggyback on the carry, observe on the
-        durable-continuation write, and the listener-bus-timeout fallback
-        agg): L1 delta, message count, and the active-vertex count under
-        the run's tolerance."""
+        """THE convergence definition — the single source for both places
+        that compute it (the observe piggyback on the carry and the
+        listener-bus-timeout fallback agg): L1 delta, message count, and
+        the active-vertex count under the run's tolerance."""
         return (
             F.sum(F.abs(F.col("delta"))).alias("l1"),
             F.count(F.lit(1)).alias("n"),
@@ -228,83 +227,41 @@ class SuperstepDriver:
             ).alias("active"),
         )
 
-    def _write_state(
-        self, state: DataFrame, superstep: int, observe_delta: bool = False
-    ):
-        """Checkpoint the state; optionally piggyback the convergence
-        aggregates on the SAME write job via ``observe`` — one Spark action
-        per superstep total, no second pass over the data."""
-        path = os.path.join(
+    def _snapshot_path(self, superstep: int) -> str:
+        return os.path.join(
             _state_dir(self.checkpoint_dir, self.run_id, self.algorithm),
             f"superstep={superstep}",
         )
-        obs = None
-        if observe_delta:
-            obs = Observation(
-                f"superstep-{self.algorithm}-{superstep}-{uuid.uuid4().hex[:8]}"
-            )
-            state = state.observe(obs, *self._convergence_cols())
-        state.write.mode("overwrite").parquet(path)
-        self._append_partition_metrics(superstep, path)
-        # read back with the known schema: skips the driver-side footer
-        # schema-inference pass — a fixed per-superstep cost that dilutes
-        # scaling efficiency (it is identical wall at every core count).
-        # The raw Observation is returned (NOT obs.get): .get blocks with
-        # no timeout on the async listener bus — the caller resolves it
-        # via _carry_metrics, which bounds the wait and falls back to a
-        # direct agg over the read-back frame.
-        return self.spark.read.schema(state.schema).parquet(path), obs
 
-    def _checkpoint_carry(self, state: DataFrame, superstep: int, durable: bool):
+    def _checkpoint_carry(self, state: DataFrame, superstep: int):
         """Materialize the superstep output ONCE via eager
         ``localCheckpoint`` — truncating lineage (like the parquet
         round-trip) while PRESERVING the step's ``hash(vertex_id, P)``
-        output partitioning in the rebased ``LogicalRDD`` — run the
+        output partitioning in the rebased ``LogicalRDD`` — and run the
         convergence aggregates as a cheap in-memory agg over the
-        materialized rows, and, on durable steps, copy those rows to the
-        parquet snapshot as a single-stage scan off the critical path.
+        materialized rows. Returns ``(cached, agg)``.
 
-        Why the carry matters: the old durable path continued the loop
-        from a fresh parquet scan, whose partitioning Spark cannot know —
-        so the NEXT superstep re-exchanged the O(V) state for its
-        gather join, its agg, and its scatter join. With the carry (and
-        the loop's pinned planning, see ``run``), the state side of every
-        superstep join is already hash-clustered on the join key at the
-        loop width P and EnsureRequirements inserts no state-side
-        exchange: one message-aggregation exchange per superstep is all
-        that remains — the minimal BSP shuffle shape. Measured (probe in
-        BENCH.md round 4): per-superstep stage count drops ~3×, and the
-        serial per-superstep cost c that caps N→4N scaling efficiency
-        drops with it.
+        Why the carry matters: continuing the loop from a fresh parquet
+        scan, whose partitioning Spark cannot know, made the NEXT
+        superstep re-exchange the O(V) state for its gather join, its
+        agg, and its scatter join. With the carry (and the loop's pinned
+        planning, see ``run``), the state side of every superstep join
+        is already hash-clustered on the join key at the loop width P
+        and EnsureRequirements inserts no state-side exchange: one
+        message-aggregation exchange per superstep is all that remains —
+        the minimal BSP shuffle shape. Measured (probe in BENCH.md round
+        4): per-superstep stage count drops ~3×, and the serial
+        per-superstep cost c that caps N→4N scaling efficiency drops
+        with it.
 
-        Durability contract: the parquet snapshot at the
-        ``checkpoint_every`` cadence is byte-equivalent to the old
-        synchronous one, and a kill/crash resumes from the last
-        committed snapshot (``run(resume=True)``). Note the RECOVERY
-        GRANULARITY, though: because ALL loop state between snapshots is
+        Recovery granularity: because ALL loop state is
         localCheckpoint-backed (executor-local blocks, lineage
         truncated), an executor loss on a real cluster voids those
         blocks and fails the whole ``run()`` — recovery is JOB-level
         (the caller re-invokes and resume picks up from the last
-        durable superstep), not task-level. For cluster deployments
-        where executor loss is routine, ``run(durable_continuation=
-        True)`` keeps the pre-carry behavior on durable steps: the loop
-        continues from the parquet files themselves, so lost partitions
-        recompute from durable storage mid-job (at the cost of the
-        state-side re-exchanges the carry removes — see ``run``).
-
-        The durable copy runs ASYNCHRONOUSLY (one background thread,
-        Flink-style pipelined snapshotting): the loop's critical path
-        pays only the localCheckpoint + a cheap in-memory convergence
-        agg, while the parquet write of the materialized (immutable)
-        blocks overlaps the NEXT superstep's compute — on a cluster the
-        checkpoint I/O rides spare executor capacity instead of
-        serializing the loop. A snapshot is not resumable until its
-        ``_SUCCESS`` lands, so a kill mid-write falls back exactly one
-        cadence — the granularity ``checkpoint_every`` already promises.
-        ``_join_pending_write`` is called before the cached frame backing
-        a write is unpersisted, before the loop returns, and before any
-        read of the snapshot — at most one write is ever in flight.
+        committed snapshot, ``_write_snapshot``), not task-level.
+        local-mode/single-JVM deployments, where executor loss and
+        driver loss coincide, lose nothing by it.
 
         Round 5: the convergence aggregates are PIGGYBACKED on the
         localCheckpoint action itself via ``observe`` (the CollectMetrics
@@ -318,32 +275,41 @@ class SuperstepDriver:
         cached = state.observe(obs, *self._convergence_cols()).localCheckpoint(
             eager=True
         )
-        agg = self._carry_metrics(cached, obs)
-        if durable:
-            path = os.path.join(
-                _state_dir(self.checkpoint_dir, self.run_id, self.algorithm),
-                f"superstep={superstep}",
-            )
+        return cached, self._carry_metrics(cached, obs)
 
-            def _write() -> None:
-                try:
-                    cached.write.mode("overwrite").parquet(path)
-                    self._append_partition_metrics(superstep, path)
-                except BaseException as exc:  # surfaced at the next join
-                    self._write_exc = exc
+    def _write_snapshot(self, cached: DataFrame, superstep: int) -> None:
+        """Copy the carried rows of ``superstep`` to its parquet snapshot
+        — the driver's one state write — as a single-stage scan on a
+        background thread (Flink-style pipelined snapshotting): the
+        loop's critical path pays only the localCheckpoint + a cheap
+        in-memory convergence agg, while the write of the materialized
+        (immutable) blocks overlaps the NEXT superstep's compute — on a
+        cluster the checkpoint I/O rides spare executor capacity instead
+        of serializing the loop. A snapshot is not resumable until its
+        ``_SUCCESS`` lands, so a kill mid-write falls back exactly one
+        cadence — the granularity ``checkpoint_every`` already promises.
+        ``_join_pending_write`` is called before the cached frame backing
+        a write is unpersisted, before the loop returns, and before any
+        read of the snapshot — at most one write is ever in flight."""
+        path = self._snapshot_path(superstep)
 
-            self._join_pending_write()  # at most one write in flight
-            t = threading.Thread(
-                target=_write, name=f"ckpt-{self.algorithm}-{superstep}", daemon=True
-            )
-            t.start()
-            self._pending_write = (t, superstep)
-        return cached, agg
+        def _write() -> None:
+            try:
+                cached.write.mode("overwrite").parquet(path)
+                self._append_partition_metrics(superstep, path)
+            except BaseException as exc:  # surfaced at the next join
+                self._write_exc = exc
+
+        self._join_pending_write()  # at most one write in flight
+        t = threading.Thread(
+            target=_write, name=f"ckpt-{self.algorithm}-{superstep}", daemon=True
+        )
+        t.start()
+        self._pending_write = (t, superstep)
 
     def _carry_metrics(self, cached: DataFrame, obs: Observation) -> dict:
-        """Convergence aggregates for a completed superstep (carried or
-        durable-continuation — ``cached`` is whatever frame the loop
-        continues from: localCheckpoint blocks or the parquet read-back).
+        """Convergence aggregates for a completed superstep (``cached`` is
+        the carried localCheckpoint frame).
         Primary source: the Observation piggybacked on the checkpoint action
         (zero extra jobs). The metrics event is delivered over Spark's
         shared ASYNC listener bus, which can lag the action's return —
@@ -378,11 +344,7 @@ class SuperstepDriver:
             raise RuntimeError("durable checkpoint write failed") from exc
 
     def read_state(self, superstep: int) -> DataFrame:
-        path = os.path.join(
-            _state_dir(self.checkpoint_dir, self.run_id, self.algorithm),
-            f"superstep={superstep}",
-        )
-        return self.spark.read.parquet(path)
+        return self.spark.read.parquet(self._snapshot_path(superstep))
 
     def _append_metrics(self, row: dict) -> None:
         """One lineage row per superstep, written driver-side with pyarrow
@@ -499,13 +461,13 @@ class SuperstepDriver:
         tolerance: float = DEFAULT_TOLERANCE,
         resume: bool = True,
         checkpoint_every: int = 1,
-        durable_continuation: bool = False,
     ) -> SuperstepResult:
         """``checkpoint_every`` is Giraph's checkpointFrequency analog:
         durable (resumable) checkpoints land every k-th superstep; in
         between, lineage is truncated with an in-memory localCheckpoint
         (cheaper, not kill-proof). Resume granularity becomes k
-        supersteps; the final state is always written durably.
+        supersteps; the superstep the loop ends on (converged or capped)
+        is always written durably, so ``result.state`` is that snapshot.
 
         Planning is pinned for the duration of the loop: AQE is disabled
         and ``spark.sql.shuffle.partitions`` is pinned to the iteration
@@ -521,26 +483,7 @@ class SuperstepDriver:
         the dominant cost at 10^12-turn scale. Skew inside the loop is
         absorbed by each step's map-side partial aggregate below its
         message exchange (``operators/skew``), not by AQE. The session
-        confs are restored on exit.
-
-        ``durable_continuation`` (default off): when on, every DURABLE
-        superstep — including the initial ``superstep=-1`` snapshot — is
-        written synchronously straight from the step's lineage and the
-        loop continues from the parquet files — so on a multi-executor
-        cluster a lost executor's partitions recompute from durable
-        storage and the job survives (task-level recovery). Task-level
-        recovery is complete at ``checkpoint_every=1``; with a sparser
-        cadence the in-between supersteps still carry via
-        ``localCheckpoint``, so an executor loss mid-cadence fails the
-        run and ``resume`` falls back to the last durable snapshot. The trade-off is the one the round-4 carry removed:
-        a parquet scan forgets its partitioning, so the superstep after
-        each durable one re-exchanges the state for its joins. Default
-        (off) keeps the minimal-shuffle carry everywhere; recovery is
-        then JOB-level — executor loss fails ``run()`` and the caller
-        re-invokes with ``resume=True`` to continue from the last
-        committed snapshot. local-mode/single-JVM deployments (where
-        executor loss and driver loss coincide) lose nothing with the
-        default."""
+        confs are restored on exit."""
         t0 = time.monotonic()
         self._tolerance = tolerance
         resumed_from = latest_committed(self.checkpoint_dir, self.run_id, self.algorithm) if resume else None
@@ -555,7 +498,6 @@ class SuperstepDriver:
         # the carried frame the loop continues from, freed on every exit
         cur_cached: DataFrame | None = None
         try:
-            last_durable = resumed_from if resumed_from is not None else -1
             if resumed_from is not None:
                 state = self.read_state(resumed_from)
                 start_step = resumed_from + 1
@@ -563,17 +505,9 @@ class SuperstepDriver:
                 # superstep -1 checkpoint = the initial state, so a job
                 # killed in superstep 0 still resumes deterministically
                 if resume:
-                    if durable_continuation:
-                        # task-level recovery must hold from the FIRST
-                        # superstep: write the init snapshot synchronously
-                        # and continue from the parquet files — carrying
-                        # it as localCheckpoint blocks would leave
-                        # superstep 0 exposed to exactly the executor
-                        # loss this mode exists to survive
-                        state, _ = self._write_state(init_state, -1)
-                    else:
-                        state, _ = self._checkpoint_carry(init_state, -1, durable=True)
-                        cur_cached = state
+                    state, _ = self._checkpoint_carry(init_state, -1)
+                    self._write_snapshot(state, -1)
+                    cur_cached = state
                 else:
                     state = init_state
                 start_step = 0
@@ -586,43 +520,26 @@ class SuperstepDriver:
 
             for k in range(start_step, max_supersteps):
                 ts = time.monotonic()
-                new_state = step(state, k)
                 # one full-compute action per superstep: the eager
                 # localCheckpoint with the convergence agg observed on the
                 # same job; durable steps launch a background scan-and-
                 # write of the already-materialized rows that overlaps
                 # the next superstep
-                durable = (k + 1) % checkpoint_every == 0 or k == max_supersteps - 1
-                if durable and durable_continuation:
-                    # cluster-recovery mode: write synchronously straight
-                    # from the step lineage (task failures recompute from
-                    # the previous durable files) and continue the loop
-                    # from the files just written
-                    self._join_pending_write()
-                    new_cached, obs = self._write_state(
-                        new_state, k, observe_delta=True
-                    )
-                    # bounded wait + fallback agg over the durable files —
-                    # never the unbounded obs.get (a dropped listener-bus
-                    # event would hang the run on exactly the loaded
-                    # clusters durable_continuation targets)
-                    agg = self._carry_metrics(new_cached, obs)
-                    if cur_cached is not None:
-                        free(cur_cached)
-                    state = new_cached
-                    cur_cached = None
-                else:
-                    new_cached, agg = self._checkpoint_carry(new_state, k, durable)
-                    if cur_cached is not None:
-                        # an in-flight write of an OLDER superstep reads
-                        # the blocks we are about to free; step k's own
-                        # write (the one just launched) keeps overlapping
-                        self._join_pending_write(except_step=k)
-                        free(cur_cached)
-                    state = cur_cached = new_cached
-                if durable:
-                    last_durable = k
+                new_cached, agg = self._checkpoint_carry(step(state, k), k)
                 l1 = float(agg["l1"] or 0.0)
+                converged = l1 < tolerance
+                # durability is decided after the observed agg, so the
+                # superstep the loop ends on (converged or capped) is
+                # always one of the loop's own snapshot writes
+                if converged or (k + 1) % checkpoint_every == 0 or k == max_supersteps - 1:
+                    self._write_snapshot(new_cached, k)
+                if cur_cached is not None:
+                    # an in-flight write of an OLDER superstep reads
+                    # the blocks we are about to free; step k's own
+                    # write (the one just launched) keeps overlapping
+                    self._join_pending_write(except_step=k)
+                    free(cur_cached)
+                state = cur_cached = new_cached
                 wall_ms = int((time.monotonic() - ts) * 1000)
                 row = {
                     "superstep": k,
@@ -635,8 +552,7 @@ class SuperstepDriver:
                 self._append_metrics(row)
                 all_metrics.append(row)
                 steps_run += 1
-                if l1 < tolerance:
-                    converged = True
+                if converged:
                     break
 
             if cur_cached is not None:
@@ -644,19 +560,14 @@ class SuperstepDriver:
                 # durable progress (and before the final read below)
                 self._join_pending_write()
                 # hand back a durable parquet-backed frame, never the loop
-                # cache: consumers may hold result.state indefinitely
-                if last_durable != k:
-                    # halted (or capped) on a non-durable superstep: make
-                    # the final state durable so consumers and resumers
-                    # see it (cheap scan of the materialized rows)
-                    state, _ = self._write_state(cur_cached, k)
-                else:
-                    state = self.spark.read.schema(cur_cached.schema).parquet(
-                        os.path.join(
-                            _state_dir(self.checkpoint_dir, self.run_id, self.algorithm),
-                            f"superstep={last_durable}",
-                        )
-                    )
+                # cache: consumers may hold result.state indefinitely.
+                # Read back with the known schema: skips the driver-side
+                # footer schema-inference pass — a fixed per-run cost that
+                # dilutes scaling efficiency (it is identical wall at
+                # every core count).
+                state = self.spark.read.schema(cur_cached.schema).parquet(
+                    self._snapshot_path(k)
+                )
         finally:
             # never leave a write racing the conf restore (or a later
             # unpersist by the caller) — but if another exception is

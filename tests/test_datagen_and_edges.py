@@ -100,25 +100,24 @@ def test_vertex_ids_and_encoding(spark):
 
 
 def test_dense_ids_survive_cache_eviction(spark):
-    """The id assignment must be a pure function of the key set under
-    ANY re-execution: a frame returned by an EARLIER dense_ids call,
-    evaluated after a LATER call evicted its backing cache, re-runs the
-    range exchange with a fresh sample seed — offsets computed inside
-    the same plan stay consistent with the re-sampled boundaries, where
-    driver-collected offsets would go stale and silently corrupt ids."""
+    """An id table returned by an EARLIER dense_ids call stays valid and
+    unchanged after a LATER call: each call freezes its own table (an
+    eager localCheckpoint with no lineage back to the keys), so another
+    call's materialization and release cannot touch it, and a plan
+    compiled over it afterwards reads the same ids."""
     rows_a = spark.range(500).select(
         F.concat(F.lit("a"), F.col("id").cast("string")).alias("k")
     )
     ids_a = E.dense_ids(rows_a, "k", num_partitions=4)
     before = sorted((r.k, r.vertex_id) for r in ids_a.collect())
     assert sorted(v for _, v in before) == list(range(500))  # dense 0..N-1
-    # a second call evicts call A's persisted range-partitioned frame
+    # a second call freezes and frees its own partitions
     rows_b = spark.range(300).select(
         F.concat(F.lit("b"), F.col("id").cast("string")).alias("k")
     )
     E.dense_ids(rows_b, "k", num_partitions=4).count()
-    # a plan COMPILED after the eviction recomputes A's lineage from
-    # scratch — the ids must come out identical
+    # a plan COMPILED after the second call reads A's frozen table —
+    # the ids must come out identical
     after = sorted(
         (r.k, r.vertex_id)
         for r in ids_a.join(ids_a.select("k"), "k", "left_semi").collect()

@@ -1,20 +1,21 @@
 """Round-5 superstep-engine contracts.
 
-Pins the four behaviors added/fixed this round:
+Pins these behaviors:
 
-- ``durable_continuation=True`` (cluster task-level recovery mode):
-  identical results to the default carry, durable steps continue from
-  parquet (executor loss between durable steps recomputes from files),
-  resume still works at the same granularity;
 - the convergence aggregates ride the checkpoint action itself
   (``observe`` piggyback) — a NON-durable superstep costs exactly ONE
-  Spark job;
+  Spark job — and a dropped Observation event falls back to an exact,
+  bounded agg;
+- a run that converges on a non-durable superstep still ends on a
+  committed snapshot of that superstep;
 - a teardown join failure must not MASK a primary in-flight exception;
 - ``metrics()`` returns one row per superstep even after a resume
   re-ran supersteps whose rows had already landed;
 - superseded carried supersteps release their checkpoint blocks eagerly
   (``Dataset.unpersist`` alone cannot — localCheckpoint persists the
-  underlying RDD directly).
+  underlying RDD directly);
+- a job killed during superstep 0 resumes from the committed
+  ``superstep=-1`` init snapshot.
 """
 
 from __future__ import annotations
@@ -52,53 +53,6 @@ def _rows(df):
     return sorted((r.vertex_id, round(r.value, 12)) for r in df.collect())
 
 
-def test_durable_continuation_matches_carry(spark, tmp_path):
-    """Both continuation modes must produce identical state, snapshots,
-    and halt behavior — the mode only changes WHERE the next superstep
-    reads its input from (parquet files vs carried local blocks)."""
-    a = SuperstepDriver(spark, str(tmp_path), "a", "halve", num_partitions=4)
-    ra = a.run(_init_state(spark), _halve_step, max_supersteps=5,
-               tolerance=0.0, checkpoint_every=2)
-    b = SuperstepDriver(spark, str(tmp_path), "b", "halve", num_partitions=4)
-    rb = b.run(_init_state(spark), _halve_step, max_supersteps=5,
-               tolerance=0.0, checkpoint_every=2, durable_continuation=True)
-    assert _rows(ra.state) == _rows(rb.state)
-    assert ra.supersteps_run == rb.supersteps_run
-    assert ra.final_superstep == rb.final_superstep
-    # identical durable cadence: init(-1), steps 1, 3, final 4
-    for run_id in ("a", "b"):
-        assert latest_committed(str(tmp_path), run_id, "halve") == 4
-        sdir = os.path.join(str(tmp_path), run_id, "halve", "state")
-        steps = sorted(
-            int(d.split("=")[1])
-            for d in os.listdir(sdir)
-            if d.startswith("superstep=")
-        )
-        assert steps == [-1, 1, 3, 4]
-    # continuation mode leaves no async write in flight (all writes sync)
-    assert b._pending_write is None and b._write_exc is None
-
-
-def test_durable_continuation_resumes(spark, tmp_path):
-    """Kill-and-resume keeps working in continuation mode: fall back to
-    the last committed snapshot and produce the synchronous history."""
-    drv = SuperstepDriver(spark, str(tmp_path), "r", "halve", num_partitions=4)
-    drv.run(_init_state(spark), _halve_step, max_supersteps=6,
-            tolerance=0.0, checkpoint_every=2, durable_continuation=True)
-    sdir = os.path.join(str(tmp_path), "r", "halve", "state")
-    # simulate a kill after superstep 3 committed: drop 5 and the final
-    import shutil
-
-    shutil.rmtree(os.path.join(sdir, "superstep=5"))
-    assert latest_committed(str(tmp_path), "r", "halve") == 3
-    drv2 = SuperstepDriver(spark, str(tmp_path), "r", "halve", num_partitions=4)
-    res = drv2.run(_init_state(spark), _halve_step, max_supersteps=6,
-                   tolerance=0.0, checkpoint_every=2, durable_continuation=True)
-    assert res.resumed_from == 3
-    # 64 vertices halved 6 times: value = 2^-6
-    assert _rows(res.state) == [(i, round(2.0 ** -6, 12)) for i in range(64)]
-
-
 def test_nondurable_superstep_costs_one_job(spark, tmp_path):
     """The piggybacked convergence agg (observe on the checkpoint
     action) means a non-durable superstep launches exactly ONE Spark
@@ -117,8 +71,8 @@ def test_nondurable_superstep_costs_one_job(spark, tmp_path):
     drv.run(init, _halve_step, max_supersteps=3, tolerance=0.0,
             checkpoint_every=4, resume=False)
     new_jobs = [j for j in sc.statusTracker().getJobIdsForGroup(None) if j > last_before]
-    # 3 supersteps x 1 checkpoint action + the final durable write of the
-    # capped state (_write_state): 4 jobs. A regression to the separate
+    # 3 supersteps x 1 checkpoint action + the loop's own snapshot write
+    # of the capped superstep 2: 4 jobs. A regression to the separate
     # per-superstep agg job would read 7.
     assert len(new_jobs) == 4, f"{len(new_jobs)} jobs"
 
@@ -250,42 +204,38 @@ def test_initial_checkpoint_is_resumable(spark, tmp_path):
     assert _rows(res.state) == [(i, round(2.0 ** -3, 12)) for i in range(64)]
 
 
-def test_durable_continuation_init_snapshot_is_synchronous(spark, tmp_path):
-    """In continuation mode the -1 init snapshot must take the sync
-    parquet path like every other durable step: carrying it as
-    localCheckpoint blocks would leave superstep 0 exposed to exactly
-    the executor loss the mode exists to survive."""
-    drv = SuperstepDriver(spark, str(tmp_path), "s", "halve", num_partitions=4)
-    carried = []
-    orig = drv._checkpoint_carry
-
-    def spy(state, superstep, durable):
-        carried.append(superstep)
-        return orig(state, superstep, durable)
-
-    drv._checkpoint_carry = spy
-    res = drv.run(_init_state(spark), _halve_step, max_supersteps=2,
-                  tolerance=0.0, checkpoint_every=1, durable_continuation=True)
-    assert carried == []  # every snapshot, including -1, went sync
-    assert os.path.exists(os.path.join(
-        str(tmp_path), "s", "halve", "state", "superstep=-1", "_SUCCESS"
-    ))
-    assert res.supersteps_run == 2
-    assert drv._pending_write is None
-
-
-def test_durable_continuation_convergence_agg_is_bounded(spark, tmp_path, monkeypatch):
-    """durable_continuation's convergence aggregates must survive a
-    dropped Observation event (async listener bus under pressure): the
-    bounded wait falls back to a direct agg over the durable files
-    instead of hanging forever on obs.get."""
+def test_convergence_agg_fallback_is_bounded(spark, tmp_path, monkeypatch):
+    """The convergence aggregates must survive a dropped Observation
+    event (async listener bus under pressure): the bounded wait falls
+    back to a direct agg over the carried rows instead of hanging
+    forever on obs.get — and that agg is exact."""
     import sharetrace_giraph_spark.plans.superstep as ss
 
     monkeypatch.setattr(ss, "_OBSERVE_TIMEOUT_S", 0.0)  # force the fallback
     drv = SuperstepDriver(spark, str(tmp_path), "d", "halve", num_partitions=4)
     res = drv.run(_init_state(spark), _halve_step, max_supersteps=3,
-                  tolerance=0.0, checkpoint_every=1, resume=False,
-                  durable_continuation=True)
+                  tolerance=0.0, checkpoint_every=2, resume=False)
     m = {r.superstep: r for r in drv.metrics().collect()}
     assert res.supersteps_run == 3
-    assert all(m[k].messages > 0 for k in (0, 1, 2))  # real aggregates
+    assert [m[k].messages for k in (0, 1, 2)] == [64, 64, 64]
+    assert m[0].l1_delta == 32.0  # 64 vertices x |1 - 1/2|
+
+
+def test_convergence_on_nondurable_superstep_is_written(spark, tmp_path):
+    """A run that converges between cadence slots must still end on a
+    committed snapshot of the converged superstep (the loop writes it
+    itself), and hand back that snapshot with no write in flight."""
+    drv = SuperstepDriver(spark, str(tmp_path), "c", "halve", num_partitions=4)
+    # l1 at superstep k is 64 * 2^-(k+1): the first below tolerance is k=2
+    res = drv.run(_init_state(spark), _halve_step, max_supersteps=10,
+                  tolerance=64 * 2.0 ** -3 + 1e-9, checkpoint_every=4)
+    assert res.converged
+    assert res.final_superstep == 2
+    sdir = os.path.join(str(tmp_path), "c", "halve", "state")
+    steps = sorted(
+        int(d.split("=")[1]) for d in os.listdir(sdir) if d.startswith("superstep=")
+    )
+    assert steps == [-1, 2]
+    assert latest_committed(str(tmp_path), "c", "halve") == 2
+    assert _rows(res.state) == [(i, round(2.0 ** -3, 12)) for i in range(64)]
+    assert drv._pending_write is None
