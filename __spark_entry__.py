@@ -92,30 +92,6 @@ def _ckpt() -> str:
     return tempfile.mkdtemp(prefix="stgs-ckpt-")
 
 
-def _weighted_und(contacts, verts, cast: str):
-    """Undirected encoded edges weighted by total co-presence duration_ms
-    + 1 per contact (the +1 keeps every live edge positive) — shared by
-    the weighted-LPA / personalized-PageRank / shortest-path queries."""
-    wc = contacts.select(
-        "src", "dst",
-        (
-            F.aggregate(
-                "occurrences", F.lit(0).cast("long"),
-                lambda acc, o: acc + o["duration_ms"],
-            ) + 1
-        ).cast(cast).alias("w"),
-    )
-    vsrc = verts.select(F.col("role").alias("src"), F.col("vertex_id").alias("src_id"))
-    vdst = verts.select(F.col("role").alias("dst"), F.col("vertex_id").alias("dst_id"))
-    wenc = (
-        wc.join(vsrc, "src").join(vdst, "dst")
-        .select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"), "w")
-    )
-    return wenc.unionByName(
-        wenc.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
-
-
 # ---------------------------------------------------------------------------
 # the queries
 # ---------------------------------------------------------------------------
@@ -500,7 +476,7 @@ def q_graph_strength_topk(spark, sf_dir):
     hash agg (partial+final) over the per-pair weights; the top-k is a
     TakeOrderedAndProject (per-partition heap + driver merge of 20-row
     heads), never a global sort. Weights are the engine's canonical
-    duration_ms + 1 LONGs (see _weighted_und), so sums are exact."""
+    duration_ms + 1 LONGs (see edges.weighted_undirect), so sums are exact."""
     contacts, verts, enc = _graph(spark, sf_dir)
     wc = contacts.select(
         "src", "dst",
@@ -579,7 +555,7 @@ def q_graph_lpa_weighted(spark, sf_dir):
     from sharetrace_giraph_spark.operators import edges as E
 
     contacts, verts, enc = _graph(spark, sf_dir)
-    wund = _weighted_und(contacts, verts, "long")
+    wund = E.weighted_undirect(contacts, verts)
     res = label_propagation(spark, wund, verts, _ckpt(), run_id="qlw",
                             max_supersteps=5, checkpoint_every=2, weight_col="w")
     label_roles = verts.select(
@@ -621,9 +597,10 @@ def q_graph_sssp(spark, sf_dir):
     relaxations (idempotent past the fixed point, same protocol as the
     k-core oracle), so both sides agree at any convergence depth."""
     from sharetrace_giraph_spark.algorithms import UNREACHED, shortest_paths
+    from sharetrace_giraph_spark.operators import edges as E
 
     contacts, verts, enc = _graph(spark, sf_dir)
-    wund = _weighted_und(contacts, verts, "long")
+    wund = E.weighted_undirect(contacts, verts)
     seed = verts.orderBy("role").limit(1).select("vertex_id")
     res = shortest_paths(spark, wund, verts, seed, _ckpt(), run_id="qsp",
                          max_supersteps=30, checkpoint_every=2)
@@ -654,11 +631,11 @@ def q_graph_ppr(spark, sf_dir):
     from sharetrace_giraph_spark.operators import edges as E
 
     contacts, verts, enc = _graph(spark, sf_dir)
-    wund = _weighted_und(contacts, verts, "double")
+    wund = E.weighted_undirect(contacts, verts)
     seed = verts.orderBy("role").limit(1).select("vertex_id")
     res = pagerank(spark, wund, verts, _ckpt(), run_id="qppr",
                    tolerance=0.0, max_supersteps=5, checkpoint_every=2,
-                   weight_col="w", teleport=seed, handle_dangling=False)
+                   weight_col="w", teleport=seed)
     return (
         res.state.join(verts, "vertex_id")
         .select("role", F.round("rank", 9).alias("rank"))
@@ -799,7 +776,7 @@ def q_graph_reply_pagerank(spark, sf_dir):
     )
     res = pagerank(spark, enc, verts, _ckpt(), run_id="qrp",
                    tolerance=0.0, max_supersteps=5, checkpoint_every=2,
-                   weight_col="w", handle_dangling=True)
+                   weight_col="w")
     return (
         res.state.join(verts, "vertex_id")
         .select("role", F.round("rank", 9).alias("rank"))

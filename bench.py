@@ -190,7 +190,7 @@ def run_edges_bench(spark, cores: int, n_edges: int, ckpt: str,
     t0 = time.monotonic()
     pr = pagerank(
         spark, edges, verts, ckpt, run_id="scal-pr",
-        tolerance=0.0, max_supersteps=12, resume=False, handle_dangling=False,
+        tolerance=0.0, max_supersteps=12, resume=False,
         num_partitions=partitions, checkpoint_every=checkpoint_every,
     )
     out["pagerank_12_supersteps"] = round(time.monotonic() - t0, 3)

@@ -32,6 +32,31 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _seed(sources: str | None, verts):
+    """The bfs/sssp source set ``(vertex_id)``: the vertices of the
+    comma-separated ``--bfs-sources`` roles, or the lexicographically
+    smallest role. Exits when no listed role exists (a typo would
+    otherwise be indistinguishable from an unreachable graph) and warns
+    when only some do."""
+    import pyspark.sql.functions as F
+
+    if not sources:
+        return verts.orderBy("role").limit(1).select("vertex_id")
+    roles = [r.strip() for r in sources.split(",") if r.strip()]
+    seed = verts.where(F.col("role").isin(roles)).select("vertex_id")
+    n_found = seed.count()
+    if n_found == 0:
+        raise SystemExit(
+            f"--bfs-sources matched no vertex (asked for {roles!r}); "
+            "a typo would otherwise be indistinguishable from an "
+            "unreachable graph"
+        )
+    if n_found < len(roles):
+        print(f"warning: only {n_found}/{len(roles)} --bfs-sources "
+              "exist in the graph", file=sys.stderr)
+    return seed
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--transcripts", help="parquet path (or Iceberg table) of transcripts")
@@ -111,24 +136,7 @@ def main() -> None:
         und = E.undirect(enc)
         weight_col = None
         if args.duration_weighted:
-            wc = contacts.select(
-                "src", "dst",
-                (
-                    F.aggregate(
-                        "occurrences", F.lit(0).cast("long"),
-                        lambda acc, o: acc + o["duration_ms"],
-                    ) + 1
-                ).cast("double").alias("w"),
-            )
-            vs = verts.select(F.col("role").alias("src"), F.col("vertex_id").alias("src_id"))
-            vd = verts.select(F.col("role").alias("dst"), F.col("vertex_id").alias("dst_id"))
-            wenc = (
-                wc.join(vs, "src").join(vd, "dst")
-                .select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"), "w")
-            )
-            und = wenc.unionByName(
-                wenc.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-            )
+            und = E.weighted_undirect(contacts, verts)
             weight_col = "w"
         teleport = None
         if args.teleport_roles:
@@ -155,21 +163,7 @@ def main() -> None:
 
         from sharetrace_giraph_spark.algorithms import UNREACHED, bfs
 
-        if args.bfs_sources:
-            roles = [r.strip() for r in args.bfs_sources.split(",") if r.strip()]
-            seed = verts.where(F.col("role").isin(roles)).select("vertex_id")
-            n_found = seed.count()
-            if n_found == 0:
-                raise SystemExit(
-                    f"--bfs-sources matched no vertex (asked for {roles!r}); "
-                    "a typo would otherwise be indistinguishable from an "
-                    "unreachable graph"
-                )
-            if n_found < len(roles):
-                print(f"warning: only {n_found}/{len(roles)} --bfs-sources "
-                      "exist in the graph", file=sys.stderr)
-        else:
-            seed = verts.orderBy("role").limit(1).select("vertex_id")
+        seed = _seed(args.bfs_sources, verts)
         res = bfs(
             spark, E.undirect(enc), verts, seed, args.checkpoint_dir,
             run_id=args.run_id, max_supersteps=args.max_supersteps, resume=resume,
@@ -183,34 +177,8 @@ def main() -> None:
 
         from sharetrace_giraph_spark.algorithms import UNREACHED, shortest_paths
 
-        if args.bfs_sources:
-            roles = [r.strip() for r in args.bfs_sources.split(",") if r.strip()]
-            seed = verts.where(F.col("role").isin(roles)).select("vertex_id")
-            if seed.count() == 0:
-                raise SystemExit(
-                    f"--bfs-sources matched no vertex (asked for {roles!r})"
-                )
-        else:
-            seed = verts.orderBy("role").limit(1).select("vertex_id")
-        # edge cost = total co-presence duration_ms + 1 (positive long)
-        wc = contacts.select(
-            "src", "dst",
-            (
-                F.aggregate(
-                    "occurrences", F.lit(0).cast("long"),
-                    lambda acc, o: acc + o["duration_ms"],
-                ) + 1
-            ).cast("long").alias("w"),
-        )
-        vs = verts.select(F.col("role").alias("src"), F.col("vertex_id").alias("src_id"))
-        vd = verts.select(F.col("role").alias("dst"), F.col("vertex_id").alias("dst_id"))
-        wenc = (
-            wc.join(vs, "src").join(vd, "dst")
-            .select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"), "w")
-        )
-        wund = wenc.unionByName(
-            wenc.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
+        seed = _seed(args.bfs_sources, verts)
+        wund = E.weighted_undirect(contacts, verts)  # edge cost: positive long
         res = shortest_paths(
             spark, wund, verts, seed, args.checkpoint_dir,
             run_id=args.run_id, max_supersteps=args.max_supersteps, resume=resume,

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.cache import release
 from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
-from .triangle_count import WEDGES, triangle_list
+from .triangle_count import WEDGES, triangle_edges, triangle_list
 
 
 def _ktruss_step(k: int):
@@ -49,19 +49,12 @@ def _ktruss_step(k: int):
 
     def step(state: DataFrame, _k: int) -> DataFrame:
         alive = state.where(F.col("alive") == 1).select("src", "dst")
-        tri = triangle_list(alive)
-        # each triangle supports its three edges; canonicalize the oriented
-        # (degree-ordered) corners back to id order before counting
-        corners = tri.select(
-            F.explode(
-                F.array(
-                    F.struct(F.least("a", "b").alias("s"), F.greatest("a", "b").alias("d")),
-                    F.struct(F.least("a", "c").alias("s"), F.greatest("a", "c").alias("d")),
-                    F.struct(F.least("b", "c").alias("s"), F.greatest("b", "c").alias("d")),
-                )
-            ).alias("e")
-        ).select(F.col("e.s").alias("s"), F.col("e.d").alias("d"))
-        sup = corners.groupBy("s", "d").agg(F.count(F.lit(1)).alias("sup"))
+        # each triangle supports its three (canonical) edges
+        sup = (
+            triangle_edges(triangle_list(alive))
+            .groupBy(F.col("src").alias("s"), F.col("dst").alias("d"))
+            .agg(F.count(F.lit(1)).alias("sup"))
+        )
         survives = (F.col("alive") == 1) & (F.coalesce("sup", F.lit(0)) >= min_support)
         new_alive = F.when(survives, 1).otherwise(0).cast("int")
         # shuffle_hash: per-edge support is O(E) — never broadcast a

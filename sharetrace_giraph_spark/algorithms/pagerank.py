@@ -48,14 +48,13 @@ def _pr_inputs(
     edges: DataFrame,
     vertices: DataFrame,
     weight_col: str | None,
-    handle_dangling: bool,
     num_partitions: int | None,
 ) -> Iterator[tuple[DataFrame, DataFrame, DataFrame | None, int]]:
     """PageRank's static inputs for one run, cached at the iteration
     width P and freed when the ``with`` ends: yields ``(e, verts,
     dangling, P)`` with ``e`` the transition edges (:func:`_transitions`)
     hash-partitioned on src, and ``dangling`` the vertices with no
-    out-edge (None when there are none or ``handle_dangling`` is off).
+    out-edge (None when there are none).
 
     The raw edges are evaluated once, into a cache (held until the run
     ends) that the degree agg and the transition join both read; the
@@ -66,13 +65,11 @@ def _pr_inputs(
     with inputs as (raw, verts, P):
         e = _transitions(raw, weight_col).repartition(P, "src")
         # vertices with no outgoing edge leak rank mass unless redistributed
-        no_out = None
-        if handle_dangling:
-            no_out = verts.join(
-                e.select("src").distinct(), verts.vertex_id == F.col("src"), "left_anti"
-            )
+        no_out = verts.join(
+            e.select("src").distinct(), verts.vertex_id == F.col("src"), "left_anti"
+        )
         with loop_inputs(spark, e, None, no_out, P) as (e, dangling, _):
-            if dangling is not None and dangling.isEmpty():
+            if dangling.isEmpty():
                 dangling = None
             yield e, verts, dangling, P
 
@@ -187,7 +184,6 @@ def pagerank(
     max_supersteps: int = 20,
     tolerance: float = 1e-6,
     num_partitions: int | None = None,
-    handle_dangling: bool = True,
     resume: bool = True,
     checkpoint_every: int = 1,
     weight_col: str | None = None,
@@ -206,7 +202,7 @@ def pagerank(
       personalization vector rides in the checkpointed state (one static
       ``pref`` column), so no extra join per superstep.
     """
-    inputs = _pr_inputs(spark, edges, vertices, weight_col, handle_dangling, num_partitions)
+    inputs = _pr_inputs(spark, edges, vertices, weight_col, num_partitions)
     with inputs as (e, verts, dangling, P):
         n = verts.count()
         step = _pr_step(e, dangling, n, damping, teleport is not None)

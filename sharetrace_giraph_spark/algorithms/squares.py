@@ -44,9 +44,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..plans.cache import hold, release
-from ..plans.superstep import shuffle_partitions
-from .triangle_count import WEDGES, undirected_degree
+from .triangle_count import oriented_edges
 
 
 def square_pair_counts(edges: DataFrame) -> DataFrame:
@@ -64,39 +62,13 @@ def square_pair_counts(edges: DataFrame) -> DataFrame:
     final — the shuffle carries (u, w, type) wedge rows, never H-wedges),
     then a scalar per-row polynomial. No windows, no collect.
 
-    The distinct edge set and the oriented table are held under
-    ``triangle_count.WEDGES`` (``plans/cache``), shared with
-    ``triangle_list``: each call of either frees the previous set.
+    The distinct edge set and the oriented table come from
+    :func:`triangle_count.oriented_edges` and are held under its
+    ``WEDGES`` owner (``plans/cache``): each call frees the previous set.
+    The table's hash on `lo` co-partitions both aliases of the L join and
+    the build side of the M join.
     """
-    # same discipline as triangle_list: e is re-read by the degree agg,
-    # the orientation join and every join build below; the oriented
-    # table's width is pinned explicitly so the two O(E^1.5) wedge
-    # self-joins can never inherit a 1-partition layout from a
-    # broadcast-streamed upstream (see BENCH.md, 'Round-5 late
-    # regression'). Hash on `lo` co-partitions both aliases of the L
-    # join and the build side of the M join.
-    release(WEDGES)
-    num_partitions = shuffle_partitions(edges.sparkSession)
-    e = hold(WEDGES, edges.select("src", "dst").distinct().persist())
-    deg = undirected_degree(e)
-    er = (
-        e.join(deg.select(F.col("v").alias("src"), F.col("deg").alias("src_deg")), "src")
-        .join(deg.select(F.col("v").alias("dst"), F.col("deg").alias("dst_deg")), "dst")
-    )
-    src_lt = F.struct(F.col("src_deg"), F.col("src")) < F.struct(F.col("dst_deg"), F.col("dst"))
-    # lo ≺ hi; keep both endpoint degrees: rank comparisons between wedge
-    # endpoints need (deg, id) structs on each side
-    oriented = hold(
-        WEDGES,
-        er.select(
-            F.when(src_lt, F.col("src")).otherwise(F.col("dst")).alias("lo"),
-            F.when(src_lt, F.col("dst")).otherwise(F.col("src")).alias("hi"),
-            F.when(src_lt, F.col("src_deg")).otherwise(F.col("dst_deg")).alias("lo_deg"),
-            F.when(src_lt, F.col("dst_deg")).otherwise(F.col("src_deg")).alias("hi_deg"),
-        )
-        .repartition(num_partitions, "lo")
-        .persist(),
-    )
+    oriented = oriented_edges(edges)
 
     # L: out-out wedges v→u, v→w — pair key rank-ordered via the hi_deg structs
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")

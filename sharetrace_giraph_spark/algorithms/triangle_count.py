@@ -22,7 +22,7 @@ from ..plans.cache import hold, release
 from ..plans.superstep import shuffle_partitions
 
 #: cache owner (``plans/cache``) of the wedge pipelines' intermediates,
-#: shared by triangle_list and squares: one live wedge set across both
+#: filled by oriented_edges for triangles and squares: one live wedge set
 WEDGES = "algorithms.wedges"
 
 
@@ -36,21 +36,21 @@ def undirected_degree(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_list(edges: DataFrame) -> DataFrame:
-    """Triangle enumeration ``(a, b, c)`` (each triangle exactly once) via
-    the degree-oriented wedge join; ``edges`` canonical (src < dst). The
-    returned frame, the oriented edge table under it and the distinct
-    edge set are persisted and held under :data:`WEDGES`
-    (``plans/cache``); each call first releases that owner, so no caller
-    sequence pins more than one wedge set (a prior call's returned frame
-    stays valid — it just recomputes if used after a later call)."""
+def oriented_edges(edges: DataFrame) -> DataFrame:
+    """The degree-oriented edge table ``(lo, hi, hi_deg)`` of a canonical
+    edge set: each edge points from its (degree, id)-smaller endpoint
+    ``lo`` to the larger ``hi``, so every vertex's oriented out-degree is
+    O(sqrt(E)). The one builder behind every wedge consumer (triangles,
+    squares). It first releases :data:`WEDGES`; the distinct edge set and
+    the returned table are then held under it (``plans/cache``), so no
+    caller sequence pins more than one wedge set."""
     release(WEDGES)
     # e is consumed by the degree agg, the orientation join, AND every
-    # broadcast build below — uncached, each of those jobs re-executes
-    # the caller's whole edge lineage (measured: a single tri.count()
-    # launched ~29 jobs of ~100 tasks each when the upstream was a chain
-    # of broadcast joins with no exchange to reuse). One O(E) cache
-    # materializes the lineage exactly once.
+    # broadcast build of the wedge joins — uncached, each of those jobs
+    # re-executes the caller's whole edge lineage (measured: a single
+    # tri.count() launched ~29 jobs of ~100 tasks each when the upstream
+    # was a chain of broadcast joins with no exchange to reuse). One O(E)
+    # cache materializes the lineage exactly once.
     e = hold(WEDGES, edges.select("src", "dst").distinct().persist())
     deg = undirected_degree(e)
 
@@ -68,13 +68,12 @@ def triangle_list(edges: DataFrame) -> DataFrame:
     # map carries exact cache statistics), the whole oriented table
     # inherits the partition count of whatever tiny cached relation got
     # STREAMED — possibly ONE partition after AQE coalescing — and the
-    # O(E^1.5) wedge self-join below would run as a single task. The
-    # engine's parallelism must never be an accident of join-strategy
-    # choice. Hashing on `lo` also co-partitions BOTH aliases of the
-    # self-join (equi key = lo), so this is the wedge join's only
-    # exchange; orientation bounds rows per `lo` at O(sqrt E), so the
-    # hash cannot be skewed by hubs.
-    oriented = hold(
+    # O(E^1.5) wedge self-joins would run as a single task. The engine's
+    # parallelism must never be an accident of join-strategy choice.
+    # Hashing on `lo` also co-partitions BOTH aliases of a self-join on
+    # lo, so this is the wedge join's only exchange; orientation bounds
+    # rows per `lo` at O(sqrt E), so the hash cannot be skewed by hubs.
+    return hold(
         WEDGES,
         er.select(
             F.when(src_lt, F.col("src")).otherwise(F.col("dst")).alias("lo"),
@@ -85,6 +84,15 @@ def triangle_list(edges: DataFrame) -> DataFrame:
         .persist(),
     )
 
+
+def triangle_list(edges: DataFrame) -> DataFrame:
+    """Triangle enumeration ``(a, b, c)`` (each triangle exactly once) via
+    the degree-oriented wedge join; ``edges`` canonical (src < dst). The
+    returned frame is held under :data:`WEDGES` next to the
+    :func:`oriented_edges` table it is built from (a prior call's
+    returned frame stays valid — it just recomputes if used after a
+    later call)."""
+    oriented = oriented_edges(edges)
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     wedges = e1.join(
         e2,
@@ -99,6 +107,23 @@ def triangle_list(edges: DataFrame) -> DataFrame:
 
     closing = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     return hold(WEDGES, wedges.join(closing, ["b", "c"], "inner").persist())
+
+
+def triangle_edges(tri: DataFrame) -> DataFrame:
+    """Each triangle's three edges ``(src, dst, w)``, canonicalized
+    (src < dst — :func:`triangle_list` vertex order is orientation
+    order, not id order), with ``w`` the triangle's opposite corner: one
+    row per (edge, common neighbor) pair."""
+    corners = [("a", "b", "c"), ("a", "c", "b"), ("b", "c", "a")]
+    return tri.select(
+        F.explode(
+            F.array(*[
+                F.struct(F.least(x, y).alias("src"), F.greatest(x, y).alias("dst"),
+                         F.col(w).alias("w"))
+                for x, y, w in corners
+            ])
+        ).alias("t")
+    ).select("t.src", "t.dst", "t.w")
 
 
 def triangles(
@@ -168,19 +193,11 @@ def edge_jaccard(edges: DataFrame) -> DataFrame:
     canonical edge.
     """
     e = edges.select("src", "dst").distinct()
-    tri = triangle_list(e)
-    # each triangle's three edges, canonicalized (triangle_list vertex
-    # order is orientation order, not id order)
-    tri_edges = tri.select(
-        F.explode(
-            F.array(
-                F.struct(F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst")),
-                F.struct(F.least("a", "c").alias("src"), F.greatest("a", "c").alias("dst")),
-                F.struct(F.least("b", "c").alias("src"), F.greatest("b", "c").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    common = tri_edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n_common"))
+    common = (
+        triangle_edges(triangle_list(e))
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
     deg = undirected_degree(e)
     return (
         e.join(common, ["src", "dst"], "left")
@@ -212,24 +229,12 @@ def edge_adamic_adar(edges: DataFrame) -> DataFrame:
     endpoints share no neighbor).
     """
     e = edges.select("src", "dst").distinct()
-    tri = triangle_list(e)
-    contrib = tri.select(
-        F.explode(
-            F.array(
-                F.struct(F.least("a", "b").alias("src"),
-                         F.greatest("a", "b").alias("dst"), F.col("c").alias("w")),
-                F.struct(F.least("a", "c").alias("src"),
-                         F.greatest("a", "c").alias("dst"), F.col("b").alias("w")),
-                F.struct(F.least("b", "c").alias("src"),
-                         F.greatest("b", "c").alias("dst"), F.col("a").alias("w")),
-            )
-        ).alias("t")
-    ).select("t.src", "t.dst", "t.w")
     wdeg = undirected_degree(e).select(
         F.col("v").alias("w"), (F.lit(1.0) / F.log(F.col("deg"))).alias("aa_term")
     )
     scores = (
-        contrib.join(wdeg, "w")
+        triangle_edges(triangle_list(e))
+        .join(wdeg, "w")
         .groupBy("src", "dst")
         .agg(F.sum("aa_term").alias("adamic_adar"))
     )

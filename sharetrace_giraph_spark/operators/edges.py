@@ -281,6 +281,27 @@ def undirect(edges: DataFrame) -> DataFrame:
     )
 
 
+def weighted_undirect(contacts: DataFrame, vertices: DataFrame) -> DataFrame:
+    """contacts + vertex map → both-ways encoded edges ``(src, dst, w)``
+    weighted by total co-presence: ``w = Σ occurrences.duration_ms + 1``
+    as a LONG (the +1 keeps every live edge positive; integer sums, so
+    vote and path-cost arithmetic over ``w`` is exact)."""
+    w = F.aggregate(
+        "occurrences", F.lit(0).cast("long"), lambda acc, o: acc + o["duration_ms"]
+    ) + 1
+    vsrc = vertices.select(F.col("role").alias("src"), F.col("vertex_id").alias("src_id"))
+    vdst = vertices.select(F.col("role").alias("dst"), F.col("vertex_id").alias("dst_id"))
+    wenc = (
+        contacts.select("src", "dst", w.alias("w"))
+        .join(vsrc, "src")
+        .join(vdst, "dst")
+        .select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"), "w")
+    )
+    return wenc.unionByName(
+        wenc.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+    )
+
+
 def reply_edges(transcripts: DataFrame) -> DataFrame:
     """Directed reply/interaction edges: one edge ``prev_role → role`` per
     adjacent turn pair of a conversation where the speaker changes,

@@ -99,6 +99,25 @@ def test_vertex_ids_and_encoding(spark):
     assert E.undirect(enc).count() == 8
 
 
+def test_duration_weighted_edges_long_both_ways(spark):
+    """Both directions of every contact, weighted by the summed
+    occurrence durations + 1 as an exact LONG (a contact whose
+    occurrences sum to 0 ms keeps weight 1)."""
+    import datetime as dt
+
+    t0 = dt.datetime(2020, 6, 1, tzinfo=dt.timezone.utc)
+    contacts = spark.createDataFrame(
+        [("a", "b", [(t0, 900_000), (t0, 1_800_000)]), ("b", "c", [(t0, 0)])],
+        "src string, dst string, "
+        "occurrences array<struct<time: timestamp, duration_ms: long>>",
+    )
+    verts = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], "vertex_id long, role string")
+    wund = E.weighted_undirect(contacts, verts)
+    assert dict(wund.dtypes)["w"] == "bigint"
+    got = sorted((r.src, r.dst, r.w) for r in wund.collect())
+    assert got == [(0, 1, 2_700_001), (1, 0, 2_700_001), (1, 2, 1), (2, 1, 1)]
+
+
 def test_dense_ids_survive_cache_eviction(spark):
     """An id table returned by an EARLIER dense_ids call stays valid and
     unchanged after a LATER call: each call freezes its own table (an

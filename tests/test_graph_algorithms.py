@@ -307,7 +307,7 @@ def test_pagerank_weighted_personalized(spark, medium_graph, ckpt):
     seeds = spark.createDataFrame([(s,) for s in seeds_py], "vertex_id long")
     res = pagerank(
         spark, wcanon, verts, ckpt, run_id="ppr-w", max_supersteps=5,
-        tolerance=0.0, weight_col="w", teleport=seeds, handle_dangling=True,
+        tolerance=0.0, weight_col="w", teleport=seeds,
     )
     got = {r.vertex_id: r.rank for r in res.state.collect()}
 

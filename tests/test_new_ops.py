@@ -219,7 +219,7 @@ def test_pagerank_dangling_mass_golden(spark, ckpt):
     e = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
     verts = spark.createDataFrame([(i,) for i in range(4)], "vertex_id long")
     res = pagerank(spark, e, verts, ckpt, run_id="pr-dang",
-                   tolerance=1e-10, max_supersteps=200, handle_dangling=True)
+                   tolerance=1e-10, max_supersteps=200)
     assert res.converged
     got = {r.vertex_id: r.rank for r in res.state.collect()}
     assert abs(sum(got.values()) - 1.0) < 1e-9

@@ -73,7 +73,8 @@ def test_vertex_ids_no_single_partition_exchange(spark):
         assert [r.role for r in rows] == [f"r{i:05d}" for i in range(1000)]
 
 
-def test_dense_ids_truncate_lineage_and_wedge_width(spark):
+@pytest.mark.parametrize("builder", ["triangle_list", "square_pair_counts"])
+def test_dense_ids_truncate_lineage_and_wedge_width(spark, builder):
     """Regression pins for the round-5 dense-id slowdown (BENCH.md
     'Round-5 late regression'):
 
@@ -83,12 +84,13 @@ def test_dense_ids_truncate_lineage_and_wedge_width(spark):
        query stage, so a leaked lineage multiplies driver-serial
        planning cost into every downstream action (measured ~2.5x the
        task time of a triangle count).
-    2. The triangle wedge join's parallelism must be pinned by
-       construction: the oriented table is hash-repartitioned on the
-       wedge apex at the configured width, never inheriting a
+    2. The wedge joins' parallelism (triangles and squares) must be
+       pinned by construction: the oriented table is hash-repartitioned
+       on the wedge apex at the configured width, never inheriting a
        possibly-1-partition layout from whatever tiny cached relation
        the encode joins happened to stream.
     """
+    from sharetrace_giraph_spark.algorithms import square_count
     from sharetrace_giraph_spark.algorithms.triangle_count import WEDGES, triangle_list
     from sharetrace_giraph_spark.operators.edges import dense_ids
     from sharetrace_giraph_spark.plans import cache
@@ -107,11 +109,14 @@ def test_dense_ids_truncate_lineage_and_wedge_width(spark):
     edges = spark.createDataFrame(
         [(a, b) for a in range(8) for b in range(a + 1, 8)],
         "src long, dst long",
-    )  # K8: 56 triangles
+    )
+    upstream = edges.repartition(1)  # worst-case upstream layout
     try:
-        tri = triangle_list(edges.repartition(1))  # worst-case upstream layout
-        assert tri.count() == 56
-        _, oriented, _ = cache.held[WEDGES]  # [e, oriented, tri]
+        if builder == "triangle_list":
+            assert triangle_list(upstream).count() == 56  # K8: C(8,3)
+        else:
+            assert square_count(upstream).first().n_squares == 210  # K8: 3·C(8,4)
+        oriented = cache.held[WEDGES][1]  # [e, oriented, tri]; squares hold no tri
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
         assert oriented.rdd.getNumPartitions() == width
     finally:
@@ -408,7 +413,7 @@ def pr_graph(spark):
 
     edges = _both_ways(spark)
     verts = edges.selectExpr("src AS vertex_id").distinct()
-    with _pinned_planning(spark, 8), _pr_inputs(spark, edges, verts, None, True, 8) as inputs:
+    with _pinned_planning(spark, 8), _pr_inputs(spark, edges, verts, None, 8) as inputs:
         e, v, dangling, _ = inputs
         assert dangling is None
         n = v.count()
