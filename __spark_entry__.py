@@ -476,17 +476,11 @@ def q_graph_strength_topk(spark, sf_dir):
     hash agg (partial+final) over the per-pair weights; the top-k is a
     TakeOrderedAndProject (per-partition heap + driver merge of 20-row
     heads), never a global sort. Weights are the engine's canonical
-    duration_ms + 1 LONGs (see edges.weighted_undirect), so sums are exact."""
+    duration_ms + 1 LONGs (edges.duration_weight), so sums are exact."""
+    from sharetrace_giraph_spark.operators.edges import duration_weight
+
     contacts, verts, enc = _graph(spark, sf_dir)
-    wc = contacts.select(
-        "src", "dst",
-        (
-            F.aggregate(
-                "occurrences", F.lit(0).cast("long"),
-                lambda acc, o: acc + o["duration_ms"],
-            ) + 1
-        ).alias("w"),
-    )
+    wc = contacts.select("src", "dst", duration_weight().alias("w"))
     return (
         wc.select(F.col("src").alias("vertex"), "w")
         .unionByName(wc.select(F.col("dst").alias("vertex"), "w"))

@@ -171,7 +171,9 @@ def run_edges_bench(spark, cores: int, n_edges: int, ckpt: str,
     n_vertices = max(1000, n_edges // 40)
     canon = datagen.generate_edges(spark, n_edges // 2, n_vertices, num_partitions=partitions)
     # the domain shape: undirected contact graph (both directions present,
-    # so no dangling vertices and no per-superstep dangling-mass pass)
+    # so no dangling vertices and no per-superstep dangling-mass pass; the
+    # timing below still includes pagerank's one setup job that finds the
+    # dangling set empty)
     edges = canon.union(canon.selectExpr("dst AS src", "src AS dst"))
     verts = canon.selectExpr("src AS vertex_id").union(
         canon.selectExpr("dst AS vertex_id")

@@ -281,14 +281,19 @@ def undirect(edges: DataFrame) -> DataFrame:
     )
 
 
-def weighted_undirect(contacts: DataFrame, vertices: DataFrame) -> DataFrame:
-    """contacts + vertex map → both-ways encoded edges ``(src, dst, w)``
-    weighted by total co-presence: ``w = Σ occurrences.duration_ms + 1``
-    as a LONG (the +1 keeps every live edge positive; integer sums, so
-    vote and path-cost arithmetic over ``w`` is exact)."""
-    w = F.aggregate(
+def duration_weight() -> F.Column:
+    """A contact's weight by total co-presence: ``Σ occurrences.duration_ms
+    + 1`` as a LONG (the +1 keeps every live edge positive; integer sums,
+    so vote, strength and path-cost arithmetic over it is exact)."""
+    return F.aggregate(
         "occurrences", F.lit(0).cast("long"), lambda acc, o: acc + o["duration_ms"]
     ) + 1
+
+
+def weighted_undirect(contacts: DataFrame, vertices: DataFrame) -> DataFrame:
+    """contacts + vertex map → both-ways encoded edges ``(src, dst, w)``
+    with ``w`` the :func:`duration_weight`."""
+    w = duration_weight()
     vsrc = vertices.select(F.col("role").alias("src"), F.col("vertex_id").alias("src_id"))
     vdst = vertices.select(F.col("role").alias("dst"), F.col("vertex_id").alias("dst_id"))
     wenc = (

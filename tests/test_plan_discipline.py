@@ -116,7 +116,10 @@ def test_dense_ids_truncate_lineage_and_wedge_width(spark, builder):
             assert triangle_list(upstream).count() == 56  # K8: C(8,3)
         else:
             assert square_count(upstream).first().n_squares == 210  # K8: 3·C(8,4)
-        oriented = cache.held[WEDGES][1]  # [e, oriented, tri]; squares hold no tri
+        # one wedge set per call: [e, oriented, tri]; squares hold no tri
+        held = cache.held[WEDGES]
+        assert len(held) == (3 if builder == "triangle_list" else 2)
+        oriented = held[1]
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
         assert oriented.rdd.getNumPartitions() == width
     finally:
