@@ -702,13 +702,10 @@ def q_graph_stats(spark, sf_dir):
     count, global clustering coefficient (3T / #wedges). The single-row
     shape composes 1-row aggregates via broadcast crossJoins — the
     standard way to assemble a scalar summary without collect()."""
-    from sharetrace_giraph_spark.algorithms.triangle_count import (
-        triangle_list, undirected_degree,
-    )
+    from sharetrace_giraph_spark.algorithms.triangle_count import held_triangles
 
     contacts, verts, enc = _graph(spark, sf_dir)
-    e = enc.select("src", "dst").distinct()
-    deg = undirected_degree(e)
+    e, deg, tri = held_triangles(enc)
     vstats = deg.agg(
         F.count(F.lit(1)).alias("n_vertices"),
         F.round(F.avg("deg"), 6).alias("avg_degree"),
@@ -716,7 +713,7 @@ def q_graph_stats(spark, sf_dir):
         (F.sum(F.col("deg") * (F.col("deg") - 1)) / 2).cast("long").alias("n_wedges"),
     )
     estats = e.agg(F.count(F.lit(1)).alias("n_edges"))
-    tstats = triangle_list(e).agg(F.count(F.lit(1)).alias("n_triangles"))
+    tstats = tri.agg(F.count(F.lit(1)).alias("n_triangles"))
     return (
         vstats.crossJoin(F.broadcast(estats))
         .crossJoin(F.broadcast(tstats))

@@ -13,9 +13,11 @@ edge table.
 Noise protocol (round 3, frozen query set unchanged): the set is run
 --runs times (default 3) in one session; "queries"/"value" report the
 per-query MIN (quiet-host estimate), "queries_mean"/"run_totals" the
-noise band, and "loadavg_start"/"loadavg_end"/"load_warning" record host
-co-tenancy so any run can be adjudicated after the fact (r02's 269 s vs
-90 s ambiguity is what this fixes).
+noise band, "run_compilations" the generated classes each run compiled
+(the cold first run compiles the working set; a warm run, nothing), and
+"loadavg_start"/"loadavg_end"/"load_warning" record host co-tenancy so
+any run can be adjudicated after the fact (r02's 269 s vs 90 s ambiguity
+is what this fixes).
 
 --scaling mode: runs the identical graph job at local[1], local[4],
 local[8], and local[32] (separate subprocesses, so each gets a fresh JVM)
@@ -324,7 +326,7 @@ def main() -> None:
         run_scaling(args.n_edges)
         return
 
-    from sharetrace_giraph_spark.session import get_spark
+    from sharetrace_giraph_spark.session import codegen_compilations, get_spark
 
     spark = get_spark(
         app_name="sharetrace-bench",
@@ -369,10 +371,15 @@ def main() -> None:
         else:
             per_run: list[dict] = []
             meta = {}
+            # codegen cache misses per run: the cold run compiles the
+            # working set, a warm run should compile nothing
+            run_compilations = []
             for run_idx in range(max(1, args.runs)):
+                compiled0 = codegen_compilations(spark)
                 q: dict = dict(run_graph_bench(spark, sf, args.cores, ckpt, run_idx))
                 if not args.graph_only:
                     q.update(run_relational_bench(spark, args.sf_dir))
+                run_compilations.append(codegen_compilations(spark) - compiled0)
                 meta.update({k[1:]: v for k, v in q.items() if k.startswith("_")})
                 per_run.append({k: v for k, v in q.items() if not k.startswith("_")})
             q_min = {k: min(r[k] for r in per_run) for k in per_run[0]}
@@ -404,6 +411,7 @@ def main() -> None:
         if run_walls:
             out["queries_mean"] = q_mean
             out["run_totals"] = run_walls
+            out["run_compilations"] = run_compilations
         print(json.dumps(out))
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)

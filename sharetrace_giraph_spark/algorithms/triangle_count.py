@@ -18,7 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.cache import hold, release
+from ..plans.cache import held, hold, release
 from ..plans.superstep import shuffle_partitions
 
 #: cache owner (``plans/cache``) of the wedge pipelines' intermediates,
@@ -134,20 +134,32 @@ def triangles(
     Returns (global_triangle_count, per_vertex DataFrame(vertex_id, n_triangles)).
     """
     tri = triangle_list(edges)
+    return tri.count(), _per_vertex_triangles(tri, vertices)
 
-    total = tri.count()
 
+def _per_vertex_triangles(tri: DataFrame, vertices: DataFrame) -> DataFrame:
+    """``(vertex_id, n_triangles)`` for every vertex, 0 when in none."""
     per_vertex = (
         tri.select(F.explode(F.array("a", "b", "c")).alias("vertex_id"))
         .groupBy("vertex_id")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    per_vertex = (
+    return (
         vertices.select("vertex_id")
         .join(per_vertex, "vertex_id", "left")
         .select("vertex_id", F.coalesce("n_triangles", F.lit(0)).alias("n_triangles"))
     )
-    return total, per_vertex
+
+
+def held_triangles(edges: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(e, deg, tri)``: :func:`triangle_list` of ``edges`` with the
+    distinct edge set :func:`oriented_edges` holds first under
+    :data:`WEDGES` and its degrees ``(v, deg)``, so consumers that also
+    need the edge set or degrees read the held frame instead of running a
+    second distinct and degree aggregate over the caller's lineage."""
+    tri = triangle_list(edges)
+    e = held[WEDGES][0]
+    return e, undirected_degree(e), tri
 
 
 def clustering_coefficient(
@@ -160,11 +172,10 @@ def clustering_coefficient(
     join — never a per-vertex neighborhood materialization, which explodes
     on hubs). Returns ``(vertex_id, deg, n_triangles, lcc)``.
     """
-    e = edges.select("src", "dst").distinct()
-    _, per_vertex = triangles(spark, e, vertices)
-    deg = undirected_degree(e).select(F.col("v").alias("vertex_id"), "deg")
+    _, deg, tri = held_triangles(edges)
+    deg = deg.select(F.col("v").alias("vertex_id"), "deg")
     return (
-        per_vertex.join(deg, "vertex_id", "left")
+        _per_vertex_triangles(tri, vertices).join(deg, "vertex_id", "left")
         .select(
             "vertex_id",
             F.coalesce("deg", F.lit(0)).alias("deg"),
@@ -192,13 +203,12 @@ def edge_jaccard(edges: DataFrame) -> DataFrame:
     explodes on hubs. Returns ``(src, dst, n_common, jaccard)`` for every
     canonical edge.
     """
-    e = edges.select("src", "dst").distinct()
+    e, deg, tri = held_triangles(edges)
     common = (
-        triangle_edges(triangle_list(e))
+        triangle_edges(tri)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    deg = undirected_degree(e)
     return (
         e.join(common, ["src", "dst"], "left")
         .join(deg.select(F.col("v").alias("src"), F.col("deg").alias("src_deg")), "src")
@@ -228,12 +238,12 @@ def edge_adamic_adar(edges: DataFrame) -> DataFrame:
     ``(src, dst, adamic_adar)`` for every canonical edge (0.0 when the
     endpoints share no neighbor).
     """
-    e = edges.select("src", "dst").distinct()
-    wdeg = undirected_degree(e).select(
+    e, deg, tri = held_triangles(edges)
+    wdeg = deg.select(
         F.col("v").alias("w"), (F.lit(1.0) / F.log(F.col("deg"))).alias("aa_term")
     )
     scores = (
-        triangle_edges(triangle_list(e))
+        triangle_edges(tri)
         .join(wdeg, "w")
         .groupBy("src", "dst")
         .agg(F.sum("aa_term").alias("adamic_adar"))

@@ -207,23 +207,26 @@ class SuperstepDriver:
         self.run_id = run_id
         self.algorithm = algorithm
         self.num_partitions = num_partitions or shuffle_partitions(spark)
-        self._tolerance = DEFAULT_TOLERANCE
+        #: this run's convergence columns (``_convergence_cols``)
+        self._convergence: tuple = ()
         #: in-flight async durable snapshot write: (thread, superstep)
         self._pending_write: tuple | None = None
         self._write_exc: BaseException | None = None
 
     # -- checkpoint I/O ------------------------------------------------------
 
-    def _convergence_cols(self):
+    @staticmethod
+    def _convergence_cols(tolerance: float) -> tuple:
         """THE convergence definition — the single source for both places
         that compute it (the observe piggyback on the carry and the
         listener-bus-timeout fallback agg): L1 delta, message count, and
-        the active-vertex count under the run's tolerance."""
+        the active-vertex count under the run's tolerance. ``run`` builds
+        it once (each column is a few JVM round trips)."""
         return (
             F.sum(F.abs(F.col("delta"))).alias("l1"),
             F.count(F.lit(1)).alias("n"),
             F.sum(
-                F.when(F.abs("delta") > self._tolerance, 1).otherwise(0)
+                F.when(F.abs("delta") > tolerance, 1).otherwise(0)
             ).alias("active"),
         )
 
@@ -272,7 +275,7 @@ class SuperstepDriver:
         obs = Observation(
             f"superstep-{self.algorithm}-{superstep}-{uuid.uuid4().hex[:8]}"
         )
-        cached = state.observe(obs, *self._convergence_cols()).localCheckpoint(
+        cached = state.observe(obs, *self._convergence).localCheckpoint(
             eager=True
         )
         return cached, self._carry_metrics(cached, obs)
@@ -324,7 +327,7 @@ class SuperstepDriver:
                 got = obs.get
                 return {"l1": got["l1"], "n": got["n"], "active": got["active"]}
             time.sleep(0.005)
-        row = cached.agg(*self._convergence_cols()).collect()[0]
+        row = cached.agg(*self._convergence).collect()[0]
         return {"l1": row["l1"], "n": row["n"], "active": row["active"]}
 
     def _join_pending_write(self, except_step: int | None = None) -> None:
@@ -485,7 +488,7 @@ class SuperstepDriver:
         message exchange (``operators/skew``), not by AQE. The session
         confs are restored on exit."""
         t0 = time.monotonic()
-        self._tolerance = tolerance
+        self._convergence = self._convergence_cols(tolerance)
         resumed_from = latest_committed(self.checkpoint_dir, self.run_id, self.algorithm) if resume else None
 
         conf = self.spark.conf

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -189,17 +190,50 @@ def test_derive_contacts_single_scan_two_shuffles(spark):
         assert len(by_conv) == 1 and "REPARTITION_BY_NUM" in by_conv[0], plan
 
 
+def _outside_cache(plan: str, op: str) -> list[str]:
+    """The operator-tree lines naming ``op`` with no InMemoryRelation
+    above them: reads of an input that bypass every cached frame."""
+    tree = plan.split("== Physical Plan ==")[1].strip("\n").split("\n\n")[0]
+    out, ancestors = [], []
+    for ln in tree.splitlines():
+        depth = len(ln) - len(ln.lstrip(" :+-"))
+        ancestors = [(d, a) for d, a in ancestors if d < depth]
+        if op in ln and not any("InMemoryRelation" in a for _, a in ancestors):
+            out.append(ln.strip())
+        ancestors.append((depth, ln))
+    return out
+
+
 def test_edge_jaccard_no_single_partition(spark):
     """Per-edge Jaccard derives common neighbors from the oriented
-    triangle list — no global sort/window, no single-partition funnel."""
-    from sharetrace_giraph_spark.algorithms import edge_jaccard
+    triangle list — no global sort/window, no single-partition funnel.
+
+    It, Adamic-Adar and the clustering coefficient take the distinct
+    edge set and the degrees from the frame ``oriented_edges`` holds, so
+    the caller's edges are read once, by the one held distinct (one scan
+    node, always under an InMemoryRelation): no second ``(src, dst)``
+    distinct and no degree aggregate over the caller's lineage."""
+    from sharetrace_giraph_spark.algorithms import (
+        clustering_coefficient,
+        edge_adamic_adar,
+        edge_jaccard,
+    )
 
     edges = spark.createDataFrame(
         [(0, 1), (0, 2), (1, 2), (2, 3), (1, 3)], "src long, dst long"
     )
-    plan = _plan(edge_jaccard(edges))
-    assert "SinglePartition" not in plan
-    assert "row_number" not in plan.lower()
+    verts = spark.range(4).withColumnRenamed("id", "vertex_id")
+    # each call releases the previous call's wedge frames: plan it first
+    for build in (
+        lambda: edge_jaccard(edges),
+        lambda: edge_adamic_adar(edges),
+        lambda: clustering_coefficient(spark, edges, verts),
+    ):
+        plan = _plan(build())
+        assert "SinglePartition" not in plan
+        assert "row_number" not in plan.lower()
+        assert not _outside_cache(plan, "Scan ExistingRDD"), plan
+        assert len(set(re.findall(r"Scan ExistingRDD \((\d+)\)", plan))) == 1, plan
 
 
 def test_asof_join_plans_one_keyed_window_no_cartesian(spark):
@@ -222,8 +256,6 @@ def test_asof_join_plans_one_keyed_window_no_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "SinglePartition" not in plan
-    import re
-
     assert len(re.findall(r"\(\d+\) Window", plan)) == 1
 
 
@@ -243,8 +275,6 @@ def test_tfidf_broadcasts_corpus_size_and_combines(spark):
     assert "partial_count" in plan
     # the only SinglePartition exchange allowed is the 1-row corpus count;
     # the top-k window must partition by doc (no global sort of the terms)
-    import re
-
     m = re.search(r"\(\d+\) Window\n((?:.+\n){1,4})", plan)
     assert m and "doc_id" in m.group(1)
 
