@@ -1244,30 +1244,12 @@ def q_dedup_keep_best(spark, sf_dir):
     doc_id; singletons keep themselves). Composes MinHash/LSH pairs → the
     engine's pointer-doubling CC → per-cluster argmax on the deterministic
     quality score; the retained corpus is ``WHERE kept = 1``."""
-    from sharetrace_giraph_spark.algorithms import connected_components
-    from sharetrace_giraph_spark.operators import edges as E
-    from sharetrace_giraph_spark.operators.dedup import minhash_near_duplicates
     from sharetrace_giraph_spark.operators.text import quality_score
 
     d = _t(spark, sf_dir, "documents")
-    pairs = minhash_near_duplicates(
-        d, threshold=0.2, max_bucket_size=LSH_MAX_BUCKET, log_dropped=True
-    ).select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).persist()
-    verts = (
-        pairs.select(F.col("src").alias("vertex_id"))
-        .unionByName(pairs.select(F.col("dst").alias("vertex_id")))
-        .distinct()
+    clustered = _near_dup_clusters(spark, d, "qkb").select(
+        F.col("vertex_id").alias("doc_id"), "comp"
     )
-    if verts.isEmpty():
-        clustered = spark.createDataFrame([], "doc_id long, comp long")
-    else:
-        res = connected_components(spark, E.undirect(pairs), verts, _ckpt(),
-                                   run_id="qkb", max_supersteps=50,
-                                   checkpoint_every=2, method="doubling")
-        clustered = res.state.select(F.col("vertex_id").alias("doc_id"), "comp")
-    pairs.unpersist()
     q = quality_score(d).select("doc_id", "quality")
     full = q.join(clustered, "doc_id", "left").select(
         "doc_id", "quality",
@@ -1330,6 +1312,46 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     ).orderBy("a", "b")
 
 
+#: cache owner of the LSH near-dup pairs the dedup queries cluster
+_NEAR_DUPS = "entry.near_dups"
+
+
+def _near_dup_clusters(spark, docs, run_id):
+    """MinHash/LSH near-dup pairs (jaccard >= 0.2) of ``docs`` clustered
+    by the engine's pointer-doubling CC: ``(vertex_id, comp)`` over the
+    documents in some pair (none at all is legitimately possible at tiny
+    scale factors)."""
+    from sharetrace_giraph_spark.algorithms import connected_components
+    from sharetrace_giraph_spark.operators import edges as E
+    from sharetrace_giraph_spark.operators.dedup import minhash_near_duplicates
+
+    # held: isEmpty, the vertex union, and the CC edge cache would
+    # otherwise each re-run the whole LSH pipeline (its most expensive
+    # stage) from lineage
+    release(_NEAR_DUPS)
+    pairs = hold(_NEAR_DUPS, minhash_near_duplicates(
+        docs, threshold=0.2, max_bucket_size=LSH_MAX_BUCKET, log_dropped=True
+    ).select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
+    ).persist())
+    verts = (
+        pairs.select(F.col("src").alias("vertex_id"))
+        .unionByName(pairs.select(F.col("dst").alias("vertex_id")))
+        .distinct()
+    )
+    if verts.isEmpty():
+        clusters = spark.createDataFrame([], "vertex_id long, comp long")
+    else:
+        # doubling: O(log V) supersteps regardless of chain diameter — a
+        # >50-hop transitive near-dup chain would outrun the frontier
+        # method's superstep cap, but not pointer jumping (2^50 hops)
+        clusters = connected_components(spark, E.undirect(pairs), verts, _ckpt(),
+                                        run_id=run_id, max_supersteps=50,
+                                        checkpoint_every=2, method="doubling").state
+    release(_NEAR_DUPS)  # CC state is checkpoint-backed; lineage is cut
+    return clusters
+
+
 def q_dedup_near_clusters(spark, sf_dir):
     """Near-dup CLUSTER assignment — the artifact a dedup pipeline
     actually emits (one canonical representative per duplicate group):
@@ -1338,39 +1360,10 @@ def q_dedup_near_clusters(spark, sf_dir):
     canonical_id = min doc_id per component. Composes the training-data
     dedup stack with the link-graph core; the oracle replays LSH in SQL
     and clusters with a recursive CTE."""
-    from sharetrace_giraph_spark.algorithms import connected_components
-    from sharetrace_giraph_spark.operators import edges as E
-    from sharetrace_giraph_spark.operators.dedup import minhash_near_duplicates
-
-    d = _t(spark, sf_dir, "documents")
-    # persisted: isEmpty, the vertex union, and the CC edge cache would
-    # otherwise each re-run the whole LSH pipeline (its most expensive
-    # stage) from lineage
-    pairs = minhash_near_duplicates(
-        d, threshold=0.2, max_bucket_size=LSH_MAX_BUCKET, log_dropped=True
-    ).select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).persist()
-    verts = (
-        pairs.select(F.col("src").alias("vertex_id"))
-        .unionByName(pairs.select(F.col("dst").alias("vertex_id")))
-        .distinct()
-    )
-    if verts.isEmpty():  # legitimately possible at tiny scale factors
-        pairs.unpersist()
-        return spark.createDataFrame(
-            [], "doc_id long, canonical_id long, cluster_size long"
-        )
-    # doubling: O(log V) supersteps regardless of chain diameter — a
-    # >50-hop transitive near-dup chain would outrun the frontier method's
-    # superstep cap, but not pointer jumping (2^50 hops covered)
-    res = connected_components(spark, E.undirect(pairs), verts, _ckpt(),
-                               run_id="qdc", max_supersteps=50,
-                               checkpoint_every=2, method="doubling")
-    pairs.unpersist()  # CC state is checkpoint-backed; lineage is cut
-    sizes = res.state.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
+    clusters = _near_dup_clusters(spark, _t(spark, sf_dir, "documents"), "qdc")
+    sizes = clusters.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
-        res.state.join(sizes, "comp")
+        clusters.join(sizes, "comp")
         .select(
             F.col("vertex_id").alias("doc_id"),
             F.col("comp").alias("canonical_id"),

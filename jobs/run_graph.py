@@ -100,9 +100,12 @@ def main() -> None:
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--output", required=True)
     ap.add_argument("--max-supersteps", type=int, default=20)
-    ap.add_argument("--tolerance", type=float, default=1e-6)
+    ap.add_argument("--tolerance", type=float,
+                    help="pagerank and risk_prop only: halt once the superstep's "
+                    "L1 delta is below this (default: the algorithm's own)")
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
+    tol = {} if args.tolerance is None else {"tolerance": args.tolerance}
 
     from sharetrace_giraph_spark.session import get_spark
     from sharetrace_giraph_spark import datagen
@@ -145,8 +148,7 @@ def main() -> None:
 
         res = pagerank(
             spark, und, verts, args.checkpoint_dir, run_id=args.run_id,
-            max_supersteps=args.max_supersteps, tolerance=args.tolerance,
-            resume=resume,
+            max_supersteps=args.max_supersteps, resume=resume, **tol,
             weight_col=weight_col, teleport=teleport,
         )
         out = res.state.join(verts, "vertex_id").select("role", "rank")
@@ -293,7 +295,7 @@ def main() -> None:
             scores = datagen.tiny_fixture_scores(spark)
         res = risk_propagation(
             spark, contacts, scores, args.checkpoint_dir, run_id=args.run_id,
-            max_supersteps=args.max_supersteps, resume=resume,
+            max_supersteps=args.max_supersteps, resume=resume, **tol,
         )
         out = final_scores(res.state)
 

@@ -93,14 +93,13 @@ def bfs(
     checkpoint_dir: str,
     run_id: str = "bfs",
     max_supersteps: int = 50,
-    num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
 ) -> SuperstepResult:
     """Returns state (vertex_id, dist, delta); ``dist`` is the minimum hop
     count from any source, or :data:`UNREACHED`. Filter
     ``dist < UNREACHED`` for the reachable set."""
-    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", vertices, num_partitions)
+    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", vertices)
     with inputs as (e, verts, P):
         driver = SuperstepDriver(spark, checkpoint_dir, run_id, "bfs", P)
         return driver.run(_bfs_init(verts, sources), _bfs_step(e), max_supersteps=max_supersteps,

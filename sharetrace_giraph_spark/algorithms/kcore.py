@@ -62,13 +62,12 @@ def k_core(
     checkpoint_dir: str,
     run_id: str = "kcore",
     max_supersteps: int = 100,
-    num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
 ) -> SuperstepResult:
     """Returns state (vertex_id, alive, delta); ``alive`` = 1 iff the
     vertex survives in the k-core."""
-    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", vertices, num_partitions)
+    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", vertices)
     with inputs as (e, verts, P):
         init = verts.select(
             "vertex_id", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")

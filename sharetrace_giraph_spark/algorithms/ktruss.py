@@ -78,7 +78,6 @@ def k_truss(
     checkpoint_dir: str,
     run_id: str = "ktruss",
     max_supersteps: int = 30,
-    num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
 ) -> SuperstepResult:
@@ -88,7 +87,7 @@ def k_truss(
     the peeling front. The per-edge support count plans a partial
     ``count`` below its exchange (``operators/skew``), so an edge between
     two hubs reaches its reducer as one row per map task."""
-    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", num_partitions=num_partitions)
+    inputs = loop_inputs(spark, edges.select("src", "dst"), "src")
     with inputs as (e, _, P):
         init = e.select(
             "src", "dst", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")

@@ -59,7 +59,6 @@ def label_propagation(
     checkpoint_dir: str,
     run_id: str = "lpa",
     max_supersteps: int = 5,
-    num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
     weight_col: str | None = None,
@@ -72,7 +71,7 @@ def label_propagation(
     are summation-order-sensitive, which would make near-ties
     nondeterministic; integer sums are exact."""
     cols = ["src", "dst"] + ([weight_col] if weight_col else [])
-    with loop_inputs(spark, edges.select(*cols), "src", vertices, num_partitions) as (e, verts, P):
+    with loop_inputs(spark, edges.select(*cols), "src", vertices) as (e, verts, P):
         init = verts.select("vertex_id", F.col("vertex_id").alias("label"), F.lit(1.0).alias("delta"))
         driver = SuperstepDriver(spark, checkpoint_dir, run_id, "label_propagation", P)
         return driver.run(init, _lpa_step(e, weight_col), max_supersteps=max_supersteps,

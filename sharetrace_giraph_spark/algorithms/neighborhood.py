@@ -117,7 +117,6 @@ def neighborhood_function(
     method: str = "exact",
     lg_k: int = 12,
     run_id: str = "anf",
-    num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
 ) -> SuperstepResult:
@@ -127,7 +126,7 @@ def neighborhood_function(
     radii computed (early-halt when every ball stops growing)."""
     if method not in ("exact", "hll"):
         raise ValueError(f"method must be 'exact' or 'hll', got {method!r}")
-    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", num_partitions=num_partitions)
+    inputs = loop_inputs(spark, edges.select("src", "dst"), "src")
     with inputs as (e, _, P):
         driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"neighborhood_{method}", P)
         res = driver.run(

@@ -115,7 +115,6 @@ def random_walks(
     walk_length: int = 4,
     seed: str = "rw",
     run_id: str = "walks",
-    num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
 ) -> SuperstepResult:
@@ -129,7 +128,7 @@ def random_walks(
     und = canon.unionByName(
         canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    with loop_inputs(spark, und, "src", num_partitions=num_partitions) as (e, _, P):
+    with loop_inputs(spark, und, "src") as (e, _, P):
         starts = e.select(F.col("src").alias("start")).distinct()
         init = starts.select(
             "start",

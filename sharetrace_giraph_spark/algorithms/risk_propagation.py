@@ -175,7 +175,6 @@ def risk_propagation(
     transmission_rate: float = 1.0,
     max_supersteps: int = DEFAULT_MAX_SUPERSTEPS,
     tolerance: float = DEFAULT_TOLERANCE,
-    num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
 ) -> SuperstepResult:
@@ -187,7 +186,7 @@ def risk_propagation(
     (as ``derive_contacts`` and ``jsonlines.read_factor_graph`` produce):
     see :func:`_directed_contact_edges`."""
     directed = _directed_contact_edges(contacts)
-    with loop_inputs(spark, directed, "u", num_partitions=num_partitions) as (edges, _, P):
+    with loop_inputs(spark, directed, "u") as (edges, _, P):
         driver = SuperstepDriver(spark, checkpoint_dir, run_id, "risk_propagation", P)
         return driver.run(
             init_state(scores), _risk_step(edges, transmission_rate),

@@ -52,7 +52,6 @@ def shortest_paths(
     run_id: str = "sssp",
     weight_col: str = "w",
     max_supersteps: int = 50,
-    num_partitions: int | None = None,
     resume: bool = True,
     checkpoint_every: int = 1,
 ) -> SuperstepResult:
@@ -61,7 +60,7 @@ def shortest_paths(
     :data:`~sharetrace_giraph_spark.algorithms.bfs.UNREACHED`. Filter
     ``dist < UNREACHED`` for the reachable set."""
     weighted = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
-    with loop_inputs(spark, weighted, "src", vertices, num_partitions) as (e, verts, P):
+    with loop_inputs(spark, weighted, "src", vertices) as (e, verts, P):
         driver = SuperstepDriver(spark, checkpoint_dir, run_id, "sssp", P)
         return driver.run(_bfs_init(verts, sources), _sssp_step(e), max_supersteps=max_supersteps,
                           tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)

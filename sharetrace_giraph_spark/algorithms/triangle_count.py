@@ -93,7 +93,12 @@ def triangle_list(edges: DataFrame) -> DataFrame:
     returned frame stays valid — it just recomputes if used after a
     later call)."""
     oriented = oriented_edges(edges)
-    e1, e2 = oriented.alias("e1"), oriented.alias("e2")
+    # shuffle_hash on both sides: the held table is already hashed on lo,
+    # so the wedge join plans no exchange; a broadcast (both sides under
+    # the threshold) would pick its build side by which AQE stage
+    # finishes first, a different plan from run to run
+    e1 = oriented.alias("e1").hint("shuffle_hash")
+    e2 = oriented.alias("e2").hint("shuffle_hash")
     wedges = e1.join(
         e2,
         (F.col("e1.lo") == F.col("e2.lo"))

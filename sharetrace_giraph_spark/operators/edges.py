@@ -102,7 +102,6 @@ def derive_contacts(
     transcripts: DataFrame,
     duration_threshold_s: int = DEFAULT_DURATION_THRESHOLD_S,
     session_gap_s: int = DEFAULT_SESSION_GAP_S,
-    expiry_cutoff: dt.datetime | None = None,
 ) -> DataFrame:
     """transcripts → contacts(src, dst, occurrences).
 
@@ -160,17 +159,16 @@ def derive_contacts(
         ).alias("occurrence"),
     )
 
-    contacts = occ.groupBy("src", "dst").agg(
+    return occ.groupBy("src", "dst").agg(
         F.array_sort(F.collect_set("occurrence")).alias("occurrences")
     )
 
-    if expiry_cutoff is not None:
-        cutoff = F.lit(expiry_cutoff)
-        contacts = contacts.withColumn(
-            "occurrences", F.filter("occurrences", lambda o: o["time"] >= cutoff)
-        ).where(F.size("occurrences") > 0)
 
-    return contacts
+def expire_contacts(contacts: DataFrame, cutoff: dt.datetime) -> DataFrame:
+    """F1/F6 expiry: drop the occurrences older than the injected
+    ``cutoff``, and the contacts left with none."""
+    live = F.filter("occurrences", lambda o: o["time"] >= F.lit(cutoff))
+    return contacts.withColumn("occurrences", live).where(F.size("occurrences") > 0)
 
 
 # ---------------------------------------------------------------------------

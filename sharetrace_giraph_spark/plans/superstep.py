@@ -98,7 +98,7 @@ def auto_num_partitions(spark: SparkSession, edges: DataFrame) -> int:
 def loop_inputs(
     spark: SparkSession,
     edges: DataFrame,
-    key: str | None,
+    key: str,
     vertices: DataFrame | None = None,
     num_partitions: int | None = None,
 ) -> Iterator[tuple[DataFrame, DataFrame | None, int]]:
@@ -110,9 +110,8 @@ def loop_inputs(
 
     ``e`` is ``edges`` hash-partitioned on ``key`` at P, so each
     superstep's gather join against the carried state plans no edge-side
-    exchange; with ``key=None`` it is ``edges`` cached as they are (an
-    input other loop inputs are derived from, or one the caller has
-    already partitioned). ``verts`` is ``vertices``' ``vertex_id``
+    exchange, and a per-vertex aggregate over it (PageRank's out-weight)
+    plans none either. ``verts`` is ``vertices``' ``vertex_id``
     column hash-partitioned at P, or None: the init state built from it
     enters superstep 0 already co-partitioned, and a possibly expensive
     vertex derivation (a distinct over the edge table) is paid once
@@ -131,14 +130,10 @@ def loop_inputs(
     try:
         if num_partitions is None:
             num_partitions = auto_num_partitions(spark, cached(edges))
-        elif key is None:
-            cached(edges).count()
-        e = edges
-        if key is not None:
-            e = cached(edges.repartition(num_partitions, key))
-            e.count()
-            if len(frames) == 2:  # the auto-sizing copy has done its job
-                free(frames.pop(0))
+        e = cached(edges.repartition(num_partitions, key))
+        e.count()
+        if len(frames) == 2:  # the auto-sizing copy has done its job
+            free(frames.pop(0))
         verts = None
         if vertices is not None:
             verts = cached(vertices.select("vertex_id").repartition(num_partitions, "vertex_id"))

@@ -29,6 +29,11 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.cache import hold, release
+
+#: cache owner (``plans/cache``) of the parsed lines both outputs read
+PARSED = "sources.jsonlines.parsed"
+
 # merged vertex schema: FACTOR fields + VARIABLE fields, matched by name
 _DEC = T.DecimalType(24, 9)
 
@@ -90,8 +95,10 @@ def read_factor_graph(spark: SparkSession, path: str) -> tuple[DataFrame, DataFr
     # raises on malformed JSON / uncoercible fields, and the assert_true
     # filter (never pruned, unlike a dangling select) raises on lines that
     # parse but carry no recognizable vertex type — a PERMISSIVE null here
-    # would silently drop the row from both outputs
-    parsed = (
+    # would silently drop the row from both outputs. Held, so the file is
+    # parsed once for both outputs and freed by the next read or release()
+    release(PARSED)
+    lines = (
         spark.read.text(path)
         .where(F.length(F.trim("value")) > 0)
         .select(
@@ -103,8 +110,8 @@ def read_factor_graph(spark: SparkSession, path: str) -> tuple[DataFrame, DataFr
                 F.lit("jsonlines: vertex line with missing/unknown type"),
             ).isNull()
         )
-        .persist()
     )
+    parsed = hold(PARSED, lines.persist())
 
     fac = parsed.where(F.col("v.type") == "FACTOR").select(
         F.least("v.vertexValue.firstUser", "v.vertexValue.secondUser").alias("src"),

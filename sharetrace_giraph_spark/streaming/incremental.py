@@ -52,10 +52,7 @@ def merge_contacts(
             .agg(F.array_sort(F.collect_set("o")).alias("occurrences"))
         )
     if expiry_cutoff is not None:
-        cutoff = F.lit(expiry_cutoff)
-        merged = merged.withColumn(
-            "occurrences", F.filter("occurrences", lambda o: o["time"] >= cutoff)
-        ).where(F.size("occurrences") > 0)
+        merged = E.expire_contacts(merged, expiry_cutoff)
     return merged
 
 
@@ -103,7 +100,6 @@ class IncrementalEdgePipeline:
             new,
             duration_threshold_s=self.duration_threshold_s,
             session_gap_s=self.session_gap_s,
-            expiry_cutoff=self.expiry_cutoff,
         )
 
         try:

@@ -66,7 +66,6 @@ def stream_contacts(
             batch_df,
             duration_threshold_s=duration_threshold_s,
             session_gap_s=session_gap_s,
-            expiry_cutoff=expiry_cutoff,
         )
         try:
             existing = warehouse.read_table(contacts_table)

@@ -55,10 +55,11 @@ def _pipeline(spark, ckpt: str, run_id: str) -> tuple:
 
 def test_repeat_run_compiles_no_class(spark, tmp_path):
     """The second of two identical runs compiles 0 classes. Both run with
-    AQE off: with it on, the wedge self-join (both sides under the
-    broadcast threshold) picks its build side by which query stage
-    finishes first, so a repeat run can plan, and compile once, the other
-    variant. Static planning makes every repeat plan identical."""
+    AQE off: with it on, the triangle closing-edge join (wedges ⋈
+    oriented edges on ``(b, c)``, both sides under the broadcast
+    threshold) picks its build side by which query stage finishes first,
+    so a repeat run can plan, and compile once, the other variant. Static
+    planning makes every repeat plan identical."""
     conf = spark.conf
     saved = conf.get("spark.sql.adaptive.enabled")
     conf.set("spark.sql.adaptive.enabled", "false")

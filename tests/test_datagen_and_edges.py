@@ -78,7 +78,7 @@ def test_expiry_filter(spark):
 
     t = datagen.tiny_fixture_transcripts(spark)
     cutoff = dt.datetime(2020, 6, 1, tzinfo=dt.timezone.utc)  # = day 18414
-    contacts = E.derive_contacts(t, expiry_cutoff=cutoff)
+    contacts = E.expire_contacts(E.derive_contacts(t), cutoff)
     rows = {(r.src, r.dst) for r in contacts.collect()}
     # days 18412 (5/30) and 18413 (5/31) expire; 18414 (6/1) and 18415 survive
     assert rows == {("2", "4"), ("3", "4")}

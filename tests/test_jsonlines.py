@@ -101,3 +101,22 @@ def test_malformed_json_fails_loudly(spark, tmp_path):
     contacts, _ = jsonlines.read_factor_graph(spark, str(p))
     with pytest.raises(Exception):
         contacts.count()
+
+
+def test_read_holds_one_parse_until_release(spark):
+    """The parsed lines both outputs read are held under one owner
+    (``plans/cache``): a second read frees the first's, and ``release()``
+    frees the last, so no persisted RDD outlives the read."""
+    from sharetrace_giraph_spark.plans.cache import release
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    release()
+    base = persisted()
+    for _ in range(2):
+        contacts, scores = jsonlines.read_factor_graph(spark, REF_INPUT)
+        assert contacts.count() == 4 and scores.count() == 16
+    assert persisted() == base + 1
+    release()
+    assert persisted() == base

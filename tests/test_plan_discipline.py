@@ -438,19 +438,24 @@ def small_graph(spark):
 
 @pytest.fixture()
 def pr_graph(spark):
-    """PageRank's real step over its real inputs (``_pr_inputs``) on the
+    """PageRank's real step over its real inputs (``loop_inputs`` keyed
+    on src, and the init state carrying each vertex's out-weight) on the
     ``small_graph`` edges, under pinned planning at P = 8. Every vertex
-    has an out-edge, so there is no dangling set. Yields ``(step,
+    has an out-edge, so there is no dangling branch. Yields ``(step,
     init)``."""
-    from sharetrace_giraph_spark.algorithms.pagerank import _pr_init, _pr_inputs, _pr_step
+    from sharetrace_giraph_spark.algorithms.pagerank import _pr_init, _pr_step
+    from sharetrace_giraph_spark.plans.superstep import loop_inputs
 
     edges = _both_ways(spark)
     verts = edges.selectExpr("src AS vertex_id").distinct()
-    with _pinned_planning(spark, 8), _pr_inputs(spark, edges, verts, None, 8) as inputs:
-        e, v, dangling, _ = inputs
-        assert dangling is None
+    with _pinned_planning(spark, 8), loop_inputs(spark, edges, "src", verts, 8) as inputs:
+        e, v, _ = inputs
         n = v.count()
-        yield _pr_step(e, dangling, n, 0.85, False), _pr_init(v, n, None)
+        init = _pr_init(e, v, n, None, None)
+        assert init.where("wsum IS NULL").isEmpty()
+        # the out-weight join reads both inputs as they are partitioned
+        assert not _exchange_children(init), _plan(init)
+        yield _pr_step(e, n, 0.85, False, None, False), init
 
 
 def _both_ways(spark):

@@ -263,3 +263,28 @@ def test_no_incoming_default_divergence_is_output_neutral(spark, ckpt):
         for a, ss in st.items()
     }
     assert {a: (round(v, 12), ut) for a, (v, ut) in ref_out.items()} == out
+
+
+def test_run_graph_tolerance_reaches_risk_prop(spark, tmp_path, monkeypatch, capsys):
+    """``jobs/run_graph.py --tolerance`` halts risk propagation as the
+    reference halts BP on its threshold (``MasterComputer.java:24``): a
+    tolerance above every L1 delta stops the run after superstep 0."""
+    import json
+    import os
+    import runpy
+    import sys
+
+    from sharetrace_giraph_spark import session
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    job = runpy.run_path(os.path.join(repo, "jobs", "run_graph.py"))
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    monkeypatch.setattr(sys, "argv", [
+        "run_graph.py", "--algorithm", "risk_prop", "--no-resume",
+        "--factor-graph-json", os.path.join(repo, "tests", "fixtures", "input.txt"),
+        "--checkpoint-dir", str(tmp_path / "ckpt"), "--output", str(tmp_path / "out"),
+        "--tolerance", "1e9",
+    ])
+    job["main"]()
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["converged"] and summary["supersteps"] == 1
