@@ -104,6 +104,10 @@ def run_graph_bench(spark, sf: float, cores: int, ckpt: str, run_idx: int = 0) -
     out["_pr_supersteps_per_sec"] = round(PR_SUPERSTEPS / pr_s, 4)
     out["_pr_edges_per_sec"] = round(n_edges_directed * PR_SUPERSTEPS / pr_s, 1)
 
+    # CC runs over the same und/verts frames, so it reuses the partitioned
+    # loop inputs PageRank built (plans.superstep.loop_inputs): this times
+    # CC's supersteps without an edge exchange of its own, unlike the
+    # connected_components rows BENCH.md recorded before that reuse
     t0 = time.monotonic()
     cc = connected_components(
         spark, und, verts, ckpt, run_id=f"bench-cc-{run_idx}", max_supersteps=30,
@@ -224,6 +228,9 @@ def run_edges_bench(spark, cores: int, n_edges: int, ckpt: str,
         pr_min_durable = min(m["wall_ms"] for m in durable_rows) / 1000.0
         out["_pr_edges_per_sec_minstep_durable"] = round(n_edges / pr_min_durable, 1)
 
+    # same frames and the same pinned width as PageRank above, so CC reuses
+    # its held partitioned loop inputs (plans.superstep.loop_inputs):
+    # cc_wall has no edge exchange in it, unlike earlier BENCH.md rows
     t0 = time.monotonic()
     cc = connected_components(
         spark, edges, verts, ckpt, run_id="scal-cc", max_supersteps=12, resume=False,

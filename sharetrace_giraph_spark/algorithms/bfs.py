@@ -99,8 +99,7 @@ def bfs(
     """Returns state (vertex_id, dist, delta); ``dist`` is the minimum hop
     count from any source, or :data:`UNREACHED`. Filter
     ``dist < UNREACHED`` for the reachable set."""
-    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", vertices)
-    with inputs as (e, verts, P):
-        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "bfs", P)
-        return driver.run(_bfs_init(verts, sources), _bfs_step(e), max_supersteps=max_supersteps,
-                          tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
+    e, verts, P = loop_inputs(spark, edges, ("src", "dst"), "src", vertices)
+    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "bfs", P)
+    return driver.run(_bfs_init(verts, sources), _bfs_step(e), max_supersteps=max_supersteps,
+                      tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)

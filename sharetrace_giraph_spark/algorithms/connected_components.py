@@ -109,9 +109,8 @@ def connected_components(
     component (exact, deterministic, identical across both methods)."""
     if method not in ("frontier", "doubling"):
         raise ValueError(f"unknown method {method!r}")
-    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", vertices, num_partitions)
-    with inputs as (e, verts, P):
-        init = verts.select("vertex_id", F.col("vertex_id").alias("comp"), F.lit(1.0).alias("delta"))
-        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "connected_components", P)
-        return driver.run(init, _cc_step(e, method), max_supersteps=max_supersteps, tolerance=0.5,
-                          resume=resume, checkpoint_every=checkpoint_every)
+    e, verts, P = loop_inputs(spark, edges, ("src", "dst"), "src", vertices, num_partitions)
+    init = verts.select("vertex_id", F.col("vertex_id").alias("comp"), F.lit(1.0).alias("delta"))
+    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "connected_components", P)
+    return driver.run(init, _cc_step(e, method), max_supersteps=max_supersteps, tolerance=0.5,
+                      resume=resume, checkpoint_every=checkpoint_every)

@@ -67,11 +67,10 @@ def k_core(
 ) -> SuperstepResult:
     """Returns state (vertex_id, alive, delta); ``alive`` = 1 iff the
     vertex survives in the k-core."""
-    inputs = loop_inputs(spark, edges.select("src", "dst"), "src", vertices)
-    with inputs as (e, verts, P):
-        init = verts.select(
-            "vertex_id", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
-        )
-        driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"kcore{k}", P)
-        return driver.run(init, _kcore_step(e, k), max_supersteps=max_supersteps, tolerance=0.5,
-                          resume=resume, checkpoint_every=checkpoint_every)
+    e, verts, P = loop_inputs(spark, edges, ("src", "dst"), "src", vertices)
+    init = verts.select(
+        "vertex_id", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
+    )
+    driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"kcore{k}", P)
+    return driver.run(init, _kcore_step(e, k), max_supersteps=max_supersteps, tolerance=0.5,
+                      resume=resume, checkpoint_every=checkpoint_every)

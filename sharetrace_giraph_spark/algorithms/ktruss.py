@@ -87,14 +87,13 @@ def k_truss(
     the peeling front. The per-edge support count plans a partial
     ``count`` below its exchange (``operators/skew``), so an edge between
     two hubs reaches its reducer as one row per map task."""
-    inputs = loop_inputs(spark, edges.select("src", "dst"), "src")
-    with inputs as (e, _, P):
-        init = e.select(
-            "src", "dst", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
-        )
-        driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"ktruss{k}", P)
-        try:
-            return driver.run(init, _ktruss_step(k), max_supersteps=max_supersteps,
-                              tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
-        finally:
-            release(WEDGES)
+    e, _, P = loop_inputs(spark, edges, ("src", "dst"), "src")
+    init = e.select(
+        "src", "dst", F.lit(1).cast("int").alias("alive"), F.lit(1.0).alias("delta")
+    )
+    driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"ktruss{k}", P)
+    try:
+        return driver.run(init, _ktruss_step(k), max_supersteps=max_supersteps,
+                          tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
+    finally:
+        release(WEDGES)

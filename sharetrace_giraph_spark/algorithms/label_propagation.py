@@ -70,9 +70,9 @@ def label_propagation(
     INTEGER weights: the label argmax compares vote sums, and float sums
     are summation-order-sensitive, which would make near-ties
     nondeterministic; integer sums are exact."""
-    cols = ["src", "dst"] + ([weight_col] if weight_col else [])
-    with loop_inputs(spark, edges.select(*cols), "src", vertices) as (e, verts, P):
-        init = verts.select("vertex_id", F.col("vertex_id").alias("label"), F.lit(1.0).alias("delta"))
-        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "label_propagation", P)
-        return driver.run(init, _lpa_step(e, weight_col), max_supersteps=max_supersteps,
-                          tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
+    cols = ("src", "dst") + ((weight_col,) if weight_col else ())
+    e, verts, P = loop_inputs(spark, edges, cols, "src", vertices)
+    init = verts.select("vertex_id", F.col("vertex_id").alias("label"), F.lit(1.0).alias("delta"))
+    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "label_propagation", P)
+    return driver.run(init, _lpa_step(e, weight_col), max_supersteps=max_supersteps,
+                      tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)

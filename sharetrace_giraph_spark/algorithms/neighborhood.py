@@ -126,16 +126,15 @@ def neighborhood_function(
     radii computed (early-halt when every ball stops growing)."""
     if method not in ("exact", "hll"):
         raise ValueError(f"method must be 'exact' or 'hll', got {method!r}")
-    inputs = loop_inputs(spark, edges.select("src", "dst"), "src")
-    with inputs as (e, _, P):
-        driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"neighborhood_{method}", P)
-        res = driver.run(
-            _anf_init(vertices, method, lg_k),
-            _anf_step(e, method),
-            max_supersteps=max_radius,
-            resume=resume,
-            checkpoint_every=checkpoint_every,
-        )
+    e, _, P = loop_inputs(spark, edges, ("src", "dst"), "src")
+    driver = SuperstepDriver(spark, checkpoint_dir, run_id, f"neighborhood_{method}", P)
+    res = driver.run(
+        _anf_init(vertices, method, lg_k),
+        _anf_step(e, method),
+        max_supersteps=max_radius,
+        resume=resume,
+        checkpoint_every=checkpoint_every,
+    )
     # structural contract: hist ALWAYS has max_radius+1 entries. On early
     # halt (every ball saturated) the remaining radii repeat the saturated
     # count — NF is constant past saturation by definition — so consumers

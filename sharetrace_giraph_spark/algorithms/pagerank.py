@@ -7,8 +7,10 @@ gather-scatter self-join from SURVEY §2.3) followed by
 pre-shuffle combiner, A5 analog for messages). Catalyst/Tungsten keeps
 the whole step in codegen. The driver adds resume, lineage metrics and
 the L1-delta halt. The edges and the vertex universe are the only cached
-inputs, held for the run and freed when it ends (``loop_inputs``) — the
-reference's STATIC_GRAPH=true analog (``BeliefPropagationRunner.java:59``).
+inputs (``loop_inputs``), held until a run on another graph or
+``release()``, so components and label propagation over the same frames
+reuse them — the reference's STATIC_GRAPH=true analog
+(``BeliefPropagationRunner.java:59``).
 What a vertex needs to send its messages rides in its state, as in the
 reference's vertex value: its out-weight ``wsum`` (NULL on a dangling
 vertex), computed once at init.
@@ -173,15 +175,14 @@ def pagerank(
       personalization vector rides in the checkpointed state (one static
       ``pref`` column), so no extra join per superstep.
     """
-    cols = ["src", "dst"] + ([weight_col] if weight_col else [])
-    inputs = loop_inputs(spark, edges.select(*cols), "src", vertices, num_partitions)
-    with inputs as (e, verts, P):
-        n = verts.count()
-        init = _pr_init(e, verts, n, weight_col, teleport)
-        # vertices with no out-edge leak rank mass unless redistributed;
-        # a graph with none plans no dangling branch
-        dangling = not init.where(F.col("wsum").isNull()).isEmpty()
-        step = _pr_step(e, n, damping, teleport is not None, weight_col, dangling)
-        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "pagerank", P)
-        return driver.run(init, step, max_supersteps=max_supersteps,
-                          tolerance=tolerance, resume=resume, checkpoint_every=checkpoint_every)
+    cols = ("src", "dst") + ((weight_col,) if weight_col else ())
+    e, verts, P = loop_inputs(spark, edges, cols, "src", vertices, num_partitions)
+    n = verts.count()
+    init = _pr_init(e, verts, n, weight_col, teleport)
+    # vertices with no out-edge leak rank mass unless redistributed;
+    # a graph with none plans no dangling branch
+    dangling = not init.where(F.col("wsum").isNull()).isEmpty()
+    step = _pr_step(e, n, damping, teleport is not None, weight_col, dangling)
+    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "pagerank", P)
+    return driver.run(init, step, max_supersteps=max_supersteps,
+                      tolerance=tolerance, resume=resume, checkpoint_every=checkpoint_every)

@@ -128,26 +128,26 @@ def random_walks(
     und = canon.unionByName(
         canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    with loop_inputs(spark, und, "src") as (e, _, P):
-        starts = e.select(F.col("src").alias("start")).distinct()
-        init = starts.select(
-            "start",
-            F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias("widx"),
-        ).select(
-            "start",
-            F.col("widx").cast("int").alias("widx"),
-            F.col("start").alias("cur"),
-            F.array(F.col("start")).alias("path"),
-            F.lit(1.0).alias("delta"),
-        )
-        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "random_walks", P)
-        return driver.run(
-            init,
-            _walks_step(e, seed, walk_length),
-            max_supersteps=walk_length,
-            resume=resume,
-            checkpoint_every=checkpoint_every,
-        )
+    e, _, P = loop_inputs(spark, und, ("src", "dst"), "src")
+    starts = e.select(F.col("src").alias("start")).distinct()
+    init = starts.select(
+        "start",
+        F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias("widx"),
+    ).select(
+        "start",
+        F.col("widx").cast("int").alias("widx"),
+        F.col("start").alias("cur"),
+        F.array(F.col("start")).alias("path"),
+        F.lit(1.0).alias("delta"),
+    )
+    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "random_walks", P)
+    return driver.run(
+        init,
+        _walks_step(e, seed, walk_length),
+        max_supersteps=walk_length,
+        resume=resume,
+        checkpoint_every=checkpoint_every,
+    )
 
 
 def walks_to_corpus(state: DataFrame) -> DataFrame:

@@ -186,13 +186,13 @@ def risk_propagation(
     (as ``derive_contacts`` and ``jsonlines.read_factor_graph`` produce):
     see :func:`_directed_contact_edges`."""
     directed = _directed_contact_edges(contacts)
-    with loop_inputs(spark, directed, "u") as (edges, _, P):
-        driver = SuperstepDriver(spark, checkpoint_dir, run_id, "risk_propagation", P)
-        return driver.run(
-            init_state(scores), _risk_step(edges, transmission_rate),
-            max_supersteps=max_supersteps, tolerance=tolerance, resume=resume,
-            checkpoint_every=checkpoint_every,
-        )
+    edges, _, P = loop_inputs(spark, directed, ("u", "v", "cutoff_ts"), "u")
+    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "risk_propagation", P)
+    return driver.run(
+        init_state(scores), _risk_step(edges, transmission_rate),
+        max_supersteps=max_supersteps, tolerance=tolerance, resume=resume,
+        checkpoint_every=checkpoint_every,
+    )
 
 
 def final_scores(state: DataFrame) -> DataFrame:

@@ -93,6 +93,11 @@ def triangle_list(edges: DataFrame) -> DataFrame:
     returned frame stays valid — it just recomputes if used after a
     later call)."""
     oriented = oriented_edges(edges)
+    # materialized before the closing join below is planned: AQE then
+    # sizes the oriented side from the cached table's exact statistics
+    # and plans that join the same way every run, not by which of two
+    # query stages finishes first
+    oriented.count()
     # shuffle_hash on both sides: the held table is already hashed on lo,
     # so the wedge join plans no exchange; a broadcast (both sides under
     # the threshold) would pick its build side by which AQE stage

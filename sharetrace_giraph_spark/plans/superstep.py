@@ -31,21 +31,20 @@ algorithm-private.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import re
 import sys
-import threading
 import time
 import uuid
 import warnings
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 
-from .cache import free
+from .cache import free, hold, recall, release, remember
 
 #: bounded wait for the piggybacked convergence metrics (the listener
 #: event rides Spark's shared async listener bus, which may drop events
@@ -67,6 +66,10 @@ _STEP_RE = re.compile(r"superstep=(-?\d+)$")
 #: auto_num_partitions sizing: edges per partition, and the least width
 _ROWS_PER_PARTITION, _MIN_PARTITIONS = 100_000, 4
 
+#: cache owner (``plans/cache``) of the one graph's loop inputs that
+#: loop_inputs holds
+LOOP_INPUTS = "plans.superstep.loop_inputs"
+
 
 def shuffle_partitions(spark: SparkSession) -> int:
     """``spark.sql.shuffle.partitions`` as an int."""
@@ -85,30 +88,30 @@ def auto_num_partitions(spark: SparkSession, edges: DataFrame) -> int:
     spark.sql.shuffle.partitions)`` — large graphs keep the configured
     width (the 40M-edge scaling table stays at 32), small graphs stop
     paying 32 tasks to move 90k rows. Costs one count() of the edge
-    frame; at-scale callers (the scaling bench, cluster jobs with tuned
-    shuffle widths) pin ``loop_inputs(num_partitions=)`` and skip it. The
-    choice never changes results — every kernel's aggregates are
-    partition-order-free."""
+    frame. ``loop_inputs`` skips it when the session width is at most
+    ``_MIN_PARTITIONS`` (the clamp then allows only that width), on a
+    held graph, and when the caller pins ``num_partitions`` (the scaling
+    bench, cluster jobs with tuned shuffle widths). The choice never
+    changes results — every kernel's aggregates are partition-order-free."""
     conf = shuffle_partitions(spark)
     n = edges.count()
     return max(1, min(conf, max(_MIN_PARTITIONS, -(-n // _ROWS_PER_PARTITION))))
 
 
-@contextlib.contextmanager
 def loop_inputs(
     spark: SparkSession,
     edges: DataFrame,
+    cols: Sequence[str],
     key: str,
     vertices: DataFrame | None = None,
     num_partitions: int | None = None,
-) -> Iterator[tuple[DataFrame, DataFrame | None, int]]:
-    """The static inputs of one iterative run, cached for the length of
-    the ``with`` block and freed when it ends, also on error: the
-    reference's ``STATIC_GRAPH=true`` (``BeliefPropagationRunner.java:59``).
-    Yields ``(e, verts, P)`` with P the iteration width (auto-sized from
-    the edge count unless given).
+) -> tuple[DataFrame, DataFrame | None, int]:
+    """The static inputs of an iterative run, ``(e, verts, P)``, held for
+    every run over the same graph: the reference's ``STATIC_GRAPH=true``
+    (``BeliefPropagationRunner.java:59``). P is the iteration width,
+    auto-sized from the edge count unless given.
 
-    ``e`` is ``edges`` hash-partitioned on ``key`` at P, so each
+    ``e`` is ``edges``' ``cols`` hash-partitioned on ``key`` at P, so each
     superstep's gather join against the carried state plans no edge-side
     exchange, and a per-vertex aggregate over it (PageRank's out-weight)
     plans none either. ``verts`` is ``vertices``' ``vertex_id``
@@ -116,32 +119,46 @@ def loop_inputs(
     enters superstep 0 already co-partitioned, and a possibly expensive
     vertex derivation (a distinct over the edge table) is paid once
     here, not on superstep 0's critical path. Both are materialized
-    before the body runs.
+    before this returns.
 
-    The input lineage is evaluated exactly once even when auto-sizing
-    needs a count: the input is cached before the count and freed once
-    the partitioned copy has materialized."""
-    frames: list[DataFrame] = []
+    Both copies are held under :data:`LOOP_INPUTS` (``plans/cache``), one
+    graph at a time. A later call on the same ``edges`` and ``vertices``
+    objects, with the same ``cols``, ``key``, requested width and
+    session width, returns the same copies and runs no Spark job: PageRank,
+    components and label propagation over one graph share one
+    exchange of its edges. Callers pass their own frames, not a
+    projection of them, so that the match can see the caller's objects.
+    A call on another graph frees the held copies before it builds its
+    own, and ``release()`` frees them.
 
-    def cached(df: DataFrame) -> DataFrame:
-        frames.append(df.persist())
-        return df
-
+    Auto-sizing counts the edges only when the session width leaves the
+    count a choice (``auto_num_partitions``); the input lineage is then
+    cached before the count, so it is evaluated once, and freed once the
+    partitioned copy has materialized."""
+    conf = shuffle_partitions(spark)
+    inputs = (edges, vertices, tuple(cols), key, num_partitions, conf)
+    got = recall(LOOP_INPUTS, inputs)
+    if got is not None:
+        return got
+    release(LOOP_INPUTS)
+    projected = edges.select(*cols)
+    if num_partitions is None and conf <= _MIN_PARTITIONS:
+        num_partitions = conf  # the clamp allows only this width: no count
+    sized = None
     try:
         if num_partitions is None:
-            num_partitions = auto_num_partitions(spark, cached(edges))
-        e = cached(edges.repartition(num_partitions, key))
+            sized = projected.persist()
+            num_partitions = auto_num_partitions(spark, sized)
+        e = hold(LOOP_INPUTS, projected.repartition(num_partitions, key).persist())
         e.count()
-        if len(frames) == 2:  # the auto-sizing copy has done its job
-            free(frames.pop(0))
-        verts = None
-        if vertices is not None:
-            verts = cached(vertices.select("vertex_id").repartition(num_partitions, "vertex_id"))
-            verts.count()
-        yield e, verts, num_partitions
     finally:
-        for df in reversed(frames):
-            free(df)
+        if sized is not None:  # the auto-sizing copy has done its job
+            free(sized)
+    verts = None
+    if vertices is not None:
+        verts = vertices.select("vertex_id").repartition(num_partitions, "vertex_id")
+        hold(LOOP_INPUTS, verts.persist()).count()
+    return remember(LOOP_INPUTS, inputs, (e, verts, num_partitions))
 
 
 @dataclass
@@ -299,7 +316,8 @@ class SuperstepDriver:
                 self._write_exc = exc
 
         self._join_pending_write()  # at most one write in flight
-        t = threading.Thread(
+        # inheritable: the write's jobs carry the caller's job group
+        t = InheritableThread(
             target=_write, name=f"ckpt-{self.algorithm}-{superstep}", daemon=True
         )
         t.start()
@@ -314,16 +332,18 @@ class SuperstepDriver:
         and, under extreme event pressure, drop events — so the wait is
         bounded; on timeout, fall back to a direct 1-stage agg over the
         already-materialized rows (the pre-round-5 path, always
-        correct)."""
+        correct). ``fallback`` says which source answered, so the metrics
+        rows count the fallbacks."""
         deadline = time.monotonic() + _OBSERVE_TIMEOUT_S
         while time.monotonic() < deadline:
             jo = obs._jo
             if jo is not None and jo.getRowOrEmpty().isDefined():
                 got = obs.get
-                return {"l1": got["l1"], "n": got["n"], "active": got["active"]}
+                return {"l1": got["l1"], "n": got["n"], "active": got["active"],
+                        "fallback": False}
             time.sleep(0.005)
         row = cached.agg(*self._convergence).collect()[0]
-        return {"l1": row["l1"], "n": row["n"], "active": row["active"]}
+        return {"l1": row["l1"], "n": row["n"], "active": row["active"], "fallback": True}
 
     def _join_pending_write(self, except_step: int | None = None) -> None:
         """Wait for the in-flight durable snapshot write (if any) and
@@ -363,6 +383,9 @@ class SuperstepDriver:
                 "l1_delta": pa.array([float(row["l1_delta"])], pa.float64()),
                 "wall_ms": pa.array([int(row["wall_ms"])], pa.int64()),
                 "num_partitions": pa.array([int(row["num_partitions"])], pa.int32()),
+                # the convergence agg came from the fallback, not the
+                # observed carry (``_carry_metrics``)
+                "agg_fallback": pa.array([bool(row["agg_fallback"])], pa.bool_()),
                 # resume can legitimately re-run a superstep whose metrics
                 # row landed before its (async) snapshot committed —
                 # metrics() keeps the latest row per superstep by this
@@ -546,6 +569,7 @@ class SuperstepDriver:
                     "l1_delta": l1,
                     "wall_ms": wall_ms,
                     "num_partitions": self.num_partitions,
+                    "agg_fallback": agg["fallback"],
                 }
                 self._append_metrics(row)
                 all_metrics.append(row)

@@ -156,3 +156,26 @@ def test_overlapped_snapshots_content_matches_recompute(spark, tmp_path):
         expect = 1.0 / (2 ** (k + 1))
         assert set(snap) == set(range(64))
         assert all(abs(v - expect) < 1e-15 for v in snap.values())
+
+
+def test_snapshot_writes_carry_the_callers_job_group(spark, tmp_path):
+    """The background snapshot writes run on a thread that inherits the
+    caller's job group, so a run under ``setJobGroup`` launches no job
+    outside that group (a job without one cannot be attributed to the
+    layer that caused it)."""
+    sc = spark.sparkContext
+    untagged_before = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("g", "superstep run")
+    try:
+        drv = SuperstepDriver(spark, str(tmp_path), "r", "halve", num_partitions=4)
+        drv.run(_init_state(spark), _halve_step, max_supersteps=4, tolerance=0.0,
+                checkpoint_every=1)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    untagged = set(sc.statusTracker().getJobIdsForGroup(None)) - untagged_before
+    assert not untagged, f"jobs {sorted(untagged)} carry no job group"
+    # 5 carries (init + 4 supersteps) and 5 snapshot writes at least
+    assert len(sc.statusTracker().getJobIdsForGroup("g")) >= 10

@@ -190,17 +190,35 @@ def test_derive_contacts_single_scan_two_shuffles(spark):
         assert len(by_conv) == 1 and "REPARTITION_BY_NUM" in by_conv[0], plan
 
 
-def _outside_cache(plan: str, op: str) -> list[str]:
-    """The operator-tree lines naming ``op`` with no InMemoryRelation
-    above them: reads of an input that bypass every cached frame."""
-    tree = plan.split("== Physical Plan ==")[1].strip("\n").split("\n\n")[0]
-    out, ancestors = [], []
-    for ln in tree.splitlines():
-        depth = len(ln) - len(ln.lstrip(" :+-"))
-        ancestors = [(d, a) for d, a in ancestors if d < depth]
-        if op in ln and not any("InMemoryRelation" in a for _, a in ancestors):
-            out.append(ln.strip())
-        ancestors.append((depth, ln))
+def _outside_cache(df, op: str) -> list[str]:
+    """The physical operators of class ``op`` in ``df``'s executed plan
+    with no cached frame (``InMemoryTableScanExec``) above them: reads of
+    an input that bypass every cached frame. Walks the plan tree itself:
+    the formatted explain prints a materialized cache's nested adaptive
+    plans outside its tree indentation, so a text parse loses their
+    ancestors."""
+    out = []
+
+    def walk(node) -> None:
+        name = node.getClass().getSimpleName()
+        if name == "InMemoryTableScanExec":
+            return
+        if name == op:
+            out.append(node.toString())
+        if name == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif name.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif name == "ReusedExchangeExec":
+            kids = [node.child()]
+        else:
+            seq = node.children()
+            kids = [seq.apply(i) for i in range(seq.size())]
+        subs = node.subqueries()
+        for kid in kids + [subs.apply(i) for i in range(subs.size())]:
+            walk(kid)
+
+    walk(df._jdf.queryExecution().executedPlan())
     return out
 
 
@@ -229,10 +247,11 @@ def test_edge_jaccard_no_single_partition(spark):
         lambda: edge_adamic_adar(edges),
         lambda: clustering_coefficient(spark, edges, verts),
     ):
-        plan = _plan(build())
+        df = build()
+        plan = _plan(df)
         assert "SinglePartition" not in plan
         assert "row_number" not in plan.lower()
-        assert not _outside_cache(plan, "Scan ExistingRDD"), plan
+        assert not _outside_cache(df, "RDDScanExec"), plan
         assert len(set(re.findall(r"Scan ExistingRDD \((\d+)\)", plan))) == 1, plan
 
 
@@ -428,12 +447,14 @@ def small_graph(spark):
     """A hub-skewed graph directed both ways, prepared as every step's
     edges are (cached, hash(src, P)), under pinned planning at P = 8.
     Yields ``(e, verts)``."""
-    from sharetrace_giraph_spark.plans.superstep import loop_inputs
+    from sharetrace_giraph_spark.plans.cache import release
+    from sharetrace_giraph_spark.plans.superstep import LOOP_INPUTS, loop_inputs
 
     edges = _both_ways(spark)
-    with _pinned_planning(spark, 8), loop_inputs(spark, edges, "src", num_partitions=8) as inputs:
-        e, _, _ = inputs
+    with _pinned_planning(spark, 8):
+        e, _, _ = loop_inputs(spark, edges, ("src", "dst"), "src", num_partitions=8)
         yield e, edges.selectExpr("src AS vertex_id").distinct()
+    release(LOOP_INPUTS)
 
 
 @pytest.fixture()
@@ -444,18 +465,20 @@ def pr_graph(spark):
     has an out-edge, so there is no dangling branch. Yields ``(step,
     init)``."""
     from sharetrace_giraph_spark.algorithms.pagerank import _pr_init, _pr_step
-    from sharetrace_giraph_spark.plans.superstep import loop_inputs
+    from sharetrace_giraph_spark.plans.cache import release
+    from sharetrace_giraph_spark.plans.superstep import LOOP_INPUTS, loop_inputs
 
     edges = _both_ways(spark)
     verts = edges.selectExpr("src AS vertex_id").distinct()
-    with _pinned_planning(spark, 8), loop_inputs(spark, edges, "src", verts, 8) as inputs:
-        e, v, _ = inputs
+    with _pinned_planning(spark, 8):
+        e, v, _ = loop_inputs(spark, edges, ("src", "dst"), "src", verts, 8)
         n = v.count()
         init = _pr_init(e, v, n, None, None)
         assert init.where("wsum IS NULL").isEmpty()
         # the out-weight join reads both inputs as they are partitioned
         assert not _exchange_children(init), _plan(init)
         yield _pr_step(e, n, 0.85, False, None, False), init
+    release(LOOP_INPUTS)
 
 
 def _both_ways(spark):
@@ -639,7 +662,8 @@ def test_risk_step_plans_single_exchange(spark):
         _risk_step,
         init_state,
     )
-    from sharetrace_giraph_spark.plans.superstep import loop_inputs
+    from sharetrace_giraph_spark.plans.cache import release
+    from sharetrace_giraph_spark.plans.superstep import LOOP_INPUTS, loop_inputs
 
     P = 8
     with _pinned_planning(spark, P):
@@ -661,11 +685,14 @@ def test_risk_step_plans_single_exchange(spark):
             ),
             (F.col("id").cast("long") % 10 / 10.0).alias("value"),
         )
-        inputs = loop_inputs(spark, _directed_contact_edges(contacts), "u", num_partitions=P)
-        with inputs as (edges, _, _):
+        edges, _, _ = loop_inputs(spark, _directed_contact_edges(contacts),
+                                  ("u", "v", "cutoff_ts"), "u", num_partitions=P)
+        try:
             plan = _pin_step(
                 _risk_step(edges, 0.8), init_state(scores), exchanges=1, combined=1
             )
+        finally:
+            release(LOOP_INPUTS)
         assert "Generate" not in plan, plan  # scores are never exploded
         conds = [ln for ln in plan.splitlines() if ln.startswith("Join condition")]
         assert len(conds) == 2, plan  # relay join + state-update join

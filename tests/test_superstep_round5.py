@@ -239,3 +239,29 @@ def test_convergence_on_nondurable_superstep_is_written(spark, tmp_path):
     assert latest_committed(str(tmp_path), "c", "halve") == 2
     assert _rows(res.state) == [(i, round(2.0 ** -3, 12)) for i in range(64)]
     assert drv._pending_write is None
+
+
+def test_fallback_agg_is_counted(spark, tmp_path, monkeypatch):
+    """Every metrics row says where its convergence aggregates came from:
+    the observed carry (``agg_fallback`` false) or the fallback agg. With
+    the observe wait at 0 every row shows the fallback, and the results
+    and metrics are those of an observed run."""
+    import sharetrace_giraph_spark.plans.superstep as ss
+
+    def run(run_id):
+        drv = SuperstepDriver(spark, str(tmp_path), run_id, "halve", num_partitions=4)
+        res = drv.run(_init_state(spark), _halve_step, max_supersteps=3,
+                      tolerance=0.0, checkpoint_every=2, resume=False)
+        rows = sorted(drv.metrics().collect(), key=lambda r: r.superstep)
+        return res, rows
+
+    observed, observed_rows = run("o")
+    monkeypatch.setattr(ss, "_OBSERVE_TIMEOUT_S", 0.0)
+    fallback, fallback_rows = run("f")
+    assert [r.agg_fallback for r in fallback_rows] == [True, True, True]
+    assert not any(r.agg_fallback for r in observed_rows)
+    assert _rows(fallback.state) == _rows(observed.state)
+    assert fallback.l1_delta == observed.l1_delta
+    assert [(r.active_vertices, r.messages, r.l1_delta) for r in fallback_rows] == [
+        (r.active_vertices, r.messages, r.l1_delta) for r in observed_rows
+    ]
