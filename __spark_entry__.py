@@ -92,6 +92,36 @@ def _ckpt() -> str:
     return tempfile.mkdtemp(prefix="stgs-ckpt-")
 
 
+def _role_vertices(contacts: DataFrame) -> DataFrame:
+    """``(vertex_id)``: every role that appears in ``contacts``, for the
+    algorithms run directly over role-keyed contact edges."""
+    return (
+        contacts.select(F.col("src").alias("vertex_id"))
+        .unionByName(contacts.select(F.col("dst").alias("vertex_id")))
+        .distinct()
+    )
+
+
+def _labels_in_role_space(state: DataFrame, verts: DataFrame, col: str) -> DataFrame:
+    """``(role, {col}_role)`` by role: each vertex of ``state`` and its
+    vertex-id label ``col`` decoded to roles through the id map ``verts``."""
+    roles = verts.select(F.col("vertex_id").alias(col), F.col("role").alias(f"{col}_role"))
+    return (
+        state.join(verts, "vertex_id")
+        .join(roles, col)
+        .select("role", f"{col}_role")
+        .orderBy("role")
+    )
+
+
+def _edges_in_role_space(edges: DataFrame, verts: DataFrame) -> DataFrame:
+    """``edges`` with ``src_role``/``dst_role``, the roles of its
+    vertex-id endpoints ``src``/``dst``."""
+    vsrc = verts.select(F.col("vertex_id").alias("src"), F.col("role").alias("src_role"))
+    vdst = verts.select(F.col("vertex_id").alias("dst"), F.col("role").alias("dst_role"))
+    return edges.join(vsrc, "src").join(vdst, "dst")
+
+
 # ---------------------------------------------------------------------------
 # the queries
 # ---------------------------------------------------------------------------
@@ -125,26 +155,24 @@ def q_graph_pagerank(spark, sf_dir):
     return out.orderBy("role")
 
 
-def q_graph_cc(spark, sf_dir):
-    """Component labels reported in ROLE space (comp_role = the
-    lexicographically smallest role in the component — dense ids are
-    assigned by role order, so min encoded id == min role), which lets
-    DuckDB replay the whole thing as a recursive CTE."""
+def _cc_roles(spark, sf_dir, run_id, method):
+    """Component labels of ``connected_components(method=...)`` reported
+    in ROLE space (comp_role = the lexicographically smallest role in the
+    component — dense ids are assigned by role order, so min encoded id
+    == min role), which lets DuckDB replay the whole thing as a
+    recursive CTE."""
     from sharetrace_giraph_spark.algorithms import connected_components
     from sharetrace_giraph_spark.operators import edges as E
 
     contacts, verts, enc = _graph(spark, sf_dir)
-    res = connected_components(spark, E.undirect(enc), verts, _ckpt(),
-                               run_id="q", max_supersteps=50, checkpoint_every=2)
-    comp_roles = verts.select(
-        F.col("vertex_id").alias("comp"), F.col("role").alias("comp_role")
-    )
-    return (
-        res.state.join(verts, "vertex_id")
-        .join(comp_roles, "comp")
-        .select("role", "comp_role")
-        .orderBy("role")
-    )
+    res = connected_components(spark, E.undirect(enc), verts, _ckpt(), run_id=run_id,
+                               max_supersteps=50, method=method, checkpoint_every=2)
+    return _labels_in_role_space(res.state, verts, "comp")
+
+
+def q_graph_cc(spark, sf_dir):
+    """Component labels by min-label propagation (``_cc_roles``)."""
+    return _cc_roles(spark, sf_dir, "q", "frontier")
 
 
 def q_graph_cc_doubling(spark, sf_dir):
@@ -152,22 +180,7 @@ def q_graph_cc_doubling(spark, sf_dir):
     comp←comp(comp) shortcutting, O(log V) supersteps) — shares
     graph_cc's recursive-CTE oracle because the labels are identical by
     construction."""
-    from sharetrace_giraph_spark.algorithms import connected_components
-    from sharetrace_giraph_spark.operators import edges as E
-
-    contacts, verts, enc = _graph(spark, sf_dir)
-    res = connected_components(spark, E.undirect(enc), verts, _ckpt(),
-                               run_id="qd", max_supersteps=50, method="doubling",
-                               checkpoint_every=2)
-    comp_roles = verts.select(
-        F.col("vertex_id").alias("comp"), F.col("role").alias("comp_role")
-    )
-    return (
-        res.state.join(verts, "vertex_id")
-        .join(comp_roles, "comp")
-        .select("role", "comp_role")
-        .orderBy("role")
-    )
+    return _cc_roles(spark, sf_dir, "qd", "doubling")
 
 
 def q_graph_component_sizes(spark, sf_dir):
@@ -260,11 +273,7 @@ def q_graph_neighborhood(spark, sf_dir):
     from sharetrace_giraph_spark.operators.edges import undirect
 
     contacts, verts, enc = _graph(spark, sf_dir)
-    rverts = (
-        contacts.select(F.col("src").alias("vertex_id"))
-        .unionByName(contacts.select(F.col("dst").alias("vertex_id")))
-        .distinct()
-    )
+    rverts = _role_vertices(contacts)
     res = neighborhood_function(
         spark, undirect(contacts.select("src", "dst")), rverts, max_radius=3,
         checkpoint_dir=_ckpt(), run_id="qnf", checkpoint_every=2,
@@ -291,11 +300,7 @@ def q_graph_harmonic(spark, sf_dir):
     from sharetrace_giraph_spark.operators.edges import undirect
 
     contacts, verts, enc = _graph(spark, sf_dir)
-    rverts = (
-        contacts.select(F.col("src").alias("vertex_id"))
-        .unionByName(contacts.select(F.col("dst").alias("vertex_id")))
-        .distinct()
-    )
+    rverts = _role_vertices(contacts)
     res = neighborhood_function(
         spark, undirect(contacts.select("src", "dst")), rverts, max_radius=3,
         checkpoint_dir=_ckpt(), run_id="qhc", checkpoint_every=2,
@@ -329,11 +334,7 @@ def q_graph_effective_diameter(spark, sf_dir):
     from sharetrace_giraph_spark.operators.edges import undirect
 
     contacts, verts, enc = _graph(spark, sf_dir)
-    rverts = (
-        contacts.select(F.col("src").alias("vertex_id"))
-        .unionByName(contacts.select(F.col("dst").alias("vertex_id")))
-        .distinct()
-    )
+    rverts = _role_vertices(contacts)
     res = neighborhood_function(
         spark, undirect(contacts.select("src", "dst")), rverts, max_radius=4,
         checkpoint_dir=_ckpt(), method="hll", lg_k=12, run_id="qed",
@@ -397,11 +398,7 @@ def q_graph_diameter_hll_band(spark, sf_dir):
 
     contacts, verts, enc = _graph(spark, sf_dir)
     und = undirect(contacts.select("src", "dst"))
-    rverts = (
-        contacts.select(F.col("src").alias("vertex_id"))
-        .unionByName(contacts.select(F.col("dst").alias("vertex_id")))
-        .distinct()
-    )
+    rverts = _role_vertices(contacts)
     ex = neighborhood_function(
         spark, und, rverts, max_radius=4,
         checkpoint_dir=_ckpt(), run_id="qdbx", checkpoint_every=2,
@@ -519,7 +516,7 @@ def q_graph_degree_hist(spark, sf_dir):
 
 
 def q_graph_lpa(spark, sf_dir):
-    """Labels reported in ROLE space (see q_graph_cc): the deterministic
+    """Labels reported in ROLE space (see _cc_roles): the deterministic
     (count desc, label asc) tie-break is order-isomorphic between encoded
     ids and roles, so DuckDB can replay the 5 synchronous steps exactly."""
     from sharetrace_giraph_spark.algorithms import label_propagation
@@ -528,15 +525,7 @@ def q_graph_lpa(spark, sf_dir):
     contacts, verts, enc = _graph(spark, sf_dir)
     res = label_propagation(spark, E.undirect(enc), verts, _ckpt(),
                             run_id="q", max_supersteps=5, checkpoint_every=2)
-    label_roles = verts.select(
-        F.col("vertex_id").alias("label"), F.col("role").alias("label_role")
-    )
-    return (
-        res.state.join(verts, "vertex_id")
-        .join(label_roles, "label")
-        .select("role", "label_role")
-        .orderBy("role")
-    )
+    return _labels_in_role_space(res.state, verts, "label")
 
 
 def q_graph_lpa_weighted(spark, sf_dir):
@@ -552,15 +541,7 @@ def q_graph_lpa_weighted(spark, sf_dir):
     wund = E.weighted_undirect(contacts, verts)
     res = label_propagation(spark, wund, verts, _ckpt(), run_id="qlw",
                             max_supersteps=5, checkpoint_every=2, weight_col="w")
-    label_roles = verts.select(
-        F.col("vertex_id").alias("label"), F.col("role").alias("label_role")
-    )
-    return (
-        res.state.join(verts, "vertex_id")
-        .join(label_roles, "label")
-        .select("role", "label_role")
-        .orderBy("role")
-    )
+    return _labels_in_role_space(res.state, verts, "label")
 
 
 def q_graph_bfs(spark, sf_dir):
@@ -661,15 +642,11 @@ def q_graph_edge_jaccard(spark, sf_dir):
     """Neighborhood Jaccard per contact edge (link-prediction score), in
     role space; common-neighbor counts credited from the triangle list."""
     from sharetrace_giraph_spark.algorithms import edge_jaccard
-    from sharetrace_giraph_spark.operators import edges as E
 
     contacts, verts, enc = _graph(spark, sf_dir)
     res = edge_jaccard(enc)
-    vsrc = verts.select(F.col("vertex_id").alias("src"), F.col("role").alias("src_role"))
-    vdst = verts.select(F.col("vertex_id").alias("dst"), F.col("role").alias("dst_role"))
     return (
-        res.join(vsrc, "src")
-        .join(vdst, "dst")
+        _edges_in_role_space(res, verts)
         .select(
             "src_role",
             "dst_role",
@@ -687,11 +664,8 @@ def q_graph_adamic_adar(spark, sf_dir):
 
     contacts, verts, enc = _graph(spark, sf_dir)
     res = edge_adamic_adar(enc)
-    vsrc = verts.select(F.col("vertex_id").alias("src"), F.col("role").alias("src_role"))
-    vdst = verts.select(F.col("vertex_id").alias("dst"), F.col("role").alias("dst_role"))
     return (
-        res.join(vsrc, "src")
-        .join(vdst, "dst")
+        _edges_in_role_space(res, verts)
         .select("src_role", "dst_role", F.round("adamic_adar", 9).alias("adamic_adar"))
         .orderBy("src_role", "dst_role")
     )

@@ -1,4 +1,4 @@
-from .bfs import UNREACHED, bfs
+from .bfs import UNREACHED, bfs, shortest_paths
 from .connected_components import connected_components
 from .kcore import k_core
 from .ktruss import k_truss
@@ -8,7 +8,6 @@ from .pagerank import pagerank
 from .random_walks import random_walks, walks_to_corpus
 from .risk_propagation import final_scores, init_state, risk_propagation
 from .squares import square_count, square_pair_counts
-from .sssp import shortest_paths
 from .triangle_count import (
     clustering_coefficient,
     edge_adamic_adar,

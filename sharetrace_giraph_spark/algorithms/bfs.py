@@ -1,25 +1,39 @@
-"""Multi-source BFS hop distance over the contact graph.
+"""Multi-source BFS hop distance and weighted shortest paths over the
+contact graph.
 
 Same checkpointed gather-scatter skeleton as connected components
 (J1 join + min aggregate + I3 active frontier): every source starts at
 distance 0, every other vertex at an "unreached" sentinel; each superstep
 the frontier (vertices whose distance improved last superstep) sends
-``dist + 1`` to its out-neighbors and each receiver keeps the minimum.
+``dist + cost`` to its out-neighbors and each receiver keeps the minimum.
 A distance can only improve through a neighbor that itself improved, so
-frontier-only messaging is exact, and the frontier IS the classic BFS
-wavefront — superstep k settles exactly the vertices at hop distance k.
-Halts when no distance changes (L1 of the 0/1 change indicator < 0.5),
-i.e. after eccentricity(sources)+1 supersteps.
+frontier-only messaging is exact. Halts when no distance changes (L1 of
+the 0/1 change indicator < 0.5).
 
-The reference has no reachability query; this is the natural extension of
-its propagation loop (``compute/VariableVertexComputation.java`` relays
-values along contact edges the same way) to hop-distance analytics —
-"how many hops from the seed set is each actor" is the link-graph
-question its risk scores approximate with decaying weights.
+``bfs`` costs every hop 1: the frontier IS the classic BFS wavefront —
+superstep k settles exactly the vertices at hop distance k, and the loop
+halts after eccentricity(sources)+1 supersteps.
 
-Determinism: min over longs — order- and tie-safe. Skew: the per-dst
-min plans a partial ``min`` below the message exchange, as in
-``connected_components`` (``operators/skew``).
+``shortest_paths`` (weighted SSSP) costs each edge its positive long
+weight. SSSP is THE canonical Pregel computation (the example in
+Malewicz et al.'s Pregel paper, which Giraph implements). Synchronous
+frontier relaxation computes the same per-round values as full
+Bellman-Ford relaxation (a non-improved vertex's contribution was
+already folded in an earlier round; min is idempotent), so after k
+supersteps ``dist`` is the min-cost path using <= k edges — which lets a
+SQL oracle replay the loop as k unrolled relaxation CTEs.
+
+The reference has no reachability or shortest-path query; this is its
+propagation loop (``compute/VariableVertexComputation.java`` relays
+values along contact edges with exactly this skeleton: receive, fold
+with min/max, re-send on improvement) applied to additive costs instead
+of multiplicative risk decay.
+
+Determinism: min over longs — order- and tie-safe, and the driver
+queries' weights are LONGS (total co-presence duration_ms + 1), so
+min-plus arithmetic is exact. Skew: the per-dst min plans a partial
+``min`` below the message exchange, as in ``connected_components``
+(``operators/skew``).
 
 Edges must be directed (pass ``operators.edges.undirect`` output for the
 undirected contact graph).
@@ -30,7 +44,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs, receive, send
 
 #: "not reached yet" — far above any real hop count, far below long
 #: overflow even after repeated +1
@@ -45,14 +59,10 @@ def _bfs_step(e: DataFrame, cost_col: str | None = None):
 
     def step(state: DataFrame, k: int) -> DataFrame:
         frontier = state.where(F.col("delta") > 0.5)
-        # shuffle_hash: the frontier is O(V) early on — never broadcast a
-        # side that grows with the graph (see connected_components.py)
-        msgs = e.join(frontier.hint("shuffle_hash"), e.src == frontier.vertex_id).select(
-            e.dst.alias("mdst"), (F.col("dist") + cost).alias("nd")
-        )
+        msgs = send(e, frontier, (F.col("dist") + cost).alias("nd"))
         inc = msgs.groupBy("mdst").agg(F.min("nd").alias("min_nd"))
         new_dist = F.least("dist", F.coalesce("min_nd", "dist"))
-        return state.join(inc.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
+        return receive(state, inc).select(
             "vertex_id",
             new_dist.alias("dist"),
             F.when(new_dist != F.col("dist"), 1.0).otherwise(0.0).alias("delta"),
@@ -102,4 +112,28 @@ def bfs(
     e, verts, P = loop_inputs(spark, edges, ("src", "dst"), "src", vertices)
     driver = SuperstepDriver(spark, checkpoint_dir, run_id, "bfs", P)
     return driver.run(_bfs_init(verts, sources), _bfs_step(e), max_supersteps=max_supersteps,
+                      tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)
+
+
+def shortest_paths(
+    spark: SparkSession,
+    edges: DataFrame,
+    vertices: DataFrame,
+    sources: DataFrame,
+    checkpoint_dir: str,
+    run_id: str = "sssp",
+    weight_col: str = "w",
+    max_supersteps: int = 50,
+    resume: bool = True,
+    checkpoint_every: int = 1,
+) -> SuperstepResult:
+    """Weighted SSSP: :func:`bfs` with each edge costing its positive
+    ``weight_col`` (cast to long). Returns state (vertex_id, dist,
+    delta); ``dist`` is the minimum path cost from any source, or
+    :data:`UNREACHED`. Filter ``dist < UNREACHED`` for the reachable
+    set."""
+    weighted = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
+    e, verts, P = loop_inputs(spark, weighted, ("src", "dst", "w"), "src", vertices)
+    driver = SuperstepDriver(spark, checkpoint_dir, run_id, "sssp", P)
+    return driver.run(_bfs_init(verts, sources), _bfs_step(e, "w"), max_supersteps=max_supersteps,
                       tolerance=0.5, resume=resume, checkpoint_every=checkpoint_every)

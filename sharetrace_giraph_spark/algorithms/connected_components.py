@@ -36,7 +36,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs, receive, send
 
 
 def _cc_step(e: DataFrame, method: str):
@@ -44,42 +44,28 @@ def _cc_step(e: DataFrame, method: str):
     ``e(src, dst)`` for ``method`` (module docstring); returns
     ``step(state, k) -> state``."""
 
-    def neighbor_min(senders: DataFrame) -> DataFrame:
-        # shuffle_hash hint: the senders side is the (filtered) frontier —
-        # O(V) rows. Catalyst's static size estimate routinely puts it
-        # under the broadcast threshold, but broadcasting a frontier is
-        # wrong at scale (it grows with the graph) and measurably harmful
-        # here: at 80M edges the per-superstep ~2M-row broadcast churns
-        # the driver/executor heap until non-durable supersteps stall at
-        # 3-8x their clean wall (BENCH.md round-3 analysis). The edge side
-        # is already hash-partitioned on src, so SHJ is exchange-reusing.
-        msgs = e.join(senders.hint("shuffle_hash"), e.src == senders.vertex_id).select(
-            e.dst.alias("mdst"), F.col("comp")
-        )
-        return msgs.groupBy("mdst").agg(F.min("comp").alias("min_nbr"))
-
     def step_frontier(state: DataFrame, k: int) -> DataFrame:
         # I3 frontier (voteToHalt analog, FactorVertexComputation.java:86):
         # only vertices whose label changed last superstep send — a min-label
         # can only improve via a neighbor that itself improved. The frontier
         # collapses geometrically, so late supersteps join a small fraction
         # of V instead of all of it.
-        inc = neighbor_min(state.where(F.col("delta") > 0.5))
+        msgs = send(e, state.where(F.col("delta") > 0.5), F.col("comp"))
+        inc = msgs.groupBy("mdst").agg(F.min("comp").alias("min_nbr"))
         new_comp = F.least("comp", F.coalesce("min_nbr", "comp"))
-        return state.join(inc.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
+        return receive(state, inc).select(
             "vertex_id",
             new_comp.alias("comp"),
             F.when(new_comp != F.col("comp"), 1.0).otherwise(0.0).alias("delta"),
         )
 
     def step_doubling(state: DataFrame, k: int) -> DataFrame:
-        inc = neighbor_min(state)
+        inc = send(e, state, F.col("comp")).groupBy("mdst").agg(F.min("comp").alias("min_nbr"))
         # pointer jump: my label's own current label (comp is always a live
         # vertex id, so the lookup join always matches; left join for safety)
         ptr = state.select(F.col("vertex_id").alias("p_id"), F.col("comp").alias("p_comp"))
-        joined = (
-            state.join(inc.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left")
-            .join(ptr.hint("shuffle_hash"), F.col("comp") == F.col("p_id"), "left")
+        joined = receive(state, inc).join(
+            ptr.hint("shuffle_hash"), F.col("comp") == F.col("p_id"), "left"
         )
         new_comp = F.least(
             "comp", F.coalesce("min_nbr", "comp"), F.coalesce("p_comp", "comp")

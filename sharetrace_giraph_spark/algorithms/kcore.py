@@ -26,7 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs, receive, send
 
 
 def _kcore_step(e: DataFrame, k: int):
@@ -37,15 +37,11 @@ def _kcore_step(e: DataFrame, k: int):
     def step(state: DataFrame, _k: int) -> DataFrame:
         alive = state.where(F.col("alive") == 1).select("vertex_id")
         # messages: each alive vertex counts for its neighbors' degree
-        # shuffle_hash: alive set is O(V) — never broadcast a side that
-        # grows with the graph (see connected_components.py)
-        msgs = e.join(alive.hint("shuffle_hash"), e.src == alive.vertex_id).select(
-            e.dst.alias("mdst"), F.lit(1).cast("long").alias("one")
-        )
+        msgs = send(e, alive, F.lit(1).cast("long").alias("one"))
         deg = msgs.groupBy("mdst").agg(F.sum("one").alias("alive_deg"))
         survives = (F.col("alive") == 1) & (F.coalesce("alive_deg", F.lit(0)) >= k)
         new_alive = F.when(survives, 1).otherwise(0).cast("int")
-        return state.join(deg.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
+        return receive(state, deg).select(
             "vertex_id",
             new_alive.alias("alive"),
             F.when(new_alive != F.col("alive"), 1.0).otherwise(0.0).alias("delta"),

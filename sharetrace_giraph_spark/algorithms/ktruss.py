@@ -58,7 +58,7 @@ def _ktruss_step(k: int):
         survives = (F.col("alive") == 1) & (F.coalesce("sup", F.lit(0)) >= min_support)
         new_alive = F.when(survives, 1).otherwise(0).cast("int")
         # shuffle_hash: per-edge support is O(E) — never broadcast a
-        # side that grows with the graph (see connected_components.py)
+        # side that grows with the graph (see plans.superstep.send)
         return state.join(
             sup.hint("shuffle_hash"), (state.src == sup.s) & (state.dst == sup.d), "left"
         ).select(

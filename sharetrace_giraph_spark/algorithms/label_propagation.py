@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs, receive, send
 
 
 def _lpa_step(e: DataFrame, weight_col: str | None):
@@ -29,12 +29,7 @@ def _lpa_step(e: DataFrame, weight_col: str | None):
     vote = F.col(weight_col) if weight_col else F.lit(1)
 
     def step(state: DataFrame, k: int) -> DataFrame:
-        # shuffle_hash: the state is O(V) — never broadcast a side that
-        # grows with the graph (see connected_components.py)
-        msgs = e.join(state.hint("shuffle_hash"), e.src == state.vertex_id).select(
-            e.dst.alias("mdst"), F.col("label").alias("nbr_label"),
-            vote.alias("_vote"),
-        )
+        msgs = send(e, state, F.col("label").alias("nbr_label"), vote.alias("_vote"))
         label_counts = msgs.groupBy("mdst", "nbr_label").agg(
             F.sum("_vote").alias("cnt")
         )
@@ -43,7 +38,7 @@ def _lpa_step(e: DataFrame, weight_col: str | None):
             F.max_by("nbr_label", F.struct(F.col("cnt"), (-F.col("nbr_label")).alias("neg"))).alias("mode_label")
         )
         new_label = F.coalesce("mode_label", "label")
-        return state.join(mode.hint("shuffle_hash"), state.vertex_id == F.col("mdst"), "left").select(
+        return receive(state, mode).select(
             "vertex_id",
             new_label.alias("label"),
             F.when(new_label != F.col("label"), 1.0).otherwise(0.0).alias("delta"),

@@ -46,7 +46,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs, send
 
 
 def _anf_init(vertices: DataFrame, method: str, lg_k: int) -> DataFrame:
@@ -84,15 +84,9 @@ def _anf_step(e: DataFrame, method: str):
         size = F.hll_sketch_estimate("sk")
 
     def step(state: DataFrame, k: int) -> DataFrame:
-        st, ed = state.alias("st"), e.alias("ed")
-        # shuffle_hash: the state side is O(V) — never broadcast a side
-        # that grows with the graph (see connected_components.py)
-        msgs = ed.join(st.hint("shuffle_hash"), F.col("ed.src") == F.col("st.vertex_id")).select(
-            F.col("ed.dst").alias("vertex_id"),
-            F.col(f"st.{ball}").alias(ball),
-            F.lit(None).cast(state.schema["hist"].dataType).alias("hist"),
-        )
-        allm = state.select("vertex_id", ball, "hist").unionByName(msgs)
+        msgs = send(e, state, F.col(ball), F.lit(None).cast(state.schema["hist"].dataType).alias("hist"))
+        # positional union: each message's receiver mdst lands in vertex_id
+        allm = state.select("vertex_id", ball, "hist").union(msgs)
         agg = allm.groupBy("vertex_id").agg(
             merged,
             # exactly one non-null hist per group (the self row)

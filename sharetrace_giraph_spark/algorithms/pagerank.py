@@ -1,10 +1,11 @@
 """PageRank over the contact graph: a relational join + aggregate per
 superstep under the checkpointed SuperstepDriver.
 
-Each superstep is ``edges ⋈ state`` (hash equi-join on src, the J1
-gather-scatter self-join from SURVEY §2.3) followed by
-``groupBy(dst).sum`` (Catalyst partial+final hash agg = the reference's
-pre-shuffle combiner, A5 analog for messages). Catalyst/Tungsten keeps
+Each superstep is ``edges ⋈ state`` (``plans.superstep.send``: hash
+equi-join on src, the J1 gather-scatter self-join from SURVEY §2.3)
+followed by ``groupBy(mdst).sum`` (Catalyst partial+final hash agg = the
+reference's pre-shuffle combiner, A5 analog for messages), folded back
+onto the state by ``receive``. Catalyst/Tungsten keeps
 the whole step in codegen. The driver adds resume, lineage metrics and
 the L1-delta halt. The edges and the vertex universe are the only cached
 inputs (``loop_inputs``), held until a run on another graph or
@@ -26,7 +27,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs
+from ..plans.superstep import SuperstepDriver, SuperstepResult, loop_inputs, receive, send
 
 
 def _pr_init(
@@ -102,26 +103,13 @@ def _pr_step(
     w = F.lit(1.0) if weight_col is None else F.col(weight_col).cast("double")
 
     def step(state: DataFrame, k: int) -> DataFrame:
-        # shuffle_hash hint on every O(V) join side in the superstep:
-        # Catalyst's static estimate (and AQE's runtime one) routinely
-        # puts the ~|V|-row state under the broadcast threshold, but a
-        # per-superstep broadcast of a frame that GROWS with the graph
-        # is wrong at scale and measurably harmful here — repeated
-        # 10-100 MB broadcast hash relations churn the heap until
-        # supersteps stall at 3-8x their clean wall (BENCH.md round-3
-        # analysis; CC showed 155 s vs 26 s for the identical step).
-        msgs = (
-            e.join(state.hint("shuffle_hash"), e.src == state.vertex_id)
-            .select(e.dst.alias("mdst"), (F.col("rank") * (w / F.col("wsum"))).alias("contrib"))
-        )
+        msgs = send(e, state, (F.col("rank") * (w / F.col("wsum"))).alias("contrib"))
         inc = msgs.groupBy("mdst").agg(F.sum("contrib").alias("contrib"))
 
         # state already covers the full vertex universe (init from verts and
         # every step preserves it), so ONE left join replaces verts ⋈ inc ⋈
         # state — one fewer exchange per superstep
-        joined = state.select(*keep).join(
-            inc.hint("shuffle_hash"), F.col("vertex_id") == F.col("mdst"), "left"
-        )
+        joined = receive(state.select(*keep), inc)
         if dangling:
             # in-plan scalar: summed dangling mass as a 1-row broadcast
             dmass = state.where(F.col("wsum").isNull()).agg(

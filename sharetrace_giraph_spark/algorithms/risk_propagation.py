@@ -42,10 +42,11 @@ replace Collections.max.
 State: ``(vertex_id string, scores array<struct<update_time timestamp,
 value double, origin_id string>>, delta double)``.
 
-Execution shape (``_risk_step``): every directed contact edge ``(u, v,
-cutoff_ts)`` joins u's score ARRAY once, co-partitioned with the carried
-state, and F5 + F3 + A1 are one per-row ``array_max(filter(scores, ...))``
-— the scores are never exploded, so a superstep's relay join and its
+Execution shape (``_risk_step``): every directed contact edge ``(src,
+dst, cutoff_ts)`` joins its sender's score ARRAY once
+(``plans.superstep.send``), co-partitioned with the carried state, and
+F5 + F3 + A1 are one per-row ``array_max(filter(scores, ...))`` — the
+scores are never exploded, so a superstep's relay join and its
 per-receiver aggregation see E rows, not Σ_u |S_u|·deg(u). The receiver
 agg is the superstep's one shuffle. ``final_scores`` is likewise one
 ``array_max`` per vertex row.
@@ -56,28 +57,28 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.edges import undirect
 from ..plans.superstep import (
     DEFAULT_MAX_SUPERSTEPS,
     DEFAULT_TOLERANCE,
     SuperstepDriver,
     SuperstepResult,
     loop_inputs,
+    receive,
+    send,
 )
 
 
 def _directed_contact_edges(contacts: DataFrame) -> DataFrame:
     """contacts(src,dst,occurrences) → both directions with the F3 cutoff:
-    (u, v, cutoff_ts = max occurrence time of the contact).
+    (src, dst, cutoff_ts = max occurrence time of the contact).
 
     Precondition: one row per unordered pair, ``src < dst`` (the
     reference's factor ids guarantee this). Each row becomes one relay
     edge per direction, so a pair given twice would relay two messages
     where the reference relays one."""
-    base = contacts.select(
-        "src", "dst", F.array_max("occurrences.time").alias("cutoff_ts")
-    )
-    return base.select(F.col("src").alias("u"), F.col("dst").alias("v"), "cutoff_ts").unionByName(
-        base.select(F.col("dst").alias("u"), F.col("src").alias("v"), "cutoff_ts")
+    return undirect(
+        contacts.select("src", "dst", F.array_max("occurrences.time").alias("cutoff_ts"))
     )
 
 
@@ -102,32 +103,29 @@ def init_state(scores: DataFrame) -> DataFrame:
 
 def _risk_step(edges: DataFrame, transmission_rate: float):
     """One fused BP iteration over the co-partitioned directed contact
-    edges ``(u, v, cutoff_ts)`` (execution shape: module docstring);
+    edges ``(src, dst, cutoff_ts)`` (execution shape: module docstring);
     returns ``step(state, k) -> state``."""
     # J1 scatter with F5 no-echo + F3 recency, then A1 max-relay to the
     # other endpoint (J2): max(struct) = natural order
     relay = F.array_max(
         F.filter(
             "scores",
-            lambda s: (s["origin_id"] != F.col("v")) & (s["update_time"] < F.col("cutoff_ts")),
+            lambda s: (s["origin_id"] != F.col("dst")) & (s["update_time"] < F.col("cutoff_ts")),
         )
     )
 
     def step(state: DataFrame, k: int) -> DataFrame:
         relayed = (
-            # shuffle_hash on BOTH sides: edges are O(E) and the state
+            # the edge side is hinted too: edges are O(E) and the state
             # O(V·scores) in bytes — neither is broadcast-safe and either
-            # may be the larger one; both are hash-clustered on the join
-            # key, so the join plans no exchange
-            edges.hint("shuffle_hash")
-            .join(state.hint("shuffle_hash"), edges.u == state.vertex_id)
-            .select(F.col("v").alias("vertex_id"), relay.alias("m"))
+            # may be the larger one
+            send(edges.hint("shuffle_hash"), state, relay.alias("m"))
             # F4: an edge with no admissible score relays a NULL msg, which
             # collect_set/max skip. NOT a where(m IS NOT NULL): the optimizer
             # would push it into the join condition, evaluating the HOF twice
             # and losing the join's whole-stage codegen
             .select(
-                "vertex_id",
+                "mdst",
                 F.when(
                     F.col("m").isNotNull(),
                     F.struct(
@@ -138,12 +136,12 @@ def _risk_step(edges: DataFrame, transmission_rate: float):
                 ).alias("msg"),
             )
         )
-        inc = relayed.groupBy("vertex_id").agg(
+        inc = relayed.groupBy("mdst").agg(
             F.array_sort(F.collect_set("msg")).alias("incoming"),
             F.max("msg").alias("max_incoming"),
         )
         return (
-            state.join(inc.hint("shuffle_hash"), "vertex_id", "left")
+            receive(state, inc)
             .select(
                 "vertex_id",
                 F.array_sort(
@@ -186,7 +184,7 @@ def risk_propagation(
     (as ``derive_contacts`` and ``jsonlines.read_factor_graph`` produce):
     see :func:`_directed_contact_edges`."""
     directed = _directed_contact_edges(contacts)
-    edges, _, P = loop_inputs(spark, directed, ("u", "v", "cutoff_ts"), "u")
+    edges, _, P = loop_inputs(spark, directed, ("src", "dst", "cutoff_ts"), "src")
     driver = SuperstepDriver(spark, checkpoint_dir, run_id, "risk_propagation", P)
     return driver.run(
         init_state(scores), _risk_step(edges, transmission_rate),

@@ -85,13 +85,13 @@ def _cap_buckets(
     return keyed.join(ok, bucket_cols, "left_semi")
 
 
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Groups of byte-identical documents: (text_hash, n_dups, min_doc_id),
     only groups with n_dups > 1."""
     return (
-        df.select(id_col, F.md5(F.col(text_col)).alias("text_hash"))
+        df.select("doc_id", F.md5(F.col("text")).alias("text_hash"))
         .groupBy("text_hash")
-        .agg(F.count(F.lit(1)).alias("n_dups"), F.min(id_col).alias("keep_id"))
+        .agg(F.count(F.lit(1)).alias("n_dups"), F.min("doc_id").alias("keep_id"))
         .where(F.col("n_dups") > 1)
     )
 
@@ -119,8 +119,6 @@ def word_ngrams(col, n: int = 3) -> F.Column:
 
 def minhash_signatures(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     shingle_n: int = 3,
 ) -> DataFrame:
@@ -129,17 +127,17 @@ def minhash_signatures(
     aggregates — partial-aggregated map-side, shuffle carries k digests per
     doc, not the shingle stream."""
     ex = df.select(
-        F.col(id_col), F.explode(word_ngrams(text_col, shingle_n)).alias("shingle")
+        F.col("doc_id"), F.explode(word_ngrams("text", shingle_n)).alias("shingle")
     )
     aggs = [
         F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}")))).alias(f"mh{i}")
         for i in range(num_hashes)
     ]
-    return ex.groupBy(id_col).agg(*aggs)
+    return ex.groupBy("doc_id").agg(*aggs)
 
 
 def _banded_keys(
-    signatures: DataFrame, id_col: str, num_hashes: int, bands: int
+    signatures: DataFrame, num_hashes: int, bands: int
 ) -> DataFrame:
     if num_hashes % bands != 0:
         # the module's no-silent-caps rule: flooring would quietly ignore
@@ -157,25 +155,23 @@ def _banded_keys(
         for b in range(bands)
     ]
     return signatures.select(
-        F.col(id_col).alias("doc"), F.explode(F.array(*band_cols)).alias("bk")
+        F.col("doc_id").alias("doc"), F.explode(F.array(*band_cols)).alias("bk")
     ).select("doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
 def lsh_band_stats(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     bands: int = 4,
 ) -> DataFrame:
     """Band-bucket census (band, key, bucket_n) — the monitoring companion
     of ``max_bucket_size`` (a bucket of n docs generates n·(n-1)/2 pairs)."""
-    keyed = _banded_keys(signatures, id_col, num_hashes, bands)
+    keyed = _banded_keys(signatures, num_hashes, bands)
     return keyed.groupBy("band", "key").agg(F.count(F.lit(1)).alias("bucket_n"))
 
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     bands: int = 4,
     max_bucket_size: int | None = None,
@@ -189,7 +185,7 @@ def lsh_candidate_pairs(
     per-bucket quadratic blowup a giant duplicate cluster causes (its
     members share every band key); oversized buckets are excluded from
     pair generation — loudly, see module docstring."""
-    keyed = _banded_keys(signatures, id_col, num_hashes, bands)
+    keyed = _banded_keys(signatures, num_hashes, bands)
     keyed = _cap_buckets(keyed, ["band", "key"], max_bucket_size, log_dropped, "lsh_candidate_pairs")
     l, r = keyed.alias("l"), keyed.alias("r")
     pairs = l.join(
@@ -204,8 +200,6 @@ def lsh_candidate_pairs(
 def ngram_jaccard(
     pairs: DataFrame,
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 3,
 ) -> DataFrame:
     """Exact Jaccard similarity over word n-gram sets for given (a, b)
@@ -218,8 +212,8 @@ def ngram_jaccard(
     candidate set is orders of magnitude smaller than the corpus, and
     the corpus sides of the joins stream just (id, text) with the tiny
     pair list as the broadcast build side."""
-    da = docs.select(F.col(id_col).alias("a"), F.col(text_col).alias("_text_a"))
-    db = docs.select(F.col(id_col).alias("b"), F.col(text_col).alias("_text_b"))
+    da = docs.select(F.col("doc_id").alias("a"), F.col("text").alias("_text_a"))
+    db = docs.select(F.col("doc_id").alias("b"), F.col("text").alias("_text_b"))
     j = pairs.join(da, "a").join(db, "b")
     # grams materialized once per side per row (multi-use non-cheap alias:
     # CollapseProject keeps the projection boundary, so intersect+union
@@ -239,8 +233,6 @@ def ngram_jaccard(
 
 def minhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
@@ -250,10 +242,10 @@ def minhash_near_duplicates(
 ) -> DataFrame:
     """Full near-dup pipeline: minhash → LSH candidates → exact-Jaccard
     verify → pairs with jaccard >= threshold."""
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    cand = lsh_candidate_pairs(sigs, id_col, num_hashes, bands,
+    sigs = minhash_signatures(df, num_hashes, shingle_n)
+    cand = lsh_candidate_pairs(sigs, num_hashes, bands,
                                max_bucket_size, log_dropped)
-    return ngram_jaccard(cand, df, text_col, id_col, shingle_n).where(
+    return ngram_jaccard(cand, df, shingle_n).where(
         F.col("jaccard") >= threshold
     )
 
@@ -268,9 +260,7 @@ def minhash_near_duplicates(
 SIMHASH_BITS = 60
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """(doc, sh): 60-bit SimHash per document, entirely in JVM expressions.
 
     Token hash = first 15 hex chars of md5(token) → long. The per-bit
@@ -283,7 +273,7 @@ def simhash_signatures(
     thus never pair).
     """
     ex = df.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("tok")
+        F.col("doc_id").alias("doc"), F.explode(tokens(F.col("text"))).alias("tok")
     )
     h = F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("long")
     ex = ex.select("doc", h.alias("h"))
@@ -303,13 +293,11 @@ def simhash_signatures(
 
 def simhash_bucket_stats(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     prefix_bits: int = 16,
 ) -> DataFrame:
     """Bucket-size census (bucket, bucket_n) for the prefix blocking —
     the monitoring companion of ``max_bucket_size``."""
-    h = simhash_signatures(df, text_col, id_col)
+    h = simhash_signatures(df)
     return (
         h.select(F.shiftrightunsigned("sh", SIMHASH_BITS - prefix_bits).alias("bucket"))
         .groupBy("bucket")
@@ -319,8 +307,6 @@ def simhash_bucket_stats(
 
 def simhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     prefix_bits: int = 16,
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
@@ -332,7 +318,7 @@ def simhash_near_duplicates(
     union at scale; one probe here. ``max_bucket_size`` bounds the
     within-bucket self-join against duplicate-cluster skew (oversized
     buckets are excluded — loudly, see module docstring)."""
-    h = simhash_signatures(df, text_col, id_col)
+    h = simhash_signatures(df)
     h = h.withColumn("bucket", F.shiftrightunsigned("sh", SIMHASH_BITS - prefix_bits))
     h = _cap_buckets(h, ["bucket"], max_bucket_size, log_dropped, "simhash_near_duplicates")
     l, r = h.alias("l"), h.alias("r")

@@ -273,9 +273,12 @@ def encode_edges(contacts: DataFrame, vertices: DataFrame) -> DataFrame:
 
 
 def undirect(edges: DataFrame) -> DataFrame:
-    """Canonical (src<dst) edges → both directions, for gather-scatter."""
+    """Canonical (src<dst) edges → both directions, for gather-scatter:
+    the rows as given, then each reversed; every column other than
+    ``src``/``dst`` rides along unchanged."""
+    rest = [c for c in edges.columns if c not in ("src", "dst")]
     return edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *rest)
     )
 
 
@@ -294,14 +297,11 @@ def weighted_undirect(contacts: DataFrame, vertices: DataFrame) -> DataFrame:
     w = duration_weight()
     vsrc = vertices.select(F.col("role").alias("src"), F.col("vertex_id").alias("src_id"))
     vdst = vertices.select(F.col("role").alias("dst"), F.col("vertex_id").alias("dst_id"))
-    wenc = (
+    return undirect(
         contacts.select("src", "dst", w.alias("w"))
         .join(vsrc, "src")
         .join(vdst, "dst")
         .select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"), "w")
-    )
-    return wenc.unionByName(
-        wenc.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     )
 
 

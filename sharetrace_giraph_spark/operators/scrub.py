@@ -41,26 +41,24 @@ REDACTIONS = (
 )
 
 
-def pii_redact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """Redact emails / phone numbers / IPv4s and count each category.
 
     Returns (id, redacted, n_email, n_phone, n_ip). Counts are taken on
     the text as each pass sees it (email first), so an email's host is
     counted once as an email, never again as an IP.
     """
-    out = F.col(text_col)
+    out = F.col("text")
     counts = []
     for name, pattern, token in REDACTIONS:
         counts.append(F.regexp_count(out, F.lit(pattern)).cast("int").alias(f"n_{name}"))
         out = F.regexp_replace(out, pattern, token)
-    return df.select(id_col, out.alias("redacted"), *counts)
+    return df.select("doc_id", out.alias("redacted"), *counts)
 
 
 def contamination(
     docs: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
 ) -> DataFrame:
     """Docs sharing ≥1 word n-gram with the benchmark corpus.
@@ -70,11 +68,11 @@ def contamination(
     no overlap are absent: at corpus scale the clean set is the ~whole
     table, so materializing it would be the expensive way to say "ok".
     """
-    grams = F.explode(word_ngrams(text_col, n)).alias("gram")
+    grams = F.explode(word_ngrams("text", n)).alias("gram")
     bench = benchmark.select(grams).distinct()
     return (
-        docs.select(id_col, grams)
+        docs.select("doc_id", grams)
         .join(F.broadcast(bench), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_matched"))
     )

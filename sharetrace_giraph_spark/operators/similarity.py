@@ -42,16 +42,14 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k of each query against the corpus (excluding
     self-matches by id). Returns (query_id, neighbor_id, cos_sim, rank)."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
     )
     joined = F.broadcast(q).crossJoin(c).where(F.col("query_id") != F.col("neighbor_id"))
     scored = joined.select(
@@ -72,27 +70,25 @@ def brute_force_topk(
 def assign_ivf_buckets(
     corpus: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """Coarse quantization: centroids = the first ``n_centroids`` vectors
     by id (deterministic); every corpus vector is assigned to its nearest
     centroid by cosine. Returns (centroids, bucketed corpus). The
     assignment is ONE broadcast join + argmax — no iteration."""
-    centroids = corpus.orderBy(id_col).limit(n_centroids).select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cent_vec")
+    centroids = corpus.orderBy("vec_id").limit(n_centroids).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cent_vec")
     )
     scored = corpus.crossJoin(F.broadcast(centroids)).select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         F.col("centroid_id"),
-        cosine(F.col(vec_col), F.col("cent_vec")).alias("sim"),
+        cosine(F.col("embedding"), F.col("cent_vec")).alias("sim"),
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("sim"), F.asc("centroid_id"))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
     assigned = (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select(id_col, vec_col, F.col("centroid_id").alias("bucket"))
+        .select("vec_id", "embedding", F.col("centroid_id").alias("bucket"))
     )
     return centroids, assigned
 
@@ -103,15 +99,13 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: probe the ``n_probe`` nearest buckets per query.
     Join shape: (query × centroids: broadcast, tiny) → (query, bucket)
     probe list → equi join with the bucketed corpus on bucket → local
     scoring + window top-k. The expensive scan is blocked by bucket."""
-    centroids, assigned = assign_ivf_buckets(corpus, n_centroids, id_col, vec_col)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+    centroids, assigned = assign_ivf_buckets(corpus, n_centroids)
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
 
     qc = q.crossJoin(F.broadcast(centroids)).select(
         "query_id", "qvec", "centroid_id",
@@ -125,12 +119,12 @@ def ivf_topk(
     )
 
     cand = probes.join(assigned, "bucket").where(
-        F.col("query_id") != F.col(id_col)
+        F.col("query_id") != F.col("vec_id")
     )
     scored = cand.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        cosine(F.col("qvec"), F.col(vec_col)).alias("cos_sim"),
+        F.col("vec_id").alias("neighbor_id"),
+        cosine(F.col("qvec"), F.col("embedding")).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -144,8 +138,6 @@ def embedding_near_duplicates(
     corpus: DataFrame,
     threshold: float = 0.95,
     n_centroids: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Near-dup pairs by cosine >= threshold among same-IVF-bucket
     candidates (one blocked self-join; cross-bucket near-dups are missed by
@@ -160,12 +152,12 @@ def embedding_near_duplicates(
         import math
 
         n_centroids = max(1, math.ceil(math.sqrt(corpus.count())))
-    _, assigned = assign_ivf_buckets(corpus, n_centroids, id_col, vec_col)
+    _, assigned = assign_ivf_buckets(corpus, n_centroids)
     l = assigned.select(
-        F.col("bucket"), F.col(id_col).alias("a"), F.col(vec_col).alias("va")
+        F.col("bucket"), F.col("vec_id").alias("a"), F.col("embedding").alias("va")
     )
     r = assigned.select(
-        F.col("bucket"), F.col(id_col).alias("b"), F.col(vec_col).alias("vb")
+        F.col("bucket"), F.col("vec_id").alias("b"), F.col("embedding").alias("vb")
     )
     pairs = l.join(r, "bucket").where(F.col("a") < F.col("b"))
     return pairs.select(

@@ -5,12 +5,14 @@ PARTITION_SIZE=50 (``pda-common/.../ContractedPdaVentilator.java:101-117``)
 — irrelevant to shuffle skew — and it cuts pre-shuffle volume with
 Giraph's message combiner. In a power-law contact graph a hub's in-edges
 all hash to one reducer. The engine's one skew mechanism is the Catalyst
-analog of that combiner: every superstep's message aggregate is a
-decomposable ``groupBy(dst).agg(...)`` that plans as a partial hash
-aggregate below the message exchange and a final one above it, so a
-hub's reducer receives at most one pre-combined row per map task, not
-deg(hub) rows. ``tests/test_plan_discipline.py`` pins the ``partial_``
-aggregate below the exchange on each algorithm's real superstep.
+analog of that combiner: every superstep's message aggregate, over the
+rows ``plans.superstep.send`` relays, is a decomposable
+``groupBy(mdst).agg(...)`` that plans as a partial hash aggregate below
+the message exchange and a final one above it, so a hub's reducer
+receives at most one pre-combined row per map task, not deg(hub) rows.
+``tests/test_plan_discipline.py`` pins the ``partial_`` aggregate below
+the exchange on each algorithm's real superstep, and pins that no side
+of it is broadcast (``send`` hints its O(V) sides ``shuffle_hash``).
 
 The combine only shrinks what its partial state shrinks. Exact ANF
 (``neighborhood_function(method="exact")``) merges with ``collect_list``,

@@ -27,8 +27,8 @@ def tokens(col) -> F.Column:
     return F.filter(F.split(c, r"\s+"), lambda t: t != "")
 
 
-def token_count(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    return df.select(id_col, F.size(tokens(text_col)).alias("n_tokens"))
+def token_count(df: DataFrame) -> DataFrame:
+    return df.select("doc_id", F.size(tokens("text")).alias("n_tokens"))
 
 
 #: BPE-ish pre-tokenizer: alphabetic runs, single digits, single
@@ -38,17 +38,17 @@ def token_count(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 
 
-def token_count_bpe(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_count_bpe(df: DataFrame) -> DataFrame:
     """Subword-style token count: alphabetic runs + single digits + single
     punctuation (JVM-side regexp, no Python)."""
-    c = F.col(text_col)
+    c = F.col("text")
     return df.select(
-        id_col,
+        "doc_id",
         F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), 0)).alias("n_bpe_tokens"),
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Deterministic quality heuristics: token count, mean token length,
     stopword ratio, and a composite score in [0,1]. (The classic
     Gopher/C4-style length+stopword filters, minus the proprietary
@@ -78,11 +78,11 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
             F.round(stop_ratio, 6).alias("stopword_ratio"),
             score.alias("quality"),
         )
-    s = F.element_at(F.transform(F.array(tokens(text_col)), build), 1)
-    return df.select(id_col, s.alias("s")).select(id_col, "s.*")
+    s = F.element_at(F.transform(F.array(tokens("text")), build), 1)
+    return df.select("doc_id", s.alias("s")).select("doc_id", "s.*")
 
 
-def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-vote language ID: the language whose lexicon matches the
     most tokens wins (ties → lexicographic language order, deterministic);
     'und' when nothing matches."""
@@ -104,34 +104,34 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
                 )
             )
         return F.greatest(*votes) if len(votes) > 1 else votes[0]
-    best = F.element_at(F.transform(F.array(tokens(text_col)), build), 1)
-    return df.select(id_col, best.alias("best")).select(
-        id_col,
+    best = F.element_at(F.transform(F.array(tokens("text")), build), 1)
+    return df.select("doc_id", best.alias("best")).select(
+        "doc_id",
         F.when(F.col("best.n") > 0, F.col("best.lang")).otherwise(F.lit("und")).alias("lang_pred"),
         F.col("best.n").alias("stopword_hits"),
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Content fingerprint: md5 over the sorted distinct token set —
     whitespace/world-order-insensitive document identity. md5 is shared
     with DuckDB, so the oracle reproduces it bit-for-bit."""
     return df.select(
-        id_col,
-        F.md5(F.array_join(F.array_sort(F.array_distinct(tokens(text_col))), " ")).alias(
+        "doc_id",
+        F.md5(F.array_join(F.array_sort(F.array_distinct(tokens("text"))), " ")).alias(
             "fp"
         ),
     )
 
 
-def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Within-document repetition signals (the Gopher-style rep filters):
     duplicate-token ratio ``1 - distinct/total`` and the share of the
     most frequent token. All array expressions — per-row cost is
     O(tokens · distinct), bounded by document length, with no shuffle and
     no Python."""
     # Bind the token array ONCE as a lambda variable: referencing
-    # tokens(text_col) inside the per-distinct-token count lambda would
+    # tokens("text") inside the per-distinct-token count lambda would
     # re-run the regex split per distinct token (no CSE across
     # higher-order-function lambdas) — the same O(tokens²) trap fixed in
     # dedup.word_ngrams.
@@ -147,13 +147,11 @@ def repetition_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
             F.round(F.when(n > 0, (n - nd) / n).otherwise(F.lit(0.0)), 6).alias("dup_ratio"),
             F.round(F.when(n > 0, top / n).otherwise(F.lit(0.0)), 6).alias("top_token_share"),
         )
-    s = F.element_at(F.transform(F.array(tokens(text_col)), build), 1)
-    return df.select(id_col, s.alias("s")).select(id_col, "s.*")
+    s = F.element_at(F.transform(F.array(tokens("text")), build), 1)
+    return df.select("doc_id", s.alias("s")).select("doc_id", "s.*")
 
 
-def tfidf_top_terms(
-    df: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-k characteristic terms per document by tf-idf.
 
     All JVM-side: explode → two hash aggs (term freq per doc, doc freq
@@ -166,8 +164,8 @@ def tfidf_top_terms(
     ascending.
     """
     per_doc = (
-        df.select(id_col, F.explode(tokens(text_col)).alias("term"))
-        .groupBy(id_col, "term")
+        df.select("doc_id", F.explode(tokens("text")).alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     doc_freq = per_doc.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -177,12 +175,12 @@ def tfidf_top_terms(
         .crossJoin(F.broadcast(n_docs))
         .withColumn("score", F.col("tf") * F.log(F.col("n_docs") / F.col("df")))
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
-            id_col,
+            "doc_id",
             "rank",
             "term",
             F.col("tf").cast("long").alias("tf"),

@@ -56,6 +56,28 @@ def merge_contacts(
     return merged
 
 
+def merge_into_table(
+    warehouse: ParquetWarehouse,
+    table: str,
+    transcripts: DataFrame,
+    expiry_cutoff: dt.datetime | None,
+    duration_threshold_s: int,
+    session_gap_s: int,
+) -> None:
+    """Derive the contact edges of ``transcripts`` and merge them into the
+    contacts ``table`` (:func:`merge_contacts`; the first merge creates
+    it) — one body for the cursor pipeline's tick and the Structured
+    Streaming micro-batch."""
+    new_contacts = E.derive_contacts(
+        transcripts, duration_threshold_s=duration_threshold_s, session_gap_s=session_gap_s
+    )
+    try:
+        existing = warehouse.read_table(table)
+    except ValueError:
+        existing = None
+    warehouse.write_table(merge_contacts(existing, new_contacts, expiry_cutoff), table)
+
+
 class IncrementalEdgePipeline:
     def __init__(
         self,
@@ -96,20 +118,9 @@ class IncrementalEdgePipeline:
         if new is None:
             return {"new_turns": 0, "cursor": latest, "merged_pairs": 0}
 
-        new_contacts = E.derive_contacts(
-            new,
-            duration_threshold_s=self.duration_threshold_s,
-            session_gap_s=self.session_gap_s,
-        )
-
-        try:
-            existing = self.wh.read_table(self.contacts_table)
-        except ValueError:
-            existing = None
-
-        merged = merge_contacts(existing, new_contacts, self.expiry_cutoff)
-
-        n_pairs = merged.count()
-        self.wh.write_table(merged, self.contacts_table)
+        merge_into_table(self.wh, self.contacts_table, new, self.expiry_cutoff,
+                         self.duration_threshold_s, self.session_gap_s)
+        # counted from the written snapshot, not by re-running the merge
+        n_pairs = self.wh.read_table(self.contacts_table).count()
         self._advance(latest)
         return {"new_turns": new.count(), "cursor": latest, "merged_pairs": n_pairs}

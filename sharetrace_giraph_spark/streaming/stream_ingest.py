@@ -13,8 +13,9 @@ the hand-rolled cursor:
 - each micro-batch derives its contact edges with the SAME
   ``derive_contacts`` operator the batch path uses, then merges them into
   the warehouse contacts table inside ``foreachBatch`` (A5 union + F6
-  expiry via ``merge_contacts``) — merge-into semantics on the batch side
-  of the boundary, where they belong;
+  expiry via ``merge_into_table``, the body the cursor pipeline's tick
+  runs too) — merge-into semantics on the batch side of the boundary,
+  where they belong;
 - ``trigger(availableNow=True)`` gives the reference's scheduled-batch
   cadence (drain everything that has landed, then stop); a processing-time
   trigger turns the same code into a continuous pipeline.
@@ -29,12 +30,11 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (kept for parity with sibling modules)
 
 from ..datagen import TRANSCRIPTS_SCHEMA
 from ..operators import edges as E
 from ..sources.warehouse import ParquetWarehouse
-from .incremental import merge_contacts
+from .incremental import merge_into_table
 
 
 def stream_contacts(
@@ -62,17 +62,8 @@ def stream_contacts(
     stream = reader.parquet(transcripts_dir)
 
     def process_batch(batch_df, batch_id: int) -> None:
-        new_contacts = E.derive_contacts(
-            batch_df,
-            duration_threshold_s=duration_threshold_s,
-            session_gap_s=session_gap_s,
-        )
-        try:
-            existing = warehouse.read_table(contacts_table)
-        except ValueError:
-            existing = None
-        merged = merge_contacts(existing, new_contacts, expiry_cutoff)
-        warehouse.write_table(merged, contacts_table)
+        merge_into_table(warehouse, contacts_table, batch_df, expiry_cutoff,
+                         duration_threshold_s, session_gap_s)
 
     writer = stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", stream_checkpoint

@@ -768,8 +768,7 @@ def test_bfs_and_sssp_reject_disjoint_sources(spark, medium_graph, ckpt):
     """A seed set disjoint from the vertex universe must raise — not
     'converge' instantly with every vertex unreached (the guard pagerank's
     personalized path already has)."""
-    from sharetrace_giraph_spark.algorithms.bfs import bfs
-    from sharetrace_giraph_spark.algorithms.sssp import shortest_paths
+    from sharetrace_giraph_spark.algorithms import bfs, shortest_paths
 
     _, verts, enc, _ = medium_graph
     ghost = spark.createDataFrame([(10**9,)], "vertex_id long")

@@ -495,14 +495,18 @@ def _pin_step(step, init, exchanges: int, combined: int) -> str:
     ``exchanges`` runtime shuffle exchanges, of which ``combined`` sit
     directly above a ``partial_`` aggregate. That map-side combine is the
     engine's one skew mechanism (operators/skew): a hub's reducer gets
-    one pre-combined row per map task, not one per in-edge. Returns the
-    formatted plan."""
+    one pre-combined row per map task, not one per in-edge. No side is
+    broadcast: the O(V) sides of ``plans.superstep.send`` and
+    ``receive`` are hinted ``shuffle_hash``, and a broadcast would also
+    hide a shuffle from the exchange count. Returns the formatted
+    plan."""
     carried = step(init, 0).localCheckpoint(eager=True)
     mid_loop = step(carried, 1)
     below = _exchange_children(mid_loop)
     plan = _plan(mid_loop)
     assert len(below) == exchanges, plan
     assert sum("partial_" in node for node in below) == combined, plan
+    assert "Broadcast" not in plan, plan
     return plan
 
 
@@ -554,17 +558,17 @@ def test_bfs_message_agg_partial_final(small_graph):
 
 
 def test_sssp_step_plans_single_exchange(small_graph):
-    """SSSP (``_sssp_step``) shares CC's frontier shape: gather join
-    co-partitioned, ONE min-agg exchange over a partial min, state-update
-    join co-partitioned."""
-    from sharetrace_giraph_spark.algorithms.sssp import _sssp_step
+    """SSSP (``_bfs_step`` with the edge cost ``w``) shares CC's frontier
+    shape: gather join co-partitioned, ONE min-agg exchange over a
+    partial min, state-update join co-partitioned."""
+    from sharetrace_giraph_spark.algorithms.bfs import _bfs_step
 
     e, verts = small_graph
     init = verts.select(
         "vertex_id", F.lit(0).cast("long").alias("dist"), F.lit(1.0).alias("delta")
     )
     ew = e.withColumn("w", F.lit(1).cast("long"))
-    _pin_step(_sssp_step(ew), init, exchanges=1, combined=1)
+    _pin_step(_bfs_step(ew, "w"), init, exchanges=1, combined=1)
 
 
 def test_kcore_step_plans_single_exchange(small_graph):
@@ -686,7 +690,7 @@ def test_risk_step_plans_single_exchange(spark):
             (F.col("id").cast("long") % 10 / 10.0).alias("value"),
         )
         edges, _, _ = loop_inputs(spark, _directed_contact_edges(contacts),
-                                  ("u", "v", "cutoff_ts"), "u", num_partitions=P)
+                                  ("src", "dst", "cutoff_ts"), "src", num_partitions=P)
         try:
             plan = _pin_step(
                 _risk_step(edges, 0.8), init_state(scores), exchanges=1, combined=1
